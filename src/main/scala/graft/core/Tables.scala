@@ -17,31 +17,58 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** JVM-lifetime parquet SCHEMA cache keyed by path + content fingerprint
-    * (size + mtime): a bare `spark.read.parquet` runs a schema-inference
-    * job per call, and at 1-3 table reads per query that job was a
-    * measured 40-140 ms of every query's latency floor (guide §1.2). A
-    * deployment keeps table schemas in a catalog/metastore; this cache is
-    * the bare-path equivalent. Only METADATA is cached — every query still
-    * scans the parquet for data, and a rewritten file (new size/mtime) gets
-    * a fresh inference.
+  /** JVM-lifetime parquet SCHEMA cache keyed by path + content fingerprint:
+    * a bare `spark.read.parquet` runs a schema-inference job per call, and
+    * at 1-3 table reads per query that job was a measured 40-140 ms of
+    * every query's latency floor (guide §1.2). A deployment keeps table
+    * schemas in a catalog/metastore; this cache is the bare-path
+    * equivalent. Only METADATA is cached — every query still scans the
+    * parquet for data.
+    *
+    * The fingerprint is every file under the path (relative name,
+    * size, mtime), not the directory's own size and mtime: a layout
+    * directory rewritten in place can keep those (same entry count, a
+    * coarse or unchanged directory timestamp, a rewrite inside a partition
+    * subdirectory) while its part files — and so its schema — changed.
     */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]
 
-  private[graft] def readCached(spark: SparkSession, path: String): DataFrame = {
-    val key = try {
-      val p = java.nio.file.Paths.get(path)
-      s"$path:${java.nio.file.Files.size(p)}:" +
-        s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
-    } catch { case _: Throwable => null } // non-local path: no safe fingerprint
-    if (key == null) spark.read.parquet(path)
-    else {
-      val schema = schemaCache.computeIfAbsent(key,
-        _ => spark.read.parquet(path).schema)
-      spark.read.schema(schema).parquet(path)
+  private[graft] def readCached(spark: SparkSession, path: String): DataFrame =
+    fingerprint(path) match {
+      case None => spark.read.parquet(path) // no local files: no safe fingerprint
+      case Some(key) =>
+        val schema = schemaCache.computeIfAbsent(key,
+          _ => spark.read.parquet(path).schema)
+        spark.read.schema(schema).parquet(path)
     }
-  }
+
+  /** `path` plus (relative name, size, mtime) of every regular file under
+    * it, in name order (markers and checksums included: they can only add
+    * a re-inference, never hide a change). None when the path is not a
+    * readable local file or directory.
+    */
+  private def fingerprint(path: String): Option[String] =
+    try {
+      val root = java.nio.file.Paths.get(path)
+      val files =
+        if (!java.nio.file.Files.isDirectory(root)) Seq(root)
+        else {
+          import scala.jdk.CollectionConverters._
+          val walk = java.nio.file.Files.walk(root)
+          try walk.iterator().asScala
+            .filter(java.nio.file.Files.isRegularFile(_)).toVector
+            .sortBy(_.toString)
+          finally walk.close()
+        }
+      Some(files.map { f =>
+        s"${root.relativize(f)}:${java.nio.file.Files.size(f)}:" +
+          java.nio.file.Files.getLastModifiedTime(f).toMillis
+      }.mkString(s"$path|", "|", ""))
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException |
+          _: java.nio.file.InvalidPathException => None
+    }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     readCached(spark, s"$sfDir/$name.parquet")

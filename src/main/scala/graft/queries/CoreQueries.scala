@@ -118,13 +118,15 @@ object CoreQueries {
 
     // F7: hydration join — fetch full records for an id list (GetVectors,
     // core.go:623). Broadcast hash join: the id list is tiny by contract.
+    // A real `orderBy`, not Ordered.small: its coalesce(1) is narrow, so
+    // right above the join it would fold the whole embeddings scan into
+    // one task; the range exchange keeps the scan parallel.
     "f7_hydrate" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val ids = emb.select(col("vec_id")).filter(col("vec_id") % 97 === 0)
       emb.join(broadcast(ids), Seq("vec_id"))
         .select(col("vec_id"), col("label"), size(col("embedding")).cast("long").as("dim"))
-        // Result bounded by the broadcast id-list contract.
-        .transform(Ordered.small(_)(col("vec_id")))
+        .orderBy(col("vec_id"))
     }),
 
     // V2: batched exact k-NN, euclidean. dist = sqrt of the squared-L2 the

@@ -88,7 +88,7 @@ object TextQueries {
     // T6: BM25 ranking (k1=1.2 b=0.75, reference IDF) for a fixed query.
     "t6_bm25" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      Bm25.search(docs, "doc_id", "text", "table merge query", limit = 25)
+      Bm25.search(docs, "doc_id", "text", "table merge query", limit = Some(25))
         .select(col("doc_id"), round(col("score"), 6).as("score"))
         .transform(Ordered.small(_)(col("score").desc, col("doc_id"))) // <= 25 rows
     }),
@@ -105,7 +105,7 @@ object TextQueries {
         Tables.documents(s, dir).select(col("doc_id"))
       }
       Bm25.searchPostings(ids, post, "doc_id",
-          Analyzer.analyze("table merge query", "english"), limit = 25)
+          Analyzer.analyze("table merge query", "english"), limit = Some(25))
         .select(col("doc_id"), round(col("score"), 6).as("score"))
         .transform(Ordered.small(_)(col("score").desc, col("doc_id"))) // <= 25 rows
     }),

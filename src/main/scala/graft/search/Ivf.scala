@@ -851,7 +851,7 @@ object Ivf {
     * vector's norm is constant across centroids). Ties → lower centroid id;
     * zero-norm centroids never win.
     */
-  private def bestBucket(cents: Array[Array[Float]], adj: Array[Float],
+  private[search] def bestBucket(cents: Array[Array[Float]], adj: Array[Float],
                          v: Array[Float], l2: Boolean): Int = {
     // One dot-product loop for both metrics, differing only in the final
     // score: cosine = dot × 1/‖c‖ (adj = inverse norm); l2 uses

@@ -503,21 +503,26 @@ object Streams {
     * next-round #3) — closes the loop [[ivfIngest]] (vector leg) and the
     * postings layout (text leg) each closed separately: a new document
     * reaching the combined text+vector shard no longer requires a rebuild.
-    * Each micro-batch of `(idCol, text-postings rows, assigned vector
-    * rows)` becomes a SEGMENT via
-    * [[graft.search.ServingFusion.appendCombined]] (frozen-stats
-    * discipline: the centroids, token-df artifact and corpus scalars stay
+    * Each micro-batch of raw `(idCol, textCol, vecCol)` docs becomes a
+    * SEGMENT — `numShardsPerSegment` combined shards (one by default)
+    * unioned onto the served index — built in ONE narrow pass by
+    * [[graft.search.ServingFusion.buildSegment]] under frozen-stats
+    * discipline (the centroids, token-df artifact and corpus scalars stay
     * the base build's — the exact contract `ivfIngest` pins for
-    * centroids), and the served index reference swaps atomically after
-    * the segment is materialized, so an in-flight [[graft.search
+    * centroids; a segment serves what a full
+    * [[graft.search.ServingFusion.buildCombined]] over base ∪ batch would
+    * serve). The served index reference swaps atomically after the
+    * segment is materialized, so an in-flight [[graft.search
     * .ServingFusion.fusedTopKCombined]] batch never sees a half-built
     * segment. Compaction (periodic full rebuild) is the offline job, as
     * everywhere in this module.
     *
-    * `docs` carries `(idCol, textCol, vecCol)`; postings + assignment are
-    * stateless transforms, so they run unchanged per micro-batch. The
-    * served handle is `ref.get()` — cache it per serve call, like the
-    * bench does.
+    * A non-empty micro-batch costs four Spark jobs (see
+    * [[ingestSegmentBatch]]): one aggregate for every driver-side check,
+    * the log write, the frozen-df lookup for the batch's tokens and the
+    * segment's materialization; under adaptive execution the persisted
+    * batch's cache stage adds a fifth. The served handle is `ref.get()` —
+    * cache it per serve call, like the bench does.
     *
     * RESTART CONTRACT (r16 self-review): the streaming checkpoint is
     * durable but the served index is PROCESS-LOCAL — Spark marks a
@@ -618,6 +623,11 @@ object Streams {
     * served index and the log are unchanged — the at-least-once window a
     * running stream only hits across a crash. See [[combinedIngest]] for
     * the exactly-once discipline this implements.
+    *
+    * `replacesCol` names the batch's superseded-id column (logged as
+    * `graft_replaces`); with `tombRef` those ids are merged into the
+    * tombstone set before the segment lands — the upsert path
+    * ([[upsertCombinedBatch]]).
     */
   def ingestCombinedBatch(
       batch: DataFrame,
@@ -633,17 +643,15 @@ object Streams {
       numShardsPerSegment: Int = 1,
       segmentLog: Option[String] = None,
       idWatermark: Option[java.util.concurrent.atomic.AtomicLong] = None,
-      replacesCol: Option[String] = None)
+      replacesCol: Option[String] = None,
+      tombRef: Option[java.util.concurrent.atomic.AtomicReference[Array[Long]]]
+        = None)
       : Unit =
     ingestSegmentBatch(batch, batchId, idCol, textCol, vecCol, segmentLog,
-      idWatermark, ref, replacesCol) { b =>
-      val (ids, post, assigned) = segmentFrames(b, idCol, textCol, vecCol,
-        cents)
-      graft.search.ServingFusion.buildCombined(
-        ids, post, idCol, assigned, dec = None,
-        numShards = numShardsPerSegment,
-        prebuiltTokenDf = Some(frozenTokenDf),
-        frozenStats = Some(frozenStats))
+      idWatermark, ref, replacesCol, tombRef) { (b, toks) =>
+      graft.search.ServingFusion.buildSegment(b, idCol, textCol, vecCol,
+        cents, frozenStats, frozenTokenDf, numShardsPerSegment, Some(toks))(
+        graft.search.ServingFusion.assembleF32)
     }
 
   /** [[ingestCombinedBatch]]'s compressed twin: the segment quantizes
@@ -668,29 +676,41 @@ object Streams {
       numShardsPerSegment: Int = 1,
       segmentLog: Option[String] = None,
       idWatermark: Option[java.util.concurrent.atomic.AtomicLong] = None,
-      replacesCol: Option[String] = None)
+      replacesCol: Option[String] = None,
+      tombRef: Option[java.util.concurrent.atomic.AtomicReference[Array[Long]]]
+        = None)
       : Unit =
     ingestSegmentBatch(batch, batchId, idCol, textCol, vecCol, segmentLog,
-      idWatermark, ref, replacesCol) { b =>
-      val (ids, post, assigned) = segmentFrames(b, idCol, textCol, vecCol,
-        cents)
-      graft.search.ServingFusion.buildCombinedInt8(
-        ids, post, idCol, assigned, absMax, dec = None,
-        numShards = numShardsPerSegment,
-        prebuiltTokenDf = Some(frozenTokenDf),
-        frozenStats = Some(frozenStats))
+      idWatermark, ref, replacesCol, tombRef) { (b, toks) =>
+      graft.search.ServingFusion.buildSegment(b, idCol, textCol, vecCol,
+        cents, frozenStats, frozenTokenDf, numShardsPerSegment, Some(toks))(
+        graft.search.ServingFusion.assembleInt8(absMax))
     }
 
   /** The one copy of the micro-batch exactly-once discipline, shared by
-    * both combined layouts: re-delivery detection (a COMPLETE
-    * `batch=<id>/` log directory means the docs are already served —
-    * skip everything, INCLUDING the watermark guard: a re-delivered
-    * batch's ids are legitimately at or below the watermark, a restart
-    * derives it from `maxLoggedId` which covers this very batch), then
-    * the append-only id guard (VERDICT r16 #3 — fail loudly instead of
-    * double-scoring), the batchId-keyed log overwrite, and the
-    * cache-segment-then-swap append (cache ONLY the segment — caching
-    * the union would re-store every base partition per micro-batch).
+    * both combined layouts and the upsert paths. ONE aggregate job over
+    * the persisted batch yields everything the driver decides on: the row
+    * count, the id min/max/count/distinct-count for the watermark guard,
+    * the superseded ids of an upsert and the batch's distinct analyzed
+    * tokens for the segment build. Then, in order: the upsert's tombstone
+    * merge (idempotent, so it runs on a re-delivery too —
+    * delete-visible-before-add), re-delivery detection (a COMPLETE
+    * `batch=<id>/` log directory means the docs are already served — skip
+    * the rest, INCLUDING the watermark guard: a re-delivered batch's ids
+    * are legitimately at or below the watermark, a restart derives it from
+    * `maxLoggedId` which covers this very batch), the append-only id guard
+    * (VERDICT r16 #3 — fail loudly instead of double-scoring), the
+    * batchId-keyed log overwrite, and the cache-segment-then-swap append
+    * (cache ONLY the segment — caching the union would re-store every base
+    * partition per micro-batch).
+    *
+    * Jobs per non-empty micro-batch: the aggregate, the log write, the
+    * frozen-df lookup for the batch's tokens and the segment's
+    * materialization — four (`numShardsPerSegment > 1` adds a map stage
+    * to the last one, not a job; adaptive execution adds one job, the
+    * persisted batch's cache stage). The batch itself never reaches the
+    * driver: only the aggregate's scalars, id set sizes, superseded ids
+    * and distinct tokens do.
     */
   private def ingestSegmentBatch[T](
       batch: DataFrame,
@@ -702,12 +722,28 @@ object Streams {
       idWatermark: Option[java.util.concurrent.atomic.AtomicLong],
       ref: java.util.concurrent.atomic.AtomicReference[
         org.apache.spark.rdd.RDD[T]],
-      replacesCol: Option[String] = None)(
-      buildSegment: DataFrame => org.apache.spark.rdd.RDD[T]): Unit = {
+      replacesCol: Option[String],
+      tombRef: Option[java.util.concurrent.atomic.AtomicReference[Array[Long]]])(
+      buildSegment: (DataFrame, Seq[String]) => org.apache.spark.rdd.RDD[T]): Unit = {
     val spark = batch.sparkSession
     val b = batch.persist()
     try {
-      if (b.count() > 0) {
+      // The log always carries a `graft_replaces` column (null for plain
+      // inserts) so restart recovery can rebuild the tombstone set from the
+      // log ALONE — an upsert's superseded ids are part of the same durable
+      // record as its new docs, the reference's one-AOF-stream contract
+      // (pkg/engine/recovery.go:169: delete+add replay in order).
+      val repl = replacesCol.map(c => col(c).cast("long"))
+        .getOrElse(lit(null).cast("long"))
+      val idL = col(idCol).cast("long")
+      // coalesce(1): the micro-batch aggregates inside one task, with no
+      // exchange (and so no extra adaptive-execution stage job).
+      val s = b.coalesce(1).agg(count(lit(1)), min(idL), max(idL), count(idL),
+        countDistinct(idL), collect_set(repl),
+        graft.search.ServingFusion.segmentTokens(textCol)).head()
+      if (s.getLong(0) > 0) {
+        val replaced = s.getSeq[Long](5).toArray
+        if (replaced.nonEmpty) tombRef.foreach(mergeTombstones(_, replaced))
         val redelivered = segmentLog.exists { path =>
           val dir = new org.apache.hadoop.fs.Path(s"$path/batch=$batchId")
           val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -721,13 +757,10 @@ object Streams {
           // batch (no _SUCCESS landed), and the min check would compare
           // against the watermark this very batch already pushed up.
           val batchMaxId = idWatermark.map { w =>
-            val idL = col(idCol).cast("long")
-            val mm = b.agg(min(idL), max(idL), count(idL),
-              countDistinct(idL)).head()
-            require(!mm.isNullAt(0),
+            require(!s.isNullAt(1),
               s"combinedIngest batch $batchId: every row's $idCol is null")
-            require(mm.getLong(0) > w.get(),
-              s"combinedIngest batch $batchId: id ${mm.getLong(0)} is <= the " +
+            require(s.getLong(1) > w.get(),
+              s"combinedIngest batch $batchId: id ${s.getLong(1)} is <= the " +
                 s"served index's id watermark ${w.get()} — an id present in " +
                 "both would be scored twice (append-only segments; route " +
                 "updates through compaction)")
@@ -735,25 +768,17 @@ object Streams {
             // the batch (an upstream producer retry) — that doc would be
             // built into the segment twice and double-scored, the exact
             // failure the guard exists for.
-            require(mm.getLong(2) == mm.getLong(3),
+            require(s.getLong(3) == s.getLong(4),
               s"combinedIngest batch $batchId: duplicate ids within the " +
-                s"batch (${mm.getLong(2)} rows, ${mm.getLong(3)} distinct)")
-            mm.getLong(1)
+                s"batch (${s.getLong(3)} rows, ${s.getLong(4)} distinct)")
+            s.getLong(2)
           }
           segmentLog.foreach { path =>
-            // The log always carries a `graft_replaces` column (null for
-            // plain inserts) so restart recovery can rebuild the
-            // tombstone set from the log ALONE — an upsert's superseded
-            // ids are part of the same durable record as its new docs,
-            // the reference's one-AOF-stream contract
-            // (pkg/engine/recovery.go:169: delete+add replay in order).
-            val repl = replacesCol.map(c => col(c).cast("long"))
-              .getOrElse(lit(null).cast("long"))
             b.select(col(idCol), col(textCol), col(vecCol),
                 repl.as("graft_replaces"))
               .write.mode("overwrite").parquet(s"$path/batch=$batchId")
           }
-          val seg = buildSegment(b).cache()
+          val seg = buildSegment(b, s.getSeq[String](6)).cache()
           seg.count() // materialize BEFORE the atomic swap
           appendSegment(ref, seg)
           for (w <- idWatermark; mx <- batchMaxId)
@@ -790,21 +815,6 @@ object Streams {
       beforeCas()
       swapped = ref.compareAndSet(cur, cur.union(seg))
     }
-  }
-
-  /** A micro-batch's (ids, postings, IVF assignment) — the three frames
-    * every combined segment build starts from.
-    */
-  private def segmentFrames(b: DataFrame, idCol: String, textCol: String,
-      vecCol: String, cents: Array[Array[Float]])
-      : (DataFrame, DataFrame, DataFrame) = {
-    val ids = b.select(col(idCol))
-    val post = graft.text.Bm25.postings(b, idCol, textCol)
-    val assigned = graft.search.Ivf.assignFast(
-      b.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<float>").as("vector")), cents)
-      .select(col("id").as(idCol), col("vector"), col("bucket"))
-    (ids, post, assigned)
   }
 
   /** [[combinedIngest]]'s compressed twin — streaming micro-batch ingest
@@ -880,12 +890,9 @@ object Streams {
     val logged = loggedOpt.get
     foldLoggedReplaces(logged, tombRef)
     if (logged.isEmpty) return base
-    val (ids, post, assigned) = segmentFrames(logged, idCol, textCol,
-      vecCol, cents)
-    val seg = graft.search.ServingFusion.buildCombinedInt8(
-      ids, post, idCol, assigned, absMax, dec = None, numShards = numShards,
-      prebuiltTokenDf = Some(frozenTokenDf),
-      frozenStats = Some(frozenStats)).cache()
+    val seg = graft.search.ServingFusion.buildSegment(logged, idCol, textCol,
+      vecCol, cents, frozenStats, frozenTokenDf, numShards)(
+      graft.search.ServingFusion.assembleInt8(absMax)).cache()
     seg.count()
     base.union(seg)
   }
@@ -1183,23 +1190,14 @@ object Streams {
       numShardsPerSegment: Int = 1,
       segmentLog: Option[String] = None,
       idWatermark: Option[java.util.concurrent.atomic.AtomicLong] = None)
-      : Unit = {
-    val b = batch.persist()
-    try {
-      val replaced = b.filter(col(replacesCol).isNotNull)
-        .select(col(replacesCol).cast("long")).distinct()
-        .collect().map(_.getLong(0))
-      if (replaced.nonEmpty) mergeTombstones(tombRef, replaced)
-      // `replacesCol` rides into the segment log (VERDICT r17 missing
-      // #1), making the upsert's delete half durable with its add half:
-      // restart recovery folds the logged superseded ids back into the
-      // tombstone set, with no caller-side oplog replay required.
-      ingestCombinedBatch(b, batchId, idCol, textCol,
-        vecCol, cents, frozenStats, frozenTokenDf, ref,
-        numShardsPerSegment, segmentLog, idWatermark,
-        replacesCol = Some(replacesCol))
-    } finally b.unpersist()
-  }
+      : Unit =
+    // `replacesCol` rides into the segment log (VERDICT r17 missing #1),
+    // making the upsert's delete half durable with its add half: restart
+    // recovery folds the logged superseded ids back into the tombstone
+    // set, with no caller-side oplog replay required.
+    ingestCombinedBatch(batch, batchId, idCol, textCol, vecCol, cents,
+      frozenStats, frozenTokenDf, ref, numShardsPerSegment, segmentLog,
+      idWatermark, replacesCol = Some(replacesCol), tombRef = Some(tombRef))
 
   /** [[upsertCombinedBatch]]'s compressed twin (ADVICE r17 — int8 parity
     * at the upsert seam): tombstones first, then the int8 segment under
@@ -1222,19 +1220,11 @@ object Streams {
       numShardsPerSegment: Int = 1,
       segmentLog: Option[String] = None,
       idWatermark: Option[java.util.concurrent.atomic.AtomicLong] = None)
-      : Unit = {
-    val b = batch.persist()
-    try {
-      val replaced = b.filter(col(replacesCol).isNotNull)
-        .select(col(replacesCol).cast("long")).distinct()
-        .collect().map(_.getLong(0))
-      if (replaced.nonEmpty) mergeTombstones(tombRef, replaced)
-      ingestCombinedBatchInt8(b, batchId, idCol, textCol,
-        vecCol, cents, absMax, frozenStats, frozenTokenDf, ref,
-        numShardsPerSegment, segmentLog, idWatermark,
-        replacesCol = Some(replacesCol))
-    } finally b.unpersist()
-  }
+      : Unit =
+    ingestCombinedBatchInt8(batch, batchId, idCol, textCol, vecCol, cents,
+      absMax, frozenStats, frozenTokenDf, ref, numShardsPerSegment,
+      segmentLog, idWatermark, replacesCol = Some(replacesCol),
+      tombRef = Some(tombRef))
 
   /** [[upsertIngest]]'s compressed twin — the int8 combined layout's
     * live update flow, same delete-visible-before-add ordering and
@@ -1528,12 +1518,9 @@ object Streams {
     val logged = loggedOpt.get
     foldLoggedReplaces(logged, tombRef, maxReplaces)
     if (logged.isEmpty) return base
-    val (ids, post, assigned) = segmentFrames(logged, idCol, textCol,
-      vecCol, cents)
-    val seg = graft.search.ServingFusion.buildCombined(
-      ids, post, idCol, assigned, dec = None, numShards = numShards,
-      prebuiltTokenDf = Some(frozenTokenDf),
-      frozenStats = Some(frozenStats)).cache()
+    val seg = graft.search.ServingFusion.buildSegment(logged, idCol, textCol,
+      vecCol, cents, frozenStats, frozenTokenDf, numShards)(
+      graft.search.ServingFusion.assembleF32).cache()
     seg.count()
     base.union(seg)
   }

@@ -85,6 +85,19 @@ object Analyzer {
       .withColumn("token", StemExpression.stemCol(col("_tok"), lang))
       .drop("_tok", textCol)
 
+  /** Per-row analyzed-token ARRAY: [[tokensDF]]'s expressions (tokenize,
+    * stopword filter, stem) applied inside the row with `filter` and
+    * `transform` instead of `explode`, so a doc stays one row. Duplicates
+    * are kept in text order; null text yields null.
+    */
+  def analyzedTokens(text: Column, lang: String = "english"): Column = {
+    val stop = stopWords(lang).toSeq
+    transform(
+      filter(regexp_extract_all(lower(text), lit(TokenPattern), lit(0)),
+        t => !t.isin(stop: _*)),
+      t => StemExpression.stemCol(t, lang))
+  }
+
   /** Raw token array column (no stopword/stem) — T1 only. */
   def tokenizeCol(text: Column): Column =
     regexp_extract_all(lower(text), lit(TokenPattern), lit(0))

@@ -52,12 +52,13 @@ object Bm25 {
     docLengthsFromPostings(docs.select(col(idCol)),
       postings(docs, idCol, textCol, lang), idCol)
 
-  /** Score all documents matching `queryText`; returns (id, score) sorted
-    * descending (ties broken by id for determinism). Candidates = union of
-    * posting lists of the analyzed query tokens.
+  /** Score all documents matching `queryText`; returns (id, score).
+    * Candidates = union of posting lists of the analyzed query tokens.
+    * `limit = Some(k)` keeps the top k sorted by score descending (ties
+    * broken by id); `None` returns every hit in no particular order.
     */
   def search(docs: DataFrame, idCol: String, textCol: String, queryText: String,
-             lang: String = "english", limit: Int = Int.MaxValue): DataFrame =
+             lang: String = "english", limit: Option[Int] = None): DataFrame =
     // Postings materialized once (r19): [[searchPostings]] consumes them
     // three ways (doc lengths, query-token df, the scoring join) — without
     // a checkpoint the analyze/stem corpus scan re-inlines per consumer.
@@ -71,10 +72,13 @@ object Bm25 {
     * An empty analyzed query (e.g. all stopwords) returns a typed empty
     * (id, score) result — mirrors `FindIDsByTextSearch` returning nil so
     * hybrid fusion can degrade gracefully (`core.go:1965`).
+    *
+    * @param limit `Some(k)`: the top k by (score desc, id asc), sorted.
+    *   `None`: the full hit set, UNSORTED.
     */
   def searchPostings(allIds: DataFrame, post: DataFrame, idCol: String,
                      queryTokens: Seq[String],
-                     limit: Int = Int.MaxValue): DataFrame = {
+                     limit: Option[Int] = None): DataFrame = {
     val spark = allIds.sparkSession
     import spark.implicits._
 
@@ -113,8 +117,7 @@ object Bm25 {
     // ad-hoc text branch for nothing (guide §2.4: an orderBy that only
     // makes output deterministic). Ranked callers (a real `limit`) keep the
     // top-k contract via TakeOrderedAndProject.
-    if (limit == Int.MaxValue) scored
-    else scored.orderBy(col("score").desc, col(idCol)).limit(limit)
+    limit.fold(scored)(k => scored.orderBy(col("score").desc, col(idCol)).limit(k))
   }
 
   /** Batched BM25: score every query in `queryTokens` `(qid, token, qn)`
@@ -142,7 +145,9 @@ object Bm25 {
   /** The full query-independent term-weight expression: everything in a
     * BM25 term score except the query-side multiplicity `qn`. ONE
     * definition shared by the batch plan and the serving-index build, so
-    * the two paths' per-(token, doc) contributions are bit-identical.
+    * the two paths' per-(token, doc) contributions are bit-identical
+    * ([[termWeightOf]] is its plain-value twin for the one-pass segment
+    * build; `SegmentBuildSpec` pins the two bit-for-bit).
     * Expects `df`, `dl`, `total_docs`, `avg_dl`, `tf` in scope.
     */
   private[graft] def termWeight: org.apache.spark.sql.Column = {
@@ -150,6 +155,20 @@ object Bm25 {
       (col("total_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val tfPart = (col("tf") * lit(k1 + 1.0)) /
       (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avg_dl")))
+    idf * tfPart
+  }
+
+  /** [[termWeight]] for one (token, doc) on plain values — the same
+    * operations in the same order (long `total_docs - df`, doubles from
+    * there on, `StrictMath.log` as Catalyst's `Log` evaluates), so the
+    * result is bit-identical to the Column expression. Used by the
+    * one-pass segment build ([[graft.search.ServingFusion.buildSegment]]),
+    * which weighs postings inside a partition instead of through joins.
+    */
+  def termWeightOf(tf: Long, df: Long, dl: Long, n: Long, avgDl: Double): Double = {
+    val idf = StrictMath.log(1.0 + ((n - df).toDouble + 0.5) / (df.toDouble + 0.5))
+    val tfPart = (tf.toDouble * (k1 + 1.0)) /
+      (tf.toDouble + k1 * ((1.0 - b) + b * dl.toDouble / avgDl))
     idf * tfPart
   }
 

@@ -61,6 +61,30 @@ class TablesSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
   }
 
+  test("schema cache sees a directory rewritten in place with a new column") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("tables-rewrite").resolve("t.parquet")
+    Seq((1L, "a")).toDF("id", "name").coalesce(1).write.parquet(dir.toString)
+    assert(Tables.readCached(spark, dir.toString).columns.toSeq === Seq("id", "name"))
+
+    // Rewrite IN PLACE: swap the part files for ones carrying a new column,
+    // then put the directory's own mtime back — the directory's size and
+    // timestamp are unchanged, only its part files differ.
+    val dirTime = Files.getLastModifiedTime(dir)
+    val next = Files.createTempDirectory("tables-rewrite-next").resolve("t.parquet")
+    Seq((2L, "b", 3.5)).toDF("id", "name", "score").coalesce(1)
+      .write.parquet(next.toString)
+    def parts(d: java.nio.file.Path) = d.toFile.listFiles().toSeq
+      .filter(f => f.getName.startsWith("part-") || f.getName.startsWith(".part-"))
+    parts(dir).foreach(f => assert(f.delete()))
+    parts(next).foreach(f => Files.move(f.toPath, dir.resolve(f.getName)))
+    Files.setLastModifiedTime(dir, dirTime)
+
+    val reread = Tables.readCached(spark, dir.toString)
+    assert(reread.columns.toSeq === Seq("id", "name", "score"))
+    assert(reread.collect().toSeq === Seq(Row(2L, "b", 3.5)))
+  }
+
   test("real sf0.001 events table exposes a sane ts_sec") {
     val ev = Tables.events(spark, sf())
     val (lo, hi) = ev.agg(min("ts_sec"), max("ts_sec")).as("x")

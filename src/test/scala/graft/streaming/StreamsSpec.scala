@@ -938,6 +938,82 @@ class StreamsSpec extends SparkSpec {
     base.unpersist(); tdf.unpersist()
   }
 
+  test("an ingest or upsert micro-batch runs 5 Spark jobs on either layout") {
+    import graft.JobCount
+    import graft.search.{Ivf, ServingFusion}
+    import graft.text.Bm25
+    import spark.implicits._
+    // Per micro-batch: the persisted batch's cache stage (its own job under
+    // adaptive execution), ONE aggregate (count, watermark, duplicates,
+    // superseded ids, distinct tokens), the log write, the frozen-df
+    // lookup for the batch's tokens and the segment build.
+    val PerBatch = 5
+    def doc(i: Long): (Long, String, Array[Float]) =
+      (i, s"spark join plan${i % 3} window", Array(1f, (i % 5).toFloat, 0.5f))
+    val baseDocs = (0L until 8L).map(doc).toDF("doc_id", "text", "embedding")
+    val cents = Ivf.trainKMeansArrays(baseDocs.select(col("doc_id").as("id"),
+      col("embedding").as("vector")), 2, iters = 2)
+    val post = Bm25.postings(baseDocs, "doc_id", "text")
+    val frozen = Bm25.corpusStats(Bm25.docLengthsFromPostings(
+      baseDocs.select(col("doc_id")), post, "doc_id"))
+    val tdf = Bm25.tokenDf(post).cache()
+    tdf.count()
+    val asg = Ivf.assignFast(baseDocs.select(col("doc_id").as("id"),
+        col("embedding").as("vector")), cents)
+      .select(col("id").as("doc_id"), col("vector"), col("bucket"))
+    val base32 = ServingFusion.buildCombined(baseDocs.select(col("doc_id")),
+      post, "doc_id", asg, prebuiltTokenDf = Some(tdf),
+      frozenStats = Some(frozen)).cache()
+    val base8 = ServingFusion.buildCombinedInt8(baseDocs.select(col("doc_id")),
+      post, "doc_id", asg, absMax = 1.0, prebuiltTokenDf = Some(tdf),
+      frozenStats = Some(frozen)).cache()
+    base32.count(); base8.count()
+    val ref32 = new java.util.concurrent.atomic.AtomicReference(base32)
+    val ref8 = new java.util.concurrent.atomic.AtomicReference(base8)
+    val tombRef = new java.util.concurrent.atomic.AtomicReference(
+      Array.emptyLongArray)
+
+    val src = tempDir("jobs-ingest-src")
+    (8L until 12L).map(doc).toDF("doc_id", "text", "embedding").coalesce(1)
+      .write.mode("append").parquet(src)
+    val upSrc = tempDir("jobs-upsert-src")
+    (12L until 14L).map { i => val (_, t, v) = doc(i); (i, i - 10, t, v) }
+      .toDF("doc_id", "replaces", "text", "embedding").coalesce(1)
+      .write.mode("append").parquet(upSrc)
+    def stream(dir: String, like: org.apache.spark.sql.DataFrame) =
+      spark.readStream.schema(like.schema).parquet(dir)
+    def run(q: => org.apache.spark.sql.streaming.StreamingQuery): Int =
+      JobCount(spark) {
+        val sq = q
+        sq.awaitTermination(120000)
+        sq.exception.foreach(e => throw e)
+      }._2
+    val log = tempDir("jobs-log")
+    val ingest32 = run(Streams.combinedIngest(stream(src, baseDocs), "doc_id",
+      "text", "embedding", cents, frozen, tdf, ref32, tempDir("jobs-cp1"),
+      segmentLog = Some(s"$log/i32"), idWatermark = Some(7L)))
+    val ingest8 = run(Streams.combinedIngestInt8(stream(src, baseDocs),
+      "doc_id", "text", "embedding", cents, 1.0, frozen, tdf, ref8,
+      tempDir("jobs-cp2"), segmentLog = Some(s"$log/i8"),
+      idWatermark = Some(7L)))
+    val upDocs = spark.read.parquet(upSrc)
+    val upsert32 = run(Streams.upsertIngest(stream(upSrc, upDocs), "doc_id",
+      "replaces", "text", "embedding", cents, frozen, tdf, ref32, tombRef,
+      tempDir("jobs-cp3"), segmentLog = Some(s"$log/u32"),
+      idWatermark = Some(11L)))
+    val upsert8 = run(Streams.upsertIngestInt8(stream(upSrc, upDocs),
+      "doc_id", "replaces", "text", "embedding", cents, 1.0, frozen, tdf,
+      ref8, tombRef, tempDir("jobs-cp4"), segmentLog = Some(s"$log/u8"),
+      idWatermark = Some(11L)))
+    assert(Seq(ingest32, ingest8, upsert32, upsert8) ===
+      Seq(PerBatch, PerBatch, PerBatch, PerBatch),
+      "jobs per micro-batch (ingest f32, ingest int8, upsert f32, upsert int8)")
+    assert(tombRef.get().toSeq === Seq(2L, 3L))
+    assert(ref32.get().map(_.text.ids.length).sum() === 14)
+    assert(ref8.get().map(_.text.ids.length).sum() === 14)
+    base32.unpersist(); base8.unpersist(); tdf.unpersist()
+  }
+
   test("streaming delete ingest merges a sorted tombstone set across batches") {
     import spark.implicits._
     val src = tempDir("tombstone-src")
