@@ -281,20 +281,27 @@ object Dedup {
     * emitted (callers left-join and coalesce to self).
     *
     * Per round the new edge set is localCheckpoint'ed LAZILY and the
-    * convergence checksum is the materializing action (r19, guide §1.2):
-    * the eager checkpoint ran one job to persist and the checksum a second
-    * over the same blocks — one full pass per round was pure overhead.
-    * Lineage truncation is unchanged (iterative plans otherwise nest until
-    * analysis itself dominates). Each round releases the previous round's
+    * termination test is the materializing action: one job per round,
+    * which persists the blocks and answers "done?" in the same pass.
+    * Lineage truncation keeps iterative plans from nesting until analysis
+    * itself dominates. Each round releases the previous round's
     * checkpoint blocks — at corpus scale every round pins an edge-set-sized
     * block set, and only the newest is ever read again. On a real cluster
     * prefer `spark.sparkContext.setCheckpointDir` + reliable checkpoints
     * every few rounds if executor loss matters mid-job.
-    * Convergence is detected by an order-insensitive edge-set checksum
-    * (count, xor of xxhash64(u,v), xor of xxhash64(v,u)) — xor commutes
-    * and cannot overflow under ANSI arithmetic; a collision would need two
-    * distinct edge sets agreeing on all three across one algorithm step;
-    * `maxIter` bounds the loop regardless.
+    *
+    * Termination: the loop stops as soon as the edge set is a star forest
+    * — every edge points child > root, every child has exactly one root,
+    * and no root is also a child. Such a set is a fixed point of
+    * large-star + small-star (each star's root is its minimum, so both
+    * steps re-emit exactly the same edges), and it already is the answer:
+    * every node maps to its component minimum. So the loop never pays a
+    * further round to watch an unchanged edge set come back; a graph whose
+    * deduped input is already a star forest runs no round at all. The
+    * test is one ungrouped aggregate over the edges (each edge viewed as
+    * its child and its root end): edge count, distinct children, distinct
+    * roots, distinct nodes, and edges not pointing down. `maxIter` bounds
+    * the loop regardless.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     def dedupEdges(e: DataFrame): DataFrame =
@@ -316,16 +323,26 @@ object Dedup {
       dedupEdges(dir.join(m, "u").select(col("v").as("u"), col("m").as("v"))
         .union(m.select(col("u"), col("m").as("v"))))
     }
-    def checksum(e: DataFrame): (Long, Long, Long) = {
-      val r = e.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)),
-        coalesce(expr("bit_xor(xxhash64(v, u))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
+    // Star forest ⇔ no edge points up, one edge per child (edges are
+    // deduped), and children and roots are disjoint sets of nodes.
+    def isStarForest(e: DataFrame): Boolean = {
+      val ends = e.select(col("u"), col("v"),
+        posexplode(array(col("u"), col("v"))).as(Seq("end", "n")))
+      val child = col("end") === 0
+      val r = ends.agg(
+        count(when(child, lit(1))),
+        count(when(child && col("u") <= col("v"), lit(1))),
+        count_distinct(when(child, col("n"))),
+        count_distinct(when(!child, col("n"))),
+        count_distinct(col("n"))).head()
+      val (edgeCount, upward, children, roots, nodes) =
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
+      upward == 0 && edgeCount == children && nodes == children + roots
     }
 
-    // Lazy checkpoint + release handle: the checksum is the action that
-    // materializes the persisted blocks (RDD.localCheckpoint persists at
-    // mark time, so every later consumer reads the cache), and the handle
+    // Lazy checkpoint + release handle: the termination test is the action
+    // that materializes the persisted blocks (RDD.localCheckpoint persists
+    // at mark time, so every later consumer reads the cache), and the handle
     // releases exactly the RDDs this checkpoint registered — the same
     // bookkeeping GraphOps.materializeLevel uses.
     def ckpt(df: DataFrame): (DataFrame, () => Unit) = {
@@ -341,20 +358,17 @@ object Dedup {
         col("id2").cast("long").as("v"))))
     var edges = init._1
     var release = init._2
-    var curSum = checksum(edges)
+    var converged = isStarForest(edges)
     var it = 0
-    var converged = false
     while (!converged && it < maxIter) {
       val (next, nextRelease) = ckpt(smallStar(largeStar(edges)))
-      val nextSum = checksum(next)
+      converged = isStarForest(next)
       release() // previous round's blocks: no consumer left
-      converged = nextSum == curSum
       edges = next
       release = nextRelease
-      curSum = nextSum
       it += 1
     }
-    // Fixed point: every edge is (node, componentMin); roots appear only
+    // Star forest: every edge is (node, componentMin); roots appear only
     // on the right. Emit the roots' self-labels alongside.
     edges.select(col("u").as("id"), col("v").as("component"))
       .union(edges.select(col("v").as("id"), col("v").as("component")))

@@ -33,4 +33,16 @@ object JobCount {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** [[apply]] with adaptive execution off for the block, as the benchmark
+    * runs: adaptive execution's query-stage jobs would split each shuffle
+    * into jobs of its own.
+    */
+  def withoutAdaptive[A](spark: SparkSession)(body: => A): (A, Int) = {
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try apply(spark)(body)
+    finally spark.conf.set(key, prev)
+  }
 }
