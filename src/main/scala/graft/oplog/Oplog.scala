@@ -28,6 +28,9 @@ import graft.core.Tables
   * fold iterates on the driver, collects data-sized state, or rescans the
   * log for VDROPs. At 100 TB the oplog would be a partitioned table
   * bucketed by key, and those keyed passes reuse that partitioning.
+  * Because the drop map is a literal fixed when a fold is CALLED, a fold
+  * frame describes the log as it was at that call: after the log's files
+  * change, fold again rather than re-run a kept fold frame.
   *
   * Schema (one row per logical AOF command, `recovery.go:169-378`):
   *   seq LONG       — total order (the AOF byte offset analogue)
@@ -332,6 +335,13 @@ object Oplog {
     * left join on `index_name`: an event of an index with no VDROP (or a
     * null index) survives; an event with a null seq of a dropped index
     * does not.
+    *
+    * The map is read when this is called and written into the returned
+    * plan, so the plan is valid only for the log as it was at that call.
+    * Running a kept fold frame again after the log's files change applies
+    * the old drop map and returns wrong rows; fold again instead (the new
+    * call re-checks the source fingerprint and re-runs the gate). Every
+    * caller in this codebase collects or runs its fold at once.
     */
   private def afterDrop(oplog: DataFrame): DataFrame = {
     val dropSeq = try_element_at(typedLit(gate(oplog).drops), col("index_name"))
@@ -348,6 +358,7 @@ object Oplog {
     * then runs per row: overlays newer than the surviving VADD, in seq
     * order, fold over its map latest-wins per key (a key whose newest
     * value is null stays, with null). An empty merged map reads as null.
+    * Valid for the log as of this call; see [[afterDrop]].
     */
   def foldVectors(oplog: DataFrame): DataFrame = {
     val op = col("op")
@@ -389,6 +400,7 @@ object Oplog {
     * Output: (index_name, src, dst, rel, weight, created_at, deleted_at).
     * Closed versions are retained with their deleted_at (history IS the
     * feature); `deleted_at IS NULL` = active edge.
+    * Valid for the log as of this call; see [[afterDrop]].
     */
   def foldEdges(oplog: DataFrame): DataFrame = {
     val ev = afterDrop(oplog)
@@ -481,6 +493,7 @@ object Oplog {
     *
     * Scale: config traffic is catalog-sized (a handful of rows per index),
     * so the per-index window here is nowhere near the data path.
+    * Valid for the log as of this call; see [[afterDrop]].
     */
   def foldConfig(oplog: DataFrame): DataFrame = {
     val life = afterDrop(oplog)

@@ -68,7 +68,9 @@ object Layouts {
     * 100 TB build keeps ~128 MB files, a KB-scale fixture collapses to 1.
     * Runs once at build time (the bench's untimed warmup), never on read.
     * Lists, deletes and renames through the Hadoop `FileSystem` of the
-    * path, so a stored layout compacts on any filesystem Spark writes to.
+    * path. Layouts themselves still live under the local `java.io.tmpdir`
+    * (see `root`) and `stored` checks `_SUCCESS` with `java.nio.file`, so
+    * today this always runs on the local filesystem.
     */
   private def compactSmallFiles(s: SparkSession, path: String): Unit = {
     val dir = new Path(path)

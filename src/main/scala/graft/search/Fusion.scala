@@ -1,7 +1,6 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 
 import graft.text.{Analyzer, Bm25}
@@ -122,9 +121,6 @@ object Fusion {
     // checkpointed and feeds them. The vector branch keeps its own scan
     // (it needs the vectors; materializing the wide columns would copy the
     // corpus — guide §8: move the heavy bytes once, decide on slim rows).
-    // A table whose analyzed plan has no join (a plain parquet table or an
-    // in-memory frame) is cheap to read twice, so it skips the eager
-    // checkpoint job and both consumers use the inline projection.
     val metaCols = Seq("_created_at", "_last_accessed", "_pinned",
       "memory_layer", "_decay_model", "_access_count")
     def slimProjected(df: DataFrame): DataFrame = {
@@ -142,8 +138,7 @@ object Fusion {
     }
     val slim: Option[DataFrame] =
       if (qTokens.nonEmpty && textQuery.nonEmpty && params.memory.enabled &&
-        (queryVecDF.nonEmpty || prebuiltVecTopK.nonEmpty) &&
-        table.queryExecution.analyzed.exists(_.isInstanceOf[Join]))
+        (queryVecDF.nonEmpty || prebuiltVecTopK.nonEmpty))
         Some(slimProjected(table).localCheckpoint())
       else None
     def tableIds: DataFrame =
