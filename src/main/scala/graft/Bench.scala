@@ -930,8 +930,8 @@ object Bench {
         val VOCAB = 30000
         val DOCLEN = 40
         // zipf-ish token ranks — the SHARED recipe (SyntheticVectors
-        // .zipfTokId; ScaleCheck's ingest corpus and ServeDiag measure
-        // the same distribution by construction).
+        // .zipfTokId; ScaleCheck's ingest corpus measures the same
+        // distribution by construction).
         def tokId(seed: Column, j: Column, salt: String): Column =
           graft.core.SyntheticVectors.zipfTokId(seed, j, salt, VOCAB)
         def vec(idc: Column, salt: String): Column =

@@ -33,9 +33,9 @@ object SyntheticVectors {
   /** Zipf-skewed synthetic token id for the text-serving workloads:
     * rank = ⌊vocab · u⁴⌋ with u hash-uniform — low ranks dominate, the
     * shape real vocabularies have. One definition for the same reason as
-    * [[clusteredVec]]: the bench's fusion corpus, ScaleCheck's ingest
-    * corpus and the ServeDiag adjudicator must all measure the SAME
-    * text distribution (r16 self-review — three hand copies had begun).
+    * [[clusteredVec]]: the bench's fusion corpus and ScaleCheck's ingest
+    * corpus must measure the SAME text distribution (r16 self-review —
+    * three hand copies had begun).
     */
   def zipfTokId(seed: Column, j: Column, salt: String, vocab: Int): Column = {
     val u = (pmod(xxhash64(seed, j, lit(salt)), lit(1000000L))

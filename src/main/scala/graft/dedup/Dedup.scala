@@ -269,8 +269,8 @@ object Dedup {
   /** Connected components over an undirected pair list (`id1`, `id2`) via
     * the alternating large-star / small-star algorithm (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14 — the same
-    * algorithm GraphFrames ships). Each round is two keyed aggregations +
-    * joins — no driver-side graph state, no all-pairs step — and the edge
+    * algorithm GraphFrames ships). Each round is two per-node-minimum
+    * windows + dedups — no driver-side graph state, no all-pairs step — and the edge
     * set provably converges to stars in O(log²/log) rounds, so a 100 TB
     * pair list needs the same ~dozen rounds a toy one does. This is the
     * step that turns near-dup PAIRS into dedup DECISIONS: every document
@@ -310,18 +310,22 @@ object Dedup {
     // Large-star: hang every neighbor larger than u off the minimum of
     // u's closed neighborhood. Small-star: orient edges large→small, then
     // hang each small neighbor (and u itself) off the minimum neighbor.
+    // Each per-node minimum is a window over the edges partitioned by u,
+    // so it rides the round's own shuffle: a groupBy joined back would
+    // plan as a broadcast join (the checkpointed edge set looks small),
+    // and every broadcast exchange is a Spark job of its own.
+    val byU = Window.partitionBy(col("u"))
     def largeStar(e: DataFrame): DataFrame = {
       val und = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val m = und.groupBy("u").agg(min(least(col("v"), col("u"))).as("m"))
-      dedupEdges(und.join(m, "u").where(col("v") > col("u"))
+      dedupEdges(und.withColumn("m", min(least(col("v"), col("u"))).over(byU))
+        .where(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v")))
     }
     def smallStar(e: DataFrame): DataFrame = {
       val dir = e.select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
-      val m = dir.groupBy("u").agg(min(col("v")).as("m"))
-      dedupEdges(dir.join(m, "u").select(col("v").as("u"), col("m").as("v"))
-        .union(m.select(col("u"), col("m").as("v"))))
+      dedupEdges(dir.withColumn("m", min(col("v")).over(byU))
+        .select(explode(array(col("v"), col("u"))).as("u"), col("m").as("v")))
     }
     // Star forest ⇔ no edge points up, one edge per child (edges are
     // deduped), and children and roots are disjoint sets of nodes.

@@ -34,29 +34,13 @@ abstract class VectorBinaryKernel extends BinaryExpression {
 
   /** Per-element term, e.g. diff*diff or product, over float vars x, y. */
   protected def termCode(x: String, y: String): String
-  protected def termEval(x: Float, y: Float): Float
-  protected def termEvalD(x: Double, y: Double): Double
   /** Final transform of the accumulated double sum. */
   protected def finishCode(sum: String): String = sum
-  protected def finishEval(sum: Double): Double = sum
+  /** The kernel on plain values: its [[VectorKernels]] twin. */
+  protected def evalOf(a: ArrayData, b: ArrayData): Double
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n != b.numElements())
-      throw new IllegalArgumentException(
-        s"vectors must have the same length: $n vs ${b.numElements()}")
-    if (wide) {
-      var sum = 0d; var i = 0
-      while (i < n) { sum += termEvalD(a.getFloat(i), b.getFloat(i)); i += 1 }
-      finishEval(sum)
-    } else {
-      var sum = 0f; var i = 0
-      while (i < n) { sum += termEval(a.getFloat(i), b.getFloat(i)); i += 1 }
-      finishEval(sum.toDouble)
-    }
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    evalOf(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -88,8 +72,8 @@ abstract class VectorBinaryKernel extends BinaryExpression {
 case class EuclideanSqDistance(left: Expression, right: Expression, wide: Boolean = false)
     extends VectorBinaryKernel {
   override protected def termCode(x: String, y: String): String = s"($x - $y) * ($x - $y)"
-  override protected def termEval(x: Float, y: Float): Float = { val d = x - y; d * d }
-  override protected def termEvalD(x: Double, y: Double): Double = { val d = x - y; d * d }
+  override protected def evalOf(a: ArrayData, b: ArrayData): Double =
+    VectorKernels.euclideanSq(a, b, wide)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
   override def prettyName: String = "euclidean_sq"
@@ -101,10 +85,9 @@ case class EuclideanSqDistance(left: Expression, right: Expression, wide: Boolea
 case class CosineDistance(left: Expression, right: Expression, wide: Boolean = false)
     extends VectorBinaryKernel {
   override protected def termCode(x: String, y: String): String = s"$x * $y"
-  override protected def termEval(x: Float, y: Float): Float = x * y
-  override protected def termEvalD(x: Double, y: Double): Double = x * y
   override protected def finishCode(sum: String): String = s"1.0d - $sum"
-  override protected def finishEval(sum: Double): Double = 1.0d - sum
+  override protected def evalOf(a: ArrayData, b: ArrayData): Double =
+    VectorKernels.cosineDistance(a, b, wide)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
   override def prettyName: String = "cosine_distance"
@@ -116,8 +99,8 @@ case class CosineDistance(left: Expression, right: Expression, wide: Boolean = f
 case class DotProduct(left: Expression, right: Expression, wide: Boolean = false)
     extends VectorBinaryKernel {
   override protected def termCode(x: String, y: String): String = s"$x * $y"
-  override protected def termEval(x: Float, y: Float): Float = x * y
-  override protected def termEvalD(x: Double, y: Double): Double = x * y
+  override protected def evalOf(a: ArrayData, b: ArrayData): Double =
+    VectorKernels.dot(a, b, wide)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
   override def prettyName: String = "dot_product"
@@ -435,6 +418,67 @@ case class HyperplaneBucketExpr(child: Expression, planes: Int) extends UnaryExp
       s"${ev.value} = graft.functions.ShingleUtil.hyperplaneBucket($a, $planes);")
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
   override def prettyName: String = "hyperplane_bucket"
+}
+
+/** The distance kernels on plain values: the loops of
+  * [[EuclideanSqDistance]], [[CosineDistance]] and [[DotProduct]] (whose
+  * interpreted `nullSafeEval` calls them) and of
+  * [[VectorFunctions.cosineSimilarityWide]], in the same operations and
+  * order as the generated code, so each result is bit-identical to its
+  * Column expression. For scoring passes that hold rows, not plans
+  * (`Fusion.searchWithFusionBatch`'s one-pass default path).
+  */
+object VectorKernels {
+  private def sameLength(a: ArrayData, b: ArrayData): Int = {
+    val n = a.numElements()
+    if (n != b.numElements())
+      throw new IllegalArgumentException(
+        s"vectors must have the same length: $n vs ${b.numElements()}")
+    n
+  }
+
+  /** Squared L2 distance; `wide` accumulates in double, else in float. */
+  def euclideanSq(a: ArrayData, b: ArrayData, wide: Boolean): Double = {
+    val n = sameLength(a, b)
+    if (wide) {
+      var sum = 0d; var i = 0
+      while (i < n) {
+        val d = a.getFloat(i).toDouble - b.getFloat(i).toDouble
+        sum += d * d; i += 1
+      }
+      sum
+    } else {
+      var sum = 0f; var i = 0
+      while (i < n) { val d = a.getFloat(i) - b.getFloat(i); sum += d * d; i += 1 }
+      sum.toDouble
+    }
+  }
+
+  /** Dot product; `wide` accumulates in double, else in float. */
+  def dot(a: ArrayData, b: ArrayData, wide: Boolean): Double = {
+    val n = sameLength(a, b)
+    if (wide) {
+      var sum = 0d; var i = 0
+      while (i < n) { sum += a.getFloat(i).toDouble * b.getFloat(i).toDouble; i += 1 }
+      sum
+    } else {
+      var sum = 0f; var i = 0
+      while (i < n) { sum += a.getFloat(i) * b.getFloat(i); i += 1 }
+      sum.toDouble
+    }
+  }
+
+  /** `1 - dot`: the cosine distance over normalized vectors. */
+  def cosineDistance(a: ArrayData, b: ArrayData, wide: Boolean): Double =
+    1.0d - dot(a, b, wide)
+
+  /** `dot / (|a|·|b|)` in double. A zero-norm side gives NaN here, where
+    * the Column expression divides by zero: null without ANSI mode, an
+    * error with it.
+    */
+  def cosineSimilarityWide(a: ArrayData, b: ArrayData): Double =
+    dot(a, b, wide = true) /
+      (math.sqrt(dot(a, a, wide = true)) * math.sqrt(dot(b, b, wide = true)))
 }
 
 /** Column-level API. */

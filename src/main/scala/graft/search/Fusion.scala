@@ -29,8 +29,10 @@ import graft.text.{Analyzer, Bm25}
   *     to vector-only, mirroring `FindIDsByTextSearch` returning nil;
   *   - alpha outside [0,1] falls back to 0.5.
   *
-  * Query construction is fully lazy: the query vector is either a literal
-  * or a one-row DataFrame broadcast-joined in-plan — no driver action.
+  * Query construction in [[searchWithFusionDF]] is fully lazy: the query
+  * vector is a one-row DataFrame broadcast-joined in-plan — no driver
+  * action. The batched form, [[searchWithFusionBatch]], runs its default
+  * path eagerly as one scoring pass.
   */
 object Fusion {
 
@@ -43,38 +45,19 @@ object Fusion {
       wide: Boolean = false,
       lang: String = "english")
 
-  /** Hybrid search with a driver-known query vector (literal in-plan). */
-  def searchWithFusion(
-      table: DataFrame,
-      idCol: String,
-      vecCol: String,
-      textCol: String,
-      queryVec: Option[Seq[Float]],
-      textQuery: String,
-      params: FusionParams,
-      filter: Option[Column] = None): DataFrame = {
-    val spark = table.sparkSession
-    // Zero-vector queries mean "text only" (graph-entity placeholder rows —
-    // ops.go:320-334 materializes zero vectors for bare graph nodes).
-    val qdf = queryVec.filterNot(_.forall(_ == 0f)).map { v =>
-      spark.range(1).select(lit(v.toArray).cast("array<float>").as("qvec"))
-    }
-    searchWithFusionDF(table, idCol, vecCol, textCol, qdf, textQuery, params, filter)
-  }
-
   /** Hybrid search with the query vector supplied as a one-row DataFrame
     * `(qvec)` (e.g. selected from a vector table) — stays lazy end-to-end.
-    */
-  /** @param allowList optional id allow-list DataFrame (one `idCol` column)
+    * `None` is a text-only query: raw BM25 scores, allow-list post-filter,
+    * top-k.
+    *
+    * @param allowList optional id allow-list DataFrame (one `idCol` column)
     *   — the reference's graph-filter ∩ bitmap intersection
     *   (`ops.go:941-962`): restricts the VECTOR branch before scoring and
     *   the TEXT branch after (corpus statistics stay unfiltered).
-    */
-  /** @param prebuiltPostings materialized (id, token, tf) postings — the
+    * @param prebuiltPostings materialized (id, token, tf) postings — the
     *   deployment layout; when provided the text branch skips the
     *   analyze/stem corpus scan entirely.
-    */
-  /** @param prebuiltVecTopK index-served vector candidates `(idCol,
+    * @param prebuiltVecTopK index-served vector candidates `(idCol,
     *   distance)`, already top-k — e.g. [[Ivf.search]] over the
     *   bucket-partitioned layout. When provided the vector branch skips the
     *   full table scan entirely (at scale the hybrid path should ride the
@@ -259,30 +242,85 @@ object Fusion {
       .select(col(idCol), col("score"))
   }
 
-  /** Batched hybrid fusion: run MANY hybrid queries in ONE plan — the
-    * serving shape that matches the reference's per-request `searchWithFusion`
-    * throughput (`ops.go:896-1211` serves ~1k QPS; a per-query Spark job pays
-    * a fixed multi-stage floor, so batch is the only route to parity).
+  /** The per-doc decay factor over `table`'s memory metadata — None when
+    * decay is disabled. Missing metadata columns default exactly as the
+    * fused plan always defaulted them.
+    */
+  private def decayFactor(table: DataFrame, params: FusionParams): Option[Column] =
+    if (!params.memory.enabled) None
+    else {
+      val present = table.columns.toSet
+      def c(name: String, default: Column): Column =
+        if (present(name)) col(name) else default
+      Some(Decay.factor(
+        params.memory, lit(params.now.toDouble),
+        c("_created_at", lit(null).cast("double")),
+        c("_last_accessed", lit(null).cast("double")),
+        c("_pinned", lit(false)),
+        c("memory_layer", lit(null).cast("string")),
+        c("_decay_model", lit(null).cast("string")),
+        c("_access_count", lit(0))))
+    }
+
+  /** The per-doc decay-factor frame `(idCol, _dec)` — None when decay is
+    * disabled. [[decayFactor]] is the ONE definition both batch paths and
+    * the serving-index build ([[ServingFusion.buildShards]]) evaluate, so
+    * their factors are bit-identical.
+    */
+  def decayFrame(table: DataFrame, idCol: String,
+                 params: FusionParams): Option[DataFrame] =
+    decayFactor(table, params).map(f => table.select(col(idCol), f.as("_dec")))
+
+  /** Batched hybrid fusion: run MANY hybrid queries at once — the serving
+    * shape that matches the reference's per-request `searchWithFusion`
+    * throughput (`ops.go:896-1211` serves ~1k QPS; a per-query Spark job
+    * pays a fixed multi-stage floor, so batch is the only route to parity).
     *
     * @param queries frame `(qid, qvec, qtext)` — one row per hybrid query.
-    *   Driver-bounded batch (broadcast on the vector side). Every row must
-    *   have a real (non-zero) query vector and distinct qid; text-only
-    *   queries go through [[searchWithFusionDF]] CASE A instead. A qtext
-    *   that analyzes to zero tokens contributes no text rows, so its fused
-    *   score degrades to `alpha * vscore` — the reference's Case-B-with-nil-
-    *   text semantics (`ops.go:1078`), same as the single-query path.
+    *   Driver-bounded batch (collected or broadcast). Every row must have a
+    *   real (non-zero) query vector and a distinct qid; text-only queries
+    *   go through [[searchWithFusionDF]] CASE A instead. A qtext that
+    *   analyzes to zero tokens contributes no text rows, so its fused score
+    *   degrades to `alpha * vscore` (times decay) — the reference's
+    *   Case-B-with-nil-text semantics (`ops.go:1078`), same as the
+    *   single-query path.
     *
     * Per-query semantics are IDENTICAL to [[searchWithFusionDF]] (vector
     * top-k `1/(1+d)` ⨝ per-query max-normalized BM25, alpha-weighted, decay,
-    * top-k); `FusionSpec` pins batch == per-query loop.
+    * top-k by (score desc, id asc)); `BatchFusionSpec` pins batch ==
+    * per-query loop.
     *
-    * Scale shape: the corpus is scanned ONCE for the text branch (postings +
-    * doc stats shared across the batch; per-query text work is a broadcast
-    * token join) and ONCE for the vector branch (broadcast queries +
-    * per-partition partial top-k via WindowGroupLimit before the qid
-    * exchange — `prebuiltVecTopK` from [[Ivf.search]] replaces even that
-    * with probed-bucket reads). All ranking windows are qid-partitioned,
-    * never global.
+    * Scale shape. Without a `prebuilt*` argument the batch runs eagerly as
+    * three Spark jobs, with no shuffle of its own and no checkpoint:
+    *   1. collect the queries: qid, query vector (normalized in-plan for
+    *      narrow cosine) and analyzed tokens (no job for a local frame);
+    *   2. [[Bm25.tokenStats]]: N, Σdl and the df of the batch's distinct
+    *      tokens over the UNFILTERED table (skipped when no query has a
+    *      token);
+    *   3. one scoring pass over the filtered, allow-listed table with the
+    *      batch broadcast. Per doc it computes the BM25 raw score of every
+    *      query ([[Bm25.termWeightOf]], query tokens summed in sorted
+    *      order), the distance to every query vector
+    *      ([[graft.functions.VectorKernels]], the kernels' plain-value
+    *      twins) and the decay factor, and feeds the serving core's
+    *      [[ServingFusion.CombinedPartial]]: per query the text top-k by
+    *      `-(raw·dec)`, the raw max over the kept hits, and the vector top-k
+    *      whose entries carry their raw score, decay and has-text flag.
+    *      Partials merge through [[Ivf.reducePartials]]; the driver blends
+    *      them with [[ServingFusion.blendCombined]].
+    * Executor state is O(nq·k) per partition; the result is a driver-built
+    * frame of at most nq·k rows. A table that is itself a join (a memory
+    * view) is planned once by job 2 and once by job 3.
+    *
+    * Scores match the DataFrame plan within summation order (the plan's
+    * aggregate adds a doc's term scores in shuffle order), so near-tied
+    * docs may swap at the k boundary. A zero-norm vector under wide cosine
+    * has no distance and never enters the vector top-k (the plan divides by
+    * zero there).
+    *
+    * With any `prebuilt*` argument the DataFrame plan
+    * ([[searchWithFusionBatchPlan]]) runs instead; it is also the oracle
+    * the one-pass path is specified against (`BatchFusionPropertySpec`).
     *
     * @param prebuiltVecTopK per-query index-served candidates
     *   `(qid, idCol, distance)` — the batch analogue of the single-query
@@ -296,32 +334,181 @@ object Fusion {
     *   so a serving deployment materializes the batch's scores once and
     *   passes them here — the difference is ~3× on the text branch.
     */
-  /** The per-doc decay-factor frame `(idCol, _dec)` — None when decay is
-    * disabled. ONE definition shared by [[searchWithFusionBatch]] and the
-    * serving-index build ([[ServingFusion.buildShards]]) so both paths'
-    * factors are bit-identical. Missing metadata columns default exactly
-    * as the fused plan always defaulted them.
+  def searchWithFusionBatch(
+      table: DataFrame,
+      idCol: String,
+      vecCol: String,
+      textCol: String,
+      queries: DataFrame,
+      params: FusionParams,
+      filter: Option[Column] = None,
+      allowList: Option[DataFrame] = None,
+      prebuiltPostings: Option[DataFrame] = None,
+      prebuiltVecTopK: Option[DataFrame] = None,
+      prebuiltTextScores: Option[DataFrame] = None): DataFrame =
+    if (prebuiltPostings.isEmpty && prebuiltVecTopK.isEmpty &&
+        prebuiltTextScores.isEmpty)
+      fusionBatchOnePass(table, idCol, vecCol, textCol, queries, params,
+        filter, allowList)
+    else
+      searchWithFusionBatchPlan(table, idCol, vecCol, textCol, queries,
+        params, filter, allowList, prebuiltPostings, prebuiltVecTopK,
+        prebuiltTextScores)
+
+  /** The default path of [[searchWithFusionBatch]]: three jobs, one scoring
+    * pass (see its scaladoc).
     */
-  def decayFrame(table: DataFrame, idCol: String,
-                 params: FusionParams): Option[DataFrame] =
-    if (!params.memory.enabled) None
-    else {
-      val present = table.columns.toSet
-      def c(name: String, default: Column): Column =
-        if (present(name)) col(name) else default
-      Some(table.select(
-        col(idCol),
-        Decay.factor(
-          params.memory, lit(params.now.toDouble),
-          c("_created_at", lit(null).cast("double")),
-          c("_last_accessed", lit(null).cast("double")),
-          c("_pinned", lit(false)),
-          c("memory_layer", lit(null).cast("string")),
-          c("_decay_model", lit(null).cast("string")),
-          c("_access_count", lit(0))).as("_dec")))
+  private def fusionBatchOnePass(
+      table: DataFrame,
+      idCol: String,
+      vecCol: String,
+      textCol: String,
+      queries: DataFrame,
+      params: FusionParams,
+      filter: Option[Column],
+      allowList: Option[DataFrame]): DataFrame = {
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.{VectorFunctions, VectorKernels}
+    val spark = table.sparkSession
+    import spark.implicits._
+
+    val alpha = if (params.alpha < 0 || params.alpha > 1) 0.5 else params.alpha
+    val k = params.k
+    // The plan's kernels (VectorSearch.topKBatch with normalized = preNorm).
+    val preNorm = params.metric == "cosine" && !params.wide
+    val distance: (ArrayData, ArrayData) => Double = (params.metric, params.wide) match {
+      case ("euclidean", w) => VectorKernels.euclideanSq(_, _, w)
+      case ("cosine", false) => VectorKernels.cosineDistance(_, _, wide = false)
+      case ("cosine", true) => (a, b) => 1.0 - VectorKernels.cosineSimilarityWide(a, b)
+      case (m, _) => throw new IllegalArgumentException(s"unsupported metric: $m")
+    }
+    def vec(c: Column): Column = {
+      val v = c.cast("array<float>")
+      if (preNorm) VectorFunctions.normalize(v) else v
     }
 
-  def searchWithFusionBatch(
+    // Job 1: the query batch.
+    val qrows = queries.select(col("qid").cast("long"), vec(col("qvec")),
+      Analyzer.analyzedTokens(col("qtext"), params.lang)).collect()
+    val nq = qrows.length
+    require(qrows.forall(!_.isNullAt(0)), "searchWithFusionBatch: null qid")
+    val qids = qrows.map(_.getLong(0))
+    require(qids.distinct.length == nq,
+      "searchWithFusionBatch: duplicate qids in the batch")
+    val qvecs: Array[Array[Float]] =
+      qrows.map(r => if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray)
+    val qtoks: Array[Seq[String]] =
+      qrows.map(r => if (r.isNullAt(2)) Seq.empty else r.getSeq[String](2))
+    // The batch's distinct tokens, sorted; each query's terms as
+    // (token index, multiplicity) in that order, which fixes every doc's
+    // term-summation order.
+    val vocab = qtoks.flatten.distinct.sorted
+    val tokIx = vocab.zipWithIndex.toMap
+    val qTerms: Array[Array[(Int, Int)]] = qtoks.map(_.groupBy(identity).toArray
+      .map { case (t, xs) => (tokIx(t), xs.size) }.sortBy(_._1))
+
+    // Job 2: corpus statistics for the batch's tokens.
+    val stats =
+      if (vocab.isEmpty) Bm25.TokenStats(0L, 0L, Array.emptyLongArray)
+      else Bm25.tokenStats(table, textCol, vocab, params.lang)
+
+    // Job 3: one scoring pass over the kept docs.
+    val filtered = filter.fold(table)(table.filter)
+    val kept = allowList.fold(filtered)(a =>
+      filtered.join(a.select(col(idCol)), Seq(idCol), "left_semi"))
+    val rows = kept.select(col(idCol).cast("long"),
+        Analyzer.analyzedTokens(col(textCol), params.lang),
+        vec(col(vecCol)),
+        decayFactor(table, params).fold(lit(1.0))(coalesce(_, lit(1.0))))
+      .queryExecution.toRdd
+    val bc = spark.sparkContext.broadcast((vocab, qTerms, qvecs, stats))
+    val partials = rows.mapPartitions { it =>
+      val (voc, terms, qvs, st) = bc.value
+      val ix = new java.util.HashMap[UTF8String, Integer]()
+      voc.indices.foreach(i => ix.put(UTF8String.fromString(voc(i)), i))
+      val qa: Array[ArrayData] =
+        qvs.map(v => if (v == null) null else ArrayData.toArrayData(v))
+      val tf = new Array[Long](voc.length)
+      val w = new Array[Double](voc.length)
+      val touched = new Array[Int](voc.length)
+      val p = new ServingFusion.CombinedPartial(terms.length, k, k)
+      it.foreach { r =>
+        if (!r.isNullAt(0)) {
+          val id = r.getLong(0)
+          val dec = r.getDouble(3)
+          var nt = 0
+          if (!r.isNullAt(1)) {
+            val toks = r.getArray(1)
+            val dl = toks.numElements()
+            var i = 0
+            while (i < dl) {
+              val t = ix.get(toks.getUTF8String(i))
+              if (t != null) {
+                if (tf(t) == 0) { touched(nt) = t; nt += 1 }
+                tf(t) += 1
+              }
+              i += 1
+            }
+            i = 0
+            while (i < nt) {
+              val t = touched(i)
+              w(t) = Bm25.termWeightOf(tf(t), st.df(t), dl, st.n, st.avgDl)
+              i += 1
+            }
+          }
+          val v = if (r.isNullAt(2)) null else r.getArray(2)
+          var qi = 0
+          while (qi < terms.length) {
+            var raw = 0.0
+            var hit = false
+            val qt = terms(qi)
+            var j = 0
+            while (j < qt.length) {
+              val t = qt(j)._1
+              if (tf(t) > 0) { raw += qt(j)._2.toDouble * w(t); hit = true }
+              j += 1
+            }
+            if (hit) {
+              if (raw > p.text.maxRaw(qi)) p.text.maxRaw(qi) = raw
+              p.text.insert(qi, -(raw * dec), id, raw, dec)
+            }
+            if (v != null && qa(qi) != null) {
+              val d = distance(v, qa(qi))
+              if (!d.isNaN) p.insertVec(qi, d, id, if (hit) raw else 0.0, dec, hit)
+            }
+            qi += 1
+          }
+          var i = 0
+          while (i < nt) { tf(touched(i)) = 0; i += 1 }
+        }
+      }
+      Iterator.single(p)
+    }
+    val merged = Ivf.reducePartials(partials,
+      new ServingFusion.CombinedPartial(nq, k, k),
+      (a: ServingFusion.CombinedPartial, b: ServingFusion.CombinedPartial) =>
+        a.merge(b))
+    bc.destroy()
+    ServingFusion.blendCombined(qids, merged, alpha, k).toSeq
+      .toDF("qid", idCol, "score")
+      .select(col("qid").cast(queries.schema("qid").dataType),
+        col(idCol).cast(table.schema(idCol).dataType), col("score"))
+  }
+
+  /** [[searchWithFusionBatch]] as one DataFrame plan — the path for the
+    * `prebuilt*` arguments and the oracle of the one-pass default path.
+    *
+    * Scale shape: the corpus is scanned ONCE for the text branch (postings
+    * + doc stats shared across the batch; per-query text work is a
+    * broadcast token join) and ONCE for the vector branch (broadcast
+    * queries + per-partition partial top-k before the qid exchange —
+    * `prebuiltVecTopK` from [[Ivf.search]] replaces even that with
+    * probed-bucket reads). All ranking windows are qid-partitioned, never
+    * global. Without `prebuiltPostings`/`prebuiltTextScores` the ad-hoc
+    * postings and the batch's raw scores are each `localCheckpoint`ed.
+    */
+  private[search] def searchWithFusionBatchPlan(
       table: DataFrame,
       idCol: String,
       vecCol: String,

@@ -334,7 +334,7 @@ object ServingFusion {
     * major sharding makes merges disjoint per doc, so `merge` is a plain
     * bounded union like [[Ivf.TopK.merge]].
     */
-  private final class FusedPartial(nq: Int, k: Int) extends Serializable {
+  private[search] final class FusedPartial(nq: Int, k: Int) extends Serializable {
     val maxRaw: Array[Double] = Array.fill(nq)(0.0)
     val key: Array[Array[Double]] = Array.fill(nq)(Array.fill(k)(Double.MaxValue))
     val pid: Array[Array[Long]] = Array.fill(nq)(Array.fill(k)(Long.MaxValue))
@@ -499,7 +499,7 @@ object ServingFusion {
     * decay factor and has-text-hit flag the owning partition recorded for
     * a vector-leg id, None when no partition owns the id.
     */
-  private def blendTopK(
+  private[search] def blendTopK(
       qids: Array[Long],
       merged: FusedPartial,
       vecIds: Array[Array[Long]],
@@ -1592,7 +1592,7 @@ object ServingFusion {
     * so the merged vector leg is bit-identical to
     * [[Ivf.searchBatchedFast]]'s.
     */
-  private final class CombinedPartial(nq: Int, kText: Int, kVec: Int)
+  private[search] final class CombinedPartial(nq: Int, kText: Int, kVec: Int)
       extends Serializable {
     val text = new FusedPartial(nq, kText)
     val vd: Array[Array[Double]] = Array.fill(nq)(Array.fill(kVec)(Double.MaxValue))
@@ -1970,7 +1970,7 @@ object ServingFusion {
     * (the global top-kVec — doc-major partitions are disjoint) with its
     * attached hydration, and run the shared α-blend.
     */
-  private def blendCombined(
+  private[search] def blendCombined(
       qids: Array[Long],
       merged: CombinedPartial,
       alpha: Double,

@@ -172,6 +172,57 @@ object Bm25 {
     idf * tfPart
   }
 
+  /** Corpus statistics a batch's BM25 weights need, for the batch's
+    * tokens only: the doc count `n`, the analyzed-length total `sumDl` and
+    * `df(i)`, the document frequency of the i-th requested token.
+    * `avgDl` is Spark's `avg(dl)` exactly: every partial sum of integer
+    * lengths is exact in double.
+    */
+  final case class TokenStats(n: Long, sumDl: Long, df: Array[Long]) {
+    def avgDl: Double = sumDl.toDouble / n.toDouble
+  }
+
+  /** [[TokenStats]] over `docs` in ONE Spark job: each partition counts its
+    * rows, their analyzed lengths ([[Analyzer.analyzedTokens]], the
+    * expressions of [[postings]]) and the docs holding each of `tokens`;
+    * the driver adds the per-partition counts. Docs with null or empty
+    * text count in `n` with length 0, as in [[docLengthsFromPostings]].
+    * The same numbers [[searchPostingsBatch]] derives through its postings
+    * joins, without building postings.
+    */
+  def tokenStats(docs: DataFrame, textCol: String, tokens: Array[String],
+                 lang: String = "english"): TokenStats = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val parts = docs.select(Analyzer.analyzedTokens(col(textCol), lang))
+      .queryExecution.toRdd
+      .mapPartitions { it =>
+        val ix = new java.util.HashMap[UTF8String, Integer]()
+        tokens.indices.foreach(i => ix.put(UTF8String.fromString(tokens(i)), i))
+        val df = new Array[Long](tokens.length)
+        val lastDoc = Array.fill(tokens.length)(-1L)
+        var n = 0L
+        var sumDl = 0L
+        it.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val toks = r.getArray(0)
+            val dl = toks.numElements()
+            sumDl += dl
+            var i = 0
+            while (i < dl) {
+              val t = ix.get(toks.getUTF8String(i))
+              if (t != null && lastDoc(t) != n) { lastDoc(t) = n; df(t) += 1 }
+              i += 1
+            }
+          }
+          n += 1
+        }
+        Iterator.single((n, sumDl, df))
+      }
+      .collect()
+    TokenStats(parts.map(_._1).sum, parts.map(_._2).sum,
+      Array.tabulate(tokens.length)(i => parts.map(_._3(i)).sum))
+  }
+
   /** Fully-weighted postings `(token, idCol, w)` over the WHOLE
     * vocabulary — the corpus-side artifact a text-serving index is built
     * from ([[graft.search.ServingFusion.buildShards]]). Offline build

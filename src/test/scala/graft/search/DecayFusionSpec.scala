@@ -82,8 +82,9 @@ class DecayFusionSpec extends SparkSpec {
       (2L, Array(0.9f, 0.1f), "gamma delta"),
       (3L, Array(0f, 1f), "searchterm searchterm searchterm")
     ).toDF("id", "vector", "text")
-    val res = Fusion.searchWithFusion(table, "id", "vector", "text",
-        Some(Seq(1f, 0f)), "searchterm",
+    val qvec = Seq(Tuple1(Array(1f, 0f))).toDF("qvec")
+    val res = Fusion.searchWithFusionDF(table, "id", "vector", "text",
+        Some(qvec), "searchterm",
         Fusion.FusionParams(alpha = 0.5, k = 3, metric = "cosine"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // doc1: vscore = 1/(1+0) = 1, tscore 0 → 0.5
@@ -98,7 +99,7 @@ class DecayFusionSpec extends SparkSpec {
       (1L, Array(0f, 0f), "foo bar"),
       (2L, Array(0f, 0f), "foo foo baz")
     ).toDF("id", "vector", "text")
-    val viaFusion = Fusion.searchWithFusion(table, "id", "vector", "text",
+    val viaFusion = Fusion.searchWithFusionDF(table, "id", "vector", "text",
         None, "foo", Fusion.FusionParams(k = 2))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val direct = graft.text.Bm25.search(table, "id", "text", "foo")
