@@ -564,17 +564,18 @@ object Bench {
         // COMPRESSED combined serving: same one-job fused pass over int8
         // codes (4x less resident vector memory; normalized corpus =>
         // absMax 1.0, the quantizer's exact bound for this layout).
-        val combined8 = graft.search.ServingFusion.buildCombinedInt8(
+        val int8 = graft.search.VecCodec.Int8(absMax = 1.0)
+        val combined8 = graft.search.ServingFusion.buildCombined(
           table.select(col("doc_id")), post, "doc_id",
           assigned.select(col("id").as("doc_id"), col("vector"),
             col("bucket")),
-          absMax = 1.0, Fusion.decayFrame(table, "doc_id", params),
-          prebuiltDocLengths = Some(dls), prebuiltTokenDf = Some(tdf))
+          Fusion.decayFrame(table, "doc_id", params),
+          prebuiltDocLengths = Some(dls), prebuiltTokenDf = Some(tdf))(int8)
           .cache()
         combined8.count()
         def runC8(qs2: Seq[graft.search.ServingFusion.ServedQuery]): Unit =
-          graft.search.ServingFusion.fusedTopKCombinedInt8(combined8, cents,
-            qs2, absMax = 1.0, params.alpha, params.k, nProbe = 8, kVec = 10)
+          graft.search.ServingFusion.fusedTopKCombined(combined8, cents,
+            qs2, params.alpha, params.k, nProbe = 8, kVec = 10)(int8)
         runC8(sqAll)
         val secC8 = replausibleQps(s"$priorKey.fused_qps_combined_int8",
           recordSpread(s"$priorKey.fused_qps_combined_int8",
@@ -638,19 +639,20 @@ object Bench {
           replausible(s"$priorKey.ingest_to_serve_sec",
             Seq.fill(3)(rep()).min)(rep())
         }
-        // Int8 ingest twin (VERDICT r16 #7): same frozen-absMax discipline
-        // (appendCombinedInt8's contract), landed into the COMPRESSED
-        // combined index — one number, closes the f32/int8 symmetry.
+        // Int8 ingest (VERDICT r16 #7): same frozen-absMax discipline
+        // (appendCombined's contract under the int8 codec), landed into the
+        // COMPRESSED combined index — one number, closes the f32/int8
+        // symmetry.
         val ing8Sec = {
           def rep(): Double = timeIt {
-            val seg = graft.search.ServingFusion.buildCombinedInt8(
+            val seg = graft.search.ServingFusion.buildCombined(
               ingBatchT.select(col("doc_id")), ingPostB, "doc_id", ingAsgB,
-              absMax = 1.0, dec = ingDecB, numShards = 1,
-              prebuiltTokenDf = Some(tdf), frozenStats = Some(frozen)).cache()
+              dec = ingDecB, numShards = 1, prebuiltTokenDf = Some(tdf),
+              frozenStats = Some(frozen))(int8).cache()
             seg.count()
-            graft.search.ServingFusion.fusedTopKCombinedInt8(
-              combined8.union(seg), cents, sq1c, absMax = 1.0, params.alpha,
-              params.k, nProbe = 8, kVec = 10)
+            graft.search.ServingFusion.fusedTopKCombined(
+              combined8.union(seg), cents, sq1c, params.alpha, params.k,
+              nProbe = 8, kVec = 10)(int8)
             seg.unpersist()
           }
           replausible(s"$priorKey.ingest_to_serve_int8_sec",

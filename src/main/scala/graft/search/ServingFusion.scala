@@ -1,7 +1,9 @@
 package graft.search
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.text.Bm25
 
@@ -48,14 +50,19 @@ import graft.text.Bm25
   * serving entry point.
   *
   * The COMBINED family collapses even the two-leg pipeline's serial job
-  * rounds: [[buildCombined]] co-locates each partition's postings CSR,
-  * decay factors and bucket-major IVF vector blocks (int8 twin:
-  * [[buildCombinedInt8]], 4× less resident memory), and
-  * [[fusedTopKCombined]] / [[fusedTopKCombinedInt8]] /
-  * [[mmrTopKCombined]] serve a whole hybrid (or MMR-diversified) query
-  * batch as ONE Spark job over driver-resident queries — the
-  * architecture's latency floor (one job launch, ~30 ms at local[32]),
-  * every path spec-pinned bit-identical to its multi-job twin.
+  * rounds. It is one core written over a vector codec ([[VecCodec]]:
+  * plain f32, or int8 codes + norms — the reference's `DB.Compress` mode,
+  * 4× less resident vector memory): [[buildCombined]] co-locates each
+  * partition's postings CSR, decay factors and bucket-major IVF vector
+  * blocks; [[appendCombined]] / [[buildSegment]] land segments,
+  * [[compactCombined]] folds them, [[saveCombined]] / [[loadCombined]]
+  * snapshot them; and [[fusedTopKCombined]] / [[mmrTopKCombined]] serve a
+  * whole hybrid (or MMR-diversified) query batch as ONE Spark job over
+  * driver-resident queries — the architecture's latency floor (one job
+  * launch, ~30 ms at local[32]), spec-pinned bit-identical to the
+  * multi-job path for both codecs. Only the codec's payload, stored
+  * columns, distance kernel and pool payload differ between the two
+  * layouts.
   */
 object ServingFusion {
 
@@ -166,90 +173,60 @@ object ServingFusion {
     if (numShards > 0) joined.repartition(numShards, col("_id"))
     else joined.repartition(col("_id"))
 
+  /** One partition's vector rows, accumulated per IVF bucket while the
+    * partition's docs stream by, then laid out bucket-major (buckets
+    * ascending) — the ONE copy of that layout logic, shared by
+    * [[assemble]] and [[compactCombined]] so the build, load and compact
+    * paths cannot drift. The codec packs the ordered rows
+    * ([[VecCodec.shard]]).
+    */
+  private final class VecBlocks[V] {
+    private val byBucket = scala.collection.mutable.LongMap
+      .empty[(scala.collection.mutable.ArrayBuilder.ofInt,
+              scala.collection.mutable.ArrayBuffer[V])]
+
+    def add(bucket: Long, local: Int, v: V): Unit = {
+      val e = byBucket.getOrElseUpdate(bucket,
+        (new scala.collection.mutable.ArrayBuilder.ofInt,
+         scala.collection.mutable.ArrayBuffer.empty[V]))
+      e._1 += local
+      e._2 += v
+    }
+
+    /** (buckets, bOff, vecLocal, rows in that order). */
+    def layout: (Array[Long], Array[Int], Array[Int],
+        scala.collection.mutable.ArrayBuffer[V]) = {
+      val bs = byBucket.keys.toArray.sorted
+      val bOff = new Array[Int](bs.length + 1)
+      val vecLocal = new scala.collection.mutable.ArrayBuilder.ofInt
+      val rows = scala.collection.mutable.ArrayBuffer.empty[V]
+      var b = 0
+      while (b < bs.length) {
+        bOff(b) = rows.length
+        val (locals, vs) = byBucket(bs(b))
+        vecLocal ++= locals.result()
+        rows ++= vs
+        b += 1
+      }
+      bOff(bs.length) = rows.length
+      (bs, bOff, vecLocal.result(), rows)
+    }
+  }
+
+  /** A combined shard from its text half and vector blocks; `dimHint` is
+    * the dim when no vector row is left (a compaction that vacuumed all).
+    */
+  private def combinedShard[S <: CombinedBlocks](codec: VecCodec[S])(
+      text: Shard, blocks: VecBlocks[codec.Vec], dimHint: Int): S = {
+    val (bs, bOff, vecLocal, rows) = blocks.layout
+    codec.shard(text, bs, bOff, vecLocal, rows,
+      if (rows.isEmpty) dimHint else codec.dimOf(rows(0)))
+  }
+
   /** Assemble a [[Shard]]'s token-CSR arrays from the per-token builders a
     * partition pass accumulated — shared by [[buildShards]] (per-posting
-    * rows) and [[buildCombined]] (per-doc aggregated posting lists).
+    * rows) and the combined layouts (per-doc aggregated posting lists).
     */
-  /** Finalize a partition's bucket-major f32 vector blocks from the
-    * per-bucket (local-doc builder, row buffer) accumulators — the ONE
-    * copy of the (buckets sorted ascending, CSR offsets, row copy) layout
-    * logic, shared by [[assembleF32]] and [[compactCombined]] so the
-    * build/load/compact paths cannot drift.
-    * Returns (buckets, bOff, vecLocal, flat, dim).
-    */
-  private def finishVecBlocksF32(
-      byBucket: scala.collection.mutable.LongMap[
-        (scala.collection.mutable.ArrayBuilder.ofInt,
-         scala.collection.mutable.ArrayBuffer[Array[Float]])])
-      : (Array[Long], Array[Int], Array[Int], Array[Float], Int) = {
-    val bs = byBucket.keys.toArray.sorted
-    val locals = bs.map(b => byBucket(b)._1.result())
-    val rows = bs.map(b => byBucket(b)._2)
-    val nVec = locals.map(_.length).sum
-    val dim = rows.collectFirst {
-      case v if v.nonEmpty => v(0).length
-    }.getOrElse(0)
-    val bOff = new Array[Int](bs.length + 1)
-    val vecLocal = new Array[Int](nVec)
-    val flat = new Array[Float](nVec * dim)
-    var b = 0
-    var off = 0
-    while (b < bs.length) {
-      bOff(b) = off
-      System.arraycopy(locals(b), 0, vecLocal, off, locals(b).length)
-      var r = 0
-      while (r < rows(b).length) {
-        System.arraycopy(rows(b)(r), 0, flat, (off + r) * dim, dim)
-        r += 1
-      }
-      off += locals(b).length
-      b += 1
-    }
-    bOff(bs.length) = off
-    (bs, bOff, vecLocal, flat, dim)
-  }
-
-  /** [[finishVecBlocksF32]]'s int8 twin over (codes row, stored norm)
-    * buffers — shared by [[buildCombinedInt8]] (which pairs each
-    * quantized row with [[Ivf.int8Norm]] at accumulation),
-    * [[compactCombinedInt8]] and [[loadCombinedInt8]] (which carry
-    * stored norms verbatim).
-    * Returns (buckets, bOff, vecLocal, codes, norms, dim).
-    */
-  private def finishVecBlocksInt8(
-      byBucket: scala.collection.mutable.LongMap[
-        (scala.collection.mutable.ArrayBuilder.ofInt,
-         scala.collection.mutable.ArrayBuffer[(Array[Byte], Float)])])
-      : (Array[Long], Array[Int], Array[Int], Array[Byte], Array[Float], Int) = {
-    val bs = byBucket.keys.toArray.sorted
-    val locals = bs.map(b => byBucket(b)._1.result())
-    val rows = bs.map(b => byBucket(b)._2)
-    val nVec = locals.map(_.length).sum
-    val dim = rows.collectFirst {
-      case v if v.nonEmpty => v(0)._1.length
-    }.getOrElse(0)
-    val bOff = new Array[Int](bs.length + 1)
-    val vecLocal = new Array[Int](nVec)
-    val codes = new Array[Byte](nVec * dim)
-    val norms = new Array[Float](nVec)
-    var b = 0
-    var off = 0
-    while (b < bs.length) {
-      bOff(b) = off
-      System.arraycopy(locals(b), 0, vecLocal, off, locals(b).length)
-      var r = 0
-      while (r < rows(b).length) {
-        System.arraycopy(rows(b)(r)._1, 0, codes, (off + r) * dim, dim)
-        norms(off + r) = rows(b)(r)._2
-        r += 1
-      }
-      off += locals(b).length
-      b += 1
-    }
-    bOff(bs.length) = off
-    (bs, bOff, vecLocal, codes, norms, dim)
-  }
-
   private def finishShard(
       ids: Array[Long],
       dec: Array[Double],
@@ -560,14 +537,36 @@ object ServingFusion {
     out
   }
 
-  /** A [[Shard]] plus the SAME partition's vectors laid out bucket-major:
-    * `buckets(b)` owns vector rows `[bOff(b), bOff(b+1))`; row `r` is the
-    * local doc `vecLocal(r)` (an index into `text.ids`/`text.dec`) with
-    * its floats at `flat(r*dim, (r+1)*dim)`. Doc-major partitioning means
-    * a doc's postings, decay factor AND vector live in ONE partition — the
-    * layout a search-engine shard uses, and what lets a fused hybrid query
-    * run both legs plus hydration in a single executor pass
-    * ([[fusedTopKCombined]]).
+  /** The codec-independent half of a combined shard: a [[Shard]] plus the
+    * SAME partition's vectors laid out bucket-major — `buckets(b)` owns
+    * vector rows `[bOff(b), bOff(b+1))`; row `r` is the local doc
+    * `vecLocal(r)` (an index into `text.ids`/`text.dec`). Doc-major
+    * partitioning means a doc's postings, decay factor AND vector live in
+    * ONE partition — the layout a search-engine shard uses, and what lets
+    * a fused hybrid query run both legs plus hydration in a single
+    * executor pass ([[fusedTopKCombined]]). The vector payload is the
+    * codec's ([[VecCodec]]).
+    */
+  sealed trait CombinedBlocks {
+    def text: Shard
+    def buckets: Array[Long]
+    def bOff: Array[Int]
+    def vecLocal: Array[Int]
+    def dim: Int
+    /** bucket id → block index. */
+    def bucketBlock: scala.collection.mutable.LongMap[Int]
+  }
+
+  private def blockIndex(
+      buckets: Array[Long]): scala.collection.mutable.LongMap[Int] = {
+    val m = scala.collection.mutable.LongMap.empty[Int]
+    var i = 0
+    while (i < buckets.length) { m.update(buckets(i), i); i += 1 }
+    m
+  }
+
+  /** The f32 combined shard ([[VecCodec.F32]]): row `r`'s floats at
+    * `flat(r*dim, (r+1)*dim)`.
     */
   final case class CombinedShard(
       text: Shard,
@@ -575,14 +574,10 @@ object ServingFusion {
       bOff: Array[Int],
       vecLocal: Array[Int],
       flat: Array[Float],
-      dim: Int) {
+      dim: Int) extends CombinedBlocks {
 
-    @transient lazy val bucketBlock: scala.collection.mutable.LongMap[Int] = {
-      val m = scala.collection.mutable.LongMap.empty[Int]
-      var i = 0
-      while (i < buckets.length) { m.update(buckets(i), i); i += 1 }
-      m
-    }
+    @transient lazy val bucketBlock: scala.collection.mutable.LongMap[Int] =
+      blockIndex(buckets)
 
     /** Per-row ‖x‖² for the L2 path, float-accumulated exactly like
       * [[Ivf.searchBatchedFast]]'s per-block scratch so L2 distances stay
@@ -605,11 +600,10 @@ object ServingFusion {
     }
   }
 
-  /** The COMPRESSED combined shard — [[CombinedShard]] with the vector
-    * blocks stored as int8 codes + precomputed norms ([[Ivf.quantizeArray]]
-    * / [[Ivf.int8Norm]], the reference's `DB.Compress` mode): 4× less
-    * resident vector memory, same doc-major text/decay co-location. Row
-    * `r`'s codes sit at `codes(r*dim, (r+1)*dim)` with norm `norms(r)`.
+  /** The COMPRESSED combined shard ([[VecCodec.Int8]], the reference's
+    * `DB.Compress` mode): 4× less resident vector memory, same doc-major
+    * text/decay co-location. Row `r`'s codes sit at
+    * `codes(r*dim, (r+1)*dim)` with norm `norms(r)`.
     */
   final case class CombinedShardInt8(
       text: Shard,
@@ -618,14 +612,10 @@ object ServingFusion {
       vecLocal: Array[Int],
       codes: Array[Byte],
       norms: Array[Float],
-      dim: Int) {
+      dim: Int) extends CombinedBlocks {
 
-    @transient lazy val bucketBlock: scala.collection.mutable.LongMap[Int] = {
-      val m = scala.collection.mutable.LongMap.empty[Int]
-      var i = 0
-      while (i < buckets.length) { m.update(buckets(i), i); i += 1 }
-      m
-    }
+    @transient lazy val bucketBlock: scala.collection.mutable.LongMap[Int] =
+      blockIndex(buckets)
   }
 
   /** One driver-resident hybrid query for [[fusedTopKCombined]]: the
@@ -664,19 +654,6 @@ object ServingFusion {
     }
   }
 
-  /** Build the combined doc-major serving state: ONE repartition by doc id
-    * co-locates each doc's aggregated posting list, decay factor, vector
-    * and IVF bucket, and each partition assembles its [[Shard]] plus
-    * bucket-major vector blocks. Offline, cached like [[buildShards]] /
-    * [[Ivf.servingIndex]] — at cluster scale the combined shard is the
-    * natural persisted layout for a hybrid index (the reference keeps the
-    * HNSW arena, postings and metadata of a collection on one node for
-    * the same reason).
-    *
-    * @param assigned `(idCol, vector, bucket)` — [[Ivf.assignFast]] output
-    *   over NORMALIZED vectors (the serving kernels' cosine contract).
-    *   Docs missing from it (or with a null vector) still text-serve.
-    */
   /** The combined layouts' shared input frame, doc-major partitioned:
     * one row per doc — `(_id, _dec, _vec, _bucket, _post)` with postings
     * aggregated to a list (bounded by doc length) and vector + bucket
@@ -689,8 +666,8 @@ object ServingFusion {
     * onto it). A doc present in `assigned` but absent from the spine
     * silently disappears from the combined vector leg — where the
     * two-leg path (a separately built [[Ivf.servingIndex]]) would still
-    * return it, breaking the bit-identity the combined twins are
-    * spec-pinned to. The builders assert it cheaply: extra `assigned`
+    * return it, breaking the bit-identity the combined path is
+    * spec-pinned to. The build asserts it cheaply: extra `assigned`
     * rows surviving an anti-join against the spine fail the build loudly
     * instead of serving with silent recall loss.
     */
@@ -726,7 +703,22 @@ object ServingFusion {
       .join(pAgg, Seq("_id"), "left"), numShards)
   }
 
-  def buildCombined(
+  /** Build the combined doc-major serving state: ONE repartition by doc id
+    * co-locates each doc's aggregated posting list, decay factor, vector
+    * and IVF bucket ([[combinedRows]]), and each partition assembles its
+    * [[Shard]] plus bucket-major vector blocks in the codec's layout —
+    * int8 codes are quantized here against the codec's trained `absMax`
+    * ([[graft.search.Quantizer]]'s protocol). Offline, cached like
+    * [[buildShards]] / [[Ivf.servingIndex]] — at cluster scale the
+    * combined shard is the natural persisted layout for a hybrid index
+    * (the reference keeps the HNSW arena, postings and metadata of a
+    * collection on one node for the same reason).
+    *
+    * @param assigned `(idCol, vector, bucket)` — [[Ivf.assignFast]] output
+    *   over NORMALIZED vectors (the serving kernels' cosine contract).
+    *   Docs missing from it (or with a null vector) still text-serve.
+    */
+  def buildCombined[S <: CombinedBlocks](
       allIds: DataFrame,
       post: DataFrame,
       idCol: String,
@@ -735,72 +727,54 @@ object ServingFusion {
       numShards: Int = 0,
       prebuiltDocLengths: Option[DataFrame] = None,
       prebuiltTokenDf: Option[DataFrame] = None,
-      frozenStats: Option[(Long, Double)] = None): org.apache.spark.rdd.RDD[CombinedShard] = {
+      frozenStats: Option[(Long, Double)] = None)(
+      implicit codec: VecCodec[S]): RDD[S] =
     combinedRows(allIds, post, idCol, assigned, dec, numShards,
       prebuiltDocLengths, prebuiltTokenDf, frozenStats).rdd
-      .mapPartitions(assembleF32)
-  }
+      .mapPartitions(assemble(codec))(codec.tag)
 
-  /** Assemble one partition of `(_id, _dec, _vec, _bucket, _post)` rows —
-    * the [[combinedRows]] frame, positionally — into one [[CombinedShard]].
-    * Shared by [[buildCombined]], [[buildSegment]] and [[loadCombined]]
-    * (the persisted layout stores exactly this row shape).
+  /** [[buildCombined]] under [[VecCodec.Int8]] — the int8 build entry
+    * point the benchmark calls.
     */
-  private[graft] def assembleF32(
-      it: Iterator[org.apache.spark.sql.Row]): Iterator[CombinedShard] = {
-    val text = new DocText
-    val byBucket = scala.collection.mutable.LongMap
-      .empty[(scala.collection.mutable.ArrayBuilder.ofInt,
-              scala.collection.mutable.ArrayBuffer[Array[Float]])]
-    it.foreach { r =>
-      val li = text.add(r, postIx = 4)
-      if (!r.isNullAt(2) && !r.isNullAt(3)) {
-        val e = byBucket.getOrElseUpdate(r.getLong(3),
-          (new scala.collection.mutable.ArrayBuilder.ofInt,
-           scala.collection.mutable.ArrayBuffer.empty[Array[Float]]))
-        e._1 += li
-        e._2 += r.getSeq[Float](2).toArray
-      }
-    }
-    if (text.isEmpty) Iterator.empty
-    else {
-      // Bucket blocks in ascending bucket order (deterministic layout;
-      // scan results don't depend on it — the (distance, id) total
-      // order handles ties).
-      val (bs, bOff, vecLocal, flat, dim) = finishVecBlocksF32(byBucket)
-      Iterator.single(CombinedShard(text.shard, bs, bOff, vecLocal, flat, dim))
-    }
-  }
+  def buildCombinedInt8(
+      allIds: DataFrame,
+      post: DataFrame,
+      idCol: String,
+      assigned: DataFrame,
+      absMax: Double,
+      dec: Option[DataFrame] = None,
+      numShards: Int = 0,
+      prebuiltDocLengths: Option[DataFrame] = None,
+      prebuiltTokenDf: Option[DataFrame] = None,
+      frozenStats: Option[(Long, Double)] = None): RDD[CombinedShardInt8] =
+    buildCombined(allIds, post, idCol, assigned, dec, numShards,
+      prebuiltDocLengths, prebuiltTokenDf, frozenStats)(VecCodec.Int8(absMax))
 
-  /** [[assembleF32]]'s compressed twin over the SAME row shape: each
-    * vector is quantized against `absMax` and paired with its
-    * [[Ivf.int8Norm]] as it is accumulated. Shared by
-    * [[buildCombinedInt8]] and [[buildSegment]].
+  /** Assemble one partition of doc rows into one combined shard. Build rows
+    * are the [[combinedRows]] frame, positionally — `(_id, _dec, _vec,
+    * _bucket, _post)`, the vector encoded by the codec as it is
+    * accumulated; `stored` rows are the persisted layout, whose vector
+    * columns ([[VecCodec.columns]]) are carried verbatim (int8 codes are
+    * never re-quantized). Shared by [[buildCombined]], [[buildSegment]]
+    * and [[loadCombined]].
     */
-  private[graft] def assembleInt8(absMax: Double)(
-      it: Iterator[org.apache.spark.sql.Row]): Iterator[CombinedShardInt8] = {
+  private def assemble[S <: CombinedBlocks](codec: VecCodec[S],
+      stored: Boolean = false)(it: Iterator[Row]): Iterator[S] = {
+    val bucketIx = if (stored) 2 + codec.columns.length else 3
     val text = new DocText
-    val byBucket = scala.collection.mutable.LongMap
-      .empty[(scala.collection.mutable.ArrayBuilder.ofInt,
-              scala.collection.mutable.ArrayBuffer[(Array[Byte], Float)])]
+    val blocks = new VecBlocks[codec.Vec]
     it.foreach { r =>
-      val li = text.add(r, postIx = 4)
-      if (!r.isNullAt(2) && !r.isNullAt(3)) {
-        val e = byBucket.getOrElseUpdate(r.getLong(3),
-          (new scala.collection.mutable.ArrayBuilder.ofInt,
-           scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Float)]))
-        e._1 += li
-        val q = Ivf.quantizeArray(r.getSeq[Float](2).toArray, absMax)
-        e._2 += ((q, Ivf.int8Norm(q)))
-      }
+      val li = text.add(r, postIx = bucketIx + 1)
+      if (!r.isNullAt(2) && !r.isNullAt(bucketIx))
+        blocks.add(r.getLong(bucketIx), li,
+          if (stored) codec.fromColumns(r, 2)
+          else codec.encode(r.getSeq[Float](2).toArray))
     }
+    // Bucket blocks in ascending bucket order (deterministic layout; scan
+    // results don't depend on it — the (distance, id) total order handles
+    // ties).
     if (text.isEmpty) Iterator.empty
-    else {
-      val (bs, bOff, vecLocal, codes, norms, dim) =
-        finishVecBlocksInt8(byBucket)
-      Iterator.single(CombinedShardInt8(text.shard, bs, bOff, vecLocal, codes,
-        norms, dim))
-    }
+    else Iterator.single(combinedShard(codec)(text.shard, blocks, 0))
   }
 
   /** The text half every doc-row assembler shares: each row's local doc
@@ -815,12 +789,12 @@ object ServingFusion {
        scala.collection.mutable.ArrayBuilder.ofDouble)]()
 
     /** Adds one doc row; returns its local index for the vector half. */
-    def add(r: org.apache.spark.sql.Row, postIx: Int): Int = {
+    def add(r: Row, postIx: Int): Int = {
       ids += r.getLong(0)
       decB += r.getDouble(1)
       val li = ids.length - 1
       if (!r.isNullAt(postIx))
-        r.getSeq[org.apache.spark.sql.Row](postIx).foreach { p =>
+        r.getSeq[Row](postIx).foreach { p =>
           var e = byTok.get(p.getString(0))
           if (e == null) {
             e = (new scala.collection.mutable.ArrayBuilder.ofInt,
@@ -837,27 +811,8 @@ object ServingFusion {
     def shard: Shard = finishShard(ids.toArray, decB.toArray, byTok)
   }
 
-  /** [[buildCombined]]'s compressed twin: same input frame, same text
-    * shard, vector blocks quantized to int8 at build time against the
-    * caller's trained `absMax` ([[graft.search.Quantizer]]'s protocol).
-    */
-  def buildCombinedInt8(
-      allIds: DataFrame,
-      post: DataFrame,
-      idCol: String,
-      assigned: DataFrame,
-      absMax: Double,
-      dec: Option[DataFrame] = None,
-      numShards: Int = 0,
-      prebuiltDocLengths: Option[DataFrame] = None,
-      prebuiltTokenDf: Option[DataFrame] = None,
-      frozenStats: Option[(Long, Double)] = None): org.apache.spark.rdd.RDD[CombinedShardInt8] =
-    combinedRows(allIds, post, idCol, assigned, dec, numShards,
-      prebuiltDocLengths, prebuiltTokenDf, frozenStats).rdd
-      .mapPartitions(assembleInt8(absMax))
-
   /** Build a streaming SEGMENT from raw docs `(idCol, textCol, vecCol)` in
-    * ONE narrow pass, under FROZEN statistics — the micro-batch twin of
+    * ONE narrow pass, under FROZEN statistics — the micro-batch form of
     * [[buildCombined]] (which stays the full-build path: base build and
     * compaction). Under frozen stats every input of a BM25 weight is either
     * doc-local (`tf`, and `dl` = the doc's analyzed-token count) or frozen
@@ -878,8 +833,8 @@ object ServingFusion {
     *      [[graft.text.Bm25.termWeightOf]] (bit-identical to the
     *      [[graft.text.Bm25.termWeight]] column the full build evaluates),
     *      picks the bucket with [[Ivf.bestBucket]] under the cosine
-    *      metric ([[Ivf.assignFast]]'s default), and feeds `assemble` —
-    *      [[assembleF32]] or [[assembleInt8]].
+    *      metric ([[Ivf.assignFast]]'s default), and [[assemble]]s the
+    *      shard in the codec's layout.
     *
     * So `base ∪ buildSegment(batch)` serves exactly what
     * `buildCombined(base ∪ batch)` serves under the same frozen artifacts
@@ -889,7 +844,7 @@ object ServingFusion {
     * a null vector text-only. Segment docs carry decay factor 1.0 (serve-
     * time overrides apply on top). The docs are never collected.
     */
-  private[graft] def buildSegment[T: scala.reflect.ClassTag](
+  private[graft] def buildSegment[S <: CombinedBlocks](
       docs: DataFrame,
       idCol: String,
       textCol: String,
@@ -899,8 +854,7 @@ object ServingFusion {
       frozenTokenDf: DataFrame,
       numShards: Int = 1,
       batchTokens: Option[Seq[String]] = None)(
-      assemble: Iterator[org.apache.spark.sql.Row] => Iterator[T])
-      : org.apache.spark.rdd.RDD[T] = {
+      implicit codec: VecCodec[S]): RDD[S] = {
     val rows = docs.select(col(idCol).cast("long").as("_id"),
       graft.text.Analyzer.analyzedTokens(col(textCol)).as("_toks"),
       col(vecCol).cast("array<float>").as("_vec"))
@@ -921,13 +875,13 @@ object ServingFusion {
         .partitionBy(new org.apache.spark.HashPartitioner(numShards)).values
       else rows.rdd.coalesce(1)
     placed.mapPartitions { it =>
-      assemble(it.map { r =>
+      assemble(codec)(it.map { r =>
         val docToks = if (r.isNullAt(1)) Seq.empty[String] else r.getSeq[String](1)
         val tf = scala.collection.mutable.LinkedHashMap.empty[String, Long]
         docToks.foreach(t => tf(t) = tf.getOrElse(t, 0L) + 1L)
         val dl = docToks.length.toLong
         val post = tf.toSeq.flatMap { case (t, c) =>
-          dfOf.get(t).map(df => org.apache.spark.sql.Row(t,
+          dfOf.get(t).map(df => Row(t,
             graft.text.Bm25.termWeightOf(c, df, dl, n, avgDl)))
         }
         val (vec, bucket) =
@@ -937,9 +891,9 @@ object ServingFusion {
             (v, java.lang.Long.valueOf(
               Ivf.bestBucket(cents, adj, v.toArray, l2 = false).toLong))
           }
-        org.apache.spark.sql.Row(r.getLong(0), 1.0, vec, bucket, post)
+        Row(r.getLong(0), 1.0, vec, bucket, post)
       })
-    }
+    }(codec.tag)
   }
 
   /** The distinct analyzed tokens of a batch's `textCol` as ONE aggregate
@@ -953,9 +907,9 @@ object ServingFusion {
     array_distinct(flatten(collect_list(toks)))
 
   /** Incremental ingest into the combined serving index (VERDICT r15
-    * next-round #3) — the combined twin of [[graft.streaming.Streams]]'
+    * next-round #3) — the combined counterpart of [[graft.streaming.Streams]]'
     * `ivfIngest`: a micro-batch of NEW documents becomes a small
-    * SEGMENT (its own doc-major `RDD[CombinedShard]` over just the batch)
+    * SEGMENT (its own doc-major combined RDD over just the batch)
     * unioned onto the live index. The union is still served by ONE Spark
     * job ([[fusedTopKCombined]] runs over partitions; a union only adds
     * partitions), the partials stay k-bounded, and no existing shard is
@@ -970,14 +924,15 @@ object ServingFusion {
     * weights are computed against the base index's FROZEN corpus
     * statistics — `frozenStats` = [[Bm25.corpusStats]] at the last
     * rebuild, `prebuiltTokenDf` = that rebuild's token-df artifact — so
-    * already-served documents' scores never drift as batches land. A
-    * batch token absent from the frozen tdf stays unsearchable until the
-    * next stats refresh (reference context: kektordb re-indexes postings
-    * per insert, `pkg/engine/ops.go:268`; at 100 TB per-insert global-df
-    * refresh is the part that cannot scale, frozen-stats segments are
-    * the standard serving answer). With identical frozen artifacts,
-    * `append(build(base), batch)` serves results equal to
-    * `build(base ∪ batch)` — pinned by ServingFusionSpec.
+    * already-served documents' scores never drift as batches land; an
+    * int8 segment quantizes against the base build's `absMax`, which the
+    * codec carries. A batch token absent from the frozen tdf stays
+    * unsearchable until the next stats refresh (reference context:
+    * kektordb re-indexes postings per insert, `pkg/engine/ops.go:268`; at
+    * 100 TB per-insert global-df refresh is the part that cannot scale,
+    * frozen-stats segments are the standard serving answer). With
+    * identical frozen artifacts, `append(build(base), batch)` serves
+    * results equal to `build(base ∪ batch)` — pinned by ServingFusionSpec.
     *
     * PRECONDITIONS: batch doc ids are DISJOINT from the base index's (an
     * id present in both would be scored twice — append-only segments, no
@@ -1006,8 +961,8 @@ object ServingFusion {
     * vectors, bit for bit), built in one narrow pass, four jobs per
     * micro-batch including the log write and the driver checks.
     */
-  def appendCombined(
-      index: org.apache.spark.rdd.RDD[CombinedShard],
+  def appendCombined[S <: CombinedBlocks](
+      index: RDD[S],
       newIds: DataFrame,
       newPost: DataFrame,
       idCol: String,
@@ -1016,35 +971,13 @@ object ServingFusion {
       prebuiltTokenDf: DataFrame,
       dec: Option[DataFrame] = None,
       numShards: Int = 0,
-      baseMaxId: Option[Long] = None): org.apache.spark.rdd.RDD[CombinedShard] = {
+      baseMaxId: Option[Long] = None)(
+      implicit codec: VecCodec[S]): RDD[S] = {
     baseMaxId.foreach(requireIdsAbove(newIds, idCol, _))
     index.union(buildCombined(newIds, newPost, idCol, newAssigned, dec,
       numShards, prebuiltDocLengths = None,
       prebuiltTokenDf = Some(prebuiltTokenDf),
-      frozenStats = Some(frozenStats)))
-  }
-
-  /** [[appendCombined]]'s compressed twin: the segment quantizes against
-    * the SAME `absMax` the base index was built with (another frozen
-    * artifact — re-deriving it per batch would shift every code).
-    */
-  def appendCombinedInt8(
-      index: org.apache.spark.rdd.RDD[CombinedShardInt8],
-      newIds: DataFrame,
-      newPost: DataFrame,
-      idCol: String,
-      newAssigned: DataFrame,
-      absMax: Double,
-      frozenStats: (Long, Double),
-      prebuiltTokenDf: DataFrame,
-      dec: Option[DataFrame] = None,
-      numShards: Int = 0,
-      baseMaxId: Option[Long] = None): org.apache.spark.rdd.RDD[CombinedShardInt8] = {
-    baseMaxId.foreach(requireIdsAbove(newIds, idCol, _))
-    index.union(buildCombinedInt8(newIds, newPost, idCol, newAssigned,
-      absMax, dec, numShards, prebuiltDocLengths = None,
-      prebuiltTokenDf = Some(prebuiltTokenDf),
-      frozenStats = Some(frozenStats)))
+      frozenStats = Some(frozenStats))(codec))
   }
 
   /** The append-only id watermark check (see [[appendCombined]]'s
@@ -1078,15 +1011,16 @@ object ServingFusion {
     * Score semantics: EXACT. Every stored term weight was computed under
     * frozen corpus stats, so a doc's text score is independent of which
     * other docs exist or where they live; the decay factor is per-doc
-    * multiplicative; vector rows are copied bit-for-bit and both scan
-    * kernels accumulate per-doc in query-token / per-row order — layout
-    * never enters. So `serve(compact(ix, T, O))` == `serve(ix,
-    * tombstones = T, decOverrides = O)` bit-identically
-    * (CombinedServingSpec pins it), and compaction commutes with further
-    * appends. Frozen stats are NOT refreshed here — that is the full
-    * rebuild's job; compaction is the cheap in-family rewrite that never
-    * touches the source tables (at 100 TB the difference is a cluster
-    * scan vs a pass over the resident index).
+    * multiplicative; vector rows (int8: codes and stored norms) are
+    * copied bit-for-bit and the scan kernels accumulate per-doc in
+    * query-token / per-row order — layout never enters. So
+    * `serve(compact(ix, T, O))` == `serve(ix, tombstones = T,
+    * decOverrides = O)` bit-identically (CombinedServingSpec pins it), and
+    * compaction commutes with further appends. Frozen stats are NOT
+    * refreshed here — that is the full rebuild's job; compaction is the
+    * cheap in-family rewrite that never touches the source tables (at
+    * 100 TB the difference is a cluster scan vs a pass over the resident
+    * index).
     *
     * Durability: compaction rewrites the SERVED state only. Keep the
     * segment log — restart recovery (`Streams.recoverCombinedSegments`)
@@ -1100,15 +1034,16 @@ object ServingFusion {
     * ([[graft.streaming.Streams.compactCombinedServing]] orchestrates the
     * swap and the live-set clearing).
     */
-  def compactCombined(
-      index: org.apache.spark.rdd.RDD[CombinedShard],
+  def compactCombined[S <: CombinedBlocks](
+      index: RDD[S],
       tombstones: Array[Long] = Array.emptyLongArray,
       decOverrides: Array[(Long, Double)] = Array.empty,
-      numPartitions: Int = 1): org.apache.spark.rdd.RDD[CombinedShard] = {
+      numPartitions: Int = 1)(
+      implicit codec: VecCodec[S]): RDD[S] = {
     val tomb = sortedTombstones(tombstones)
     val (ovI, ovD) = sortedOverrides(decOverrides)
     regroupShards(index, numPartitions).mapPartitions { it =>
-      val shards = it.toArray
+      val shards = it.toVector
       if (shards.isEmpty) Iterator.empty
       else {
         val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -1116,9 +1051,7 @@ object ServingFusion {
         val byTok = new java.util.HashMap[String,
           (scala.collection.mutable.ArrayBuilder.ofInt,
            scala.collection.mutable.ArrayBuilder.ofDouble)]()
-        val byBucket = scala.collection.mutable.LongMap
-          .empty[(scala.collection.mutable.ArrayBuilder.ofInt,
-                  scala.collection.mutable.ArrayBuffer[Array[Float]])]
+        val blocks = new VecBlocks[codec.Vec]
         var dim = 0
         shards.foreach { csh =>
           val remap = vacuumText(csh.text, tomb, ovI, ovD, ids, decB, byTok)
@@ -1129,111 +1062,38 @@ object ServingFusion {
             val end = csh.bOff(blk + 1)
             while (r < end) {
               val nl = remap(csh.vecLocal(r))
-              if (nl >= 0) {
-                val e = byBucket.getOrElseUpdate(csh.buckets(blk),
-                  (new scala.collection.mutable.ArrayBuilder.ofInt,
-                   scala.collection.mutable.ArrayBuffer.empty[Array[Float]]))
-                e._1 += nl
-                e._2 += java.util.Arrays.copyOfRange(
-                  csh.flat, r * csh.dim, (r + 1) * csh.dim)
-              }
+              if (nl >= 0) blocks.add(csh.buckets(blk), nl, codec.rowOf(csh, r))
               r += 1
             }
             blk += 1
           }
         }
         if (ids.isEmpty) Iterator.empty
-        else {
-          val shard = finishShard(ids.toArray, decB.toArray, byTok)
-          val (bs, bOff, vecLocal, flat, fDim) = finishVecBlocksF32(byBucket)
-          Iterator.single(CombinedShard(shard, bs, bOff, vecLocal, flat,
-            if (fDim > 0) fDim else dim))
-        }
+        else Iterator.single(combinedShard(codec)(
+          finishShard(ids.toArray, decB.toArray, byTok), blocks, dim))
       }
-    }
+    }(codec.tag)
   }
 
-  /** [[compactCombined]]'s compressed twin. Codes and stored norms are
-    * copied verbatim (recomputing norms would be exact too, but copying
-    * keeps the invariant self-evident): same frozen `absMax` discipline
-    * as [[appendCombinedInt8]].
+  /** Regroup whole shards into `numPartitions` partitions for compaction.
+    * `coalesce` alone can only REDUCE partition count (ADVICE r17: asking
+    * for more shards than the union currently has silently yielded
+    * fewer) — growing needs the shuffle. Whole shard OBJECTS move, never
+    * doc rows, so the output shard count is min(numPartitions, input
+    * shards): a compaction cannot split one resident shard, only a fresh
+    * build chooses finer granularity.
     */
-  def compactCombinedInt8(
-      index: org.apache.spark.rdd.RDD[CombinedShardInt8],
-      tombstones: Array[Long] = Array.emptyLongArray,
-      decOverrides: Array[(Long, Double)] = Array.empty,
-      numPartitions: Int = 1): org.apache.spark.rdd.RDD[CombinedShardInt8] = {
-    val tomb = sortedTombstones(tombstones)
-    val (ovI, ovD) = sortedOverrides(decOverrides)
-    regroupShards(index, numPartitions).mapPartitions { it =>
-      val shards = it.toArray
-      if (shards.isEmpty) Iterator.empty
-      else {
-        val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-        val decB = scala.collection.mutable.ArrayBuffer.empty[Double]
-        val byTok = new java.util.HashMap[String,
-          (scala.collection.mutable.ArrayBuilder.ofInt,
-           scala.collection.mutable.ArrayBuilder.ofDouble)]()
-        val byBucket = scala.collection.mutable.LongMap
-          .empty[(scala.collection.mutable.ArrayBuilder.ofInt,
-                  scala.collection.mutable.ArrayBuffer[(Array[Byte], Float)])]
-        var dim = 0
-        shards.foreach { csh =>
-          val remap = vacuumText(csh.text, tomb, ovI, ovD, ids, decB, byTok)
-          if (csh.dim > 0) dim = csh.dim
-          var blk = 0
-          while (blk < csh.buckets.length) {
-            var r = csh.bOff(blk)
-            val end = csh.bOff(blk + 1)
-            while (r < end) {
-              val nl = remap(csh.vecLocal(r))
-              if (nl >= 0) {
-                val e = byBucket.getOrElseUpdate(csh.buckets(blk),
-                  (new scala.collection.mutable.ArrayBuilder.ofInt,
-                   scala.collection.mutable.ArrayBuffer
-                     .empty[(Array[Byte], Float)]))
-                e._1 += nl
-                e._2 += ((java.util.Arrays.copyOfRange(
-                  csh.codes, r * csh.dim, (r + 1) * csh.dim), csh.norms(r)))
-              }
-              r += 1
-            }
-            blk += 1
-          }
-        }
-        if (ids.isEmpty) Iterator.empty
-        else {
-          val shard = finishShard(ids.toArray, decB.toArray, byTok)
-          val (bs, bOff, vecLocal, codes, norms, iDim) =
-            finishVecBlocksInt8(byBucket)
-          Iterator.single(CombinedShardInt8(shard, bs, bOff, vecLocal, codes,
-            norms, if (iDim > 0) iDim else dim))
-        }
-      }
-    }
-  }
-
-  /** Regroup whole shards into `numPartitions` partitions for the two
-    * compaction kernels. `coalesce` alone can only REDUCE partition count
-    * (ADVICE r17: asking for more shards than the union currently has
-    * silently yielded fewer) — growing needs the shuffle. Whole shard
-    * OBJECTS move, never doc rows, so the output shard count is
-    * min(numPartitions, input shards): a compaction cannot split one
-    * resident shard, only a fresh build chooses finer granularity.
-    */
-  private def regroupShards[S: scala.reflect.ClassTag](
-      index: org.apache.spark.rdd.RDD[S],
-      numPartitions: Int): org.apache.spark.rdd.RDD[S] = {
+  private def regroupShards[S](index: RDD[S], numPartitions: Int): RDD[S] = {
     val n = math.max(1, numPartitions)
     index.coalesce(n, shuffle = n > index.getNumPartitions)
   }
 
-  /** Shared text-side vacuum+merge step for the two compaction kernels:
-    * appends `sh`'s SURVIVING docs (not in `tomb`) into the partition's
-    * merged id/decay builders — decay overridden where `ovI` says so — and
-    * folds each token slot's surviving postings into `byTok` with local
-    * indices remapped to the merged layout. Returns old-local → new-local
-    * (−1 = tombstoned), which the callers use to vacuum the vector blocks.
+  /** Compaction's text-side vacuum+merge step: appends `sh`'s SURVIVING
+    * docs (not in `tomb`) into the partition's merged id/decay builders —
+    * decay overridden where `ovI` says so — and folds each token slot's
+    * surviving postings into `byTok` with local indices remapped to the
+    * merged layout. Returns old-local → new-local (−1 = tombstoned), which
+    * vacuums the vector blocks.
     */
   private def vacuumText(
       sh: Shard,
@@ -1293,110 +1153,54 @@ object ServingFusion {
   // arena under pkg/persistence/; here the snapshot is a parquet table
   // in the index's own doc-row shape). =====
 
-  /** The persisted combined layout's doc-row schema — exactly the
-    * [[combinedRows]] frame ([[assembleF32]]'s positional contract), so
+  /** The persisted doc-row schema: the [[combinedRows]] shape with the
+    * vector as the codec's stored columns — `(_id, _dec, <codec columns>,
+    * _bucket, _post)`, [[assemble]]'s `stored` positional contract — so
     * load is repartition + the same assembly pass a build runs.
     */
-  private val combinedDocSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("_id",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("_dec",
-      org.apache.spark.sql.types.DoubleType, nullable = false),
-    org.apache.spark.sql.types.StructField("_vec",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, containsNull = false),
-      nullable = true),
-    org.apache.spark.sql.types.StructField("_bucket",
-      org.apache.spark.sql.types.LongType, nullable = true),
-    org.apache.spark.sql.types.StructField("_post",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("token",
-            org.apache.spark.sql.types.StringType, nullable = false),
-          org.apache.spark.sql.types.StructField("w",
-            org.apache.spark.sql.types.DoubleType, nullable = false))),
+  private def docSchema[S <: CombinedBlocks](codec: VecCodec[S]): StructType =
+    StructType(Seq(
+      StructField("_id", LongType, nullable = false),
+      StructField("_dec", DoubleType, nullable = false)) ++
+      codec.columns ++ Seq(
+      StructField("_bucket", LongType, nullable = true),
+      StructField("_post", ArrayType(StructType(Seq(
+        StructField("token", StringType, nullable = false),
+        StructField("w", DoubleType, nullable = false))),
         containsNull = false), nullable = true)))
 
-  /** The int8 twin's doc-row schema: codes stored VERBATIM as binary (a
-    * load must not re-quantize — absMax rides the meta table instead).
-    */
-  private val combinedDocSchemaInt8 = org.apache.spark.sql.types.StructType(
-    Seq(
-      org.apache.spark.sql.types.StructField("_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("_dec",
-        org.apache.spark.sql.types.DoubleType, nullable = false),
-      org.apache.spark.sql.types.StructField("_codes",
-        org.apache.spark.sql.types.BinaryType, nullable = true),
-      org.apache.spark.sql.types.StructField("_norm",
-        org.apache.spark.sql.types.FloatType, nullable = true),
-      org.apache.spark.sql.types.StructField("_bucket",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("_post",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("token",
-              org.apache.spark.sql.types.StringType, nullable = false),
-            org.apache.spark.sql.types.StructField("w",
-              org.apache.spark.sql.types.DoubleType, nullable = false))),
-          containsNull = false), nullable = true)))
-
   /** One shard exploded back into its doc rows, the inverse of
-    * [[assembleF32]]: per local doc — id, decay factor, its vector row
-    * (null for text-only docs) + owning bucket, and its (token, weight)
-    * posting list transposed out of the CSR. Partition-local work,
-    * bounded by the shard.
+    * [[assemble]]: per local doc — id, decay factor, its vector row's
+    * stored columns (null for text-only docs) + owning bucket, and its
+    * (token, weight) posting list transposed out of the CSR.
+    * Partition-local work, bounded by the shard.
     */
-  private def explodeDocRows(csh: CombinedShard): Iterator[org.apache.spark.sql.Row] = {
+  private def explodeDocRows[S <: CombinedBlocks](codec: VecCodec[S])(
+      csh: S): Iterator[Row] = {
     val sh = csh.text
-    val n = sh.ids.length
-    val (vecRow, bucketOf) = vecRowsOf(sh.ids.length, csh.buckets, csh.bOff,
-      csh.vecLocal)
+    val (vecRow, bucketOf) = vecRowsOf(csh)
     val posts = postsOf(sh)
-    Iterator.tabulate(n) { li =>
+    val noVec = Seq.fill(codec.columns.length)(null)
+    Iterator.tabulate(sh.ids.length) { li =>
       val r = vecRow(li)
-      org.apache.spark.sql.Row(
-        sh.ids(li), sh.dec(li),
-        if (r < 0) null
-        else java.util.Arrays.copyOfRange(csh.flat, r * csh.dim,
-          (r + 1) * csh.dim),
-        if (r < 0) null else java.lang.Long.valueOf(bucketOf(li)),
-        posts(li))
-    }
-  }
-
-  private def explodeDocRowsInt8(
-      csh: CombinedShardInt8): Iterator[org.apache.spark.sql.Row] = {
-    val sh = csh.text
-    val n = sh.ids.length
-    val (vecRow, bucketOf) = vecRowsOf(sh.ids.length, csh.buckets, csh.bOff,
-      csh.vecLocal)
-    val posts = postsOf(sh)
-    Iterator.tabulate(n) { li =>
-      val r = vecRow(li)
-      org.apache.spark.sql.Row(
-        sh.ids(li), sh.dec(li),
-        if (r < 0) null
-        else java.util.Arrays.copyOfRange(csh.codes, r * csh.dim,
-          (r + 1) * csh.dim),
-        if (r < 0) null else java.lang.Float.valueOf(csh.norms(r)),
-        if (r < 0) null else java.lang.Long.valueOf(bucketOf(li)),
-        posts(li))
+      Row.fromSeq(Seq[Any](sh.ids(li), sh.dec(li)) ++
+        (if (r < 0) noVec else codec.toColumns(codec.rowOf(csh, r))) ++
+        Seq(if (r < 0) null else java.lang.Long.valueOf(bucketOf(li)),
+          posts(li)))
     }
   }
 
   /** local doc → (vector row or −1, owning bucket) for an explode pass. */
-  private def vecRowsOf(n: Int, buckets: Array[Long], bOff: Array[Int],
-      vecLocal: Array[Int]): (Array[Int], Array[Long]) = {
-    val vecRow = Array.fill(n)(-1)
-    val bucketOf = new Array[Long](n)
+  private def vecRowsOf(csh: CombinedBlocks): (Array[Int], Array[Long]) = {
+    val vecRow = Array.fill(csh.text.ids.length)(-1)
+    val bucketOf = new Array[Long](csh.text.ids.length)
     var blk = 0
-    while (blk < buckets.length) {
-      var r = bOff(blk)
-      val end = bOff(blk + 1)
+    while (blk < csh.buckets.length) {
+      var r = csh.bOff(blk)
+      val end = csh.bOff(blk + 1)
       while (r < end) {
-        vecRow(vecLocal(r)) = r
-        bucketOf(vecLocal(r)) = buckets(blk)
+        vecRow(csh.vecLocal(r)) = r
+        bucketOf(csh.vecLocal(r)) = csh.buckets(blk)
         r += 1
       }
       blk += 1
@@ -1407,9 +1211,8 @@ object ServingFusion {
   /** local doc → (token, w) posting rows (null when the doc has none),
     * transposed out of the shard's token-major CSR.
     */
-  private def postsOf(sh: Shard): Array[Seq[org.apache.spark.sql.Row]] = {
-    val posts = new Array[scala.collection.mutable.ArrayBuffer[
-      org.apache.spark.sql.Row]](sh.ids.length)
+  private def postsOf(sh: Shard): Array[Seq[Row]] = {
+    val posts = new Array[scala.collection.mutable.ArrayBuffer[Row]](sh.ids.length)
     var s = 0
     while (s < sh.tokens.length) {
       var e = sh.offsets(s)
@@ -1418,7 +1221,7 @@ object ServingFusion {
         val d = sh.docIx(e)
         if (posts(d) == null)
           posts(d) = scala.collection.mutable.ArrayBuffer.empty
-        posts(d) += org.apache.spark.sql.Row(sh.tokens(s), sh.w(e))
+        posts(d) += Row(sh.tokens(s), sh.w(e))
         e += 1
       }
       s += 1
@@ -1430,32 +1233,40 @@ object ServingFusion {
     * SERVE and to keep APPENDING: `docs/` — one parquet row per doc in
     * the index's own row shape (stored term WEIGHTS, not text: the
     * tokenize+stem+weight pipeline over the raw corpus is the expensive
-    * part of a build at 100 TB and is never re-run on load), `tokendf/` —
-    * the frozen token-df artifact segments append under, `meta/` — the
-    * frozen corpus scalars. One no-shuffle pass over the resident shards;
-    * [[loadCombined]] restores with a partitioned scan + the build's own
-    * doc-major repartition + assembly (no analyzer, no weighting, no
-    * KMeans). Serve-exact round trip pinned by CombinedServingSpec. Save
-    * AFTER compaction for the snapshot-then-truncate-log coupling
+    * part of a build at 100 TB and is never re-run on load; int8 codes
+    * and norms verbatim), `tokendf/` — the frozen token-df artifact
+    * segments append under, `meta/` — the frozen corpus scalars, the id
+    * watermark and the codec's scalars (int8: `abs_max`). One no-shuffle
+    * pass over the resident shards; [[loadCombined]] restores with a
+    * partitioned scan + the build's own doc-major repartition + assembly
+    * (no analyzer, no weighting, no KMeans, no re-quantization).
+    * Serve-exact round trip pinned by CombinedServingSpec. Save AFTER
+    * compaction for the snapshot-then-truncate-log coupling
     * ([[compactCombined]]'s durability note); tombstones/overrides are
     * live driver state, deliberately NOT persisted (they re-derive from
-    * the oplog, and a compacted save has none).
+    * the oplog, and a compacted save has none). Returns the index's max
+    * doc id.
     */
-  def saveCombined(
-      index: org.apache.spark.rdd.RDD[CombinedShard],
+  def saveCombined[S <: CombinedBlocks](
+      index: RDD[S],
       path: String,
       frozenStats: (Long, Double),
-      tokenDf: DataFrame): Long = {
+      tokenDf: DataFrame)(
+      implicit codec: VecCodec[S]): Long = {
     val spark = org.apache.spark.sql.SparkSession.active
     val maxId = maxIdOf(index.map(csh =>
       if (csh.text.ids.isEmpty) Long.MinValue else csh.text.ids.max))
-    spark.createDataFrame(index.mapPartitions(_.flatMap(explodeDocRows)),
-        combinedDocSchema)
+    spark.createDataFrame(index.mapPartitions(_.flatMap(explodeDocRows(codec))),
+        docSchema(codec))
       .write.mode("overwrite").parquet(s"$path/docs")
     tokenDf.select(col("token"), col("df").cast("long").as("df"))
       .write.mode("overwrite").parquet(s"$path/tokendf")
-    spark.createDataFrame(Seq((frozenStats._1, frozenStats._2, maxId)))
-      .toDF("total_docs", "avgdl", "max_id")
+    spark.createDataFrame(java.util.Collections.singletonList(Row.fromSeq(
+        Seq[Any](frozenStats._1, frozenStats._2, maxId) ++
+          codec.meta.map(_._2))),
+        StructType(Seq(StructField("total_docs", LongType),
+          StructField("avgdl", DoubleType), StructField("max_id", LongType)) ++
+          codec.meta.map(m => StructField(m._1, DoubleType))))
       .write.mode("overwrite").parquet(s"$path/meta")
     maxId
   }
@@ -1464,7 +1275,7 @@ object ServingFusion {
     * (fold handles the empty index — MinValue, above which every id
     * sits, so recovery filters nothing).
     */
-  private def maxIdOf(perShard: org.apache.spark.rdd.RDD[Long]): Long =
+  private def maxIdOf(perShard: RDD[Long]): Long =
     perShard.fold(Long.MinValue)(math.max)
 
   /** A restored [[saveCombined]] snapshot: the index plus every frozen
@@ -1472,114 +1283,43 @@ object ServingFusion {
     * `minIdExclusive` recovery and restart ingest resume from
     * ([[graft.streaming.Streams.recoverCombinedSegments]]).
     */
-  final case class LoadedCombined(
-      index: org.apache.spark.rdd.RDD[CombinedShard],
+  final case class LoadedCombined[S](
+      index: RDD[S],
       frozenStats: (Long, Double),
       tokenDf: DataFrame,
       maxId: Long)
 
-  final case class LoadedCombinedInt8(
-      index: org.apache.spark.rdd.RDD[CombinedShardInt8],
-      absMax: Double,
-      frozenStats: (Long, Double),
-      tokenDf: DataFrame,
-      maxId: Long)
-
-  /** Restore a [[saveCombined]] snapshot — the full append-ready bundle.
-    * The caller caches + materializes the index (and re-derives the
-    * serve-time tombstone set from the oplog,
+  /** Restore a [[saveCombined]] snapshot — the full append-ready bundle —
+    * in the codec's layout. A snapshot whose codec scalars differ from
+    * `codec`'s (an int8 index quantized under another `absMax`) fails the
+    * load: queries quantized under the caller's `absMax` would score it
+    * wrongly. The caller caches + materializes the index (and re-derives
+    * the serve-time tombstone set from the oplog,
     * [[graft.streaming.Streams.tombstoneIngest]]'s restart contract).
     */
-  def loadCombined(
+  def loadCombined[S <: CombinedBlocks](
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      numShards: Int = 0): LoadedCombined = {
+      numShards: Int = 0)(
+      implicit codec: VecCodec[S]): LoadedCombined[S] = {
     val meta = spark.read.parquet(s"$path/meta")
-      .select(col("total_docs").cast("long"), col("avgdl").cast("double"),
-        col("max_id").cast("long"))
+      .select((Seq(col("total_docs").cast("long"), col("avgdl").cast("double"),
+        col("max_id").cast("long")) ++
+        codec.meta.map(m => col(m._1).cast("double"))): _*)
       .head()
+    codec.meta.zipWithIndex.foreach { case ((name, v), i) =>
+      require(meta.getDouble(3 + i) == v,
+        s"loadCombined: the snapshot at $path has $name " +
+          s"${meta.getDouble(3 + i)}, the codec $v")
+    }
     val docs = spark.read.parquet(s"$path/docs")
-      .select(col("_id"), col("_dec"), col("_vec"), col("_bucket"),
-        col("_post"))
+      .select(docSchema(codec).fieldNames.toSeq.map(col): _*)
     LoadedCombined(
-      docMajor(docs, numShards).rdd.mapPartitions(assembleF32),
+      docMajor(docs, numShards).rdd
+        .mapPartitions(assemble(codec, stored = true))(codec.tag),
       (meta.getLong(0), meta.getDouble(1)),
       spark.read.parquet(s"$path/tokendf"),
       meta.getLong(2))
-  }
-
-  /** [[saveCombined]]'s compressed twin: codes + norms stored verbatim
-    * (never re-quantized), `absMax` rides the meta table — the complete
-    * frozen-artifact set for int8 appends.
-    */
-  def saveCombinedInt8(
-      index: org.apache.spark.rdd.RDD[CombinedShardInt8],
-      path: String,
-      absMax: Double,
-      frozenStats: (Long, Double),
-      tokenDf: DataFrame): Long = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val maxId = maxIdOf(index.map(csh =>
-      if (csh.text.ids.isEmpty) Long.MinValue else csh.text.ids.max))
-    spark.createDataFrame(index.mapPartitions(_.flatMap(explodeDocRowsInt8)),
-        combinedDocSchemaInt8)
-      .write.mode("overwrite").parquet(s"$path/docs")
-    tokenDf.select(col("token"), col("df").cast("long").as("df"))
-      .write.mode("overwrite").parquet(s"$path/tokendf")
-    spark.createDataFrame(Seq((frozenStats._1, frozenStats._2, absMax,
-        maxId)))
-      .toDF("total_docs", "avgdl", "abs_max", "max_id")
-      .write.mode("overwrite").parquet(s"$path/meta")
-    maxId
-  }
-
-  /** Restore a [[saveCombinedInt8]] snapshot. */
-  def loadCombinedInt8(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      numShards: Int = 0): LoadedCombinedInt8 = {
-    val meta = spark.read.parquet(s"$path/meta")
-      .select(col("total_docs").cast("long"), col("avgdl").cast("double"),
-        col("abs_max").cast("double"), col("max_id").cast("long"))
-      .head()
-    val docs = spark.read.parquet(s"$path/docs")
-      .select(col("_id"), col("_dec"), col("_codes"), col("_norm"),
-        col("_bucket"), col("_post"))
-    LoadedCombinedInt8(
-      docMajor(docs, numShards).rdd.mapPartitions(assembleInt8Stored),
-      meta.getDouble(2), (meta.getLong(0), meta.getDouble(1)),
-      spark.read.parquet(s"$path/tokendf"), meta.getLong(3))
-  }
-
-  /** Assemble one partition of
-    * `(_id, _dec, _codes, _norm, _bucket, _post)` rows — the persisted
-    * int8 layout, positionally — into one [[CombinedShardInt8]]: codes
-    * and norms carried VERBATIM (never re-quantized), the int8 analogue
-    * of [[assembleF32]].
-    */
-  private def assembleInt8Stored(
-      it: Iterator[org.apache.spark.sql.Row]): Iterator[CombinedShardInt8] = {
-    val text = new DocText
-    val byBucket = scala.collection.mutable.LongMap
-      .empty[(scala.collection.mutable.ArrayBuilder.ofInt,
-              scala.collection.mutable.ArrayBuffer[(Array[Byte], Float)])]
-    it.foreach { r =>
-      val li = text.add(r, postIx = 5)
-      if (!r.isNullAt(2) && !r.isNullAt(4)) {
-        val e = byBucket.getOrElseUpdate(r.getLong(4),
-          (new scala.collection.mutable.ArrayBuilder.ofInt,
-           scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Float)]))
-        e._1 += li
-        e._2 += ((r.getAs[Array[Byte]](2), r.getFloat(3)))
-      }
-    }
-    if (text.isEmpty) Iterator.empty
-    else {
-      val (bs, bOff, vecLocal, codes, norms, dim) =
-        finishVecBlocksInt8(byBucket)
-      Iterator.single(CombinedShardInt8(text.shard, bs, bOff, vecLocal, codes,
-        norms, dim))
-    }
   }
 
   /** Per-partition partial for the combined pass: the text-leg
@@ -1643,18 +1383,18 @@ object ServingFusion {
     * the shard pass); this is the latency floor for the architecture —
     * one job launch — completing VERDICT r14's serving-latency story.
     *
-    * Semantics: identical to [[fusedTopK]] fed by
-    * [[Ivf.searchBatchedFast]] over the same corpus with the same
-    * `nProbe`/`kVec` — same probe selection ([[Ivf.probeAssignments]]),
-    * same scalar dot kernel (float accumulation, `1 − dot` over
-    * normalized vectors), same (distance, id) / (raw·dec) bounded top-ks,
-    * same blend ([[blendTopK]] is shared code) — so results are
-    * BIT-identical, pinned by CombinedServingSpec. Per-query the vector
-    * scan is scalar (no 4-query tiling) — a trade the job fusion wins
-    * anyway: at both bench points the combined pass also beats the
-    * two-leg path on BATCH throughput ~2.5× (the probed scan is a small
-    * fraction of a fused batch's cost; the serial job rounds and
-    * per-call collect jobs were not).
+    * Semantics: identical to [[fusedTopK]] fed by the `Ivf` batch search
+    * of the same codec over the same corpus with the same `nProbe`/`kVec`
+    * — same probe selection ([[Ivf.probeAssignments]]), same per-row
+    * distance kernel ([[VecCodec]]), same (distance, id) / (raw·dec)
+    * bounded top-ks, same blend ([[blendTopK]] is shared code) — so
+    * results are BIT-identical, pinned by CombinedServingSpec. Per-query
+    * the vector scan is scalar (no 4-query tiling) — a trade the job
+    * fusion wins anyway: at both bench points the combined pass also
+    * beats the two-leg path on BATCH throughput ~2.5× (the probed scan is
+    * a small fraction of a fused batch's cost; the serial job rounds and
+    * per-call collect jobs were not). The batch is validated once
+    * ([[prepareBatch]]).
     *
     * Returns driver-resident rows (qid, id, fused score), per-qid top-k
     * by (score desc, id asc) — a serving response, not a plan.
@@ -1683,8 +1423,8 @@ object ServingFusion {
     * updated metadata (driver math — [[Decay]]'s formulas over one row);
     * compaction bakes the current factors and clears the map.
     */
-  def fusedTopKCombined(
-      combined: org.apache.spark.rdd.RDD[CombinedShard],
+  def fusedTopKCombined[S <: CombinedBlocks](
+      combined: RDD[S],
       cents: Array[Array[Float]],
       queries: Seq[ServedQuery],
       alpha0: Double,
@@ -1693,46 +1433,31 @@ object ServingFusion {
       kVec: Int = 10,
       metric: String = "cosine",
       tombstones: Array[Long] = Array.emptyLongArray,
-      decOverrides: Array[(Long, Double)] = Array.empty): Array[(Long, Long, Double)] = {
+      decOverrides: Array[(Long, Double)] = Array.empty)(
+      implicit codec: VecCodec[S]): Array[(Long, Long, Double)] = {
     val tomb = sortedTombstones(tombstones)
     val (ovIds, ovDec) = sortedOverrides(decOverrides)
     val alpha = if (alpha0 < 0 || alpha0 > 1) 0.5 else alpha0
-    val l2 = metric == "l2"
     val qs = queries.sortBy(_.qid).toArray
     require(qs.map(_.qid).distinct.length == qs.length,
       "fusedTopKCombined: duplicate qids in the batch")
-    require(qs.forall(_.qvec != null),
-      "fusedTopKCombined: every ServedQuery needs a query vector " +
-        "(combined serving is hybrid; pass tokens-only work to fusedTopK)")
+    val qids = qs.map(_.qid)
+    val (prepared, probedByQ) = prepareBatch(codec, "fusedTopKCombined",
+      cents, qids, qs.map(_.qvec), metric, nProbe)
     val nq = qs.length
     if (nq == 0) return Array.empty
-    val qids = qs.map(_.qid)
-    val qvecs = qs.map(_.qvec)
     val toksByQ = qs.map(_.tokens.sortBy(_._1))
-    // Probe selection on the driver (the descent analogue), then inverted
-    // to per-query ascending bucket lists for the partition scan. Same
-    // metric contract as [[Ivf.searchBatchedFast]]: cosine = 1 − dot over
-    // pre-normalized vectors; l2 = squared euclidean via ‖x‖² − 2x·q + ‖q‖².
-    val adj = Ivf.bucketAdj(cents, metric)
-    val qsq: Array[Double] =
-      if (l2) qvecs.map { qv =>
-        var s = 0.0; var j = 0
-        while (j < qv.length) { s += qv(j).toDouble * qv(j); j += 1 }
-        s
-      } else null
-    val probedByQ = invertProbes(
-      Ivf.probeAssignments(cents, adj, l2 = l2, qvecs, nProbe), nq)
     val bc = combined.sparkContext.broadcast(
-      (qvecs, toksByQ, probedByQ, qsq, tomb, ovIds, ovDec))
+      (prepared, toksByQ, probedByQ, tomb, ovIds, ovDec))
     val partials = combined.mapPartitions { it =>
-      val (qvs, toks, probed, qsqB, tombB, ovI, ovD) = bc.value
+      val (prep, toks, probed, tombB, ovI, ovD) = bc.value
       def decOf(id: Long, baked: Double): Double =
         if (ovI.length == 0) baked
         else {
           val i = java.util.Arrays.binarySearch(ovI, id)
           if (i >= 0) ovD(i) else baked
         }
-      val p = new CombinedPartial(qvs.length, k, kVec)
+      val p = new CombinedPartial(toks.length, k, kVec)
       it.foreach { csh =>
         val sh = csh.text
         val n = sh.ids.length
@@ -1741,7 +1466,7 @@ object ServingFusion {
         val touched = new Array[Int](n)
         var epoch = 0
         var qi = 0
-        while (qi < qvs.length) {
+        while (qi < toks.length) {
           epoch += 1
           // Text leg — [[scoreTokens]], the same loop [[fusedTopK]] runs.
           val tn = scoreTokens(sh, toks(qi), acc, seen, touched, epoch)
@@ -1759,7 +1484,6 @@ object ServingFusion {
           }
           // Vector leg over this partition's probed bucket blocks, with
           // hydration read off the text accumulators in the same epoch.
-          val qv = qvs(qi)
           val pb = probed(qi)
           var bi = 0
           while (bi < pb.length) {
@@ -1772,16 +1496,8 @@ object ServingFusion {
                 val id = sh.ids(li)
                 if (tombB.length == 0 ||
                     java.util.Arrays.binarySearch(tombB, id) < 0) {
-                  var dot = 0f
-                  var j = 0
-                  val off = r * csh.dim
-                  while (j < csh.dim) { dot += csh.flat(off + j) * qv(j); j += 1 }
-                  val dist =
-                    if (qsqB != null)
-                      csh.rowSq(r).toDouble - 2.0d * dot + qsqB(qi)
-                    else 1.0d - dot
                   val hasT = seen(li) == epoch
-                  p.insertVec(qi, dist, id,
+                  p.insertVec(qi, prep.dist(csh, r, qi), id,
                     if (hasT) acc(li) else 0.0, decOf(id, sh.dec(li)), hasT)
                 }
                 r += 1
@@ -1801,16 +1517,11 @@ object ServingFusion {
     blendCombined(qids, merged, alpha, k)
   }
 
-  /** [[fusedTopKCombined]] over the COMPRESSED layout: one job, text leg
-    * identical, vector leg the integer-dot int8-cosine kernel — queries
-    * quantized once on the driver against the same trained `absMax`, per
-    * candidate `1 − clamp(dot/(‖x‖·‖q‖))` exactly as
-    * [[Ivf.searchBatchedFastInt8]] scores (zero-norm sides score 1.0),
-    * so the vector leg is bit-identical to the two-leg int8 pipeline
-    * (spec-pinned). Cosine only, like the reference's int8 mode.
+  /** [[fusedTopKCombined]] under [[VecCodec.Int8]] — the int8 serving
+    * entry point the benchmark calls.
     */
   def fusedTopKCombinedInt8(
-      combined: org.apache.spark.rdd.RDD[CombinedShardInt8],
+      combined: RDD[CombinedShardInt8],
       cents: Array[Array[Float]],
       queries: Seq[ServedQuery],
       absMax: Double,
@@ -1819,104 +1530,43 @@ object ServingFusion {
       nProbe: Int,
       kVec: Int = 10,
       tombstones: Array[Long] = Array.emptyLongArray,
-      decOverrides: Array[(Long, Double)] = Array.empty): Array[(Long, Long, Double)] = {
-    val tomb = sortedTombstones(tombstones)
-    val (ovIds, ovDec) = sortedOverrides(decOverrides)
-    val alpha = if (alpha0 < 0 || alpha0 > 1) 0.5 else alpha0
-    val qs = queries.sortBy(_.qid).toArray
-    require(qs.map(_.qid).distinct.length == qs.length,
-      "fusedTopKCombinedInt8: duplicate qids in the batch")
-    require(qs.forall(_.qvec != null),
-      "fusedTopKCombinedInt8: every ServedQuery needs a query vector")
-    val nq = qs.length
-    if (nq == 0) return Array.empty
-    val qids = qs.map(_.qid)
-    val qvecs = qs.map(_.qvec)
-    val toksByQ = qs.map(_.tokens.sortBy(_._1))
-    val qcodes = qvecs.map(Ivf.quantizeArray(_, absMax))
-    val qnorms = qcodes.map(Ivf.int8Norm)
-    val probedByQ = invertProbes(Ivf.probeAssignments(cents,
-      Ivf.bucketAdj(cents, "cosine"), l2 = false, qvecs, nProbe), nq)
-    val bc = combined.sparkContext.broadcast(
-      (qcodes, qnorms, toksByQ, probedByQ, tomb, ovIds, ovDec))
-    val partials = combined.mapPartitions { it =>
-      val (qcs, qns, toks, probed, tombB, ovI, ovD) = bc.value
-      def decOf(id: Long, baked: Double): Double =
-        if (ovI.length == 0) baked
-        else {
-          val i = java.util.Arrays.binarySearch(ovI, id)
-          if (i >= 0) ovD(i) else baked
-        }
-      val p = new CombinedPartial(qcs.length, k, kVec)
-      it.foreach { csh =>
-        val sh = csh.text
-        val n = sh.ids.length
-        val acc = new Array[Double](n)
-        val seen = new Array[Int](n)
-        val touched = new Array[Int](n)
-        var epoch = 0
-        var qi = 0
-        while (qi < qcs.length) {
-          epoch += 1
-          val tn = scoreTokens(sh, toks(qi), acc, seen, touched, epoch)
-          var i = 0
-          while (i < tn) {
-            val d = touched(i)
-            if (tombB.length == 0 ||
-                java.util.Arrays.binarySearch(tombB, sh.ids(d)) < 0) {
-              val raw = acc(d)
-              val dc = decOf(sh.ids(d), sh.dec(d))
-              if (raw > p.text.maxRaw(qi)) p.text.maxRaw(qi) = raw
-              p.text.insert(qi, -(raw * dc), sh.ids(d), raw, dc)
-            }
-            i += 1
-          }
-          val qc = qcs(qi)
-          val qn = qns(qi).toDouble
-          val pb = probed(qi)
-          var bi = 0
-          while (bi < pb.length) {
-            val blk = csh.bucketBlock.getOrElse(pb(bi).toLong, -1)
-            if (blk >= 0) {
-              var r = csh.bOff(blk)
-              val end = csh.bOff(blk + 1)
-              while (r < end) {
-                val li = csh.vecLocal(r)
-                val id = sh.ids(li)
-                if (tombB.length == 0 ||
-                    java.util.Arrays.binarySearch(tombB, id) < 0) {
-                  var dot = 0
-                  var j = 0
-                  val off = r * csh.dim
-                  while (j < csh.dim) { dot += csh.codes(off + j).toInt * qc(j).toInt; j += 1 }
-                  val norm = csh.norms(r)
-                  val dist =
-                    if (norm == 0f || qn == 0.0) 1.0
-                    else {
-                      var sim = dot.toDouble / (norm.toDouble * qn)
-                      if (sim > 1.0) sim = 1.0
-                      if (sim < -1.0) sim = -1.0
-                      1.0 - sim
-                    }
-                  val hasT = seen(li) == epoch
-                  p.insertVec(qi, dist, id,
-                    if (hasT) acc(li) else 0.0, decOf(id, sh.dec(li)), hasT)
-                }
-                r += 1
-              }
-            }
-            bi += 1
-          }
-          qi += 1
-        }
-      }
-      Iterator.single(p)
+      decOverrides: Array[(Long, Double)] = Array.empty)
+      : Array[(Long, Long, Double)] =
+    fusedTopKCombined(combined, cents, queries, alpha0, k, nProbe, kVec,
+      "cosine", tombstones, decOverrides)(VecCodec.Int8(absMax))
+
+  /** Validate a served batch once, then prepare it for the codec's kernel
+    * and pick its probes on the driver (the descent analogue), inverted to
+    * per-query ascending bucket lists for the partition scan. The metric
+    * must be `"cosine"` or `"l2"` (the int8 codec rejects `"l2"`), and
+    * every query vector must be present and as long as the centroids — a
+    * shorter one would fail inside [[Ivf.probeAssignments]]' parallel
+    * loop, a longer one would score only its prefix.
+    */
+  private def prepareBatch[S <: CombinedBlocks](
+      codec: VecCodec[S],
+      op: String,
+      cents: Array[Array[Float]],
+      qids: Array[Long],
+      qvecs: Array[Array[Float]],
+      metric: String,
+      nProbe: Int): (VecQueries[S], Array[Array[Int]]) = {
+    require(metric == "cosine" || metric == "l2",
+      s"$op: unknown metric '$metric' (combined serving takes \"cosine\" " +
+        "or \"l2\")")
+    val dim = if (cents.isEmpty) -1 else cents(0).length
+    qids.indices.foreach { i =>
+      require(qvecs(i) != null, s"$op: query ${qids(i)} has no query " +
+        "vector (combined serving scans vectors; route tokens-only work " +
+        "through fusedTopK)")
+      require(dim < 0 || qvecs(i).length == dim,
+        s"$op: query ${qids(i)} has ${qvecs(i).length} dimensions, the " +
+          s"centroids $dim")
     }
-    val merged = Ivf.reducePartials(partials,
-      new CombinedPartial(nq, k, kVec),
-      (a: CombinedPartial, b: CombinedPartial) => a.merge(b))
-    bc.destroy()
-    blendCombined(qids, merged, alpha, k)
+    val l2 = metric == "l2"
+    val prepared = codec.prepare(qvecs, l2)
+    (prepared, invertProbes(Ivf.probeAssignments(cents,
+      Ivf.bucketAdj(cents, metric), l2, qvecs, nProbe), qvecs.length))
   }
 
   /** Defensive copy of a serve-time tombstone set, sorted for the scan
@@ -2001,14 +1651,10 @@ object ServingFusion {
 
   /** Per-partition pool partial for [[mmrTopKCombined]]: a pool-bounded
     * (distance, id) top-k per query — [[Ivf.TopK]]'s insertion and tie
-    * rules exactly — whose entries CARRY the candidate vector, copied
-    * from the block at accepted inserts only. Doc-major partitions are
-    * disjoint, so the merge is a plain bounded union.
-    */
-  /** Payload slots are `AnyRef` so the f32 path (`Array[Float]` vectors)
-    * and the int8 path (`Array[Byte]` codes, 4× less pool network) share
-    * one partial — the shared-merge discipline that keeps twins from
-    * drifting.
+    * rules exactly — whose entries CARRY the candidate's vector row in the
+    * codec's payload (int8 codes: 4× less pool network than floats),
+    * copied from the block at accepted inserts only. Doc-major partitions
+    * are disjoint, so the merge is a plain bounded union.
     */
   private final class VecPoolPartial(nq: Int, pool: Int)
       extends Serializable {
@@ -2018,7 +1664,7 @@ object ServingFusion {
 
     /** Place (d, id), shifting payloads; returns the slot to write the
       * vector into, or -1 when rejected — so the scan only copies a
-      * candidate's floats AFTER it wins a slot.
+      * candidate's row AFTER it wins a slot.
       */
     def slotFor(qi: Int, d: Double, id: Long): Int = {
       val hd = pd(qi); val hi = pid(qi); val hv: Array[AnyRef] = pv(qi)
@@ -2050,22 +1696,24 @@ object ServingFusion {
   }
 
   /** Diversity-aware serving in ONE Spark job: retrieve each query's
-    * relevance pool (top-`pool` by the ANN metric over the probed bucket
-    * blocks) WITH candidate vectors in the same mapPartitions pass, then
-    * run the greedy MMR chain as driver math over ≤ pool candidates
+    * relevance pool (top-`pool` by the codec's distance over the probed
+    * bucket blocks) WITH candidate vectors in the same mapPartitions pass,
+    * then run the greedy MMR chain as driver math over ≤ pool candidates
     * ([[Mmr.selectLocal]] — bit-identical arithmetic to the v25/v26 plan
     * chain: rel = 1 − distance, λ-blend, wide-cosine max-sim penalty,
-    * ties by id). The plan path pays ~3 jobs per greedy ROUND
+    * ties by id; int8 pools run it over their codes, see
+    * [[VecCodec.Int8]]). The plan path pays ~3 jobs per greedy ROUND
     * ([[Mmr.select]]'s anti-join/sim-join/argmax chain); this is one job
     * total. Network per query is pool×(dim+3) values — driver-bounded
     * batches by the serving contract, `pool ≤ Mmr.MaxPoolPerQuery`
-    * enforced on both sides.
+    * enforced on both sides. The batch is validated once
+    * ([[prepareBatch]]).
     *
     * @param queries driver-resident (qid, query vector) rows.
     * @return (qid, rank, id, score) — rank is 1-based selection order.
     */
-  def mmrTopKCombined(
-      combined: org.apache.spark.rdd.RDD[CombinedShard],
+  def mmrTopKCombined[S <: CombinedBlocks](
+      combined: RDD[S],
       cents: Array[Array[Float]],
       queries: Seq[(Long, Array[Float])],
       k: Int,
@@ -2074,35 +1722,26 @@ object ServingFusion {
       lam: Double,
       oneMinusLam: Double,
       metric: String = "cosine",
-      tombstones: Array[Long] = Array.emptyLongArray): Array[(Long, Long, Long, Double)] = {
+      tombstones: Array[Long] = Array.emptyLongArray)(
+      implicit codec: VecCodec[S]): Array[(Long, Long, Long, Double)] = {
     require(pool > 0 && pool <= Mmr.MaxPoolPerQuery,
       s"pool=$pool outside (0, ${Mmr.MaxPoolPerQuery}]")
     val tomb = sortedTombstones(tombstones)
-    val l2 = metric == "l2"
     val qs = queries.sortBy(_._1).toArray
     require(qs.map(_._1).distinct.length == qs.length,
       "mmrTopKCombined: duplicate qids in the batch")
+    val qids = qs.map(_._1)
+    val (prepared, probedByQ) = prepareBatch(codec, "mmrTopKCombined", cents,
+      qids, qs.map(_._2), metric, nProbe)
     val nq = qs.length
     if (nq == 0) return Array.empty
-    val qids = qs.map(_._1)
-    val qvecs = qs.map(_._2)
-    val adj = Ivf.bucketAdj(cents, metric)
-    val qsq: Array[Double] =
-      if (l2) qvecs.map { qv =>
-        var s = 0.0; var j = 0
-        while (j < qv.length) { s += qv(j).toDouble * qv(j); j += 1 }
-        s
-      } else null
-    val probedByQ = invertProbes(
-      Ivf.probeAssignments(cents, adj, l2 = l2, qvecs, nProbe), nq)
-    val bc = combined.sparkContext.broadcast((qvecs, probedByQ, qsq, tomb))
+    val bc = combined.sparkContext.broadcast((prepared, probedByQ, tomb))
     val partials = combined.mapPartitions { it =>
-      val (qvs, probed, qsqB, tombB) = bc.value
-      val p = new VecPoolPartial(qvs.length, pool)
+      val (prep, probed, tombB) = bc.value
+      val p = new VecPoolPartial(probed.length, pool)
       it.foreach { csh =>
         var qi = 0
-        while (qi < qvs.length) {
-          val qv = qvs(qi)
+        while (qi < probed.length) {
           val pb = probed(qi)
           var bi = 0
           while (bi < pb.length) {
@@ -2114,17 +1753,8 @@ object ServingFusion {
                 val id = csh.text.ids(csh.vecLocal(r))
                 if (tombB.length == 0 ||
                     java.util.Arrays.binarySearch(tombB, id) < 0) {
-                  var dot = 0f
-                  var j = 0
-                  val off = r * csh.dim
-                  while (j < csh.dim) { dot += csh.flat(off + j) * qv(j); j += 1 }
-                  val dist =
-                    if (qsqB != null)
-                      csh.rowSq(r).toDouble - 2.0d * dot + qsqB(qi)
-                    else 1.0d - dot
-                  val s = p.slotFor(qi, dist, id)
-                  if (s >= 0) p.pv(qi)(s) =
-                    java.util.Arrays.copyOfRange(csh.flat, off, off + csh.dim)
+                  val s = p.slotFor(qi, prep.dist(csh, r, qi), id)
+                  if (s >= 0) p.pv(qi)(s) = codec.rowOf(csh, r)
                 }
                 r += 1
               }
@@ -2150,121 +1780,7 @@ object ServingFusion {
       var i = 0
       while (i < n) { rel(i) = 1.0 - hd(i); i += 1 }
       val vecs = Array.tabulate(n)(i =>
-        merged.pv(qi)(i).asInstanceOf[Array[Float]])
-      Mmr.selectLocal(ids, rel, vecs, k, lam, oneMinusLam).foreach {
-        case (rank, id, score) => out += ((qids(qi), rank, id, score))
-      }
-      qi += 1
-    }
-    out.toArray
-  }
-
-  /** [[mmrTopKCombined]]'s compressed twin (VERDICT r15 stretch #7): the
-    * pool retrieval scans the int8 combined shard with
-    * [[fusedTopKCombinedInt8]]'s exact distance kernel, and the pool
-    * partials carry the candidates' int8 CODES — 4× less pool network
-    * than the f32 path's vectors (pool×dim bytes vs floats per query).
-    * The greedy chain then runs [[Mmr.selectLocal]] over the codes mapped
-    * to floats: cosine is scale-invariant, so similarity over raw code
-    * values IS the int8-domain cosine (the `absMax/127` dequantization
-    * factor cancels in `dot/(‖a‖·‖b‖)`) — no dequantized copy is ever
-    * materialized. rel = 1 − int8 distance, same λ-blend, same (score,
-    * id) tie-breaks. Cosine-only, like the int8 serving family.
-    */
-  def mmrTopKCombinedInt8(
-      combined: org.apache.spark.rdd.RDD[CombinedShardInt8],
-      cents: Array[Array[Float]],
-      queries: Seq[(Long, Array[Float])],
-      absMax: Double,
-      k: Int,
-      pool: Int,
-      nProbe: Int,
-      lam: Double,
-      oneMinusLam: Double,
-      tombstones: Array[Long] = Array.emptyLongArray): Array[(Long, Long, Long, Double)] = {
-    require(pool > 0 && pool <= Mmr.MaxPoolPerQuery,
-      s"pool=$pool outside (0, ${Mmr.MaxPoolPerQuery}]")
-    val tomb = sortedTombstones(tombstones)
-    val qs = queries.sortBy(_._1).toArray
-    require(qs.map(_._1).distinct.length == qs.length,
-      "mmrTopKCombinedInt8: duplicate qids in the batch")
-    val nq = qs.length
-    if (nq == 0) return Array.empty
-    val qids = qs.map(_._1)
-    val qvecs = qs.map(_._2)
-    val qcodes = qvecs.map(Ivf.quantizeArray(_, absMax))
-    val qnorms = qcodes.map(Ivf.int8Norm)
-    val probedByQ = invertProbes(Ivf.probeAssignments(cents,
-      Ivf.bucketAdj(cents, "cosine"), l2 = false, qvecs, nProbe), nq)
-    val bc = combined.sparkContext.broadcast((qcodes, qnorms, probedByQ, tomb))
-    val partials = combined.mapPartitions { it =>
-      val (qcs, qns, probed, tombB) = bc.value
-      val p = new VecPoolPartial(qcs.length, pool)
-      it.foreach { csh =>
-        var qi = 0
-        while (qi < qcs.length) {
-          val qc = qcs(qi)
-          val qn = qns(qi).toDouble
-          val pb = probed(qi)
-          var bi = 0
-          while (bi < pb.length) {
-            val blk = csh.bucketBlock.getOrElse(pb(bi).toLong, -1)
-            if (blk >= 0) {
-              var r = csh.bOff(blk)
-              val end = csh.bOff(blk + 1)
-              while (r < end) {
-                val id = csh.text.ids(csh.vecLocal(r))
-                if (tombB.length == 0 ||
-                    java.util.Arrays.binarySearch(tombB, id) < 0) {
-                  var dot = 0
-                  var j = 0
-                  val off = r * csh.dim
-                  while (j < csh.dim) {
-                    dot += csh.codes(off + j).toInt * qc(j).toInt; j += 1
-                  }
-                  val norm = csh.norms(r)
-                  val dist =
-                    if (norm == 0f || qn == 0.0) 1.0
-                    else {
-                      var sim = dot.toDouble / (norm.toDouble * qn)
-                      if (sim > 1.0) sim = 1.0
-                      if (sim < -1.0) sim = -1.0
-                      1.0 - sim
-                    }
-                  val s = p.slotFor(qi, dist, id)
-                  if (s >= 0) p.pv(qi)(s) =
-                    java.util.Arrays.copyOfRange(csh.codes, off, off + csh.dim)
-                }
-                r += 1
-              }
-            }
-            bi += 1
-          }
-          qi += 1
-        }
-      }
-      Iterator.single(p)
-    }
-    val merged = Ivf.reducePartials(partials, new VecPoolPartial(nq, pool),
-      (a: VecPoolPartial, b: VecPoolPartial) => a.merge(b))
-    bc.destroy()
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
-    var qi = 0
-    while (qi < nq) {
-      val hd = merged.pd(qi)
-      var n = 0
-      while (n < hd.length && hd(n) < Double.MaxValue) n += 1
-      val ids = java.util.Arrays.copyOf(merged.pid(qi), n)
-      val rel = new Array[Double](n)
-      var i = 0
-      while (i < n) { rel(i) = 1.0 - hd(i); i += 1 }
-      val vecs = Array.tabulate(n) { i =>
-        val c = merged.pv(qi)(i).asInstanceOf[Array[Byte]]
-        val f = new Array[Float](c.length)
-        var j = 0
-        while (j < c.length) { f(j) = c(j).toFloat; j += 1 }
-        f
-      }
+        codec.floats(merged.pv(qi)(i).asInstanceOf[codec.Vec]))
       Mmr.selectLocal(ids, rel, vecs, k, lam, oneMinusLam).foreach {
         case (rank, id, score) => out += ((qids(qi), rank, id, score))
       }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.dedup.Dedup
+import graft.search.{ServingFusion, VecCodec}
+import graft.search.ServingFusion.{CombinedBlocks, CombinedShardInt8}
 
 /** Streaming / reactivity surface (SURVEY §2.10, E1-E4).
   *
@@ -518,7 +520,7 @@ object Streams {
     * everywhere in this module.
     *
     * A non-empty micro-batch costs four Spark jobs (see
-    * [[ingestSegmentBatch]]): one aggregate for every driver-side check,
+    * [[ingestCombinedBatch]]): one aggregate for every driver-side check,
     * the log write, the frozen-df lookup for the batch's tokens and the
     * segment's materialization; under adaptive execution the persisted
     * batch's cache stage adds a fifth. The served handle is `ref.get()` —
@@ -580,7 +582,7 @@ object Streams {
     * base, which folds the K segments back into one under the SAME
     * frozen artifacts (durable shape only — it reads the log).
     */
-  def combinedIngest(
+  def combinedIngest[S <: CombinedBlocks](
       docs: DataFrame,
       idCol: String,
       textCol: String,
@@ -589,14 +591,15 @@ object Streams {
       frozenStats: (Long, Double),
       frozenTokenDf: DataFrame,
       ref: java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShard]],
+        org.apache.spark.rdd.RDD[S]],
       checkpoint: String,
       numShardsPerSegment: Int = 1,
       segmentLog: Option[String] = None,
       baseBuildId: Option[String] = None,
       idWatermark: Option[Long] = None,
       compactionThreshold: Int = 0,
-      onCompactionNeeded: () => Unit = () => ())
+      onCompactionNeeded: () => Unit = () => ())(
+      implicit codec: VecCodec[S])
       : org.apache.spark.sql.streaming.StreamingQuery = {
     baseBuildId.foreach(id => bindCheckpointToBase(
       docs.sparkSession, checkpoint, id))
@@ -607,7 +610,7 @@ object Streams {
         val before = ref.get()
         ingestCombinedBatch(batch, batchId, idCol, textCol, vecCol, cents,
           frozenStats, frozenTokenDf, ref, numShardsPerSegment, segmentLog,
-          wm)
+          wm)(codec)
         if ((ref.get() ne before) && compactionThreshold > 0 &&
             segCount.incrementAndGet() % compactionThreshold == 0)
           onCompactionNeeded()
@@ -618,52 +621,11 @@ object Streams {
       .start()
   }
 
-  /** One [[combinedIngest]] micro-batch, factored out so the crash-window
-    * spec can RE-DELIVER a batch (same frame, same batchId) and assert the
-    * served index and the log are unchanged — the at-least-once window a
-    * running stream only hits across a crash. See [[combinedIngest]] for
-    * the exactly-once discipline this implements.
-    *
-    * `replacesCol` names the batch's superseded-id column (logged as
-    * `graft_replaces`); with `tombRef` those ids are merged into the
-    * tombstone set before the segment lands — the upsert path
-    * ([[upsertCombinedBatch]]).
+  /** [[combinedIngest]] under [[VecCodec.Int8]] — the int8 ingest entry
+    * point the benchmark calls.
     */
-  def ingestCombinedBatch(
-      batch: DataFrame,
-      batchId: Long,
-      idCol: String,
-      textCol: String,
-      vecCol: String,
-      cents: Array[Array[Float]],
-      frozenStats: (Long, Double),
-      frozenTokenDf: DataFrame,
-      ref: java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShard]],
-      numShardsPerSegment: Int = 1,
-      segmentLog: Option[String] = None,
-      idWatermark: Option[java.util.concurrent.atomic.AtomicLong] = None,
-      replacesCol: Option[String] = None,
-      tombRef: Option[java.util.concurrent.atomic.AtomicReference[Array[Long]]]
-        = None)
-      : Unit =
-    ingestSegmentBatch(batch, batchId, idCol, textCol, vecCol, segmentLog,
-      idWatermark, ref, replacesCol, tombRef) { (b, toks) =>
-      graft.search.ServingFusion.buildSegment(b, idCol, textCol, vecCol,
-        cents, frozenStats, frozenTokenDf, numShardsPerSegment, Some(toks))(
-        graft.search.ServingFusion.assembleF32)
-    }
-
-  /** [[ingestCombinedBatch]]'s compressed twin: the segment quantizes
-    * against the base build's frozen `absMax`
-    * ([[graft.search.ServingFusion.appendCombinedInt8]]'s contract) —
-    * int8 combined serving has the SAME streaming story as f32 (same
-    * batchId-keyed log, same exactly-once discipline, same watermark
-    * guard; one shared core, [[ingestSegmentBatch]]).
-    */
-  def ingestCombinedBatchInt8(
-      batch: DataFrame,
-      batchId: Long,
+  def combinedIngestInt8(
+      docs: DataFrame,
       idCol: String,
       textCol: String,
       vecCol: String,
@@ -672,37 +634,48 @@ object Streams {
       frozenStats: (Long, Double),
       frozenTokenDf: DataFrame,
       ref: java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8]],
+        org.apache.spark.rdd.RDD[CombinedShardInt8]],
+      checkpoint: String,
       numShardsPerSegment: Int = 1,
       segmentLog: Option[String] = None,
-      idWatermark: Option[java.util.concurrent.atomic.AtomicLong] = None,
-      replacesCol: Option[String] = None,
-      tombRef: Option[java.util.concurrent.atomic.AtomicReference[Array[Long]]]
-        = None)
-      : Unit =
-    ingestSegmentBatch(batch, batchId, idCol, textCol, vecCol, segmentLog,
-      idWatermark, ref, replacesCol, tombRef) { (b, toks) =>
-      graft.search.ServingFusion.buildSegment(b, idCol, textCol, vecCol,
-        cents, frozenStats, frozenTokenDf, numShardsPerSegment, Some(toks))(
-        graft.search.ServingFusion.assembleInt8(absMax))
-    }
+      baseBuildId: Option[String] = None,
+      idWatermark: Option[Long] = None,
+      compactionThreshold: Int = 0,
+      onCompactionNeeded: () => Unit = () => ())
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    combinedIngest(docs, idCol, textCol, vecCol, cents, frozenStats,
+      frozenTokenDf, ref, checkpoint, numShardsPerSegment, segmentLog,
+      baseBuildId, idWatermark, compactionThreshold,
+      onCompactionNeeded)(VecCodec.Int8(absMax))
 
-  /** The one copy of the micro-batch exactly-once discipline, shared by
-    * both combined layouts and the upsert paths. ONE aggregate job over
-    * the persisted batch yields everything the driver decides on: the row
-    * count, the id min/max/count/distinct-count for the watermark guard,
-    * the superseded ids of an upsert and the batch's distinct analyzed
-    * tokens for the segment build. Then, in order: the upsert's tombstone
-    * merge (idempotent, so it runs on a re-delivery too —
-    * delete-visible-before-add), re-delivery detection (a COMPLETE
-    * `batch=<id>/` log directory means the docs are already served — skip
-    * the rest, INCLUDING the watermark guard: a re-delivered batch's ids
-    * are legitimately at or below the watermark, a restart derives it from
-    * `maxLoggedId` which covers this very batch), the append-only id guard
-    * (VERDICT r16 #3 — fail loudly instead of double-scoring), the
-    * batchId-keyed log overwrite, and the cache-segment-then-swap append
-    * (cache ONLY the segment — caching the union would re-store every base
-    * partition per micro-batch).
+  /** One [[combinedIngest]] micro-batch — the one copy of the micro-batch
+    * exactly-once discipline, shared by both codecs and the upsert path,
+    * and factored out so the crash-window spec can RE-DELIVER a batch
+    * (same frame, same batchId) and assert the served index and the log
+    * are unchanged — the at-least-once window a running stream only hits
+    * across a crash.
+    *
+    * ONE aggregate job over the persisted batch yields everything the
+    * driver decides on: the row count, the id min/max/count/distinct-count
+    * for the watermark guard, the superseded ids of an upsert and the
+    * batch's distinct analyzed tokens for the segment build. Then, in
+    * order: the upsert's tombstone merge (idempotent, so it runs on a
+    * re-delivery too — delete-visible-before-add), re-delivery detection
+    * (a COMPLETE `batch=<id>/` log directory means the docs are already
+    * served — skip the rest, INCLUDING the watermark guard: a re-delivered
+    * batch's ids are legitimately at or below the watermark, a restart
+    * derives it from `maxLoggedId` which covers this very batch), the
+    * append-only id guard (VERDICT r16 #3 — fail loudly instead of
+    * double-scoring), the batchId-keyed log overwrite, and the
+    * cache-segment-then-swap append (cache ONLY the segment — caching the
+    * union would re-store every base partition per micro-batch). The
+    * segment is [[graft.search.ServingFusion.buildSegment]] in the codec's
+    * layout (int8: quantized against the base build's frozen `absMax`).
+    *
+    * `replacesCol` names the batch's superseded-id column (logged as
+    * `graft_replaces`); with `tombRef` those ids are merged into the
+    * tombstone set before the segment lands — the upsert path
+    * ([[upsertCombinedBatch]]).
     *
     * Jobs per non-empty micro-batch: the aggregate, the log write, the
     * frozen-df lookup for the batch's tokens and the segment's
@@ -712,19 +685,24 @@ object Streams {
     * driver: only the aggregate's scalars, id set sizes, superseded ids
     * and distinct tokens do.
     */
-  private def ingestSegmentBatch[T](
+  def ingestCombinedBatch[S <: CombinedBlocks](
       batch: DataFrame,
       batchId: Long,
       idCol: String,
       textCol: String,
       vecCol: String,
-      segmentLog: Option[String],
-      idWatermark: Option[java.util.concurrent.atomic.AtomicLong],
+      cents: Array[Array[Float]],
+      frozenStats: (Long, Double),
+      frozenTokenDf: DataFrame,
       ref: java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.rdd.RDD[T]],
-      replacesCol: Option[String],
-      tombRef: Option[java.util.concurrent.atomic.AtomicReference[Array[Long]]])(
-      buildSegment: (DataFrame, Seq[String]) => org.apache.spark.rdd.RDD[T]): Unit = {
+        org.apache.spark.rdd.RDD[S]],
+      numShardsPerSegment: Int = 1,
+      segmentLog: Option[String] = None,
+      idWatermark: Option[java.util.concurrent.atomic.AtomicLong] = None,
+      replacesCol: Option[String] = None,
+      tombRef: Option[java.util.concurrent.atomic.AtomicReference[Array[Long]]]
+        = None)(
+      implicit codec: VecCodec[S]): Unit = {
     val spark = batch.sparkSession
     val b = batch.persist()
     try {
@@ -740,7 +718,7 @@ object Streams {
       // exchange (and so no extra adaptive-execution stage job).
       val s = b.coalesce(1).agg(count(lit(1)), min(idL), max(idL), count(idL),
         countDistinct(idL), collect_set(repl),
-        graft.search.ServingFusion.segmentTokens(textCol)).head()
+        ServingFusion.segmentTokens(textCol)).head()
       if (s.getLong(0) > 0) {
         val replaced = s.getSeq[Long](5).toArray
         if (replaced.nonEmpty) tombRef.foreach(mergeTombstones(_, replaced))
@@ -778,7 +756,9 @@ object Streams {
                 repl.as("graft_replaces"))
               .write.mode("overwrite").parquet(s"$path/batch=$batchId")
           }
-          val seg = buildSegment(b, s.getSeq[String](6)).cache()
+          val seg = ServingFusion.buildSegment(b, idCol, textCol, vecCol,
+            cents, frozenStats, frozenTokenDf, numShardsPerSegment,
+            Some(s.getSeq[String](6)))(codec).cache()
           seg.count() // materialize BEFORE the atomic swap
           appendSegment(ref, seg)
           for (w <- idWatermark; mx <- batchMaxId)
@@ -817,110 +797,19 @@ object Streams {
     }
   }
 
-  /** [[combinedIngest]]'s compressed twin — streaming micro-batch ingest
-    * into the int8 combined serving index, same checkpoint binding, same
-    * durable-log and compaction-trigger contracts, with the batch
-    * quantized against the base build's frozen `absMax`.
-    */
-  def combinedIngestInt8(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      vecCol: String,
-      cents: Array[Array[Float]],
-      absMax: Double,
-      frozenStats: (Long, Double),
-      frozenTokenDf: DataFrame,
-      ref: java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8]],
-      checkpoint: String,
-      numShardsPerSegment: Int = 1,
-      segmentLog: Option[String] = None,
-      baseBuildId: Option[String] = None,
-      idWatermark: Option[Long] = None,
-      compactionThreshold: Int = 0,
-      onCompactionNeeded: () => Unit = () => ())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    baseBuildId.foreach(id => bindCheckpointToBase(
-      docs.sparkSession, checkpoint, id))
-    val wm = idWatermark.map(w => new java.util.concurrent.atomic.AtomicLong(w))
-    val segCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val before = ref.get()
-        ingestCombinedBatchInt8(batch, batchId, idCol, textCol, vecCol,
-          cents, absMax, frozenStats, frozenTokenDf, ref,
-          numShardsPerSegment, segmentLog, wm)
-        if ((ref.get() ne before) && compactionThreshold > 0 &&
-            segCount.incrementAndGet() % compactionThreshold == 0)
-          onCompactionNeeded()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
-
-  /** [[recoverCombinedSegments]]' compressed twin: rebuild the log's docs
-    * as one int8 segment under the SAME frozen artifacts (absMax
-    * included) and union it onto the fresh base; `minIdExclusive` filters
-    * batches a snapshot superseded, and `tombRef` folds the log's
-    * superseded upsert ids back into the tombstone set, exactly as for
-    * f32.
-    */
-  def recoverCombinedSegmentsInt8(
-      spark: SparkSession,
-      segmentLog: String,
-      idCol: String,
-      textCol: String,
-      vecCol: String,
-      cents: Array[Array[Float]],
-      absMax: Double,
-      frozenStats: (Long, Double),
-      frozenTokenDf: DataFrame,
-      base: org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8],
-      numShards: Int = 1,
-      minIdExclusive: Option[Long] = None,
-      tombRef: Option[java.util.concurrent.atomic.AtomicReference[Array[Long]]]
-        = None)
-      : org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8] = {
-    val loggedOpt = loggedAboveWatermark(spark, segmentLog, idCol,
-      minIdExclusive)
-    if (loggedOpt.isEmpty) return base
-    val logged = loggedOpt.get
-    foldLoggedReplaces(logged, tombRef)
-    if (logged.isEmpty) return base
-    val seg = graft.search.ServingFusion.buildSegment(logged, idCol, textCol,
-      vecCol, cents, frozenStats, frozenTokenDf, numShards)(
-      graft.search.ServingFusion.assembleInt8(absMax)).cache()
-    seg.count()
-    base.union(seg)
-  }
-
-  /** [[compactCombinedServing]]'s compressed twin — same snapshot → fold
-    * → swap → keyed-clear discipline over the int8 kernels.
+  /** [[compactCombinedServing]] under [[VecCodec.Int8]] — the int8
+    * compaction entry point the benchmark calls. Compaction copies codes
+    * and stored norms verbatim and never reads the codec's `absMax`, which
+    * this entry point's callers do not pass (hence the NaN).
     */
   def compactCombinedServingInt8(
       ref: java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8]],
+        org.apache.spark.rdd.RDD[CombinedShardInt8]],
       tombRef: java.util.concurrent.atomic.AtomicReference[Array[Long]],
       ovRef: java.util.concurrent.atomic.AtomicReference[Map[Long, (Double, Long)]],
-      numPartitions: Int)
-      : org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8] = {
-    val tomb = tombRef.get()
-    val ov = ovRef.get()
-    val old = ref.get()
-    val compacted = graft.search.ServingFusion.compactCombinedInt8(
-      old, tomb, overridesArray(ov), numPartitions).cache()
-    compacted.count() // materialize BEFORE the swap
-    ref.updateAndGet(cur => rebaseUnion(cur, old, compacted))
-    val tombSnap = tomb.toSet
-    tombRef.updateAndGet(cur => cur.filterNot(tombSnap))
-    ovRef.updateAndGet(cur => cur.filterNot { case (id, fv) =>
-      ov.get(id).contains(fv)
-    })
-    compacted
-  }
+      numPartitions: Int): org.apache.spark.rdd.RDD[CombinedShardInt8] =
+    compactCombinedServing(ref, tombRef, ovRef, numPartitions)(
+      VecCodec.Int8(absMax = Double.NaN))
 
   /** Streaming DELETE ingest for combined serving (VERDICT r16 #2): each
     * micro-batch of deleted doc ids merges into the driver-resident
@@ -1137,7 +1026,7 @@ object Streams {
     * oplog — which recorded the upsert as delete+add — and recovers
     * segments from the log; the recovered state is the same serve.
     */
-  def upsertIngest(
+  def upsertIngest[S <: CombinedBlocks](
       docs: DataFrame,
       idCol: String,
       replacesCol: String,
@@ -1147,13 +1036,14 @@ object Streams {
       frozenStats: (Long, Double),
       frozenTokenDf: DataFrame,
       ref: java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShard]],
+        org.apache.spark.rdd.RDD[S]],
       tombRef: java.util.concurrent.atomic.AtomicReference[Array[Long]],
       checkpoint: String,
       numShardsPerSegment: Int = 1,
       segmentLog: Option[String] = None,
       baseBuildId: Option[String] = None,
-      idWatermark: Option[Long] = None)
+      idWatermark: Option[Long] = None)(
+      implicit codec: VecCodec[S])
       : org.apache.spark.sql.streaming.StreamingQuery = {
     baseBuildId.foreach(id => bindCheckpointToBase(
       docs.sparkSession, checkpoint, id))
@@ -1162,7 +1052,7 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         upsertCombinedBatch(batch, batchId, idCol, replacesCol, textCol,
           vecCol, cents, frozenStats, frozenTokenDf, ref, tombRef,
-          numShardsPerSegment, segmentLog, wm)
+          numShardsPerSegment, segmentLog, wm)(codec)
         ()
       }
       .option("checkpointLocation", checkpoint)
@@ -1170,65 +1060,8 @@ object Streams {
       .start()
   }
 
-  /** One [[upsertIngest]] micro-batch, factored out like
-    * [[ingestCombinedBatch]] so the spec can re-deliver it. Tombstones
-    * first (see [[upsertIngest]]'s ordering contract), then the segment.
-    */
-  def upsertCombinedBatch(
-      batch: DataFrame,
-      batchId: Long,
-      idCol: String,
-      replacesCol: String,
-      textCol: String,
-      vecCol: String,
-      cents: Array[Array[Float]],
-      frozenStats: (Long, Double),
-      frozenTokenDf: DataFrame,
-      ref: java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShard]],
-      tombRef: java.util.concurrent.atomic.AtomicReference[Array[Long]],
-      numShardsPerSegment: Int = 1,
-      segmentLog: Option[String] = None,
-      idWatermark: Option[java.util.concurrent.atomic.AtomicLong] = None)
-      : Unit =
-    // `replacesCol` rides into the segment log (VERDICT r17 missing #1),
-    // making the upsert's delete half durable with its add half: restart
-    // recovery folds the logged superseded ids back into the tombstone
-    // set, with no caller-side oplog replay required.
-    ingestCombinedBatch(batch, batchId, idCol, textCol, vecCol, cents,
-      frozenStats, frozenTokenDf, ref, numShardsPerSegment, segmentLog,
-      idWatermark, replacesCol = Some(replacesCol), tombRef = Some(tombRef))
-
-  /** [[upsertCombinedBatch]]'s compressed twin (ADVICE r17 — int8 parity
-    * at the upsert seam): tombstones first, then the int8 segment under
-    * the frozen `absMax`; same durable `graft_replaces` logging.
-    */
-  def upsertCombinedBatchInt8(
-      batch: DataFrame,
-      batchId: Long,
-      idCol: String,
-      replacesCol: String,
-      textCol: String,
-      vecCol: String,
-      cents: Array[Array[Float]],
-      absMax: Double,
-      frozenStats: (Long, Double),
-      frozenTokenDf: DataFrame,
-      ref: java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8]],
-      tombRef: java.util.concurrent.atomic.AtomicReference[Array[Long]],
-      numShardsPerSegment: Int = 1,
-      segmentLog: Option[String] = None,
-      idWatermark: Option[java.util.concurrent.atomic.AtomicLong] = None)
-      : Unit =
-    ingestCombinedBatchInt8(batch, batchId, idCol, textCol, vecCol, cents,
-      absMax, frozenStats, frozenTokenDf, ref, numShardsPerSegment,
-      segmentLog, idWatermark, replacesCol = Some(replacesCol),
-      tombRef = Some(tombRef))
-
-  /** [[upsertIngest]]'s compressed twin — the int8 combined layout's
-    * live update flow, same delete-visible-before-add ordering and
-    * exactly-once discipline through the shared core.
+  /** [[upsertIngest]] under [[VecCodec.Int8]] — the int8 upsert entry
+    * point the benchmark calls.
     */
   def upsertIngestInt8(
       docs: DataFrame,
@@ -1241,28 +1074,48 @@ object Streams {
       frozenStats: (Long, Double),
       frozenTokenDf: DataFrame,
       ref: java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8]],
+        org.apache.spark.rdd.RDD[CombinedShardInt8]],
       tombRef: java.util.concurrent.atomic.AtomicReference[Array[Long]],
       checkpoint: String,
       numShardsPerSegment: Int = 1,
       segmentLog: Option[String] = None,
       baseBuildId: Option[String] = None,
       idWatermark: Option[Long] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    baseBuildId.foreach(id => bindCheckpointToBase(
-      docs.sparkSession, checkpoint, id))
-    val wm = idWatermark.map(w => new java.util.concurrent.atomic.AtomicLong(w))
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertCombinedBatchInt8(batch, batchId, idCol, replacesCol, textCol,
-          vecCol, cents, absMax, frozenStats, frozenTokenDf, ref, tombRef,
-          numShardsPerSegment, segmentLog, wm)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    upsertIngest(docs, idCol, replacesCol, textCol, vecCol, cents,
+      frozenStats, frozenTokenDf, ref, tombRef, checkpoint,
+      numShardsPerSegment, segmentLog, baseBuildId,
+      idWatermark)(VecCodec.Int8(absMax))
+
+  /** One [[upsertIngest]] micro-batch, factored out like
+    * [[ingestCombinedBatch]] so the spec can re-deliver it. Tombstones
+    * first (see [[upsertIngest]]'s ordering contract), then the segment.
+    */
+  def upsertCombinedBatch[S <: CombinedBlocks](
+      batch: DataFrame,
+      batchId: Long,
+      idCol: String,
+      replacesCol: String,
+      textCol: String,
+      vecCol: String,
+      cents: Array[Array[Float]],
+      frozenStats: (Long, Double),
+      frozenTokenDf: DataFrame,
+      ref: java.util.concurrent.atomic.AtomicReference[
+        org.apache.spark.rdd.RDD[S]],
+      tombRef: java.util.concurrent.atomic.AtomicReference[Array[Long]],
+      numShardsPerSegment: Int = 1,
+      segmentLog: Option[String] = None,
+      idWatermark: Option[java.util.concurrent.atomic.AtomicLong] = None)(
+      implicit codec: VecCodec[S]): Unit =
+    // `replacesCol` rides into the segment log (VERDICT r17 missing #1),
+    // making the upsert's delete half durable with its add half: restart
+    // recovery folds the logged superseded ids back into the tombstone
+    // set, with no caller-side oplog replay required.
+    ingestCombinedBatch(batch, batchId, idCol, textCol, vecCol, cents,
+      frozenStats, frozenTokenDf, ref, numShardsPerSegment, segmentLog,
+      idWatermark, replacesCol = Some(replacesCol),
+      tombRef = Some(tombRef))(codec)
 
   /** COMPACT the live combined serving state (the operation every live
     * mutation above defers to): snapshot the served index + tombstone set
@@ -1277,18 +1130,18 @@ object Streams {
     * RDDs the caller materialized; unpersist them once no in-flight query
     * holds them.
     */
-  def compactCombinedServing(
+  def compactCombinedServing[S <: CombinedBlocks](
       ref: java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShard]],
+        org.apache.spark.rdd.RDD[S]],
       tombRef: java.util.concurrent.atomic.AtomicReference[Array[Long]],
       ovRef: java.util.concurrent.atomic.AtomicReference[Map[Long, (Double, Long)]],
-      numPartitions: Int)
-      : org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShard] = {
+      numPartitions: Int)(
+      implicit codec: VecCodec[S]): org.apache.spark.rdd.RDD[S] = {
     val tomb = tombRef.get()
     val ov = ovRef.get()
     val old = ref.get()
-    val compacted = graft.search.ServingFusion.compactCombined(
-      old, tomb, overridesArray(ov), numPartitions).cache()
+    val compacted = ServingFusion.compactCombined(
+      old, tomb, overridesArray(ov), numPartitions)(codec).cache()
     compacted.count() // materialize BEFORE the swap
     // Rebase, don't blindly set: ingest may have appended segments while
     // the compact+materialize ran (the hook schedules compaction OFF the
@@ -1334,8 +1187,10 @@ object Streams {
   /** Snapshot-then-truncate — the serving layer's AOF rewrite (SURVEY §2
     * S2+S3, reference `pkg/persistence/`: write the snapshot, THEN
     * truncate the journal it supersedes): persist the served combined
-    * index ([[graft.search.ServingFusion.saveCombined]], which records
-    * the index's max-id watermark in the snapshot meta) and drop the
+    * index in its codec's layout
+    * ([[graft.search.ServingFusion.saveCombined]], which records the
+    * index's max-id watermark — and an int8 index's `absMax` — in the
+    * snapshot meta) and drop the
     * segment log's batch directories, whose docs the snapshot now
     * carries. Returns the number of truncated batches.
     *
@@ -1348,34 +1203,16 @@ object Streams {
     * exactly this window). Call on a COMPACTED index so the snapshot
     * carries no tombstoned docs ([[compactCombinedServing]] first).
     */
-  def snapshotCombined(
-      index: org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShard],
+  def snapshotCombined[S <: CombinedBlocks](
+      index: org.apache.spark.rdd.RDD[S],
       path: String,
       frozenStats: (Long, Double),
       tokenDf: DataFrame,
       idCol: String,
-      segmentLog: Option[String] = None): Int = {
-    val savedMaxId = graft.search.ServingFusion.saveCombined(index, path,
-      frozenStats, tokenDf)
-    segmentLog.map(truncateSegmentLog(tokenDf.sparkSession, _, idCol,
-      savedMaxId)).getOrElse(0)
-  }
-
-  /** [[snapshotCombined]]'s compressed twin (ADVICE r17 — int8 parity at
-    * the durability seam): persist the served int8 index (absMax rides
-    * the snapshot meta) and truncate the superseded log batches. Same
-    * two crash windows, same `maxId`-keyed recovery filter.
-    */
-  def snapshotCombinedInt8(
-      index: org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShardInt8],
-      path: String,
-      absMax: Double,
-      frozenStats: (Long, Double),
-      tokenDf: DataFrame,
-      idCol: String,
-      segmentLog: Option[String] = None): Int = {
-    val savedMaxId = graft.search.ServingFusion.saveCombinedInt8(index, path,
-      absMax, frozenStats, tokenDf)
+      segmentLog: Option[String] = None)(
+      implicit codec: VecCodec[S]): Int = {
+    val savedMaxId = ServingFusion.saveCombined(index, path, frozenStats,
+      tokenDf)(codec)
     segmentLog.map(truncateSegmentLog(tokenDf.sparkSession, _, idCol,
       savedMaxId)).getOrElse(0)
   }
@@ -1496,7 +1333,7 @@ object Streams {
     * snapshot-superseded batch's replaces were applied by the compaction
     * [[snapshotCombined]]'s compact-first contract requires.
     */
-  def recoverCombinedSegments(
+  def recoverCombinedSegments[S <: CombinedBlocks](
       spark: SparkSession,
       segmentLog: String,
       idCol: String,
@@ -1505,22 +1342,21 @@ object Streams {
       cents: Array[Array[Float]],
       frozenStats: (Long, Double),
       frozenTokenDf: DataFrame,
-      base: org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShard],
+      base: org.apache.spark.rdd.RDD[S],
       numShards: Int = 1,
       minIdExclusive: Option[Long] = None,
       tombRef: Option[java.util.concurrent.atomic.AtomicReference[Array[Long]]]
         = None,
-      maxReplaces: Int = 0)
-      : org.apache.spark.rdd.RDD[graft.search.ServingFusion.CombinedShard] = {
+      maxReplaces: Int = 0)(
+      implicit codec: VecCodec[S]): org.apache.spark.rdd.RDD[S] = {
     val loggedOpt = loggedAboveWatermark(spark, segmentLog, idCol,
       minIdExclusive)
     if (loggedOpt.isEmpty) return base
     val logged = loggedOpt.get
     foldLoggedReplaces(logged, tombRef, maxReplaces)
     if (logged.isEmpty) return base
-    val seg = graft.search.ServingFusion.buildSegment(logged, idCol, textCol,
-      vecCol, cents, frozenStats, frozenTokenDf, numShards)(
-      graft.search.ServingFusion.assembleF32).cache()
+    val seg = ServingFusion.buildSegment(logged, idCol, textCol, vecCol,
+      cents, frozenStats, frozenTokenDf, numShards)(codec).cache()
     seg.count()
     base.union(seg)
   }

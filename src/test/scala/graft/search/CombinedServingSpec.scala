@@ -214,14 +214,14 @@ class CombinedServingSpec extends SparkSpec {
         params.alpha, params.k, "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(r => (r._1, -r._3, r._2))
-    val combined8 = ServingFusion.buildCombinedInt8(
+    val combined8 = ServingFusion.buildCombined(
       t.select(col("doc_id")), post, "doc_id",
       assigned.select(col("id").as("doc_id"), col("vector"), col("bucket")),
-      absMax, dec, numShards = 3).cache()
+      dec, numShards = 3)(VecCodec.Int8(absMax)).cache()
     combined8.count()
-    val served = ServingFusion.fusedTopKCombinedInt8(combined8, cents,
-        servedQueries(qsN, qt), absMax, params.alpha, params.k,
-        nProbe = 2, kVec = 3)
+    val served = ServingFusion.fusedTopKCombined(combined8, cents,
+        servedQueries(qsN, qt), params.alpha, params.k,
+        nProbe = 2, kVec = 3)(VecCodec.Int8(absMax))
       .sortBy(r => (r._1, -r._3, r._2))
     assert(served.length === twoLeg.length)
     served.zip(twoLeg).foreach { case (s, p) =>
@@ -304,15 +304,15 @@ class CombinedServingSpec extends SparkSpec {
           .map { case (rank, id, score) => (qid, rank, id, score) }
       }.sortBy(r => (r._1, r._2))
 
-    val combined8 = ServingFusion.buildCombinedInt8(
+    val combined8 = ServingFusion.buildCombined(
       t.select(col("doc_id")), post, "doc_id",
       assigned.select(col("id").as("doc_id"), col("vector"), col("bucket")),
-      absMax, dec, numShards = 3).cache()
+      dec, numShards = 3)(VecCodec.Int8(absMax)).cache()
     combined8.count()
     val mmrQs = servedQueries(qsN, qt).map(q => (q.qid, q.qvec))
-    val served = ServingFusion.mmrTopKCombinedInt8(combined8, cents, mmrQs,
-        absMax, k = mk, pool = pool, nProbe = 2, lam = 0.7,
-        oneMinusLam = 0.3)
+    val served = ServingFusion.mmrTopKCombined(combined8, cents, mmrQs,
+        k = mk, pool = pool, nProbe = 2, lam = 0.7,
+        oneMinusLam = 0.3)(VecCodec.Int8(absMax))
       .sortBy(r => (r._1, r._2))
     assert(served.length === twin.length && served.nonEmpty)
     served.zip(twin).foreach { case (s, p) =>
@@ -413,21 +413,21 @@ class CombinedServingSpec extends SparkSpec {
     assert(a.exists(_._2 >= 8L), "no batch doc served after append")
 
     // Int8 twin: same segments, same frozen absMax — equal to its rebuild.
-    val base8 = ServingFusion.buildCombinedInt8(
+    val base8 = ServingFusion.buildCombined(
       baseT.select(col("doc_id")), postBase, "doc_id", asgBase,
-      absMax = 1.0, decBase, numShards = 3, prebuiltTokenDf = Some(tdf),
-      frozenStats = Some(frozen)).cache()
+      decBase, numShards = 3, prebuiltTokenDf = Some(tdf),
+      frozenStats = Some(frozen))(VecCodec.Int8(1.0)).cache()
     base8.count()
-    val app8 = ServingFusion.appendCombinedInt8(
+    val app8 = ServingFusion.appendCombined(
       base8, batchT.select(col("doc_id")), postBatch, "doc_id", asgBatch,
-      absMax = 1.0, frozen, tdf, dec = decBatch, numShards = 2)
-    val reb8 = ServingFusion.buildCombinedInt8(
+      frozen, tdf, dec = decBatch, numShards = 2)(VecCodec.Int8(1.0))
+    val reb8 = ServingFusion.buildCombined(
       t.select(col("doc_id")), postAll, "doc_id", asgAll,
-      absMax = 1.0, dec, numShards = 3, prebuiltTokenDf = Some(tdf),
-      frozenStats = Some(frozen))
+      dec, numShards = 3, prebuiltTokenDf = Some(tdf),
+      frozenStats = Some(frozen))(VecCodec.Int8(1.0))
     def serve8(ix: org.apache.spark.rdd.RDD[ServingFusion.CombinedShardInt8]) =
-      ServingFusion.fusedTopKCombinedInt8(ix, cents, sq, absMax = 1.0,
-          params.alpha, params.k, nProbe = 2, kVec = 3)
+      ServingFusion.fusedTopKCombined(ix, cents, sq,
+          params.alpha, params.k, nProbe = 2, kVec = 3)(VecCodec.Int8(1.0))
         .sortBy(r => (r._1, -r._3, r._2))
     assert(serve8(app8).toSeq === serve8(reb8).toSeq)
 
@@ -482,12 +482,12 @@ class CombinedServingSpec extends SparkSpec {
     // Int8 twin: same tombstones, same frozen absMax.
     def build8(docs: DataFrame) = {
       val keep = docs.select(col("doc_id"))
-      ServingFusion.buildCombinedInt8(keep,
+      ServingFusion.buildCombined(keep,
         post.join(keep, Seq("doc_id"), "left_semi"), "doc_id",
-        asgAll.join(keep, Seq("doc_id"), "left_semi"), absMax = 1.0,
+        asgAll.join(keep, Seq("doc_id"), "left_semi"),
         dec.map(_.join(keep, Seq("doc_id"), "left_semi")),
         numShards = 3, prebuiltTokenDf = Some(tdf),
-        frozenStats = Some(frozen)).cache()
+        frozenStats = Some(frozen))(VecCodec.Int8(1.0)).cache()
     }
     val full8 = build8(t)
     full8.count()
@@ -495,8 +495,9 @@ class CombinedServingSpec extends SparkSpec {
     reduced8.count()
     def serve8(ix: org.apache.spark.rdd.RDD[ServingFusion.CombinedShardInt8],
         tomb: Array[Long]) =
-      ServingFusion.fusedTopKCombinedInt8(ix, cents, sq, absMax = 1.0,
-          params.alpha, params.k, nProbe = 2, kVec = 3, tombstones = tomb)
+      ServingFusion.fusedTopKCombined(ix, cents, sq,
+          params.alpha, params.k, nProbe = 2, kVec = 3, tombstones = tomb)(
+            VecCodec.Int8(1.0))
         .sortBy(r => (r._1, -r._3, r._2)).toSeq
     assert(serve8(full8, del) === serve8(reduced8, Array.emptyLongArray))
 
@@ -512,9 +513,9 @@ class CombinedServingSpec extends SparkSpec {
     assert(mmr(full, del).forall(r => !del.contains(r._3)))
     def mmr8(ix: org.apache.spark.rdd.RDD[ServingFusion.CombinedShardInt8],
         tomb: Array[Long]) =
-      ServingFusion.mmrTopKCombinedInt8(ix, cents, mq, absMax = 1.0,
+      ServingFusion.mmrTopKCombined(ix, cents, mq,
         k = 3, pool = 6, nProbe = 2, lam = 0.7, oneMinusLam = 0.3,
-        tombstones = tomb).toSeq
+        tombstones = tomb)(VecCodec.Int8(1.0)).toSeq
     assert(mmr8(full8, del) === mmr8(reduced8, Array.emptyLongArray))
 
     full.unpersist(); reduced.unpersist(); full8.unpersist()
@@ -558,9 +559,9 @@ class CombinedServingSpec extends SparkSpec {
 
     // Int8 twin.
     def build8(d: Option[DataFrame]) = {
-      val ix = ServingFusion.buildCombinedInt8(
-        t.select(col("doc_id")), post, "doc_id", asgAll, absMax = 1.0, d,
-        numShards = 3).cache()
+      val ix = ServingFusion.buildCombined(
+        t.select(col("doc_id")), post, "doc_id", asgAll, d,
+        numShards = 3)(VecCodec.Int8(1.0)).cache()
       ix.count()
       ix
     }
@@ -568,8 +569,9 @@ class CombinedServingSpec extends SparkSpec {
     val rebuilt8 = build8(decUpdated)
     def serve8(ix: org.apache.spark.rdd.RDD[ServingFusion.CombinedShardInt8],
         ov: Array[(Long, Double)]) =
-      ServingFusion.fusedTopKCombinedInt8(ix, cents, sq, absMax = 1.0,
-          params.alpha, params.k, nProbe = 2, kVec = 3, decOverrides = ov)
+      ServingFusion.fusedTopKCombined(ix, cents, sq,
+          params.alpha, params.k, nProbe = 2, kVec = 3, decOverrides = ov)(
+            VecCodec.Int8(1.0))
         .sortBy(r => (r._1, -r._3, r._2)).toSeq
     assert(serve8(full8, updates) === serve8(rebuilt8, Array.empty))
 
@@ -683,26 +685,28 @@ class CombinedServingSpec extends SparkSpec {
     assert(mmr(compacted) === mmr(rebuilt))
 
     // Int8 twin: same mutations, codes + norms copied verbatim.
-    val base8 = ServingFusion.buildCombinedInt8(
+    val base8 = ServingFusion.buildCombined(
       baseT.select(col("doc_id")), postBase, "doc_id", asgBase,
-      absMax = 1.0, dec.map(_.filter(col("doc_id") <= 7)), numShards = 3,
-      prebuiltTokenDf = Some(tdf), frozenStats = Some(frozen)).cache()
+      dec.map(_.filter(col("doc_id") <= 7)), numShards = 3,
+      prebuiltTokenDf = Some(tdf), frozenStats = Some(frozen))(
+        VecCodec.Int8(1.0)).cache()
     base8.count()
-    val app8 = ServingFusion.appendCombinedInt8(
+    val app8 = ServingFusion.appendCombined(
       base8, batchT.select(col("doc_id")),
       Bm25.postings(batchT, "doc_id", "text"), "doc_id", asgBatch,
-      absMax = 1.0, frozen, tdf,
-      dec = dec.map(_.filter(col("doc_id") >= 8)), numShards = 2).cache()
+      frozen, tdf,
+      dec = dec.map(_.filter(col("doc_id") >= 8)), numShards = 2)(
+        VecCodec.Int8(1.0)).cache()
     app8.count()
-    val comp8 = ServingFusion.compactCombinedInt8(
-      app8, tomb, ov, numPartitions = 3).cache()
+    val comp8 = ServingFusion.compactCombined(
+      app8, tomb, ov, numPartitions = 3)(VecCodec.Int8(1.0)).cache()
     comp8.count()
     assert(comp8.getNumPartitions === 3)
     def serve8(ix: org.apache.spark.rdd.RDD[ServingFusion.CombinedShardInt8],
         tm: Array[Long], o: Array[(Long, Double)]) =
-      ServingFusion.fusedTopKCombinedInt8(ix, cents, sq, absMax = 1.0,
+      ServingFusion.fusedTopKCombined(ix, cents, sq,
           params.alpha, params.k, nProbe = 2, kVec = 3, tombstones = tm,
-          decOverrides = o)
+          decOverrides = o)(VecCodec.Int8(1.0))
         .sortBy(r => (r._1, -r._3, r._2)).toSeq
     assert(serve8(comp8, Array.emptyLongArray, Array.empty) ===
       serve8(app8, tomb, ov))
@@ -763,21 +767,24 @@ class CombinedServingSpec extends SparkSpec {
       serve(appendLate(built, frozen, tdf)))
 
     // Int8 twin: codes + norms verbatim, absMax rides the meta.
-    val built8 = ServingFusion.buildCombinedInt8(
-      t.select(col("doc_id")), post, "doc_id", asgAll, absMax = 1.0, dec,
+    val built8 = ServingFusion.buildCombined(
+      t.select(col("doc_id")), post, "doc_id", asgAll, dec,
       numShards = 3, prebuiltTokenDf = Some(tdf),
-      frozenStats = Some(frozen)).cache()
+      frozenStats = Some(frozen))(VecCodec.Int8(1.0)).cache()
     built8.count()
     val dir8 = java.nio.file.Files.createTempDirectory("combined-snap8")
       .toString
-    ServingFusion.saveCombinedInt8(built8, dir8, absMax = 1.0, frozen, tdf)
-    val snap8 = ServingFusion.loadCombinedInt8(spark, dir8, numShards = 3)
+    ServingFusion.saveCombined(built8, dir8, frozen, tdf)(VecCodec.Int8(1.0))
+    val snap8 = ServingFusion.loadCombined(spark, dir8, numShards = 3)(
+      VecCodec.Int8(1.0))
     val loaded8 = snap8.index
-    assert(snap8.absMax === 1.0 && snap8.frozenStats === frozen &&
-      snap8.maxId === 10L)
+    assert(snap8.frozenStats === frozen && snap8.maxId === 10L)
+    // absMax rides the meta: a load under another absMax fails.
+    assert(intercept[IllegalArgumentException](ServingFusion.loadCombined(
+      spark, dir8)(VecCodec.Int8(0.5))).getMessage.contains("abs_max"))
     def serve8(ix: org.apache.spark.rdd.RDD[ServingFusion.CombinedShardInt8]) =
-      ServingFusion.fusedTopKCombinedInt8(ix, cents, sq, absMax = 1.0,
-          params.alpha, params.k, nProbe = 2, kVec = 3)
+      ServingFusion.fusedTopKCombined(ix, cents, sq,
+          params.alpha, params.k, nProbe = 2, kVec = 3)(VecCodec.Int8(1.0))
         .sortBy(r => (r._1, -r._3, r._2)).toSeq
     assert(serve8(loaded8) === serve8(built8))
 
@@ -826,5 +833,68 @@ class CombinedServingSpec extends SparkSpec {
     assert(ServingFusion.fusedTopKCombined(appended, cents, sq,
       params.alpha, params.k, nProbe = 2, kVec = 3).nonEmpty)
     base.unpersist(); tdf.unpersist(); qsN.unpersist(); qt.unpersist()
+  }
+
+  /** An f32 combined index and its served queries for the batch checks. */
+  private def validationFixtures() = {
+    val (t, post, dec, cents, assigned, qsN, qt) = fixtures()
+    val ix = ServingFusion.buildCombined(t.select(col("doc_id")), post,
+      "doc_id",
+      assigned.select(col("id").as("doc_id"), col("vector"), col("bucket")),
+      dec, numShards = 2)
+    val sq = servedQueries(qsN, qt)
+    qsN.unpersist(); qt.unpersist()
+    (t, post, dec, cents, assigned, ix, sq)
+  }
+
+  private def rejected(f: => Any): String =
+    intercept[IllegalArgumentException](f).getMessage
+
+  test("served batches reject a metric other than cosine or l2") {
+    val (_, _, _, cents, _, ix, sq) = validationFixtures()
+    for (m <- Seq("euclidean", "dot", "L2")) {
+      assert(rejected(ServingFusion.fusedTopKCombined(ix, cents, sq,
+        params.alpha, params.k, nProbe = 2, kVec = 3, metric = m))
+        .contains(s"unknown metric '$m'"))
+      assert(rejected(ServingFusion.mmrTopKCombined(ix, cents,
+        sq.map(q => (q.qid, q.qvec)), k = 3, pool = 6, nProbe = 2,
+        lam = 0.7, oneMinusLam = 0.3, metric = m))
+        .contains(s"unknown metric '$m'"))
+    }
+  }
+
+  test("int8 served batches reject the l2 metric") {
+    val (t, post, dec, cents, assigned, _, sq) = validationFixtures()
+    val ix8 = ServingFusion.buildCombined(t.select(col("doc_id")), post,
+      "doc_id",
+      assigned.select(col("id").as("doc_id"), col("vector"), col("bucket")),
+      dec, numShards = 2)(VecCodec.Int8(1.0))
+    assert(rejected(ServingFusion.fusedTopKCombined(ix8, cents, sq,
+      params.alpha, params.k, nProbe = 2, kVec = 3,
+      metric = "l2")(VecCodec.Int8(1.0))).contains("cosine-only"))
+    assert(rejected(ServingFusion.mmrTopKCombined(ix8, cents,
+      sq.map(q => (q.qid, q.qvec)), k = 3, pool = 6, nProbe = 2, lam = 0.7,
+      oneMinusLam = 0.3, metric = "l2")(VecCodec.Int8(1.0)))
+      .contains("cosine-only"))
+  }
+
+  test("served batches reject a query vector of another dimension") {
+    val (_, _, _, cents, _, ix, sq) = validationFixtures()
+    for (dim <- Seq(3, 5)) {
+      val q = sq.head.copy(qvec = Array.fill(dim)(0.5f))
+      assert(rejected(ServingFusion.fusedTopKCombined(ix, cents, Seq(q),
+        params.alpha, params.k, nProbe = 2, kVec = 3))
+        .contains(s"has $dim dimensions, the centroids 4"))
+      assert(rejected(ServingFusion.mmrTopKCombined(ix, cents,
+        Seq((q.qid, q.qvec)), k = 3, pool = 6, nProbe = 2, lam = 0.7,
+        oneMinusLam = 0.3)).contains(s"has $dim dimensions, the centroids 4"))
+    }
+  }
+
+  test("served MMR rejects a null query vector") {
+    val (_, _, _, cents, _, ix, _) = validationFixtures()
+    assert(rejected(ServingFusion.mmrTopKCombined(ix, cents,
+      Seq((7L, null: Array[Float])), k = 3, pool = 6, nProbe = 2, lam = 0.7,
+      oneMinusLam = 0.3)).contains("query 7 has no query vector"))
   }
 }

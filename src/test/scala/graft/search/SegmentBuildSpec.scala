@@ -73,10 +73,10 @@ class SegmentBuildSpec extends SparkSpec {
       numShards = 2, prebuiltTokenDf = Some(tdf), frozenStats = Some(frozen))
 
   private def fullInt8(docs: DataFrame): RDD[CombinedShardInt8] =
-    ServingFusion.buildCombinedInt8(docs.select(col("doc_id")),
+    ServingFusion.buildCombined(docs.select(col("doc_id")),
       Bm25.postings(docs, "doc_id", "text"), "doc_id", assigned(docs, cents),
-      AbsMax, numShards = 2, prebuiltTokenDf = Some(tdf),
-      frozenStats = Some(frozen))
+      numShards = 2, prebuiltTokenDf = Some(tdf),
+      frozenStats = Some(frozen))(VecCodec.Int8(AbsMax))
 
   /** Per doc: decay factor, postings as (token, raw weight bits) and the
     * vector payload (bucket plus raw bits) — exact, layout-free.
@@ -124,18 +124,18 @@ class SegmentBuildSpec extends SparkSpec {
       k = 4, pool = 8, nProbe = 3, lam = 0.7, oneMinusLam = 0.3).toSeq)
 
   private def serveInt8(ix: RDD[CombinedShardInt8]) = (
-    ServingFusion.fusedTopKCombinedInt8(ix, cents, queries, AbsMax,
-      alpha0 = 0.6, k = 6, nProbe = 2, kVec = 4).toSeq,
-    ServingFusion.mmrTopKCombinedInt8(ix, cents,
-      queries.map(q => (q.qid, q.qvec)), AbsMax, k = 4, pool = 8, nProbe = 3,
-      lam = 0.7, oneMinusLam = 0.3).toSeq)
+    ServingFusion.fusedTopKCombined(ix, cents, queries,
+      alpha0 = 0.6, k = 6, nProbe = 2, kVec = 4)(VecCodec.Int8(AbsMax)).toSeq,
+    ServingFusion.mmrTopKCombined(ix, cents,
+      queries.map(q => (q.qid, q.qvec)), k = 4, pool = 8, nProbe = 3,
+      lam = 0.7, oneMinusLam = 0.3)(VecCodec.Int8(AbsMax)).toSeq)
 
   for (shards <- Seq(1, 3)) {
     test(s"f32 segment at $shards shard(s): base ∪ segment == full rebuild") {
       val base = full(baseDocs).cache()
       val seg = ServingFusion.buildSegment(batchDocs, "doc_id", "text",
         "embedding", cents, frozen, tdf, numShards = shards)(
-        SegmentBuildSpec.f32).cache()
+        VecCodec.F32).cache()
       assert(seg.getNumPartitions === shards)
       val live = base.union(seg)
       val rebuilt = full(allDocs)
@@ -157,7 +157,7 @@ class SegmentBuildSpec extends SparkSpec {
       val base = fullInt8(baseDocs).cache()
       val seg = ServingFusion.buildSegment(batchDocs, "doc_id", "text",
         "embedding", cents, frozen, tdf, numShards = shards)(
-        SegmentBuildSpec.int8(AbsMax)).cache()
+        VecCodec.Int8(AbsMax)).cache()
       val live = base.union(seg)
       val rebuilt = fullInt8(allDocs)
       assert(docsOfInt8(live) === docsOfInt8(rebuilt))
@@ -176,10 +176,10 @@ class SegmentBuildSpec extends SparkSpec {
           segmentLog = Some(s"$log/f32"), idWatermark = Some(new AtomicLong(11L)))
       }
       val (_, jobs8) = JobCount(spark) {
-        Streams.ingestCombinedBatchInt8(batchDocs, 0L, "doc_id", "text",
-          "embedding", cents, AbsMax, frozen, tdf, ref8,
+        Streams.ingestCombinedBatch(batchDocs, 0L, "doc_id", "text",
+          "embedding", cents, frozen, tdf, ref8,
           numShardsPerSegment = shards, segmentLog = Some(s"$log/int8"),
-          idWatermark = Some(new AtomicLong(11L)))
+          idWatermark = Some(new AtomicLong(11L)))(VecCodec.Int8(AbsMax))
       }
       info(s"jobs per micro-batch: f32 $jobs32, int8 $jobs8")
       assert(jobs32 <= 5, s"f32 ingest ran $jobs32 jobs")
@@ -212,14 +212,4 @@ class SegmentBuildSpec extends SparkSpec {
         java.lang.Double.doubleToRawLongBits(want), s"at $r: ${r.getDouble(4)} vs $want")
     }
   }
-}
-
-object SegmentBuildSpec {
-  // The assemblers as function values built outside the suite instance,
-  // so the build closure that captures them stays serializable.
-  val f32: Iterator[org.apache.spark.sql.Row] => Iterator[CombinedShard] =
-    ServingFusion.assembleF32
-  def int8(absMax: Double)
-      : Iterator[org.apache.spark.sql.Row] => Iterator[CombinedShardInt8] =
-    ServingFusion.assembleInt8(absMax)
 }

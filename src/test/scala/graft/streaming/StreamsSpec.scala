@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
+import graft.search.VecCodec
 import graft.core.Tables
 
 /** E1-E4: the streaming surface runs the same transforms as the batch
@@ -964,9 +965,9 @@ class StreamsSpec extends SparkSpec {
     val base32 = ServingFusion.buildCombined(baseDocs.select(col("doc_id")),
       post, "doc_id", asg, prebuiltTokenDf = Some(tdf),
       frozenStats = Some(frozen)).cache()
-    val base8 = ServingFusion.buildCombinedInt8(baseDocs.select(col("doc_id")),
-      post, "doc_id", asg, absMax = 1.0, prebuiltTokenDf = Some(tdf),
-      frozenStats = Some(frozen)).cache()
+    val base8 = ServingFusion.buildCombined(baseDocs.select(col("doc_id")),
+      post, "doc_id", asg, prebuiltTokenDf = Some(tdf),
+      frozenStats = Some(frozen))(VecCodec.Int8(1.0)).cache()
     base32.count(); base8.count()
     val ref32 = new java.util.concurrent.atomic.AtomicReference(base32)
     val ref8 = new java.util.concurrent.atomic.AtomicReference(base8)
@@ -992,19 +993,19 @@ class StreamsSpec extends SparkSpec {
     val ingest32 = run(Streams.combinedIngest(stream(src, baseDocs), "doc_id",
       "text", "embedding", cents, frozen, tdf, ref32, tempDir("jobs-cp1"),
       segmentLog = Some(s"$log/i32"), idWatermark = Some(7L)))
-    val ingest8 = run(Streams.combinedIngestInt8(stream(src, baseDocs),
-      "doc_id", "text", "embedding", cents, 1.0, frozen, tdf, ref8,
+    val ingest8 = run(Streams.combinedIngest(stream(src, baseDocs),
+      "doc_id", "text", "embedding", cents, frozen, tdf, ref8,
       tempDir("jobs-cp2"), segmentLog = Some(s"$log/i8"),
-      idWatermark = Some(7L)))
+      idWatermark = Some(7L))(VecCodec.Int8(1.0)))
     val upDocs = spark.read.parquet(upSrc)
     val upsert32 = run(Streams.upsertIngest(stream(upSrc, upDocs), "doc_id",
       "replaces", "text", "embedding", cents, frozen, tdf, ref32, tombRef,
       tempDir("jobs-cp3"), segmentLog = Some(s"$log/u32"),
       idWatermark = Some(11L)))
-    val upsert8 = run(Streams.upsertIngestInt8(stream(upSrc, upDocs),
-      "doc_id", "replaces", "text", "embedding", cents, 1.0, frozen, tdf,
+    val upsert8 = run(Streams.upsertIngest(stream(upSrc, upDocs),
+      "doc_id", "replaces", "text", "embedding", cents, frozen, tdf,
       ref8, tombRef, tempDir("jobs-cp4"), segmentLog = Some(s"$log/u8"),
-      idWatermark = Some(11L)))
+      idWatermark = Some(11L))(VecCodec.Int8(1.0)))
     assert(Seq(ingest32, ingest8, upsert32, upsert8) ===
       Seq(PerBatch, PerBatch, PerBatch, PerBatch),
       "jobs per micro-batch (ingest f32, ingest int8, upsert f32, upsert int8)")
@@ -1468,10 +1469,10 @@ class StreamsSpec extends SparkSpec {
     def asg(df: org.apache.spark.sql.DataFrame) =
       Ivf.assignFast(vecs(df), cents)
         .select(col("id").as("doc_id"), col("vector"), col("bucket"))
-    val base8 = ServingFusion.buildCombinedInt8(
+    val base8 = ServingFusion.buildCombined(
       baseDocs.select(col("doc_id")), postBase, "doc_id", asg(baseDocs),
-      absMax = 1.0, numShards = 2, prebuiltTokenDf = Some(tdf),
-      frozenStats = Some(frozen)).cache()
+      numShards = 2, prebuiltTokenDf = Some(tdf),
+      frozenStats = Some(frozen))(VecCodec.Int8(1.0)).cache()
     base8.count()
 
     // Streaming ingest (two micro-batches through the durable log) ==
@@ -1483,13 +1484,13 @@ class StreamsSpec extends SparkSpec {
       .write.mode("append").parquet(src)
     val log = tempDir("int8-ingest-log")
     val ref = new java.util.concurrent.atomic.AtomicReference(base8)
-    val q = Streams.combinedIngestInt8(
+    val q = Streams.combinedIngest(
       spark.readStream.schema(allDocs.schema)
         .option("maxFilesPerTrigger", 1).parquet(src),
-      "doc_id", "text", "embedding", cents, absMax = 1.0, frozen, tdf,
+      "doc_id", "text", "embedding", cents, frozen, tdf,
       ref, tempDir("int8-ingest-cp"), numShardsPerSegment = 1,
       segmentLog = Some(log), baseBuildId = Some("base-I8"),
-      idWatermark = Some(9L))
+      idWatermark = Some(9L))(VecCodec.Int8(1.0))
     q.awaitTermination(120000)
     val sq = Seq(0L, 1L).map { qid =>
       val qtext = if (qid == 0) "spark join plan" else "filter window stream"
@@ -1499,14 +1500,14 @@ class StreamsSpec extends SparkSpec {
       ServingFusion.ServedQuery(qid, doc(qid + 50)._3, toks)
     }
     def serve8(ix: org.apache.spark.rdd.RDD[ServingFusion.CombinedShardInt8]) =
-      ServingFusion.fusedTopKCombinedInt8(ix, cents, sq, absMax = 1.0,
-          alpha0 = 0.6, k = 5, nProbe = 2, kVec = 3)
+      ServingFusion.fusedTopKCombined(ix, cents, sq,
+          alpha0 = 0.6, k = 5, nProbe = 2, kVec = 3)(VecCodec.Int8(1.0))
         .sortBy(r => (r._1, -r._3, r._2)).toSeq
-    val rebuilt8 = ServingFusion.buildCombinedInt8(
+    val rebuilt8 = ServingFusion.buildCombined(
       allDocs.select(col("doc_id")),
       Bm25.postings(allDocs, "doc_id", "text"), "doc_id", asg(allDocs),
-      absMax = 1.0, numShards = 2, prebuiltTokenDf = Some(tdf),
-      frozenStats = Some(frozen))
+      numShards = 2, prebuiltTokenDf = Some(tdf),
+      frozenStats = Some(frozen))(VecCodec.Int8(1.0))
     val served = serve8(ref.get())
     assert(served === serve8(rebuilt8),
       "int8 streaming ingest must serve like the frozen-stats rebuild")
@@ -1514,14 +1515,15 @@ class StreamsSpec extends SparkSpec {
 
     // Restart recovery from the log == the live unioned index; a
     // re-delivered batch changes nothing (shared exactly-once core).
-    val recovered = Streams.recoverCombinedSegmentsInt8(spark, log,
-      "doc_id", "text", "embedding", cents, absMax = 1.0, frozen, tdf,
-      base8)
+    val recovered = Streams.recoverCombinedSegments(spark, log,
+      "doc_id", "text", "embedding", cents, frozen, tdf,
+      base8)(VecCodec.Int8(1.0))
     assert(serve8(recovered) === served)
     val refBefore = ref.get()
-    Streams.ingestCombinedBatchInt8(newDocs.filter(col("doc_id") < 12),
-      batchId = 0L, "doc_id", "text", "embedding", cents, absMax = 1.0,
-      frozen, tdf, ref, numShardsPerSegment = 1, segmentLog = Some(log))
+    Streams.ingestCombinedBatch(newDocs.filter(col("doc_id") < 12),
+      batchId = 0L, "doc_id", "text", "embedding", cents,
+      frozen, tdf, ref, numShardsPerSegment = 1, segmentLog = Some(log))(
+        VecCodec.Int8(1.0))
     assert(ref.get() eq refBefore,
       "a re-delivered int8 batch must not append a duplicate segment")
 
@@ -1530,12 +1532,12 @@ class StreamsSpec extends SparkSpec {
       Array(11L))
     val ovRef = new java.util.concurrent.atomic.AtomicReference(
       Map.empty[Long, (Double, Long)])
-    val beforeCompact = ServingFusion.fusedTopKCombinedInt8(ref.get(),
-        cents, sq, absMax = 1.0, alpha0 = 0.6, k = 5, nProbe = 2,
-        kVec = 3, tombstones = Array(11L))
+    val beforeCompact = ServingFusion.fusedTopKCombined(ref.get(),
+        cents, sq, alpha0 = 0.6, k = 5, nProbe = 2,
+        kVec = 3, tombstones = Array(11L))(VecCodec.Int8(1.0))
       .sortBy(r => (r._1, -r._3, r._2)).toSeq
-    val compacted = Streams.compactCombinedServingInt8(ref, tombRef, ovRef,
-      numPartitions = 2)
+    val compacted = Streams.compactCombinedServing(ref, tombRef, ovRef,
+      numPartitions = 2)(VecCodec.Int8(1.0))
     assert(ref.get() eq compacted)
     assert(compacted.getNumPartitions === 2)
     assert(tombRef.get().isEmpty)
@@ -1548,25 +1550,26 @@ class StreamsSpec extends SparkSpec {
     val tombU = new java.util.concurrent.atomic.AtomicReference(
       Array.emptyLongArray)
     val wmU = new java.util.concurrent.atomic.AtomicLong(13L)
-    Streams.upsertCombinedBatchInt8(upDocs, batchId = 7L, "doc_id",
-      "replaces", "text", "embedding", cents, absMax = 1.0, frozen, tdf,
+    Streams.upsertCombinedBatch(upDocs, batchId = 7L, "doc_id",
+      "replaces", "text", "embedding", cents, frozen, tdf,
       ref, tombU, numShardsPerSegment = 1, segmentLog = Some(log),
-      idWatermark = Some(wmU))
+      idWatermark = Some(wmU))(VecCodec.Int8(1.0))
     assert(tombU.get().toSeq === Seq(12L))
     assert(wmU.get() === 20L)
     def serve8t(ix: org.apache.spark.rdd.RDD[ServingFusion.CombinedShardInt8],
         tomb: Array[Long]) =
-      ServingFusion.fusedTopKCombinedInt8(ix, cents, sq, absMax = 1.0,
-          alpha0 = 0.6, k = 5, nProbe = 2, kVec = 3, tombstones = tomb)
+      ServingFusion.fusedTopKCombined(ix, cents, sq,
+          alpha0 = 0.6, k = 5, nProbe = 2, kVec = 3, tombstones = tomb)(
+            VecCodec.Int8(1.0))
         .sortBy(r => (r._1, -r._3, r._2)).toSeq
     val upsertDocs = allDocs
       .filter(col("doc_id") =!= 11 && col("doc_id") =!= 12)
       .unionByName(upDocs.drop("replaces"))
-    val rebuiltUp = ServingFusion.buildCombinedInt8(
+    val rebuiltUp = ServingFusion.buildCombined(
       upsertDocs.select(col("doc_id")),
       Bm25.postings(upsertDocs, "doc_id", "text"), "doc_id",
-      asg(upsertDocs), absMax = 1.0, numShards = 2,
-      prebuiltTokenDf = Some(tdf), frozenStats = Some(frozen))
+      asg(upsertDocs), numShards = 2,
+      prebuiltTokenDf = Some(tdf), frozenStats = Some(frozen))(VecCodec.Int8(1.0))
     val servedUp = serve8t(ref.get(), tombU.get())
     assert(servedUp === serve8t(rebuiltUp, Array.emptyLongArray),
       "int8 upsert serve must equal the rebuild with the doc replaced")
@@ -1576,23 +1579,24 @@ class StreamsSpec extends SparkSpec {
     // log alone — the same two crash windows as f32, keyed by maxId.
     val tombAfter = new java.util.concurrent.atomic.AtomicReference(
       tombU.get())
-    val compacted2 = Streams.compactCombinedServingInt8(ref, tombAfter,
+    val compacted2 = Streams.compactCombinedServing(ref, tombAfter,
       new java.util.concurrent.atomic.AtomicReference(
         Map.empty[Long, (Double, Long)]),
-      numPartitions = 2)
+      numPartitions = 2)(VecCodec.Int8(1.0))
     val snapDir = tempDir("int8-snap-dir")
-    assert(Streams.snapshotCombinedInt8(compacted2, snapDir, absMax = 1.0,
-      frozen, tdf, "doc_id", segmentLog = Some(log)) >= 1,
+    assert(Streams.snapshotCombined(compacted2, snapDir,
+      frozen, tdf, "doc_id", segmentLog = Some(log))(VecCodec.Int8(1.0)) >= 1,
       "the snapshot must truncate the superseded batches")
-    val loaded = ServingFusion.loadCombinedInt8(spark, snapDir,
-      numShards = 2)
-    assert(loaded.maxId === 20L && loaded.absMax === 1.0)
+    val loaded = ServingFusion.loadCombined(spark, snapDir,
+      numShards = 2)(VecCodec.Int8(1.0))
+    assert(loaded.maxId === 20L)
     val tombRestart = new java.util.concurrent.atomic.AtomicReference(
       Array.emptyLongArray)
-    val restarted = Streams.recoverCombinedSegmentsInt8(spark, log,
-      "doc_id", "text", "embedding", cents, absMax = 1.0,
+    val restarted = Streams.recoverCombinedSegments(spark, log,
+      "doc_id", "text", "embedding", cents,
       loaded.frozenStats, loaded.tokenDf, loaded.index,
-      minIdExclusive = Some(loaded.maxId), tombRef = Some(tombRestart))
+      minIdExclusive = Some(loaded.maxId), tombRef = Some(tombRestart))(
+        VecCodec.Int8(1.0))
     assert(serve8t(restarted, tombRestart.get()) === servedUp,
       "int8 restart from snapshot + log must serve like the pre-crash state")
 
