@@ -1,10 +1,13 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
+import graft.graph.GraphOps
 
 /** Large-scale training-data deduplication operators — the LLM-pipeline
   * extension layer (SURVEY §7.2 M9, builder brief). The reference's
@@ -270,15 +273,23 @@ object Dedup {
     * the alternating large-star / small-star algorithm (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14 — the same
     * algorithm GraphFrames ships). Each round is two per-node-minimum
-    * windows + dedups — no driver-side graph state, no all-pairs step — and the edge
+    * windows + dedups — no all-pairs step, and above the small-regime
+    * bound no driver-side graph state — and the edge
     * set provably converges to stars in O(log²/log) rounds, so a 100 TB
     * pair list needs the same ~dozen rounds a toy one does. This is the
     * step that turns near-dup PAIRS into dedup DECISIONS: every document
     * in a component except the minimum id is droppable.
     *
     * Returns (id, component) for every node appearing in `pairs`, where
-    * component = min id of the node's component. Nodes in no pair are not
-    * emitted (callers left-join and coalesce to self).
+    * component = min id of the node's component. Ids are cast to long;
+    * pairs with a null id and self-loops add no node. Nodes in no pair are
+    * not emitted (callers left-join and coalesce to self).
+    *
+    * Small regime (see the `GraphOps` scale notes): when the cast,
+    * filtered pair list holds at most `GraphOps.LocalEdgeLimit` rows, one
+    * bounded fetch brings it to the driver and union-find labels it — one
+    * Spark job in all, and the result is a local relation. `maxIter` only
+    * bounds the distributed loop below.
     *
     * Per round the new edge set is localCheckpoint'ed LAZILY and the
     * termination test is the materializing action: one job per round,
@@ -357,9 +368,11 @@ object Dedup {
       (m, () => added.foreach(id =>
         sc.getPersistentRDDs.get(id).foreach(_.unpersist(false))))
     }
-    val init = ckpt(dedupEdges(
-      pairs.select(col("id1").cast("long").as("u"),
-        col("id2").cast("long").as("v"))))
+    val input = pairs.select(col("id1").cast("long").as("u"),
+      col("id2").cast("long").as("v"))
+    val small = GraphOps.fetchSmall(input.where(col("u") =!= col("v")))
+    if (small.isDefined) return componentsLocal(pairs.sparkSession, small.get)
+    val init = ckpt(dedupEdges(input))
     var edges = init._1
     var release = init._2
     var converged = isStarForest(edges)
@@ -377,6 +390,30 @@ object Dedup {
     edges.select(col("u").as("id"), col("v").as("component"))
       .union(edges.select(col("v").as("id"), col("v").as("component")))
       .distinct()
+  }
+
+  /** Union-find over fetched (u, v) rows, each component labelled by its
+    * minimum id: a union hangs the larger root under the smaller, so every
+    * root is its component's minimum.
+    */
+  private def componentsLocal(spark: SparkSession, rows: Array[Row]): DataFrame = {
+    import spark.implicits._
+    val parent = mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (y != root) { val up = parent(y); parent(y) = root; y = up }
+      root
+    }
+    rows.foreach { r =>
+      val (a, b) = (r.getLong(0), r.getLong(1))
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(x => (x, find(x))).toDF("id", "component")
   }
 
   /** Cross-document repeated-SPAN detection — span-level exact dedup, the
@@ -503,23 +540,6 @@ object Dedup {
         col("n_members"), col("csim").as("centroid_sim"))
   }
 
-  /** [[semDedup]] over TRAINED/served clusters — the production clustering
-    * path the paper actually runs (Abbas et al. §3 cluster with k-means):
-    * cluster = nearest centroid under full cosine
-    * ([[graft.search.Ivf.assign]]'s argmin, ties to the smallest cid),
-    * duplicate groups = within-cluster cos ≥ threshold components, survivor
-    * = the member with the LOWEST cosine to its ASSIGNED centroid. With
-    * KMeans-trained centroids ([[graft.search.Ivf.trainKMeansArrays]]) the
-    * centroid IS the cluster mean at convergence, so this is the paper's
-    * keep-low-centroid-sim rule verbatim; with sampled centroids (the v1
-    * oracle protocol) the same geometry is DuckDB-replicable. Every
-    * downstream step matches [[semDedup]] — only the partitioner changes.
-    *
-    * `centroids`: (cid long, cvec array<float>). `maxBucket` caps the
-    * within-cluster quadratic pair step; at production scale ALWAYS supply
-    * it — an encoder that collapses a mode concentrates mass in one
-    * cluster, and the cap bounds the damage exactly like the LSH skew cap.
-    */
   /** Paragraph-level dedup (CCNet, arXiv:1911.00359 §3.1 — "dedup is done
     * at the paragraph level, keeping one occurrence"): segment each doc
     * into fixed `chunkTokens`-token paragraphs, drop every paragraph whose
@@ -572,6 +592,23 @@ object Dedup {
         sum(when(!col("kept"), 1L).otherwise(0L)).as("n_dropped"))
   }
 
+  /** [[semDedup]] over TRAINED/served clusters — the production clustering
+    * path the paper actually runs (Abbas et al. §3 cluster with k-means):
+    * cluster = nearest centroid under full cosine
+    * ([[graft.search.Ivf.assign]]'s argmin, ties to the smallest cid),
+    * duplicate groups = within-cluster cos ≥ threshold components, survivor
+    * = the member with the LOWEST cosine to its ASSIGNED centroid. With
+    * KMeans-trained centroids ([[graft.search.Ivf.trainKMeansArrays]]) the
+    * centroid IS the cluster mean at convergence, so this is the paper's
+    * keep-low-centroid-sim rule verbatim; with sampled centroids (the v1
+    * oracle protocol) the same geometry is DuckDB-replicable. Every
+    * downstream step matches [[semDedup]] — only the partitioner changes.
+    *
+    * `centroids`: (cid long, cvec array<float>). `maxBucket` caps the
+    * within-cluster quadratic pair step; at production scale ALWAYS supply
+    * it — an encoder that collapses a mode concentrates mass in one
+    * cluster, and the cap bounds the damage exactly like the LSH skew cap.
+    */
   def semDedupClustered(emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double, centroids: DataFrame,
       maxBucket: Int = Int.MaxValue): DataFrame = {

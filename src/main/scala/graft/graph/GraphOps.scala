@@ -1,7 +1,12 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
+import scala.util.DynamicVariable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Temporal property-graph operators over an append-only `edges` table
   * `(src, dst, rel, weight, props, created_at, deleted_at)` — the Spark
@@ -10,13 +15,94 @@ import org.apache.spark.sql.functions._
   * free (SURVEY §1.1): the reference's 128-shard locking disappears because
   * the table is immutable per snapshot.
   *
-  * Scale notes: traversals are iterative hash joins on node ids, one per
-  * hop, with hard depth caps copied from the reference (5 for BFS/subgraph,
-  * 10 for dot-path traversal, 4 default for shortest path). Frontiers are
-  * deduplicated per level so joins stay bounded; with the edges table
-  * bucketed by `src` the per-hop join is shuffle-free on a real cluster.
+  * Scale notes: depth caps are copied from the reference (5 for
+  * BFS/subgraph, 10 for dot-path traversal, 4 default for shortest path).
+  * The iterative operators ([[bfsT]], [[shortestPathsT]], and outside this
+  * object `Epistemic.evolutionChainT` and `Dedup.connectedComponents`) pick
+  * one of three physical plans by graph size, as Pregelix does:
+  *   - **small** — one bounded fetch ([[fetchSmall]]) pulls the operator's
+  *     input projection to the driver in ONE Spark job; when it holds at
+  *     most [[LocalEdgeLimit]] rows the exact algorithm runs on the driver
+  *     and the result is a local relation, so no superstep pays a job;
+  *   - **inline** — the fetch overflowed but the frontier and visited sets
+  *     fit on the driver (≤ [[InlineFrontierLimit]]): one job per level;
+  *   - **distributed** — a level or the root set overflows: hash joins on
+  *     node ids per hop against a persisted edge projection, frontiers
+  *     deduplicated and checkpointed per level; with the edges table
+  *     bucketed by `src` the per-hop join is shuffle-free on a cluster.
+  * The choice is made on rows counted, never on plan statistics; more than
+  * [[InlineFrontierLimit]] roots skip the fetch. Edges with a null end
+  * are not traversed in any regime.
   */
 object GraphOps {
+
+  /** Row bound of the small regime: an input projection of at most this
+    * many rows is traversed on the driver. 2^18 (src, dst) pairs are a few
+    * tens of MB of driver heap, and a traversal over them is milliseconds.
+    */
+  val LocalEdgeLimit: Int = 1 << 18
+
+  private val localEdgeLimit = new DynamicVariable[Int](LocalEdgeLimit)
+
+  /** Runs `body` with the small-regime bound at `limit`; 0 turns the
+    * small regime off without a job, so specs reach the inline and
+    * distributed regimes. No production caller sets it.
+    */
+  private[graft] def withLocalEdgeLimit[A](limit: Int)(body: => A): A =
+    localEdgeLimit.withValue(limit)(body)
+
+  /** The bounded fetch the small regime shares: one Spark job (an RDD job
+    * even over a local relation) that returns the rows of `df` when they
+    * number at most the bound, `None` otherwise — at once, without a job,
+    * when the bound is 0.
+    *
+    * Each of the n partitions reads at most ceil(bound / n) + 1 rows and
+    * sends them only when they fit its share ceil(bound / n); a partition
+    * over its share sends nothing and marks the fetch overflowed. So the
+    * driver never receives more than about bound + n rows, however large
+    * `df` is — a per-partition cap of bound + 1 would ship up to
+    * n × (bound + 1) rows before the overflow is known, and trip
+    * `spark.driver.maxResultSize` on a large table. A small input skewed
+    * into one partition can overflow its share; it then takes the inline
+    * or distributed regime, with the same result.
+    */
+  private[graft] def fetchSmall(df: DataFrame): Option[Array[Row]] = {
+    val bound = localEdgeLimit.value
+    if (bound <= 0) return None
+    val rdd = df.rdd
+    val n = math.max(1, rdd.getNumPartitions)
+    val share = ((bound.toLong + n - 1) / n).toInt
+    val rows = ArrayBuffer.empty[Row]
+    var overflow = false
+    df.sparkSession.sparkContext.runJob(rdd,
+      (it: Iterator[Row]) => {
+        val part = it.take(share + 1).toArray
+        if (part.length > share) null else part
+      },
+      (_: Int, part: Array[Row]) =>
+        if (part == null || rows.size + part.length > bound) {
+          overflow = true
+          rows.clear()
+        } else if (!overflow) rows ++= part)
+    if (overflow) None else Some(rows.toArray)
+  }
+
+  /** Driver adjacency over fetched (src, dst) rows in the walk's
+    * direction: "out" follows src → dst, "in" dst → src, "both" either.
+    */
+  private def adjacency(rows: Array[Row], direction: String): Map[String, Seq[String]] = {
+    val pairs = rows.toSeq.map(r => (r.getString(0), r.getString(1)))
+    val directed = direction match {
+      case "out" => pairs
+      case "in"  => pairs.map(_.swap)
+      case _     => pairs ++ pairs.map(_.swap)
+    }
+    directed.groupMap(_._1)(_._2)
+  }
+
+  private def requireDirection(direction: String): Unit =
+    require(Set("out", "in", "both")(direction),
+      s"direction must be out, in or both, got '$direction'")
 
   /** G3 active-at-time predicate — `isActiveAtTime` (`core/graph.go:350-362`):
     * `created_at <= t AND (deleted_at IS NULL/0 OR deleted_at > t)`;
@@ -47,6 +133,7 @@ object GraphOps {
     */
   def relations(edges: DataFrame, node: String, direction: String = "both",
                 atTime: Long = 0L): DataFrame = {
+    requireDirection(direction)
     val out = edges.filter(col("src") === node && activeAt(atTime))
       .select(col("rel"), col("dst").as("other"), lit("out").as("direction"))
     val in = edges.filter(col("dst") === node && activeAt(atTime))
@@ -136,16 +223,37 @@ object GraphOps {
     */
   val BroadcastVisitedLimit: Long = 4L * 1024 * 1024
 
+  /** The (src, dst) projection an iterative traversal walks: edges active
+    * at `atTime`, of the `rels` kinds (all when empty), both ends non-null.
+    * NOT a both-directions union: doubling a 100 TB table to avoid a
+    * second join is the wrong trade. NOT cached up front (r19): the small
+    * regime reads it once, an inline traversal ≤ 2·maxDepth times, and
+    * building + reading the columnar cache measured SLOWER per level than
+    * re-scanning the column-pruned parquet (~1.6 s vs ~0.25 s per pass on
+    * the sf0.1 edge view); the distributed regime persists it before its
+    * join-per-level loop, where executor-local reuse does pay.
+    */
+  private def activeProjection(edges: DataFrame, rels: Seq[String],
+                               atTime: Long): DataFrame = {
+    val a = edges.filter(activeAt(atTime))
+    (if (rels.isEmpty) a else a.filter(col("rel").isin(rels: _*)))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+      .select(col("src"), col("dst"))
+  }
+
   /** BFS frontier expansion (G7 `resolveGraphFilter` `engine/graph.go:173-247`
     * / G8 both-directions variant). Returns `(node, depth)` with the minimal
     * depth ≤ maxDepth at which each node is reached (roots at 0). Depth caps
     * come from the reference (5).
     *
-    * Scale shape, two regimes:
+    * Scale shape, three regimes (see the object notes):
+    *   - **small** (at most [[InlineFrontierLimit]] roots and at most
+    *     [[LocalEdgeLimit]] active edges): one bounded fetch, then a
+    *     frontier BFS on the driver keeping each node's minimum depth;
     *   - **inline** (frontier ∧ visited ≤ [[InlineFrontierLimit]], the
-    *     single-root case): per level ONE job scanning the cached active
-    *     projection with an `InSet` predicate — no join, no broadcast
-    *     exchange, no checkpoint; the reachable set lives on the driver,
+    *     single-root case): per level ONE job, a broadcast hash join of
+    *     the driver-resident frontier against the active projection — no
+    *     shuffle, no checkpoint; the reachable set lives on the driver,
     *     like the reference's own BFS state.
     *   - **distributed** (a level overflows, or multi-root bulk BFS): per
     *     level a checkpoint-materialized frame; frontier and visited are
@@ -171,21 +279,10 @@ object GraphOps {
            broadcastFrontier: Boolean = true,
            broadcastVisitedLimit: Long = BroadcastVisitedLimit): Traversal = {
     require(maxDepth <= 10, "depth cap")
+    requireDirection(direction)
     val spark = edges.sparkSession
     import spark.implicits._
-    // The (src, dst) projection — NOT a both-directions union: doubling a
-    // 100 TB table to avoid a second join is the wrong trade. NOT cached
-    // for the inline regime (r19): a shallow traversal touches it ≤
-    // 2·maxDepth times, and building + reading the columnar cache
-    // measured SLOWER per level than re-scanning the column-pruned
-    // parquet (~1.6 s vs ~0.25 s per pass on the sf0.1 edge view); the
-    // distributed regime below persists it before its join-per-level
-    // loop, where executor-local reuse does pay.
-    val active = {
-      val a = edges.filter(activeAt(atTime))
-      (if (rels.isEmpty) a else a.filter(col("rel").isin(rels: _*)))
-        .select(col("src"), col("dst"))
-    }
+    val active = activeProjection(edges, rels, atTime)
 
     // Inline expansion through a BROADCAST HASH JOIN against the (tiny,
     // driver-resident) frontier (r19): the previous when/isin/explode
@@ -205,12 +302,20 @@ object GraphOps {
       }
     }
 
-    // Inline regime. Roots beyond the limit go straight to distributed.
+    // Roots beyond the limit go straight to distributed.
     val rootNodes = roots.select(col("node")).limit(InlineFrontierLimit + 1)
       .as[String].collect()
+    val small = if (rootNodes.length > InlineFrontierLimit) None
+      else fetchSmall(active)
+    if (small.isDefined) return Traversal(
+      bfsLocal(adjacency(small.get, direction), rootNodes, maxDepth)
+        .toDF("node", "depth"), () => ())
+
+    // Inline regime. A null root is emitted at depth 0 but kept out of the
+    // visited filter: `NOT IN` over a list holding null is never true.
     var inlineLevels = List.empty[(Seq[String], Int)]
-    var visitedSet = rootNodes.toSet
-    var frontier = rootNodes.toSeq.sorted
+    var visitedSet = rootNodes.toSet - null
+    var frontier = visitedSet.toSeq.sorted
     var d = 1
     var done = false
     var overflow = rootNodes.length > InlineFrontierLimit
@@ -297,6 +402,25 @@ object GraphOps {
     })
   }
 
+  /** The small regime of [[bfsT]]: every root at depth 0 (duplicates
+    * included, as the other regimes emit them), then each unseen node at
+    * the level that first reaches it. A null root is emitted but never
+    * expands.
+    */
+  private def bfsLocal(adj: Map[String, Seq[String]], roots: Seq[String],
+                       maxDepth: Int): Seq[(String, Int)] = {
+    val out = ArrayBuffer.from(roots.map(_ -> 0))
+    val seen = mutable.HashSet.from(roots.filter(_ != null))
+    var level = seen.toSeq
+    var d = 1
+    while (d <= maxDepth && level.nonEmpty) {
+      level = level.flatMap(adj.getOrElse(_, Nil)).filter(seen.add)
+      out ++= level.map(_ -> d)
+      d += 1
+    }
+    out.toSeq
+  }
+
   /** G9 `FindPath` (`pkg/engine/pathfinding.go:16-148`): shortest path by
     * iterative expansion; returns one row per reachable target with the
     * minimal hop count and the lexicographically smallest path among minimal
@@ -312,6 +436,9 @@ object GraphOps {
     * aggregation, no sort, no window shuffle of path arrays (VERDICT r03).
     * The explicit cycle check is subsumed by the anti-join: any node on the
     * parent's path was visited at a lower depth and is therefore in `best`.
+    *
+    * Regimes as in [[bfs]]: small (one bounded fetch, then the same
+    * per-level minimum on the driver), inline, distributed.
     */
   def shortestPaths(edges: DataFrame, from: String, rels: Seq[String] = Nil,
                     maxDepth: Int = 4, direction: String = "out",
@@ -328,15 +455,18 @@ object GraphOps {
                      broadcastFrontier: Boolean = true,
                      broadcastVisitedLimit: Long = BroadcastVisitedLimit): Traversal = {
     require(maxDepth <= 6, "depth cap")
+    requireDirection(direction)
     val spark = edges.sparkSession
     import spark.implicits._
-    // Uncached for the inline regime, persisted on overflow — same
-    // rationale as [[bfsT]] (r19).
-    val active = {
-      val a = edges.filter(activeAt(atTime))
-      (if (rels.isEmpty) a else a.filter(col("rel").isin(rels: _*)))
-        .select(col("src"), col("dst"))
-    }
+    val active = activeProjection(edges, rels, atTime)
+    def finish(bestDF: DataFrame, release: () => Unit): Traversal =
+      Traversal(bestDF.withColumn("path", split(col("pstr"), "\t")).drop("pstr"),
+        release)
+
+    val small = fetchSmall(active)
+    if (small.isDefined) return finish(
+      pathsLocal(adjacency(small.get, direction), from, maxDepth)
+        .toDF("node", "hops", "pstr"), () => ())
 
     // Inline regime (see [[bfs]]): the frontier is a driver-side
     // node → best-path-string map; each level expands through a BROADCAST
@@ -389,9 +519,6 @@ object GraphOps {
       .map { case (ps, dep) => ps.toDF("node", "pstr")
         .select(col("node"), lit(dep).as("hops"), col("pstr")) }
       .reduce(_ unionAll _)
-    def finish(bestDF: DataFrame, release: () => Unit): Traversal =
-      Traversal(bestDF.withColumn("path", split(col("pstr"), "\t")).drop("pstr"),
-        release)
     if (!overflow)
       return finish(inlineBest, () => ())
 
@@ -446,6 +573,32 @@ object GraphOps {
       active.unpersist(blocking = false)
       rels2.foreach(_.apply())
     })
+  }
+
+  /** The small regime of [[shortestPathsT]]: per level, each unseen node
+    * reached from the frontier keeps the minimum of its candidate path
+    * strings (parent path, tab, node) — compared as UTF-8 bytes, the order
+    * of Spark's string `min` in the other regimes, not Java's UTF-16
+    * `compareTo`.
+    */
+  private def pathsLocal(adj: Map[String, Seq[String]], from: String,
+                         maxDepth: Int): Seq[(String, Int, String)] = {
+    val out = ArrayBuffer((from, 0, from))
+    val seen = mutable.HashSet(from)
+    var level = Map(from -> from)
+    var d = 1
+    while (d <= maxDepth && level.nonEmpty) {
+      val next = mutable.HashMap.empty[String, UTF8String]
+      for ((node, pstr) <- level; n <- adj.getOrElse(node, Nil) if !seen(n)) {
+        val cand = UTF8String.fromString(pstr + "\t" + n)
+        if (next.get(n).forall(_.binaryCompare(cand) > 0)) next(n) = cand
+      }
+      level = next.view.mapValues(_.toString).toMap
+      seen ++= level.keys
+      out ++= level.map { case (n, p) => (n, d, p) }
+      d += 1
+    }
+    out.toSeq
   }
 
   /** G8 `VExtractSubgraph` (`engine/graph.go:296-390`): nodes within

@@ -1,9 +1,13 @@
 package graft.memory
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.functions.VectorFunctions
+import graft.graph.GraphOps
 
 /** Epistemic belief assessment — reference `VBeliefState`
   * (`pkg/engine/epistemic.go:22-184`) and the three pillar calculations
@@ -268,16 +272,45 @@ object Epistemic {
           col("invalidations") * InvalidationWeight))
 
   /** H8 — evolution chain read (`VEvolve` `ops.go:842-895` + `get-evolution`):
-    * follow `superseded_by` forward from each root, `maxDepth` unrolled joins
-    * (chains are short by construction; no driver-side iteration).
-    * Returns (root, pos, node).
+    * follow `superseded_by` forward from each root, `maxDepth` levels.
+    * Returns (root, node, pos): `root` keeps its input type, `node` is the
+    * root cast to string at pos 0. Every level emits one row per matching
+    * edge, so duplicate edges multiply rows, as a join does.
+    *
+    * Two regimes (see the `GraphOps` scale notes). Small — at most
+    * `GraphOps.InlineFrontierLimit` roots and at most
+    * `GraphOps.LocalEdgeLimit` live `superseded_by` edges: one bounded
+    * fetch, then the walk on the driver. Otherwise `maxDepth` unrolled
+    * joins with no driver-side iteration; each level is persisted, and the
+    * returned handle releases those blocks once the result is consumed.
     */
-  def evolutionChain(edges: DataFrame, roots: DataFrame, maxDepth: Int = 5): DataFrame = {
+  def evolutionChainT(edges: DataFrame, roots: DataFrame,
+                      maxDepth: Int = 5): GraphOps.Traversal = {
     val sb = edges.filter(col("rel") === "superseded_by" && col("deleted_at").isNull)
       .select(col("src"), col("dst"))
-    var frontier = roots.select(col("root"), col("root").cast("string").as("node"),
+    val start = roots.select(col("root"), col("root").cast("string").as("node"),
       lit(0L).as("pos"))
+    val rootRows = start.limit(GraphOps.InlineFrontierLimit + 1).collect()
+    val small = if (rootRows.length > GraphOps.InlineFrontierLimit) None
+      else GraphOps.fetchSmall(sb)
+    if (small.isDefined) {
+      val next = small.get.toSeq.filter(_.get(0) != null)
+        .groupMap(_.getString(0))(_.getString(1))
+      val rows = rootRows.toSeq.flatMap { r =>
+        Iterator.iterate(Seq(r.getString(1)))(_.flatMap(n =>
+            if (n == null) Nil else next.getOrElse(n, Nil)))
+          .take(maxDepth + 1).zipWithIndex
+          .flatMap { case (level, pos) => level.map(n => Row(r.get(0), n, pos.toLong)) }
+      }
+      val schema = StructType(Seq(start.schema("root"),
+        StructField("node", StringType), StructField("pos", LongType, nullable = false)))
+      return GraphOps.Traversal(
+        edges.sparkSession.createDataFrame(rows.asJava, schema), () => ())
+    }
+
+    var frontier = start
     var acc = frontier
+    var levels = List.empty[DataFrame]
     for (d <- 1 to maxDepth) {
       // Each level is cached (r19): level d is consumed by level d+1's
       // join AND the final union, so without a mark the unrolled plan
@@ -287,8 +320,17 @@ object Epistemic {
       frontier = frontier.join(sb, frontier("node") === sb("src"))
         .select(col("root"), col("dst").as("node"), lit(d.toLong).as("pos"))
         .persist()
+      levels ::= frontier
       acc = acc.unionByName(frontier)
     }
-    acc
+    // Deepest level first, so no released level still has a cached
+    // dependent that the cache manager would re-plan.
+    GraphOps.Traversal(acc, () => levels.foreach(_.unpersist(blocking = false)))
   }
+
+  /** [[evolutionChainT]] without the release handle; prefer the handle
+    * when the chain may leave the small regime.
+    */
+  def evolutionChain(edges: DataFrame, roots: DataFrame, maxDepth: Int = 5): DataFrame =
+    evolutionChainT(edges, roots, maxDepth).result
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.graph.GraphOps
 import graft.memory.Epistemic
 
 /** H6-H8 queries: belief assessment, invalidation friction, evolution chains.
@@ -116,13 +117,16 @@ object EpistemicQueries {
     "h8_evolution_chain" -> ((s, dir) => {
       val roots = Tables.embeddings(s, dir).filter(col("vec_id") % 25 === 0)
         .select(col("vec_id").as("root"))
-      val chain = Epistemic.evolutionChain(
-        evolutionEdges(s, dir), roots, maxDepth = 4)
+      // Drained: the chain is bounded by the 1-in-25 root sample times
+      // the depth, and draining releases the per-level blocks of the
+      // distributed regime once the chain is consumed.
+      val chain = GraphOps.drained(Epistemic.evolutionChainT(
+        evolutionEdges(s, dir), roots, maxDepth = 4))
       val w = Window.partitionBy("root")
       chain.withColumn("is_current", col("pos") === max(col("pos")).over(w))
         .select(col("root").cast("long").as("root"),
           col("pos").cast("long").as("pos"), col("node"), col("is_current"))
-        .orderBy(col("root"), col("pos"))
+        .transform(Ordered.small(_)(col("root"), col("pos"))) // drained ⇒ driver-local
     })
   )
 

@@ -40,11 +40,14 @@ object Layouts {
     s"${System.getProperty("java.io.tmpdir")}/graft_layout_v2_$key/$name"
   }
 
-  /** Build-once parquet: `build` runs only if the layout is absent. */
+  /** Build-once parquet: `build` runs only if the layout has no
+    * `_SUCCESS` marker, checked through the Hadoop `FileSystem` of the path.
+    */
   def stored(s: SparkSession, dir: String, name: String,
              partitionCols: Seq[String] = Nil)(build: => DataFrame): DataFrame = {
     val path = root(dir, name)
-    if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
+    val marker = new Path(path, "_SUCCESS")
+    if (!marker.getFileSystem(s.sessionState.newHadoopConf()).exists(marker)) {
       val w = build.write.mode("overwrite")
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
         .parquet(path)
@@ -68,9 +71,8 @@ object Layouts {
     * 100 TB build keeps ~128 MB files, a KB-scale fixture collapses to 1.
     * Runs once at build time (the bench's untimed warmup), never on read.
     * Lists, deletes and renames through the Hadoop `FileSystem` of the
-    * path. Layouts themselves still live under the local `java.io.tmpdir`
-    * (see `root`) and `stored` checks `_SUCCESS` with `java.nio.file`, so
-    * today this always runs on the local filesystem.
+    * path, as `stored` checks its `_SUCCESS` marker. Layouts themselves
+    * still live under the local `java.io.tmpdir` (see `root`).
     */
   private def compactSmallFiles(s: SparkSession, path: String): Unit = {
     val dir = new Path(path)

@@ -3,20 +3,22 @@ package graft.dedup
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.graph.Regimes
 
 /** Large-star/small-star connected components: labels must equal the
   * component minimum for every member, across shapes that stress the
   * algorithm differently — chains (worst-case diameter), stars (already
   * converged), forests (no cross-component bleed), and an adversarial
-  * long path that only converges through the O(log n) doubling.
+  * long path that only converges through the O(log n) doubling. Each case
+  * runs in both regimes ([[Regimes.agree]]).
   */
 class ConnectedComponentsSpec extends SparkSpec {
 
   import spark.implicits._
 
   private def cc(pairs: Seq[(Long, Long)]): Map[Long, Long] =
-    Dedup.connectedComponents(pairs.toDF("id1", "id2"))
-      .as[(Long, Long)].collect().toMap
+    Regimes.agree(Dedup.connectedComponents(pairs.toDF("id1", "id2"))
+      .as[(Long, Long)].collect().toMap)
 
   test("two components + chain: every node labeled with component min") {
     // {1,2,3,4} as a chain, {10,11,12} as a triangle, edge dup/reversed.

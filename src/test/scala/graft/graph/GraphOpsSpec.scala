@@ -3,10 +3,11 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{JobCount, SparkSpec}
 
 /** Mirrors the reference's `rich_graph_test.go` (weights/props/time travel),
   * `graph_filter_test.go` (BFS allow-lists), and `pathfinding` semantics.
+  * The traversal cases run in every regime through [[Regimes.agree]].
   */
 class GraphOpsSpec extends SparkSpec {
 
@@ -60,42 +61,139 @@ class GraphOpsSpec extends SparkSpec {
       .isEmpty) // deleted now
   }
 
-  test("BFS: depth caps, direction, minimal depth") {
+  /** BFS rows (node, depth), duplicates kept, in every regime. */
+  private def bfsRows(e: DataFrame, roots: Seq[String], rels: Seq[String] = Nil,
+                      direction: String = "out", maxDepth: Int = 5,
+                      atTime: Long = 0L): Seq[(String, Int)] = {
     import spark.implicits._
-    val got = bfs(edges, Seq("chunk_1").toDF("node"), direction = "out", maxDepth = 3)
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    Regimes.agree(bfs(e, roots.toDF("node"), rels, direction, maxDepth, atTime)
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toSeq
+      .sortBy(r => (Option(r._1), r._2)))
+  }
+
+  /** Shortest-path rows node → (hops, path), in every regime. */
+  private def pathRows(e: DataFrame, from: String, rels: Seq[String] = Nil,
+                       maxDepth: Int = 4, direction: String = "out",
+                       atTime: Long = 0L): Map[String, (Int, Seq[String])] = {
+    val rows = Regimes.agree(shortestPaths(e, from, rels, maxDepth, direction, atTime)
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getSeq[String](2).toList))
+      .toSeq.sortBy(_._1))
+    assert(rows.map(_._1).distinct.size == rows.size, "one row per node")
+    rows.map { case (n, h, p) => n -> (h, p) }.toMap
+  }
+
+  test("BFS: depth caps, direction, minimal depth") {
+    val got = bfsRows(edges, Seq("chunk_1"), direction = "out", maxDepth = 3).toMap
     assert(got == Map("chunk_1" -> 0, "chunk_2" -> 1, "doc_1" -> 1, "ent_1" -> 2))
-    val in = bfs(edges, Seq("doc_1").toDF("node"), direction = "in", maxDepth = 1)
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    val in = bfsRows(edges, Seq("doc_1"), direction = "in", maxDepth = 1).toMap
     assert(in == Map("doc_1" -> 0, "chunk_1" -> 1, "chunk_2" -> 1))
-    val depth1 = bfs(edges, Seq("chunk_1").toDF("node"), direction = "out", maxDepth = 1)
-    assert(!depth1.collect().map(_.getString(0)).contains("ent_1"))
+    val depth1 = bfsRows(edges, Seq("chunk_1"), direction = "out", maxDepth = 1)
+    assert(!depth1.map(_._1).contains("ent_1"))
+    val both = bfsRows(edges, Seq("ent_1", "chunk_2"), direction = "both", maxDepth = 2)
+    assert(both == Seq("chunk_1" -> 1, "chunk_2" -> 0, "doc_1" -> 1, "ent_1" -> 0))
   }
 
   test("shortest paths with hop counts and deterministic path choice") {
-    val got = shortestPaths(edges, "chunk_1", maxDepth = 4)
-      .collect().map(r => r.getString(0) -> (r.getInt(1), r.getSeq[String](2))).toMap
+    val got = pathRows(edges, "chunk_1", maxDepth = 4)
     assert(got("ent_1")._1 == 2)
     assert(got("ent_1")._2 == Seq("chunk_1", "doc_1", "ent_1"))
     // chunk_2->chunk_3 soft-deleted → unreachable at t=now
     assert(!got.contains("chunk_3"))
-    val asOf120 = shortestPaths(edges, "chunk_1", maxDepth = 4, atTime = 120L)
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    assert(asOf120("chunk_3") == 2) // time travel restores the path
+    val asOf120 = pathRows(edges, "chunk_1", maxDepth = 4, atTime = 120L)
+    assert(asOf120("chunk_3")._1 == 2) // time travel restores the path
     // bidirectional reachability via "both"
-    val both = shortestPaths(edges, "ent_1", maxDepth = 3, direction = "both")
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    assert(both("doc_1") == 1 && both("chunk_1") == 2)
+    val both = pathRows(edges, "ent_1", maxDepth = 3, direction = "both")
+    assert(both("doc_1")._1 == 1 && both("chunk_1")._1 == 2)
   }
 
   test("subgraph extraction: members + induced active edges") {
-    val (nodes, sub) = subgraph(edges, "doc_1", depth = 1)
-    val members = nodes.collect().map(_.getString(0)).toSet
+    val (members, got) = Regimes.agree {
+      val (nodes, sub) = subgraph(edges, "doc_1", depth = 1)
+      (nodes.collect().map(_.getString(0)).toSet,
+        sub.select("src", "dst").collect().map(r => (r.getString(0), r.getString(1))).toSet)
+    }
     assert(members == Set("doc_1", "chunk_1", "chunk_2", "ent_1"))
     // induced edges: chunk_1->chunk_2 (both members), parents, mentions — not chunk_2->chunk_3
-    val got = sub.select("src", "dst").collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(got == Set(("chunk_1", "chunk_2"), ("chunk_1", "doc_1"),
       ("chunk_2", "doc_1"), ("doc_1", "ent_1")))
+  }
+
+  test("an unknown direction is rejected, not walked both ways") {
+    import spark.implicits._
+    val roots = Seq("chunk_1").toDF("node")
+    intercept[IllegalArgumentException](bfs(edges, roots, direction = "outt"))
+    intercept[IllegalArgumentException](shortestPaths(edges, "chunk_1", direction = "outt"))
+    intercept[IllegalArgumentException](relations(edges, "doc_1", direction = "outt"))
+  }
+
+  test("rels and atTime filters apply in every regime") {
+    assert(bfsRows(edges, Seq("chunk_1"), rels = Seq("next"), atTime = 120L) ==
+      Seq("chunk_1" -> 0, "chunk_2" -> 1, "chunk_3" -> 2))
+    assert(bfsRows(edges, Seq("chunk_1"), rels = Seq("next")) ==
+      Seq("chunk_1" -> 0, "chunk_2" -> 1))
+    assert(bfsRows(edges, Seq("chunk_1"), atTime = 105L) ==
+      Seq("chunk_1" -> 0, "chunk_2" -> 1, "chunk_3" -> 2, "doc_1" -> 1))
+    val viaRels = pathRows(edges, "chunk_1", rels = Seq("parent", "mentions"))
+    assert(viaRels == Map("chunk_1" -> (0, Seq("chunk_1")),
+      "doc_1" -> (1, Seq("chunk_1", "doc_1")),
+      "ent_1" -> (2, Seq("chunk_1", "doc_1", "ent_1"))))
+    assert(pathRows(edges, "chunk_2", atTime = 105L) ==
+      Map("chunk_2" -> (0, Seq("chunk_2")), "chunk_3" -> (1, Seq("chunk_2", "chunk_3"))))
+  }
+
+  test("null ends, null and duplicate roots, and self-loops") {
+    import spark.implicits._
+    val e = Seq(("a", "b"), ("a", null), (null, "c"), ("b", "b"), ("b", "c"),
+        (null, null))
+      .toDF("src", "dst")
+      .select(col("src"), col("dst"), lit("r").as("rel"), lit(1L).as("created_at"),
+        lit(null).cast("long").as("deleted_at"))
+    assert(bfsRows(e, Seq("a", null, "a"), maxDepth = 3) ==
+      Seq((null, 0), ("a", 0), ("a", 0), ("b", 1), ("c", 2)))
+    assert(bfsRows(e, Seq("c"), direction = "in") == Seq("a" -> 2, "b" -> 1, "c" -> 0))
+    assert(pathRows(e, "a", direction = "both") == Map("a" -> (0, Seq("a")),
+      "b" -> (1, Seq("a", "b")), "c" -> (2, Seq("a", "b", "c"))))
+  }
+
+  test("shortest-path ties break in UTF-8 byte order, as Spark's string min") {
+    // U+FF5E sorts above the surrogate pair of U+1F600 in UTF-16 but below
+    // it in UTF-8 (EF.. < F0..).
+    import spark.implicits._
+    val (fw, emoji) = ("\uFF5E", new String(Character.toChars(0x1F600)))
+    assert(fw.compareTo(emoji) > 0)
+    val e = Seq(("s", emoji), ("s", fw), (emoji, "t"), (fw, "t")).toDF("src", "dst")
+      .select(col("src"), col("dst"), lit("r").as("rel"), lit(1L).as("created_at"),
+        lit(null).cast("long").as("deleted_at"))
+    assert(pathRows(e, "s")("t") == (2, Seq("s", fw, "t")))
+  }
+
+  test("bounded fetch: rows within the bound, each partition within its share") {
+    import spark.implicits._
+    def fetch(df: DataFrame, bound: Int): Option[Seq[Long]] =
+      withLocalEdgeLimit(bound)(fetchSmall(df)).map(_.map(_.getLong(0)).toSeq.sorted)
+    val even = spark.range(0, 10, 1, 5).toDF("id") // 2 rows in each of 5 partitions
+    assert(fetch(even, 10) == Some(0L until 10L))
+    assert(fetch(even, 9).isEmpty) // every partition fits its share of 2; 10 > 9
+    assert(fetch(even, 0).isEmpty)
+    val sc = spark.sparkContext
+    val skewed = (sc.parallelize(0L until 10L, 1) ++ sc.parallelize(Seq.empty[Long], 4))
+      .toDF("id") // all 10 rows in one of 5 partitions
+    assert(fetch(skewed, 10).isEmpty) // over its share of 2
+    assert(fetch(skewed, 50) == Some(0L until 10L))
+  }
+
+  test("small regime: BFS, shortest paths and subgraph run one Spark job each") {
+    import spark.implicits._
+    val roots = Seq("chunk_1").toDF("node")
+    val (_, bfsJobs) = JobCount.withoutAdaptive(spark)(
+      bfs(edges, roots, direction = "both", maxDepth = 3).collect())
+    assert(bfsJobs === 1)
+    val (_, pathJobs) = JobCount.withoutAdaptive(spark)(
+      shortestPaths(edges, "chunk_1", maxDepth = 4).collect())
+    assert(pathJobs === 1)
+    val (_, subJobs) = JobCount.withoutAdaptive(spark)(
+      subgraph(edges, "doc_1", depth = 1)._1.collect())
+    assert(subJobs === 1)
   }
 
   test("link versioning: idempotent re-link vs changed weight (graph.go:112-182)") {
@@ -132,30 +230,35 @@ class GraphOpsSpec extends SparkSpec {
 
   test("reliable checkpoint mode produces identical traversals to local") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    val roots = Seq("chunk_1").toDF("node")
-    def key(df: DataFrame) = df.collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSet
-    assert(key(bfs(edges, roots, direction = "out", maxDepth = 3)) ==
-      key(bfs(edges, roots, direction = "out", maxDepth = 3, reliable = true)))
-    def pkey(df: DataFrame) = df.collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getSeq[String](2))).toSet
-    assert(pkey(shortestPaths(edges, "chunk_1", maxDepth = 4)) ==
-      pkey(shortestPaths(edges, "chunk_1", maxDepth = 4, reliable = true)))
+    // Bound 0 keeps this case on the inline regime it was written for.
+    withLocalEdgeLimit(0) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+      spark.sparkContext.setCheckpointDir(dir)
+      val roots = Seq("chunk_1").toDF("node")
+      def key(df: DataFrame) = df.collect()
+        .map(r => (r.getString(0), r.getInt(1))).toSet
+      assert(key(bfs(edges, roots, direction = "out", maxDepth = 3)) ==
+        key(bfs(edges, roots, direction = "out", maxDepth = 3, reliable = true)))
+      def pkey(df: DataFrame) = df.collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getSeq[String](2))).toSet
+      assert(pkey(shortestPaths(edges, "chunk_1", maxDepth = 4)) ==
+        pkey(shortestPaths(edges, "chunk_1", maxDepth = 4, reliable = true)))
+    }
   }
 
   test("drained traversals leave no RDDs cached behind them") {
     import spark.implicits._
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val nodes = GraphOps.drained(
-      bfsT(edges, Seq("chunk_1").toDF("node"), direction = "both", maxDepth = 3))
-    assert(nodes.count() > 0)
-    val paths = GraphOps.drained(shortestPathsT(edges, "chunk_1", maxDepth = 4))
-    assert(paths.count() > 0)
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((after -- before).isEmpty,
-      s"traversal leaked cached RDDs: ${after -- before}")
+    Seq(LocalEdgeLimit, 0).foreach { bound => withLocalEdgeLimit(bound) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val nodes = GraphOps.drained(
+        bfsT(edges, Seq("chunk_1").toDF("node"), direction = "both", maxDepth = 3))
+      assert(nodes.count() > 0)
+      val paths = GraphOps.drained(shortestPathsT(edges, "chunk_1", maxDepth = 4))
+      assert(paths.count() > 0)
+      val after = spark.sparkContext.getPersistentRDDs.keySet
+      assert((after -- before).isEmpty,
+        s"bound $bound: traversal leaked cached RDDs: ${after -- before}")
+    } }
   }
 
   test("DISTRIBUTED-regime BFS: reliable checkpointing == local, RDDs released") {
@@ -239,12 +342,14 @@ class GraphOpsSpec extends SparkSpec {
       .unionAll(enrich(spark.range(n).select(
         concat(lit("d"), col("id")).as("src"),
         concat(lit("t"), pmod(col("id"), lit(10))).as("dst"))))
+    // 18,000 edges fit the small regime; bound 0 keeps the traversal on
+    // the distributed path this case is about.
     def runSp(limit: Long): Set[(String, Int, String)] =
-      GraphOps.shortestPaths(spEdges, "s", maxDepth = 2,
+      GraphOps.withLocalEdgeLimit(0)(GraphOps.shortestPaths(spEdges, "s", maxDepth = 2,
           broadcastVisitedLimit = limit)
         .select(col("node"), col("hops"), concat_ws("/", col("path")))
         .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2)))
-        .toSet
+        .toSet)
     val spBroadcast = runSp(GraphOps.BroadcastVisitedLimit)
     val spShuffle = runSp(1L)
     assert(spBroadcast == spShuffle)

@@ -81,15 +81,72 @@ class EpistemicSpec extends SparkSpec {
     assert(math.abs(stab(10) - expected) < 1e-12)
   }
 
+  /** Chain rows (root, node, pos) with the root column's type, sorted,
+    * in every regime.
+    */
+  private def chainRows(e: DataFrame, roots: DataFrame, maxDepth: Int = 4) =
+    graft.graph.Regimes.agree {
+      val t = Epistemic.evolutionChainT(e, roots, maxDepth)
+      val rows = t.result.collect()
+        .map(r => (String.valueOf(r.get(0)), r.getAs[String]("node"), r.getAs[Long]("pos")))
+        .toSeq.sortBy(r => (r._1, r._3, Option(r._2)))
+      t.release()
+      (t.result.schema("root").dataType, rows)
+    }
+
+  private def chainEdges(pairs: (String, String)*): DataFrame =
+    pairs.toDF("src", "dst").select(col("src"), col("dst"),
+      lit("superseded_by").as("rel"), lit(0L).as("created_at"),
+      lit(null).cast("long").as("deleted_at"))
+
   test("evolution chain follows superseded_by only while edges are live") {
     val e = edges(Seq(
       ("a", 0L, "superseded_by", 0L, None),
-      ("b", 0L, "superseded_by", 0L, None)))
-      .withColumn("dst", when(col("src") === "a", "b").otherwise("c"))
+      ("b", 0L, "superseded_by", 0L, None),
+      ("c", 0L, "superseded_by", 0L, Some(5L))))
+      .withColumn("dst", when(col("src") === "a", "b")
+        .when(col("src") === "b", "c").otherwise("d"))
+    val (_, chain) = chainRows(e, Seq("a").toDF("root"))
+    assert(chain === Seq(("a", "a", 0L), ("a", "b", 1L), ("a", "c", 2L)))
+  }
+
+  test("evolution chain: duplicate edges emit once per edge, cycles unroll") {
+    val e = chainEdges("a" -> "b", "a" -> "b", "b" -> "c", "x" -> "y", "y" -> "x")
+    val (_, chain) = chainRows(e, Seq("a", "x").toDF("root"), maxDepth = 3)
+    assert(chain === Seq(("a", "a", 0L), ("a", "b", 1L), ("a", "b", 1L),
+      ("a", "c", 2L), ("a", "c", 2L),
+      ("x", "x", 0L), ("x", "y", 1L), ("x", "x", 2L), ("x", "y", 3L)))
+  }
+
+  test("evolution chain: a long root keeps its type; null roots and ends") {
+    val e = chainEdges("7" -> "7b", "7b" -> null, (null, "7"), "9" -> "9")
+    val (rootType, chain) = chainRows(e,
+      Seq(Some(7L), None, Some(9L)).toDF("root"), maxDepth = 2)
+    assert(rootType === org.apache.spark.sql.types.LongType)
+    assert(chain === Seq(("7", "7", 0L), ("7", "7b", 1L), ("7", null, 2L),
+      ("9", "9", 0L), ("9", "9", 1L), ("9", "9", 2L), ("null", null, 0L)))
+  }
+
+  test("evolution chain: one Spark job in the small regime") {
+    val e = chainEdges("a" -> "b", "b" -> "c")
     val roots = Seq("a").toDF("root")
-    val chain = Epistemic.evolutionChain(e, roots, maxDepth = 4)
-      .orderBy("pos").collect()
-    assert(chain.map(_.getAs[String]("node")).toSeq === Seq("a", "b", "c"))
-    assert(chain.map(_.getAs[Long]("pos")).toSeq === Seq(0L, 1L, 2L))
+    val (rows, jobs) = graft.JobCount.withoutAdaptive(spark)(
+      Epistemic.evolutionChain(e, roots, maxDepth = 4).collect())
+    assert(rows.length === 3)
+    assert(jobs === 1)
+  }
+
+  test("evolution chain: the distributed regime releases its level blocks") {
+    val sc = spark.sparkContext
+    val e = chainEdges("a" -> "b", "b" -> "c")
+    val roots = Seq("a", "b").toDF("root")
+    val before = sc.getPersistentRDDs.keySet
+    val t = graft.graph.GraphOps.withLocalEdgeLimit(0)(
+      Epistemic.evolutionChainT(e, roots, maxDepth = 3))
+    assert(t.result.collect().length === 5)
+    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty,
+      "the distributed regime cached no level")
+    t.release()
+    assert(sc.getPersistentRDDs.keySet === before)
   }
 }

@@ -4,8 +4,8 @@ import org.apache.hadoop.fs.Path
 
 import graft.SparkSpec
 
-/** Stored-layout small-file compaction: a flat layout written as many
-  * tiny files is rewritten as one file with the same rows.
+/** Stored layouts: a flat layout written as many tiny files is rewritten
+  * as one file with the same rows, and a built layout is reused.
   */
 class LayoutsSpec extends SparkSpec {
 
@@ -21,5 +21,19 @@ class LayoutsSpec extends SparkSpec {
     assert(df.count() === 1000L)
     assert(df.agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0) === 499500L)
     assert(!fs.exists(new Path(path.toString + "__compact")))
+  }
+
+  test("a second stored call reuses the built layout without running build") {
+    val src = java.nio.file.Files.createTempDirectory("layouts-spec").toString
+    var builds = 0
+    def stored() = Layouts.stored(spark, src, "reuse") {
+      builds += 1
+      spark.range(0, 100).toDF("id")
+    }
+    val first = stored()
+    val second = stored()
+    assert(builds === 1)
+    assert(second.inputFiles.toSet === first.inputFiles.toSet)
+    assert(second.count() === 100L)
   }
 }
