@@ -288,8 +288,10 @@ object Dedup {
     * Small regime (see the `GraphOps` scale notes): when the cast,
     * filtered pair list holds at most `GraphOps.LocalEdgeLimit` rows, one
     * bounded fetch brings it to the driver and union-find labels it — one
-    * Spark job in all, and the result is a local relation. `maxIter` only
-    * bounds the distributed loop below.
+    * Spark job in all, and the result is a local relation. The fetch
+    * reads the pair list through a lazy checkpoint, so when it overflows
+    * the loop below reads those cached pairs instead of computing them
+    * again. `maxIter` only bounds the distributed loop below.
     *
     * Per round the new edge set is localCheckpoint'ed LAZILY and the
     * termination test is the materializing action: one job per round,
@@ -368,14 +370,22 @@ object Dedup {
       (m, () => added.foreach(id =>
         sc.getPersistentRDDs.get(id).foreach(_.unpersist(false))))
     }
-    val input = pairs.select(col("id1").cast("long").as("u"),
-      col("id2").cast("long").as("v"))
-    val small = GraphOps.fetchSmall(input.where(col("u") =!= col("v")))
-    if (small.isDefined) return componentsLocal(pairs.sparkSession, small.get)
+    // The probe reads `input` through a lazy checkpoint: its one job
+    // computes every stage of `pairs` (a MinHash banding, say) and caches
+    // whole partitions, so on overflow the distributed loop reads that
+    // cache instead of computing the pair list a second time.
+    val (input, releaseInput) = ckpt(pairs.select(col("id1").cast("long").as("u"),
+      col("id2").cast("long").as("v")).where(col("u") =!= col("v")))
+    val small = GraphOps.fetchSmall(input)
+    if (small.isDefined) {
+      releaseInput()
+      return componentsLocal(pairs.sparkSession, small.get)
+    }
     val init = ckpt(dedupEdges(input))
     var edges = init._1
     var release = init._2
     var converged = isStarForest(edges)
+    releaseInput() // the first round's edges are cached now
     var it = 0
     while (!converged && it < maxIter) {
       val (next, nextRelease) = ckpt(smallStar(largeStar(edges)))

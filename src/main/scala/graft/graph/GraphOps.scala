@@ -31,8 +31,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *     deduplicated and checkpointed per level; with the edges table
   *     bucketed by `src` the per-hop join is shuffle-free on a cluster.
   * The choice is made on rows counted, never on plan statistics; more than
-  * [[InlineFrontierLimit]] roots skip the fetch. Edges with a null end
-  * are not traversed in any regime.
+  * [[InlineFrontierLimit]] roots skip the fetch. The fetch is the price
+  * of choosing: when it overflows, the other regimes run one job more
+  * than they would alone, and that job can read the whole input
+  * projection — each task stops after its share + 1 rows, but a split
+  * holding fewer rows than its share (the usual case for a selective
+  * projection, such as one relation kind) is read to its end. Edges with
+  * a null end are not traversed in any regime.
   */
 object GraphOps {
 
@@ -90,7 +95,7 @@ object GraphOps {
   /** Driver adjacency over fetched (src, dst) rows in the walk's
     * direction: "out" follows src → dst, "in" dst → src, "both" either.
     */
-  private def adjacency(rows: Array[Row], direction: String): Map[String, Seq[String]] = {
+  private[graft] def adjacency(rows: Array[Row], direction: String): Map[String, Seq[String]] = {
     val pairs = rows.toSeq.map(r => (r.getString(0), r.getString(1)))
     val directed = direction match {
       case "out" => pairs

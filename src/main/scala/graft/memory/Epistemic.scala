@@ -283,6 +283,13 @@ object Epistemic {
     * fetch, then the walk on the driver. Otherwise `maxDepth` unrolled
     * joins with no driver-side iteration; each level is persisted, and the
     * returned handle releases those blocks once the result is consumed.
+    *
+    * Choosing a regime costs the distributed one up to two jobs that the
+    * unrolled joins alone do not run: collecting up to
+    * `InlineFrontierLimit` + 1 roots, and the fetch, which is skipped only
+    * when the roots overflow. A fetch that overflows can cost a full scan
+    * of the edges: `superseded_by` is a selective filter, so a split
+    * holding fewer live ones than its share is read to its end.
     */
   def evolutionChainT(edges: DataFrame, roots: DataFrame,
                       maxDepth: Int = 5): GraphOps.Traversal = {
@@ -294,8 +301,7 @@ object Epistemic {
     val small = if (rootRows.length > GraphOps.InlineFrontierLimit) None
       else GraphOps.fetchSmall(sb)
     if (small.isDefined) {
-      val next = small.get.toSeq.filter(_.get(0) != null)
-        .groupMap(_.getString(0))(_.getString(1))
+      val next = GraphOps.adjacency(small.get, "out")
       val rows = rootRows.toSeq.flatMap { r =>
         Iterator.iterate(Seq(r.getString(1)))(_.flatMap(n =>
             if (n == null) Nil else next.getOrElse(n, Nil)))

@@ -284,10 +284,10 @@ object DedupQueries {
       val pairs = Dedup.lshJaccard(corpus(s, dir), "doc_id", "text")
         .filter(col("jaccard") >= 0.5)
         .select(col("id1"), col("id2"))
-      Dedup.connectedComponents(pairs)
-        .select(col("component"), col("id").as("doc_id"),
+      val cc = Dedup.connectedComponents(pairs)
+      cc.select(col("component"), col("id").as("doc_id"),
           (col("id") === col("component")).as("keep"))
-        .orderBy(col("component"), col("doc_id"))
+        .transform(Ordered.byRegime(cc)(_)(col("component"), col("doc_id")))
     }),
 
     // D11: survivor selection per duplicate cluster — the DECISION step

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.graph.GraphOps
 import graft.memory.Epistemic
 
 /** H6-H8 queries: belief assessment, invalidation friction, evolution chains.
@@ -117,16 +116,17 @@ object EpistemicQueries {
     "h8_evolution_chain" -> ((s, dir) => {
       val roots = Tables.embeddings(s, dir).filter(col("vec_id") % 25 === 0)
         .select(col("vec_id").as("root"))
-      // Drained: the chain is bounded by the 1-in-25 root sample times
-      // the depth, and draining releases the per-level blocks of the
-      // distributed regime once the chain is consumed.
-      val chain = GraphOps.drained(Epistemic.evolutionChainT(
-        evolutionEdges(s, dir), roots, maxDepth = 4))
+      // The roots are 1 in 25 embeddings, so outside the small regime
+      // the chain is data-sized: it keeps a distributed sort, and its
+      // per-level blocks stay cached until a query-scoped release exists
+      // (ROADMAP direction 5) — releasing them here, before the result is
+      // written, would only make the write recompute every level.
+      val chain = Epistemic.evolutionChain(evolutionEdges(s, dir), roots, maxDepth = 4)
       val w = Window.partitionBy("root")
       chain.withColumn("is_current", col("pos") === max(col("pos")).over(w))
         .select(col("root").cast("long").as("root"),
           col("pos").cast("long").as("pos"), col("node"), col("is_current"))
-        .transform(Ordered.small(_)(col("root"), col("pos"))) // drained ⇒ driver-local
+        .transform(Ordered.byRegime(chain)(_)(col("root"), col("pos")))
     })
   )
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** Presentation ordering for results that are SMALL BY CONSTRUCTION.
   *
@@ -22,4 +23,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 object Ordered {
   def small(df: DataFrame)(cols: Column*): DataFrame =
     df.coalesce(1).sortWithinPartitions(cols: _*)
+
+  /** [[small]] when `source`, the frame `df` is derived from, is a
+    * driver-local relation — a graph operator's small-regime result (see
+    * the `GraphOps` scale notes) — and a global `orderBy` otherwise, where
+    * the same operator's result may be data-sized. The regime that
+    * produced `source` decides, so one query sorts both ways correctly.
+    */
+  def byRegime(source: DataFrame)(df: DataFrame)(cols: Column*): DataFrame =
+    if (source.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      small(df)(cols: _*)
+    else df.orderBy(cols: _*)
 }

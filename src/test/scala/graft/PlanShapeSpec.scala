@@ -18,6 +18,23 @@ class PlanShapeSpec extends SparkSpec {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  test("graph queries sort in one task only when the graph regime was small") {
+    // h8's chain and d8's components are local relations in the small
+    // regime; above the bound they are data-sized and keep a global sort.
+    val (s, dir) = (spark, sf())
+    val queries = Seq(
+      graft.queries.EpistemicQueries.queries("h8_evolution_chain"),
+      graft.queries.DedupQueries.queries("d8_dedup_components"))
+    queries.foreach { q =>
+      val small = plan(q(s, dir))
+      assert(small.contains("Coalesce 1") && !small.contains("rangepartitioning"),
+        small.take(2000))
+      val distributed = graft.graph.GraphOps.withLocalEdgeLimit(0)(plan(q(s, dir)))
+      assert(distributed.contains("rangepartitioning") &&
+        !distributed.contains("Coalesce 1"), distributed.take(2000))
+    }
+  }
+
   test("MinHash-LSH near-dup plan has no cartesian product") {
     val (s, dir) = (spark, sf())
     val df = graft.queries.DedupQueries.queries("d2_minhash_lsh")(s, dir)

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.graph.Regimes
+import graft.graph.{GraphOps, Regimes}
 
 /** Large-star/small-star connected components: labels must equal the
   * component minimum for every member, across shapes that stress the
@@ -43,6 +43,20 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("self-loops and empty input are harmless") {
     assert(cc(Seq((5L, 5L))) === Map.empty)
     assert(cc(Seq.empty) === Map.empty)
+  }
+
+  test("an overflowing fetch leaves the pair list computed once") {
+    // The distributed loop must read what the probe job computed, not
+    // plan the pair list's upstream again.
+    val evaluated = spark.sparkContext.longAccumulator("pairs evaluated")
+    val tally = udf { (x: Long) => evaluated.add(1); x }.asNondeterministic()
+    val pairs = (0L until 100L).map(i => (i, i + 1)).toDF("id1", "id2")
+      .repartition(4)
+      .select(tally(col("id1")).as("id1"), col("id2"))
+    val got = GraphOps.withLocalEdgeLimit(1)(
+      Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap)
+    assert(got.size === 101 && got.values.forall(_ === 0L))
+    assert(evaluated.value === 100L)
   }
 
   test("forest of pairs: labels never bleed across components") {
