@@ -259,7 +259,8 @@ object Ivf {
     * probed buckets + partial top-k — no probe-ranking stages, no extra
     * broadcasts. Use for driver-bounded query batches (serving); use
     * [[search]] when the query set is itself cluster-resident. Assumes
-    * cosine over normalized vectors (the ANN module's metric).
+    * cosine over normalized vectors (the ANN module's metric); probes come
+    * from [[probeAssignments]], like every served batch.
     */
   def searchBatchedLocal(
       assigned: DataFrame,
@@ -271,21 +272,14 @@ object Ivf {
       vecCol: String = "vector"): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
-    val inv = invNorms(cents)
-    val qrows = queries.select(col("qid"), col("qvec"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val probeRows = qrows.flatMap { case (qid, qv) =>
-      // Top-nProbe centroids by cosine (dot × centroid inverse norm; the
-      // query norm is constant per query). Ties → lower cid, like search().
-      val scored = cents.indices.map { c =>
-        val cv = cents(c)
-        var dot = 0.0; var j = 0
-        while (j < cv.length) { dot += cv(j).toDouble * qv(j); j += 1 }
-        (-dot * inv(c), c.toLong)
-      }.sorted.take(nProbe)
-      scored.map { case (_, cid) => (qid, qv.toSeq, cid) }
-    }.toSeq
+    val (qids, qvecs) = collectBatch("searchBatchedLocal", cents, queries,
+      "cosine")
+    val bucketQs = probeAssignments(cents, bucketAdj(cents, "cosine"),
+      l2 = false, qvecs, nProbe)
+    val probeRows = bucketQs.indices.flatMap { b =>
+      Option(bucketQs(b)).toSeq.flatten
+        .map(qi => (qids(qi), qvecs(qi).toSeq, b.toLong))
+    }
     val probes = probeRows.toDF("qid", "qvec", "bucket")
       .select(col("qid"), col("qvec").cast("array<float>").as("qvec"), col("bucket"))
     val cand = assigned.join(broadcast(probes), Seq("bucket"))
@@ -293,68 +287,187 @@ object Ivf {
         VectorFunctions.cosineDistance(col(vecCol), col("qvec")))
     // One query ⇒ one distinct qid: a qid-partitioned window would funnel
     // every candidate through one task — take the orderBy/limit path.
-    rankTopK(cand, k, idCol, single = qrows.length <= 1)
+    rankTopK(cand, k, idCol, single = qids.length <= 1)
   }
 
-  /** Serving layout: the assigned table decoded to BUCKET-MAJOR primitive
-    * blocks — rows of (bucket, ids, flat row-major vector block), ready to
-    * cache. Repeated batched searches then skip Tungsten row decode entirely
-    * and stream contiguous float blocks ([[searchBatchedFast]]) — the
-    * distributed analogue of the reference's index arena (`hnsw_index.go`
-    * keeps vectors in one flat slice per node for the same reason:
-    * sequential prefetch). Grouping is PARTITION-LOCAL (no shuffle): the
-    * bounded top-k scan is commutative across blocks, so a bucket split
-    * over several partitions just yields several blocks. At cluster scale
-    * each executor caches the blocks of its parquet partitions as-is.
+  // ---------------------------------------------------------------------
+  // Batched serving over bucket-major primitive blocks. Every codec (f32,
+  // int8, f16 here; residual PQ in [[Pq]]) shares two primitives:
+  // [[bucketBlocks]] builds the index with the codec's row encoder and
+  // block packer, and [[searchBlocks]] serves a batch with the codec's
+  // query preparation and block kernel.
+  // ---------------------------------------------------------------------
+
+  /** Serving layout: the assigned table as BUCKET-MAJOR blocks — one
+    * block per bucket per partition, holding the bucket's ids and its rows
+    * packed into contiguous primitive arrays, ready to cache. Repeated
+    * batched searches then skip Tungsten row decode entirely and stream
+    * contiguous blocks — the distributed analogue of the reference's index
+    * arena (`hnsw_index.go` keeps vectors in one flat slice per node for
+    * the same reason: sequential prefetch). Grouping is PARTITION-LOCAL
+    * (no shuffle): the bounded top-k scan is commutative across blocks, so
+    * a bucket split over several partitions just yields several blocks. At
+    * cluster scale each executor caches the blocks of its parquet
+    * partitions as-is. `wholeBuckets` shuffles by bucket first, for a
+    * codec whose kernel does per-block work worth amortizing over the
+    * whole bucket.
+    *
+    * `encode` turns each row's vector into the codec's row as it arrives;
+    * `pack` turns one bucket's ids and encoded rows into the codec's block.
     */
-  def servingIndex(assigned: DataFrame, idCol: String = "id",
-                   vecCol: String = "vector"): org.apache.spark.rdd.RDD[(Long, Array[Long], Array[Float])] = {
+  private[search] def bucketBlocks[R, B: scala.reflect.ClassTag](
+      assigned: DataFrame,
+      idCol: String,
+      vecCol: String,
+      wholeBuckets: Boolean = false)(
+      encode: Array[Float] => R)(
+      pack: (Long, Array[Long], scala.collection.IndexedSeq[R]) => B)
+      : org.apache.spark.rdd.RDD[B] = {
     val spark = assigned.sparkSession
     import spark.implicits._
-    assigned
+    val rows = assigned
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
         col("bucket").cast("long"))
+    (if (wholeBuckets) rows.repartition(col("bucket")) else rows)
       .as[(Long, Array[Float], Long)]
       .rdd
       .mapPartitions { it =>
         val byBucket = scala.collection.mutable.LongMap
           .empty[(scala.collection.mutable.ArrayBuffer[Long],
-                  scala.collection.mutable.ArrayBuffer[Array[Float]])]
+                  scala.collection.mutable.ArrayBuffer[R])]
         it.foreach { case (id, v, b) =>
           val e = byBucket.getOrElseUpdate(b,
             (scala.collection.mutable.ArrayBuffer.empty[Long],
-             scala.collection.mutable.ArrayBuffer.empty[Array[Float]]))
+             scala.collection.mutable.ArrayBuffer.empty[R]))
           e._1 += id
-          e._2 += v
+          e._2 += encode(v)
         }
-        byBucket.iterator.map { case (b, (idBuf, vecBuf)) =>
-          val ids = idBuf.toArray
-          val dim = if (vecBuf.isEmpty) 0 else vecBuf(0).length
-          val flat = new Array[Float](ids.length * dim)
-          var r = 0
-          while (r < ids.length) {
-            System.arraycopy(vecBuf(r), 0, flat, r * dim, dim)
-            r += 1
-          }
-          (b, ids, flat)
+        byBucket.iterator.map { case (b, (idBuf, rowBuf)) =>
+          pack(b, idBuf.toArray, rowBuf)
         }
       }
   }
 
-  /** Batch-serving IVF search over a cached [[servingIndex]]: driver-side
-    * probe selection (like [[searchBatchedLocal]]) + ONE tight
-    * mapPartitions pass — each partition keeps a bounded per-query top-k
-    * (insertion into a k-sized sorted pair array, ties by id) and only
-    * nPartitions×k rows per query leave the executors; a final tiny window
-    * merges them. This is the reference's AVX-kernel-over-arena hot loop
-    * re-expressed per-partition; it exists because the join+window plan pays
-    * a fixed multi-stage cost that dwarfs the actual math at serving batch
-    * sizes. The scan is QUERY-TILED (rows outer, 4 probing queries inner):
-    * the block scan is bandwidth-bound, so each row is streamed once per
-    * 4-query tile instead of once per query, and the four dot chains give
-    * the ILP a single serial float chain lacks. Each per-query sum still
-    * accumulates sequentially in j — bit-identical arithmetic to
-    * [[graft.functions.VectorFunctions.cosineDistance]].
+  /** Equal-length rows concatenated into one row-major block. */
+  private def flatten[T: scala.reflect.ClassTag](
+      rows: scala.collection.IndexedSeq[Array[T]]): Array[T] = {
+    val dim = if (rows.isEmpty) 0 else rows(0).length
+    val flat = new Array[T](rows.length * dim)
+    var r = 0
+    while (r < rows.length) {
+      System.arraycopy(rows(r), 0, flat, r * dim, dim)
+      r += 1
+    }
+    flat
+  }
+
+  /** A served batch's (qids, query vectors), collected to the driver and
+    * checked by [[checkBatch]].
+    */
+  private def collectBatch(
+      op: String,
+      cents: Array[Array[Float]],
+      queries: DataFrame,
+      metric: String): (Array[Long], Array[Array[Float]]) = {
+    val rows = queries.select(col("qid"), col("qvec")).collect()
+    val qids = rows.map(_.getLong(0))
+    val qvecs = rows.map(r =>
+      if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray)
+    checkBatch(op, cents, qids, qvecs, metric)
+    (qids, qvecs)
+  }
+
+  /** Validate a served batch before any scan: the metric must be
+    * `"cosine"` or `"l2"`, and every query vector must be present and as
+    * long as the centroids — a shorter one would fail inside
+    * [[probeAssignments]]' parallel loop, a longer one would score only its
+    * prefix. The batched IVF searches and combined serving
+    * ([[ServingFusion]]) both run it.
+    */
+  private[search] def checkBatch(
+      op: String,
+      cents: Array[Array[Float]],
+      qids: Array[Long],
+      qvecs: Array[Array[Float]],
+      metric: String): Unit = {
+    require(metric == "cosine" || metric == "l2",
+      s"$op: unknown metric '$metric' (served batches take \"cosine\" or " +
+        "\"l2\")")
+    val dim = if (cents.isEmpty) -1 else cents(0).length
+    qids.indices.foreach { i =>
+      require(qvecs(i) != null, s"$op: query ${qids(i)} has no query vector")
+      require(dim < 0 || qvecs(i).length == dim,
+        s"$op: query ${qids(i)} has ${qvecs(i).length} dimensions, the " +
+          s"centroids $dim")
+    }
+  }
+
+  /** The probe/scan/merge driver of every batched search over a
+    * [[bucketBlocks]] index: collect and validate the batch, pick each
+    * query's probes on the driver ([[probeAssignments]] under `metric`),
+    * broadcast the prepared queries with the bucket → probing-queries
+    * lists, then ONE mapPartitions pass. Each partition makes its block
+    * kernel once (`kernel(prepared)`, where the kernel keeps its
+    * partition-local scratch) and calls it once per probed block with the
+    * block's probing query indices (ascending) and the partition's
+    * [[TopK]]. Only nPartitions×nq×k partial entries leave the executors;
+    * they merge through [[reducePartials]], the broadcast is destroyed
+    * (also when the pass fails), and [[mergeTopK]] returns (qid, id,
+    * distance, rank). No shuffle, no ranking window: the join+window plan
+    * pays a fixed multi-stage cost that dwarfs the math at serving batch
+    * sizes.
+    */
+  private[search] def searchBlocks[B, Q](
+      op: String,
+      index: org.apache.spark.rdd.RDD[B],
+      cents: Array[Array[Float]],
+      queries: DataFrame,
+      k: Int,
+      nProbe: Int,
+      metric: String)(
+      bucketOf: B => Long)(
+      prepare: Array[Array[Float]] => Q)(
+      kernel: Q => (B, Array[Int], TopK) => Unit): DataFrame = {
+    val spark = queries.sparkSession
+    val (qids, qvecs) = collectBatch(op, cents, queries, metric)
+    val nq = qids.length
+    val bucketQs = probeAssignments(cents, bucketAdj(cents, metric),
+      metric == "l2", qvecs, nProbe)
+    val bc = spark.sparkContext.broadcast((prepare(qvecs), bucketQs))
+    val partials = index.mapPartitions { it =>
+      val (q, bq) = bc.value
+      val scan = kernel(q)
+      val heaps = new TopK(nq, k)
+      it.foreach { blk =>
+        val b = bucketOf(blk)
+        val qs = if (b < bq.length) bq(b.toInt) else null
+        if (qs != null) scan(blk, qs, heaps)
+      }
+      Iterator.single(heaps)
+    }
+    val merged =
+      try reducePartials(partials, new TopK(nq, k), (a: TopK, b: TopK) => a merge b)
+      finally bc.destroy()
+    mergeTopK(spark, merged, qids, k)
+  }
+
+  /** f32 serving layout: (bucket, ids, flat row-major vector block). */
+  def servingIndex(assigned: DataFrame, idCol: String = "id",
+                   vecCol: String = "vector"): org.apache.spark.rdd.RDD[(Long, Array[Long], Array[Float])] =
+    bucketBlocks(assigned, idCol, vecCol)(v => v) { (b, ids, rows) =>
+      (b, ids, flatten(rows))
+    }
+
+  /** Batch-serving IVF search over a cached [[servingIndex]] through
+    * [[searchBlocks]]: the reference's AVX-kernel-over-arena hot loop
+    * re-expressed per partition. The scan is QUERY-TILED (rows outer, 4
+    * probing queries inner): the block scan is bandwidth-bound, so each
+    * row is streamed once per 4-query tile instead of once per query, and
+    * the four dot chains give the ILP a single serial float chain lacks.
+    * Each per-query sum still accumulates sequentially in j — bit-identical
+    * arithmetic to [[graft.functions.VectorFunctions.cosineDistance]].
+    * Cosine is `1 − dot` (pre-normalized vectors); l2 is SQUARED euclidean
+    * ‖x‖² − 2x·q + ‖q‖² — the [[VecCodec.F32]] finishes.
     */
   def searchBatchedFast(
       index: org.apache.spark.rdd.RDD[(Long, Array[Long], Array[Float])],
@@ -363,119 +476,93 @@ object Ivf {
       k: Int,
       nProbe: Int,
       metric: String = "cosine"): DataFrame = {
-    val spark = queries.sparkSession
     val l2 = metric == "l2"
-    val adj = bucketAdj(cents, metric)
-    val qrows = queries.select(col("qid"), col("qvec"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val qids = qrows.map(_._1)
-    val qvecs = qrows.map(_._2)
-    // bucket → indices of the queries probing it (null = unprobed).
-    val bucketQs = probeAssignments(cents, adj, l2, qvecs, nProbe)
-    val bc = spark.sparkContext.broadcast((qvecs, bucketQs))
-    // ONE stage: per-partition bounded top-k over contiguous bucket blocks
-    // (query-outer loop — each probing query streams the whole block
-    // sequentially), partials merged on the driver (≤ partitions×nq×k
-    // rows — serving batches are driver-bounded by definition, same place
-    // probe selection already runs). No shuffle, no ranking window.
-    // Distance: cosine = 1 − dot (pre-normalized vectors); l2 = SQUARED
-    // euclidean ‖x‖² − 2x·q + ‖q‖², with ‖x‖² accumulated in the same loop.
-    val partials = index.mapPartitions { it =>
-      val (qvs, bq) = bc.value
-      val qsq: Array[Double] =
-        if (l2) qvs.map { qv =>
-          var s = 0.0; var j = 0
-          while (j < qv.length) { s += qv(j).toDouble * qv(j); j += 1 }
-          s
-        } else null
-      val heaps = new TopK(qvs.length, k)
+    searchBlocks("searchBatchedFast", index, cents, queries, k, nProbe,
+        metric)(_._1)(VecCodec.F32.prepare(_, l2)) { q =>
+      val qvs = q.qvecs
+      val qsq = q.qsq
       // Per-block ‖x‖² scratch for the L2 path, computed ONCE per probed
       // block (same sequential float accumulation as the fused loop it
       // replaces — bit-identical distances) and reused by every probing
       // query, so the per-query inner loop is dot-only: half the flops and
       // a single accumulation chain. Buffer grows to the largest block.
       var xsqBuf: Array[Float] = null
-      it.foreach { case (b, ids, flat) =>
-        val qs = if (b < bq.length) bq(b.toInt) else null
-        if (qs != null && ids.length > 0) {
-          val dim = flat.length / ids.length
-          if (l2) {
-            if (xsqBuf == null || xsqBuf.length < ids.length)
-              xsqBuf = new Array[Float](ids.length)
-            var r = 0
-            var off = 0
-            while (r < ids.length) {
-              var s = 0f; var j = 0
-              while (j < dim) { val x = flat(off + j); s += x * x; j += 1 }
-              xsqBuf(r) = s
-              r += 1
-              off += dim
-            }
-          }
-          // QUERY-TILED scan (rows outer, 4 probing queries inner): each
-          // vector row is loaded from memory ONCE per tile and feeds four
-          // independent dot chains — 4× less DRAM traffic than the
-          // query-outer loop (the scan is bandwidth-bound: every probing
-          // query used to re-stream the whole block) and 4-way ILP without
-          // reassociating any per-query sum. Each dot accumulates
-          // sequentially in j — bit-identical distances to the scalar
-          // kernel.
-          var i = 0
-          while (i + 4 <= qs.length) {
-            val qv0 = qvs(qs(i)); val qv1 = qvs(qs(i + 1))
-            val qv2 = qvs(qs(i + 2)); val qv3 = qvs(qs(i + 3))
-            var r = 0
-            var off = 0
-            while (r < ids.length) {
-              var d0 = 0f; var d1 = 0f; var d2 = 0f; var d3 = 0f
-              var j = 0
-              while (j < dim) {
-                val x = flat(off + j)
-                d0 += x * qv0(j); d1 += x * qv1(j)
-                d2 += x * qv2(j); d3 += x * qv3(j)
-                j += 1
-              }
-              if (l2) {
-                val xs = xsqBuf(r).toDouble
-                heaps.insert(qs(i), xs - 2.0d * d0 + qsq(qs(i)), ids(r))
-                heaps.insert(qs(i + 1), xs - 2.0d * d1 + qsq(qs(i + 1)), ids(r))
-                heaps.insert(qs(i + 2), xs - 2.0d * d2 + qsq(qs(i + 2)), ids(r))
-                heaps.insert(qs(i + 3), xs - 2.0d * d3 + qsq(qs(i + 3)), ids(r))
-              } else {
-                heaps.insert(qs(i), 1.0d - d0, ids(r))
-                heaps.insert(qs(i + 1), 1.0d - d1, ids(r))
-                heaps.insert(qs(i + 2), 1.0d - d2, ids(r))
-                heaps.insert(qs(i + 3), 1.0d - d3, ids(r))
-              }
-              r += 1
-              off += dim
-            }
-            i += 4
-          }
-          while (i < qs.length) {
-            val qi = qs(i)
-            val qv = qvs(qi)
-            var r = 0
-            var off = 0
-            while (r < ids.length) {
-              var dot = 0f; var j = 0
-              while (j < dim) { dot += flat(off + j) * qv(j); j += 1 }
-              if (l2)
-                heaps.insert(qi, xsqBuf(r).toDouble - 2.0d * dot + qsq(qi), ids(r))
-              else
-                heaps.insert(qi, 1.0d - dot, ids(r))
-              r += 1
-              off += dim
-            }
-            i += 1
+      (blk, qs, heaps) =>
+        val ids = blk._2
+        val flat = blk._3
+        val dim = flat.length / math.max(ids.length, 1)
+        if (l2) {
+          if (xsqBuf == null || xsqBuf.length < ids.length)
+            xsqBuf = new Array[Float](ids.length)
+          var r = 0
+          var off = 0
+          while (r < ids.length) {
+            var s = 0f; var j = 0
+            while (j < dim) { val x = flat(off + j); s += x * x; j += 1 }
+            xsqBuf(r) = s
+            r += 1
+            off += dim
           }
         }
-      }
-      Iterator.single(heaps)
+        val xsq = xsqBuf
+        // QUERY-TILED scan (rows outer, 4 probing queries inner): each
+        // vector row is loaded from memory ONCE per tile and feeds four
+        // independent dot chains — 4× less DRAM traffic than the
+        // query-outer loop (the scan is bandwidth-bound: every probing
+        // query used to re-stream the whole block) and 4-way ILP without
+        // reassociating any per-query sum. Each dot accumulates
+        // sequentially in j — bit-identical distances to the scalar
+        // kernel.
+        var i = 0
+        while (i + 4 <= qs.length) {
+          val qv0 = qvs(qs(i)); val qv1 = qvs(qs(i + 1))
+          val qv2 = qvs(qs(i + 2)); val qv3 = qvs(qs(i + 3))
+          var r = 0
+          var off = 0
+          while (r < ids.length) {
+            var d0 = 0f; var d1 = 0f; var d2 = 0f; var d3 = 0f
+            var j = 0
+            while (j < dim) {
+              val x = flat(off + j)
+              d0 += x * qv0(j); d1 += x * qv1(j)
+              d2 += x * qv2(j); d3 += x * qv3(j)
+              j += 1
+            }
+            if (l2) {
+              val xs = xsq(r)
+              heaps.insert(qs(i), VecCodec.l2Dist(xs, d0, qsq(qs(i))), ids(r))
+              heaps.insert(qs(i + 1), VecCodec.l2Dist(xs, d1, qsq(qs(i + 1))), ids(r))
+              heaps.insert(qs(i + 2), VecCodec.l2Dist(xs, d2, qsq(qs(i + 2))), ids(r))
+              heaps.insert(qs(i + 3), VecCodec.l2Dist(xs, d3, qsq(qs(i + 3))), ids(r))
+            } else {
+              heaps.insert(qs(i), VecCodec.cosineDist(d0), ids(r))
+              heaps.insert(qs(i + 1), VecCodec.cosineDist(d1), ids(r))
+              heaps.insert(qs(i + 2), VecCodec.cosineDist(d2), ids(r))
+              heaps.insert(qs(i + 3), VecCodec.cosineDist(d3), ids(r))
+            }
+            r += 1
+            off += dim
+          }
+          i += 4
+        }
+        while (i < qs.length) {
+          val qi = qs(i)
+          val qv = qvs(qi)
+          var r = 0
+          var off = 0
+          while (r < ids.length) {
+            var dot = 0f; var j = 0
+            while (j < dim) { dot += flat(off + j) * qv(j); j += 1 }
+            if (l2)
+              heaps.insert(qi, VecCodec.l2Dist(xsq(r), dot, qsq(qi)), ids(r))
+            else
+              heaps.insert(qi, VecCodec.cosineDist(dot), ids(r))
+            r += 1
+            off += dim
+          }
+          i += 1
+        }
     }
-    val merged = reducePartials(partials, new TopK(qids.length, k), (a: TopK, b: TopK) => a merge b)
-    mergeTopK(spark, merged, qids, k)
   }
 
   /** Per-query bounded top-k accumulator: insertion into k-sized sorted
@@ -499,12 +586,6 @@ object Ivf {
       }
       hd(j) = d; hi(j) = id
     }
-    def iterator: Iterator[(Int, Long, Double)] =
-      (0 until nq).iterator.flatMap { qi =>
-        val hd = heapD(qi); val hi = heapI(qi)
-        (0 until k).iterator.takeWhile(hd(_) < Double.MaxValue)
-          .map(j => (qi, hi(j), hd(j)))
-      }
     /** Fold `o` into this state. Bounded-top-k union with the (d, id)
       * tie-break is commutative and associative, so treeReduce order never
       * changes the result.
@@ -546,40 +627,10 @@ object Ivf {
       assigned: DataFrame,
       absMax: Double,
       idCol: String = "id",
-      vecCol: String = "vector"): org.apache.spark.rdd.RDD[(Long, Array[Long], Array[Byte], Array[Float])] = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    assigned
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
-        col("bucket").cast("long"))
-      .as[(Long, Array[Float], Long)]
-      .rdd
-      .mapPartitions { it =>
-        val byBucket = scala.collection.mutable.LongMap
-          .empty[(scala.collection.mutable.ArrayBuffer[Long],
-                  scala.collection.mutable.ArrayBuffer[Array[Byte]])]
-        it.foreach { case (id, v, b) =>
-          val e = byBucket.getOrElseUpdate(b,
-            (scala.collection.mutable.ArrayBuffer.empty[Long],
-             scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]))
-          e._1 += id
-          e._2 += quantizeArray(v, absMax)
-        }
-        byBucket.iterator.map { case (b, (idBuf, codeBuf)) =>
-          val ids = idBuf.toArray
-          val dim = if (codeBuf.isEmpty) 0 else codeBuf(0).length
-          val flat = new Array[Byte](ids.length * dim)
-          val norms = new Array[Float](ids.length)
-          var r = 0
-          while (r < ids.length) {
-            System.arraycopy(codeBuf(r), 0, flat, r * dim, dim)
-            norms(r) = int8Norm(codeBuf(r))
-            r += 1
-          }
-          (b, ids, flat, norms)
-        }
-      }
-  }
+      vecCol: String = "vector"): org.apache.spark.rdd.RDD[(Long, Array[Long], Array[Byte], Array[Float])] =
+    bucketBlocks(assigned, idCol, vecCol)(quantizeArray(_, absMax)) {
+      (b, ids, rows) => (b, ids, flatten(rows), rows.map(int8Norm).toArray)
+    }
 
   /** Reference quantization of one vector (`Quantizer.code` semantics:
     * clamp(round(x/absMax·127)) with HALF_UP rounding).
@@ -606,8 +657,10 @@ object Ivf {
 
   /** [[searchBatchedFast]] over the COMPRESSED index: probe selection on
     * float centroids, candidate ranking with the integer-dot int8-cosine
-    * kernel formula (precomputed norms, clamped) — the quantized-domain
-    * search completing V9's story: the scan touches 1 byte per component.
+    * kernel formula ([[VecCodec.int8Dist]]: precomputed norms, clamped) —
+    * the quantized-domain search completing V9's story: the scan touches 1
+    * byte per component. Queries are quantized once on the driver, as the
+    * [[VecCodec.Int8]] codec prepares them.
     */
   def searchBatchedFastInt8(
       index: org.apache.spark.rdd.RDD[(Long, Array[Long], Array[Byte], Array[Float])],
@@ -615,87 +668,64 @@ object Ivf {
       queries: DataFrame,
       k: Int,
       nProbe: Int,
-      absMax: Double): DataFrame = {
-    val spark = queries.sparkSession
-    val inv = invNorms(cents)
-    val qrows = queries.select(col("qid"), col("qvec"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val qids = qrows.map(_._1)
-    val qcodes = qrows.map { case (_, qv) => quantizeArray(qv, absMax) }
-    val qnorms = qcodes.map(int8Norm)
-    val bucketQs =
-      probeAssignments(cents, inv, l2 = false, qrows.map(_._2), nProbe)
-    val bc = spark.sparkContext.broadcast((qcodes, qnorms, bucketQs))
-    val partials = index.mapPartitions { it =>
-      val (qcs, qns, bq) = bc.value
-      val heaps = new TopK(qcs.length, k)
-      it.foreach { case (b, ids, flat, norms) =>
-        val qs = if (b < bq.length) bq(b.toInt) else null
-        if (qs != null && ids.length > 0) {
-          val dim = flat.length / ids.length
-          // QUERY-TILED integer scan (rows outer, 4 queries inner — see
-          // the f32 kernel): one byte-row stream per tile, four integer
-          // dot chains; integer adds are associative, so this is
-          // bit-identical in any order.
-          def score(dot: Int, norm: Float, qn: Double): Double =
-            if (norm == 0f || qn == 0.0) 1.0
-            else {
-              var sim = dot.toDouble / (norm.toDouble * qn)
-              if (sim > 1.0) sim = 1.0
-              if (sim < -1.0) sim = -1.0
-              1.0 - sim
+      absMax: Double): DataFrame =
+    searchBlocks("searchBatchedFastInt8", index, cents, queries, k, nProbe,
+        "cosine")(_._1)(VecCodec.Int8(absMax).prepare(_, l2 = false)) { q =>
+      val qcs = q.qcodes
+      val qns = q.qnorms
+      (blk, qs, heaps) =>
+        val ids = blk._2
+        val flat = blk._3
+        val norms = blk._4
+        val dim = flat.length / math.max(ids.length, 1)
+        // QUERY-TILED integer scan (rows outer, 4 queries inner — see
+        // the f32 kernel): one byte-row stream per tile, four integer
+        // dot chains; integer adds are associative, so this is
+        // bit-identical in any order.
+        var i = 0
+        while (i + 4 <= qs.length) {
+          val qc0 = qcs(qs(i)); val qc1 = qcs(qs(i + 1))
+          val qc2 = qcs(qs(i + 2)); val qc3 = qcs(qs(i + 3))
+          val qn0 = qns(qs(i)).toDouble; val qn1 = qns(qs(i + 1)).toDouble
+          val qn2 = qns(qs(i + 2)).toDouble; val qn3 = qns(qs(i + 3)).toDouble
+          var r = 0
+          var off = 0
+          while (r < ids.length) {
+            var d0 = 0; var d1 = 0; var d2 = 0; var d3 = 0
+            var j = 0
+            while (j < dim) {
+              val x = flat(off + j).toInt
+              d0 += x * qc0(j); d1 += x * qc1(j)
+              d2 += x * qc2(j); d3 += x * qc3(j)
+              j += 1
             }
-          var i = 0
-          while (i + 4 <= qs.length) {
-            val qc0 = qcs(qs(i)); val qc1 = qcs(qs(i + 1))
-            val qc2 = qcs(qs(i + 2)); val qc3 = qcs(qs(i + 3))
-            val qn0 = qns(qs(i)).toDouble; val qn1 = qns(qs(i + 1)).toDouble
-            val qn2 = qns(qs(i + 2)).toDouble; val qn3 = qns(qs(i + 3)).toDouble
-            var r = 0
-            var off = 0
-            while (r < ids.length) {
-              var d0 = 0; var d1 = 0; var d2 = 0; var d3 = 0
-              var j = 0
-              while (j < dim) {
-                val x = flat(off + j).toInt
-                d0 += x * qc0(j); d1 += x * qc1(j)
-                d2 += x * qc2(j); d3 += x * qc3(j)
-                j += 1
-              }
-              val norm = norms(r)
-              heaps.insert(qs(i), score(d0, norm, qn0), ids(r))
-              heaps.insert(qs(i + 1), score(d1, norm, qn1), ids(r))
-              heaps.insert(qs(i + 2), score(d2, norm, qn2), ids(r))
-              heaps.insert(qs(i + 3), score(d3, norm, qn3), ids(r))
-              r += 1
-              off += dim
-            }
-            i += 4
+            val norm = norms(r)
+            heaps.insert(qs(i), VecCodec.int8Dist(d0, norm, qn0), ids(r))
+            heaps.insert(qs(i + 1), VecCodec.int8Dist(d1, norm, qn1), ids(r))
+            heaps.insert(qs(i + 2), VecCodec.int8Dist(d2, norm, qn2), ids(r))
+            heaps.insert(qs(i + 3), VecCodec.int8Dist(d3, norm, qn3), ids(r))
+            r += 1
+            off += dim
           }
-          while (i < qs.length) {
-            val qi = qs(i)
-            val qc = qcs(qi)
-            val qn = qns(qi).toDouble
-            var r = 0
-            var off = 0
-            while (r < ids.length) {
-              var dot = 0
-              var j = 0
-              while (j < dim) { dot += flat(off + j).toInt * qc(j).toInt; j += 1 }
-              heaps.insert(qi, score(dot, norms(r), qn), ids(r))
-              r += 1
-              off += dim
-            }
-            i += 1
-          }
+          i += 4
         }
-      }
-      Iterator.single(heaps)
+        while (i < qs.length) {
+          val qi = qs(i)
+          val qc = qcs(qi)
+          val qn = qns(qi).toDouble
+          var r = 0
+          var off = 0
+          while (r < ids.length) {
+            var dot = 0
+            var j = 0
+            while (j < dim) { dot += flat(off + j).toInt * qc(j).toInt; j += 1 }
+            heaps.insert(qi, VecCodec.int8Dist(dot, norms(r), qn), ids(r))
+            r += 1
+            off += dim
+          }
+          i += 1
+        }
     }
-    val merged = reducePartials(partials, new TopK(qids.length, k), (a: TopK, b: TopK) => a merge b)
-    mergeTopK(spark, merged, qids, k)
-  }
 
   /** Half-precision serving layout: IVF bucket + packed binary16 blocks —
     * the reference's Float16 precision mode backing the index
@@ -706,46 +736,18 @@ object Ivf {
   def servingIndexF16(
       assigned: DataFrame,
       idCol: String = "id",
-      vecCol: String = "vector"): org.apache.spark.rdd.RDD[(Long, Array[Long], Array[Short])] = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    assigned
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
-        col("bucket").cast("long"))
-      .as[(Long, Array[Float], Long)]
-      .rdd
-      .mapPartitions { it =>
-        val byBucket = scala.collection.mutable.LongMap
-          .empty[(scala.collection.mutable.ArrayBuffer[Long],
-                  scala.collection.mutable.ArrayBuffer[Array[Short]])]
-        it.foreach { case (id, v, b) =>
-          val e = byBucket.getOrElseUpdate(b,
-            (scala.collection.mutable.ArrayBuffer.empty[Long],
-             scala.collection.mutable.ArrayBuffer.empty[Array[Short]]))
-          val bits = new Array[Short](v.length)
-          var j = 0
-          while (j < v.length) {
-            bits(j) = graft.functions.F16.toBits(v(j)).toShort; j += 1
-          }
-          e._1 += id
-          e._2 += bits
-        }
-        byBucket.iterator.map { case (b, (idBuf, bitsBuf)) =>
-          val ids = idBuf.toArray
-          val dim = if (bitsBuf.isEmpty) 0 else bitsBuf(0).length
-          val flat = new Array[Short](ids.length * dim)
-          var r = 0
-          while (r < ids.length) {
-            System.arraycopy(bitsBuf(r), 0, flat, r * dim, dim)
-            r += 1
-          }
-          (b, ids, flat)
-        }
+      vecCol: String = "vector"): org.apache.spark.rdd.RDD[(Long, Array[Long], Array[Short])] =
+    bucketBlocks(assigned, idCol, vecCol) { v =>
+      val bits = new Array[Short](v.length)
+      var j = 0
+      while (j < v.length) {
+        bits(j) = graft.functions.F16.toBits(v(j)).toShort; j += 1
       }
-  }
+      bits
+    } { (b, ids, rows) => (b, ids, flatten(rows)) }
 
   /** [[searchBatchedFast]] over the HALF-PRECISION index: float-centroid
-    * probe selection, then the reference's f16 Euclidean formula
+    * l2 probe selection, then the reference's f16 Euclidean formula
     * (`squaredEuclideanGoFloat16`, `distance_go.go:92-104`) — decode each
     * side to float32 (table-driven), diff², float accumulation. The query
     * is converted to f16 once up front, exactly as an f16 index stores it.
@@ -755,93 +757,77 @@ object Ivf {
       cents: Array[Array[Float]],
       queries: DataFrame,
       k: Int,
-      nProbe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    val adj = bucketAdj(cents, "l2")
-    val qrows = queries.select(col("qid"), col("qvec"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val qids = qrows.map(_._1)
+      nProbe: Int): DataFrame =
     // The effective query the f16 index compares against: round-tripped
     // through binary16, decoded back to float for the kernel loop.
-    val qf16 = qrows.map { case (_, qv) => qv.map(graft.functions.F16.roundTrip) }
-    val bucketQs =
-      probeAssignments(cents, adj, l2 = true, qrows.map(_._2), nProbe)
-    val bc = spark.sparkContext.broadcast((qf16, bucketQs))
-    val partials = index.mapPartitions { it =>
-      val (qvs, bq) = bc.value
-      val heaps = new TopK(qvs.length, k)
+    searchBlocks("searchBatchedFastF16", index, cents, queries, k, nProbe,
+        "l2")(_._1)(_.map(_.map(graft.functions.F16.roundTrip))) { qvs =>
       // Decode each probed block to float ONCE per batch (the decode is a
       // pure per-element table lookup, so caching it is bit-identical) and
       // let every probing query run the diff² loop over the float scratch —
       // the lookup cost amortizes across the queries probing the block.
       var decBuf: Array[Float] = null
-      it.foreach { case (b, ids, flat) =>
-        val qs = if (b < bq.length) bq(b.toInt) else null
-        if (qs != null && ids.length > 0) {
-          val dim = flat.length / ids.length
-          if (decBuf == null || decBuf.length < flat.length)
-            decBuf = new Array[Float](flat.length)
-          var p = 0
-          while (p < flat.length) {
-            decBuf(p) = graft.functions.F16.toFloat(flat(p) & 0xffff); p += 1
-          }
-          // QUERY-TILED diff² (rows outer, 4 queries inner — see the f32
-          // kernel): each decoded row streams once per tile; every
-          // per-query sum still accumulates sequentially in j, keeping the
-          // BIT-FOR-BIT parity with [[graft.functions.F16.euclideanSq]]
-          // (the reference's sequential float accumulation) that IvfSpec's
-          // f16 case pins.
-          var i = 0
-          while (i + 4 <= qs.length) {
-            val qv0 = qvs(qs(i)); val qv1 = qvs(qs(i + 1))
-            val qv2 = qvs(qs(i + 2)); val qv3 = qvs(qs(i + 3))
-            var r = 0
-            var off = 0
-            while (r < ids.length) {
-              var s0 = 0f; var s1 = 0f; var s2 = 0f; var s3 = 0f
-              var j = 0
-              while (j < dim) {
-                val x = decBuf(off + j)
-                val a = x - qv0(j); val b = x - qv1(j)
-                val c = x - qv2(j); val d = x - qv3(j)
-                s0 += a * a; s1 += b * b; s2 += c * c; s3 += d * d
-                j += 1
-              }
-              heaps.insert(qs(i), s0.toDouble, ids(r))
-              heaps.insert(qs(i + 1), s1.toDouble, ids(r))
-              heaps.insert(qs(i + 2), s2.toDouble, ids(r))
-              heaps.insert(qs(i + 3), s3.toDouble, ids(r))
-              r += 1
-              off += dim
-            }
-            i += 4
-          }
-          while (i < qs.length) {
-            val qi = qs(i)
-            val qv = qvs(qi)
-            var r = 0
-            var off = 0
-            while (r < ids.length) {
-              var sum = 0f
-              var j = 0
-              while (j < dim) {
-                val d = decBuf(off + j) - qv(j)
-                sum += d * d; j += 1
-              }
-              heaps.insert(qi, sum.toDouble, ids(r))
-              r += 1
-              off += dim
-            }
-            i += 1
-          }
+      (blk, qs, heaps) =>
+        val ids = blk._2
+        val flat = blk._3
+        val dim = flat.length / math.max(ids.length, 1)
+        if (decBuf == null || decBuf.length < flat.length)
+          decBuf = new Array[Float](flat.length)
+        val dec = decBuf
+        var p = 0
+        while (p < flat.length) {
+          dec(p) = graft.functions.F16.toFloat(flat(p) & 0xffff); p += 1
         }
-      }
-      Iterator.single(heaps)
+        // QUERY-TILED diff² (rows outer, 4 queries inner — see the f32
+        // kernel): each decoded row streams once per tile; every
+        // per-query sum still accumulates sequentially in j, keeping the
+        // BIT-FOR-BIT parity with [[graft.functions.F16.euclideanSq]]
+        // (the reference's sequential float accumulation) that IvfSpec's
+        // f16 case pins.
+        var i = 0
+        while (i + 4 <= qs.length) {
+          val qv0 = qvs(qs(i)); val qv1 = qvs(qs(i + 1))
+          val qv2 = qvs(qs(i + 2)); val qv3 = qvs(qs(i + 3))
+          var r = 0
+          var off = 0
+          while (r < ids.length) {
+            var s0 = 0f; var s1 = 0f; var s2 = 0f; var s3 = 0f
+            var j = 0
+            while (j < dim) {
+              val x = dec(off + j)
+              val a = x - qv0(j); val b = x - qv1(j)
+              val c = x - qv2(j); val d = x - qv3(j)
+              s0 += a * a; s1 += b * b; s2 += c * c; s3 += d * d
+              j += 1
+            }
+            heaps.insert(qs(i), s0.toDouble, ids(r))
+            heaps.insert(qs(i + 1), s1.toDouble, ids(r))
+            heaps.insert(qs(i + 2), s2.toDouble, ids(r))
+            heaps.insert(qs(i + 3), s3.toDouble, ids(r))
+            r += 1
+            off += dim
+          }
+          i += 4
+        }
+        while (i < qs.length) {
+          val qi = qs(i)
+          val qv = qvs(qi)
+          var r = 0
+          var off = 0
+          while (r < ids.length) {
+            var sum = 0f
+            var j = 0
+            while (j < dim) {
+              val d = dec(off + j) - qv(j)
+              sum += d * d; j += 1
+            }
+            heaps.insert(qi, sum.toDouble, ids(r))
+            r += 1
+            off += dim
+          }
+          i += 1
+        }
     }
-    val merged = reducePartials(partials, new TopK(qids.length, k), (a: TopK, b: TopK) => a merge b)
-    mergeTopK(spark, merged, qids, k)
-  }
 
   // ---------------------------------------------------------------------
   // √N-scale build path: primitive-array KMeans + assignment.
@@ -872,23 +858,18 @@ object Ivf {
     best
   }
 
-  private def invNorms(cents: Array[Array[Float]]): Array[Float] =
-    cents.map { cv =>
-      var s = 0.0; var j = 0
-      while (j < cv.length) { s += cv(j).toDouble * cv(j); j += 1 }
-      if (s == 0.0) 0f else (1.0 / math.sqrt(s)).toFloat
-    }
-
-  private def halfNormSqs(cents: Array[Array[Float]]): Array[Float] =
-    cents.map { cv =>
-      var s = 0.0; var j = 0
-      while (j < cv.length) { s += cv(j).toDouble * cv(j); j += 1 }
-      (s / 2.0).toFloat
-    }
-
-  /** Centroid score adjustments for [[bestBucket]] under `metric`. */
+  /** Centroid score adjustments for [[bestBucket]] and [[probeAssignments]]
+    * under `metric`: half the squared norm for l2, the inverse norm (0 for
+    * a zero centroid) for cosine.
+    */
   private[search] def bucketAdj(cents: Array[Array[Float]], metric: String): Array[Float] =
-    if (metric == "l2") halfNormSqs(cents) else invNorms(cents)
+    cents.map { cv =>
+      var s = 0.0; var j = 0
+      while (j < cv.length) { s += cv(j).toDouble * cv(j); j += 1 }
+      if (metric == "l2") (s / 2.0).toFloat
+      else if (s == 0.0) 0f
+      else (1.0 / math.sqrt(s)).toFloat
+    }
 
   /** Probe selection for a serving batch: the nProbe lexicographically
     * (score, centroid-id)-smallest buckets per query, returned as

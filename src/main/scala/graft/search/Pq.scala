@@ -151,11 +151,11 @@ object Pq {
         col("_e.distance").as("dist"), col("_e.rank").as("rank"))
 
   // ------------------------------------------------------------------
-  // Fast path — the serving-scale twin of Ivf.searchBatchedFast, for the
-  // bench and for corpora where the DataFrame ADC plan's per-row array
-  // overhead dominates. Same structure as the f32/int8/f16 serving
-  // indexes: bucket-major primitive blocks, driver-side probe selection,
-  // one scan stage with per-partition bounded top-k, treeReduce merge.
+  // Residual IVF-PQ serving, for the bench and for corpora where the
+  // DataFrame ADC plan's per-row array overhead dominates: a codec on the
+  // shared bucket-block core — [[Ivf.bucketBlocks]] with a residual-PQ
+  // packer builds the index, [[Ivf.searchBlocks]] with a per-block-LUT
+  // kernel serves a batch.
   // ------------------------------------------------------------------
 
   /** Per-sub-space KMeans codebook `[m][nCodes][subDim]` — the trained
@@ -200,131 +200,6 @@ object Pq {
     }
   }
 
-  /** Bucket-major packed PQ index: (bucket, ids, codes) blocks with codes
-    * row-major, ONE BYTE per sub-space — 4·dim/m × compression vs the f32
-    * blocks (128d, m=16 ⇒ 32×). Encoding runs inside the same pass that
-    * packs the blocks.
-    */
-  def servingIndexPq(assigned: DataFrame, codebook: Array[Array[Array[Float]]],
-      idCol: String = "id", vecCol: String = "vector")
-      : org.apache.spark.rdd.RDD[(Long, Array[Long], Array[Byte])] = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val m = codebook.length
-    val bc = spark.sparkContext.broadcast(codebook)
-    assigned
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
-        col("bucket").cast("long"))
-      .as[(Long, Array[Float], Long)]
-      .rdd
-      .mapPartitions { it =>
-        val cb = bc.value
-        val byBucket = scala.collection.mutable.LongMap
-          .empty[(scala.collection.mutable.ArrayBuffer[Long],
-                  scala.collection.mutable.ArrayBuffer[Array[Float]])]
-        it.foreach { case (id, v, b) =>
-          val e = byBucket.getOrElseUpdate(b,
-            (scala.collection.mutable.ArrayBuffer.empty[Long],
-             scala.collection.mutable.ArrayBuffer.empty[Array[Float]]))
-          e._1 += id
-          e._2 += v
-        }
-        byBucket.iterator.map { case (b, (idBuf, vecBuf)) =>
-          val ids = idBuf.toArray
-          val codes = new Array[Byte](ids.length * m)
-          var r = 0
-          while (r < ids.length) {
-            encodeVec(vecBuf(r), cb, codes, r * m)
-            r += 1
-          }
-          (b, ids, codes)
-        }
-      }
-  }
-
-  /** Batched IVF-PQ serving: driver-side probe selection (squared-L2 rank
-    * over the IVF centroids), per-query flat ADC LUT, ONE scan stage over
-    * the probed buckets' code blocks (m table reads + adds per candidate
-    * — no float vector touched), per-partition bounded top-k, treeReduce
-    * merge. Returns (qid, id, distance, rank) with ADC distances.
-    */
-  def searchBatchedFastPq(
-      index: org.apache.spark.rdd.RDD[(Long, Array[Long], Array[Byte])],
-      cents: Array[Array[Float]],
-      codebook: Array[Array[Array[Float]]],
-      queries: DataFrame,
-      k: Int,
-      nProbe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    val m = codebook.length
-    val subDim = codebook(0)(0).length
-    val nCodes = codebook(0).length
-    val adj = Ivf.bucketAdj(cents, "l2")
-    val qrows = queries.select(col("qid"), col("qvec"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val qids = qrows.map(_._1)
-    // bucket → indices of the queries probing it (null = unprobed).
-    val bucketQs =
-      Ivf.probeAssignments(cents, adj, l2 = true, qrows.map(_._2), nProbe)
-    // Flat per-query LUTs (sub-major, code-minor) — nq × m × nCodes
-    // doubles; built on the driver where probe selection already runs.
-    val luts = qrows.map { case (_, qv) =>
-      val lut = new Array[Double](m * nCodes)
-      var s = 0
-      while (s < m) {
-        val codes = codebook(s)
-        val base = s * subDim
-        var c = 0
-        while (c < nCodes) {
-          val cv = codes(c)
-          var d = 0.0
-          var j = 0
-          while (j < subDim) {
-            val x = qv(base + j).toDouble - cv(j); d += x * x; j += 1
-          }
-          lut(s * nCodes + c) = d
-          c += 1
-        }
-        s += 1
-      }
-      lut
-    }
-    val bc = spark.sparkContext.broadcast((luts, bucketQs))
-    val partials = index.mapPartitions { it =>
-      val (ls, bq) = bc.value
-      val heaps = new Ivf.TopK(ls.length, k)
-      it.foreach { case (b, ids, codes) =>
-        val qs = if (b < bq.length) bq(b.toInt) else null
-        if (qs != null && ids.length > 0) {
-          var i = 0
-          while (i < qs.length) {
-            val qi = qs(i)
-            val lut = ls(qi)
-            var r = 0
-            var off = 0
-            while (r < ids.length) {
-              var d = 0.0
-              var s = 0
-              while (s < m) {
-                d += lut(s * nCodes + (codes(off + s) & 0xFF))
-                s += 1
-              }
-              heaps.insert(qi, d, ids(r))
-              r += 1
-              off += m
-            }
-            i += 1
-          }
-        }
-      }
-      Iterator.single(heaps)
-    }
-    val merged = Ivf.reducePartials(partials,
-      new Ivf.TopK(qids.length, k), (a: Ivf.TopK, b: Ivf.TopK) => a merge b)
-    Ivf.mergeTopK(spark, merged, qids, k)
-  }
-
   /** Residual vectors `v − cents[bucket]` as a typed pass — the training
     * input for residual codebooks (IVF-ADC: quantizing the residual
     * removes the bucket offset from every code, which is what keeps PQ
@@ -352,63 +227,46 @@ object Pq {
       .toDF(idCol, vecCol)
   }
 
-  /** Bucket-major packed RESIDUAL-PQ index: codes quantize
-    * `v − cents[bucket]` (encoding runs in the packing pass; same block
-    * layout and byte budget as [[servingIndexPq]]).
+  /** Bucket-major packed RESIDUAL-PQ index: (bucket, ids, codes) blocks,
+    * codes row-major, ONE BYTE per sub-space — 4·dim/m × compression vs the
+    * f32 blocks (128d, m=16 ⇒ 32×). The codes quantize `v − cents[bucket]`;
+    * encoding runs in [[Ivf.bucketBlocks]]' packing pass. One block per
+    * bucket (not one per bucket×partition): the scan builds a per-(query,
+    * bucket) LUT, so bucket fragments would multiply that build by the
+    * partition count. One build-time shuffle buys LUT amortization over the
+    * whole bucket.
     */
   def servingIndexPqResidual(assigned: DataFrame,
       cents: Array[Array[Float]], codebook: Array[Array[Array[Float]]],
       idCol: String = "id", vecCol: String = "vector")
       : org.apache.spark.rdd.RDD[(Long, Array[Long], Array[Byte])] = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
     val m = codebook.length
-    val bc = spark.sparkContext.broadcast((cents, codebook))
-    assigned
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
-        col("bucket").cast("long"))
-      // One block per bucket (not one per bucket×partition): the scan
-      // builds a per-(query, bucket) LUT, so bucket fragments would
-      // multiply that build by the partition count. One build-time
-      // shuffle buys LUT amortization over the whole bucket.
-      .repartition(col("bucket"))
-      .as[(Long, Array[Float], Long)]
-      .rdd
-      .mapPartitions { it =>
+    val bc = assigned.sparkSession.sparkContext.broadcast((cents, codebook))
+    Ivf.bucketBlocks(assigned, idCol, vecCol, wholeBuckets = true)(v => v) {
+      (b, ids, rows) =>
         val (cs, cb) = bc.value
-        val byBucket = scala.collection.mutable.LongMap
-          .empty[(scala.collection.mutable.ArrayBuffer[Long],
-                  scala.collection.mutable.ArrayBuffer[Array[Float]])]
-        it.foreach { case (id, v, b) =>
-          val e = byBucket.getOrElseUpdate(b,
-            (scala.collection.mutable.ArrayBuffer.empty[Long],
-             scala.collection.mutable.ArrayBuffer.empty[Array[Float]]))
-          e._1 += id
-          e._2 += v
+        val cv = cs(b.toInt)
+        val resid = new Array[Float](cv.length)
+        val codes = new Array[Byte](ids.length * m)
+        var r = 0
+        while (r < ids.length) {
+          val v = rows(r)
+          var j = 0
+          while (j < v.length) { resid(j) = v(j) - cv(j); j += 1 }
+          encodeVec(resid, cb, codes, r * m)
+          r += 1
         }
-        val resid = new Array[Float](if (cs.isEmpty) 0 else cs(0).length)
-        byBucket.iterator.map { case (b, (idBuf, vecBuf)) =>
-          val ids = idBuf.toArray
-          val cv = cs(b.toInt)
-          val codes = new Array[Byte](ids.length * m)
-          var r = 0
-          while (r < ids.length) {
-            val v = vecBuf(r)
-            var j = 0
-            while (j < v.length) { resid(j) = v(j) - cv(j); j += 1 }
-            encodeVec(resid, cb, codes, r * m)
-            r += 1
-          }
-          (b, ids, codes)
-        }
-      }
+        (b, ids, codes)
+    }
   }
 
-  /** Batched residual-IVF-PQ serving. Identical shape to
-    * [[searchBatchedFastPq]], except the ADC LUT is per (query, bucket).
-    * The LUT builds through the IVFADC decomposition (Jégou, Douze,
-    * Schmid, "Product Quantization for Nearest Neighbor Search", TPAMI
-    * 2011, §IV-B):
+  /** Batched residual-IVF-PQ serving through [[Ivf.searchBlocks]]:
+    * squared-L2 probe selection over the IVF centroids, then ONE scan
+    * stage over the probed buckets' code blocks (m table reads + adds per
+    * candidate — no float vector touched). Returns (qid, id, distance,
+    * rank) with ADC distances. The ADC LUT is per (query, bucket) and
+    * builds through the IVFADC decomposition (Jégou, Douze, Schmid,
+    * "Product Quantization for Nearest Neighbor Search", TPAMI 2011, §IV-B):
     *
     *   ‖(q−c)_s − e‖² = ‖(q−c)_s‖² − 2⟨q_s,e⟩ + 2⟨c_s,e⟩ + ‖e‖²
     *
@@ -434,115 +292,100 @@ object Pq {
       queries: DataFrame,
       k: Int,
       nProbe: Int): DataFrame = {
-    val spark = queries.sparkSession
     val m = codebook.length
     val subDim = codebook(0)(0).length
     val nCodes = codebook(0).length
-    val adj = Ivf.bucketAdj(cents, "l2")
-    val qrows = queries.select(col("qid"), col("qvec"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val qids = qrows.map(_._1)
-    val qvecs = qrows.map(_._2)
-    val bucketQs =
-      Ivf.probeAssignments(cents, adj, l2 = true, qvecs, nProbe)
-    // Per-query cross-term tables Q[s·nCodes + c] = −2⟨q_s, e_s(c)⟩,
-    // built once per query on the driver's cores (like probe selection).
-    val qluts = new Array[Array[Double]](qvecs.length)
-    java.util.stream.IntStream.range(0, qvecs.length).parallel().forEach { qi =>
-      val qv = qvecs(qi)
-      val t = new Array[Double](m * nCodes)
-      var s = 0
-      while (s < m) {
-        val sub = codebook(s)
-        val base = s * subDim
-        var c = 0
-        while (c < nCodes) {
-          val e = sub(c)
-          var dot = 0.0
-          var j = 0
-          while (j < subDim) { dot += qv(base + j).toDouble * e(j); j += 1 }
-          t(s * nCodes + c) = -2.0 * dot
-          c += 1
+    Ivf.searchBlocks("searchBatchedFastPqResidual", index, cents, queries, k,
+        nProbe, "l2")(_._1) { qvecs =>
+      // Per-query cross-term tables Q[s·nCodes + c] = −2⟨q_s, e_s(c)⟩,
+      // built once per query on the driver's cores (like probe selection).
+      val qluts = new Array[Array[Double]](qvecs.length)
+      java.util.stream.IntStream.range(0, qvecs.length).parallel().forEach { qi =>
+        val qv = qvecs(qi)
+        val t = new Array[Double](m * nCodes)
+        var s = 0
+        while (s < m) {
+          val sub = codebook(s)
+          val base = s * subDim
+          var c = 0
+          while (c < nCodes) {
+            val e = sub(c)
+            var dot = 0.0
+            var j = 0
+            while (j < subDim) { dot += qv(base + j).toDouble * e(j); j += 1 }
+            t(s * nCodes + c) = -2.0 * dot
+            c += 1
+          }
+          s += 1
         }
-        s += 1
+        qluts(qi) = t
       }
-      qluts(qi) = t
-    }
-    val bc = spark.sparkContext.broadcast(
-      (qvecs, qluts, bucketQs, cents, codebook))
-    val partials = index.mapPartitions { it =>
-      val (qvs, qls, bq, cs, cb) = bc.value
-      val heaps = new Ivf.TopK(qvs.length, k)
+      (qvecs, qluts, cents, codebook)
+    } { case (qvs, qls, cs, cb) =>
       val cLut = new Array[Double](m * nCodes)
       val lut = new Array[Double](m * nCodes)
-      it.foreach { case (b, ids, codes) =>
-        val qs = if (b < bq.length) bq(b.toInt) else null
-        if (qs != null && ids.length > 0) {
-          val cv = cs(b.toInt)
-          // Per-block term 2⟨c_s, e⟩ + ‖e‖², once per batch.
-          var s = 0
-          while (s < m) {
-            val sub = cb(s)
-            val base = s * subDim
-            var c = 0
-            while (c < nCodes) {
-              val e = sub(c)
-              var dot = 0.0
-              var nsq = 0.0
-              var j = 0
-              while (j < subDim) {
-                val ev = e(j).toDouble
-                dot += cv(base + j).toDouble * ev
-                nsq += ev * ev
-                j += 1
-              }
-              cLut(s * nCodes + c) = 2.0 * dot + nsq
-              c += 1
-            }
-            s += 1
-          }
-          var i = 0
-          while (i < qs.length) {
-            val qi = qs(i)
-            val qv = qvs(qi)
-            // Scalar ‖q − c‖² folds every residual norm term at once —
-            // summed over the CODE-COVERED dims only (m·subDim), so a
-            // non-covering codebook (dim not divisible by subDim) keeps
-            // the exact metric encodeVec and the direct LUT build used:
-            // uncovered tail dims never spend code budget and never
-            // score (r16 self-review).
-            var qc = 0.0
+      (blk, qs, heaps) =>
+        val b = blk._1
+        val ids = blk._2
+        val codes = blk._3
+        val cv = cs(b.toInt)
+        // Per-block term 2⟨c_s, e⟩ + ‖e‖², once per batch.
+        var s = 0
+        while (s < m) {
+          val sub = cb(s)
+          val base = s * subDim
+          var c = 0
+          while (c < nCodes) {
+            val e = sub(c)
+            var dot = 0.0
+            var nsq = 0.0
             var j = 0
-            val covered = m * subDim
-            while (j < covered) {
-              val x = qv(j).toDouble - cv(j); qc += x * x; j += 1
+            while (j < subDim) {
+              val ev = e(j).toDouble
+              dot += cv(base + j).toDouble * ev
+              nsq += ev * ev
+              j += 1
             }
-            val ql = qls(qi)
-            var e2 = 0
-            while (e2 < lut.length) { lut(e2) = ql(e2) + cLut(e2); e2 += 1 }
-            var r = 0
-            var off = 0
-            while (r < ids.length) {
-              var d = qc
-              var s2 = 0
-              while (s2 < m) {
-                d += lut(s2 * nCodes + (codes(off + s2) & 0xFF))
-                s2 += 1
-              }
-              heaps.insert(qi, d, ids(r))
-              r += 1
-              off += m
-            }
-            i += 1
+            cLut(s * nCodes + c) = 2.0 * dot + nsq
+            c += 1
           }
+          s += 1
         }
-      }
-      Iterator.single(heaps)
+        var i = 0
+        while (i < qs.length) {
+          val qi = qs(i)
+          val qv = qvs(qi)
+          // Scalar ‖q − c‖² folds every residual norm term at once —
+          // summed over the CODE-COVERED dims only (m·subDim), so a
+          // non-covering codebook (dim not divisible by subDim) keeps
+          // the exact metric encodeVec and the direct LUT build used:
+          // uncovered tail dims never spend code budget and never
+          // score (r16 self-review).
+          var qc = 0.0
+          var j = 0
+          val covered = m * subDim
+          while (j < covered) {
+            val x = qv(j).toDouble - cv(j); qc += x * x; j += 1
+          }
+          val ql = qls(qi)
+          var e2 = 0
+          while (e2 < lut.length) { lut(e2) = ql(e2) + cLut(e2); e2 += 1 }
+          var r = 0
+          var off = 0
+          while (r < ids.length) {
+            var d = qc
+            var s2 = 0
+            while (s2 < m) {
+              d += lut(s2 * nCodes + (codes(off + s2) & 0xFF))
+              s2 += 1
+            }
+            heaps.insert(qi, d, ids(r))
+            r += 1
+            off += m
+          }
+          i += 1
+        }
     }
-    val merged = Ivf.reducePartials(partials,
-      new Ivf.TopK(qids.length, k), (a: Ivf.TopK, b: Ivf.TopK) => a merge b)
-    Ivf.mergeTopK(spark, merged, qids, k)
   }
 
   /** Two-stage PQ serving: ADC selects rerankR candidates from codes

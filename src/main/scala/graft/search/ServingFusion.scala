@@ -1535,13 +1535,10 @@ object ServingFusion {
     fusedTopKCombined(combined, cents, queries, alpha0, k, nProbe, kVec,
       "cosine", tombstones, decOverrides)(VecCodec.Int8(absMax))
 
-  /** Validate a served batch once, then prepare it for the codec's kernel
-    * and pick its probes on the driver (the descent analogue), inverted to
-    * per-query ascending bucket lists for the partition scan. The metric
-    * must be `"cosine"` or `"l2"` (the int8 codec rejects `"l2"`), and
-    * every query vector must be present and as long as the centroids — a
-    * shorter one would fail inside [[Ivf.probeAssignments]]' parallel
-    * loop, a longer one would score only its prefix.
+  /** Validate a served batch once ([[Ivf.checkBatch]]; the int8 codec
+    * also rejects `"l2"`), then prepare it for the codec's kernel and pick
+    * its probes on the driver (the descent analogue), inverted to
+    * per-query ascending bucket lists for the partition scan.
     */
   private def prepareBatch[S <: CombinedBlocks](
       codec: VecCodec[S],
@@ -1551,18 +1548,7 @@ object ServingFusion {
       qvecs: Array[Array[Float]],
       metric: String,
       nProbe: Int): (VecQueries[S], Array[Array[Int]]) = {
-    require(metric == "cosine" || metric == "l2",
-      s"$op: unknown metric '$metric' (combined serving takes \"cosine\" " +
-        "or \"l2\")")
-    val dim = if (cents.isEmpty) -1 else cents(0).length
-    qids.indices.foreach { i =>
-      require(qvecs(i) != null, s"$op: query ${qids(i)} has no query " +
-        "vector (combined serving scans vectors; route tokens-only work " +
-        "through fusedTopK)")
-      require(dim < 0 || qvecs(i).length == dim,
-        s"$op: query ${qids(i)} has ${qvecs(i).length} dimensions, the " +
-          s"centroids $dim")
-    }
+    Ivf.checkBatch(op, cents, qids, qvecs, metric)
     val l2 = metric == "l2"
     val prepared = codec.prepare(qvecs, l2)
     (prepared, invertProbes(Ivf.probeAssignments(cents,

@@ -111,7 +111,7 @@ object VecCodec {
     private[search] def meta: Seq[(String, Double)] = Nil
 
     private[search] def prepare(qvecs: Array[Array[Float]],
-        l2: Boolean): VecQueries[CombinedShard] =
+        l2: Boolean): F32Queries =
       new F32Queries(qvecs, if (l2) qvecs.map { qv =>
         var s = 0.0; var j = 0
         while (j < qv.length) { s += qv(j).toDouble * qv(j); j += 1 }
@@ -121,9 +121,9 @@ object VecCodec {
     private[search] def floats(v: Vec): Array[Float] = v
   }
 
-  /** `qsq` is null for cosine. */
-  private final class F32Queries(qvecs: Array[Array[Float]], qsq: Array[Double])
-      extends VecQueries[CombinedShard] {
+  /** `qsq` (each query's ‖q‖²) is null for cosine. */
+  private[search] final class F32Queries(val qvecs: Array[Array[Float]],
+      val qsq: Array[Double]) extends VecQueries[CombinedShard] {
     def dist(s: CombinedShard, r: Int, qi: Int): Double = {
       val qv = qvecs(qi)
       val flat = s.flat
@@ -132,17 +132,39 @@ object VecCodec {
       var dot = 0f
       var j = 0
       while (j < dim) { dot += flat(off + j) * qv(j); j += 1 }
-      if (qsq != null) s.rowSq(r).toDouble - 2.0d * dot + qsq(qi)
-      else 1.0d - dot
+      if (qsq != null) l2Dist(s.rowSq(r), dot, qsq(qi)) else cosineDist(dot)
     }
   }
+
+  /** The f32 cosine finish over normalized vectors: `1 − dot`. Every f32
+    * kernel ([[F32Queries]], [[Ivf.searchBatchedFast]]) scores through it.
+    */
+  private[search] def cosineDist(dot: Float): Double = 1.0d - dot
+
+  /** The f32 squared-L2 finish `‖x‖² − 2x·q + ‖q‖²`, from the row's
+    * float-accumulated `xsq` and the query's double `qsq`.
+    */
+  private[search] def l2Dist(xsq: Float, dot: Float, qsq: Double): Double =
+    xsq.toDouble - 2.0d * dot + qsq
+
+  /** The int8 score `1 − clamp(dot/(‖x‖·‖q‖))` over an integer code dot; a
+    * zero-norm side scores 1.0. Every int8 kernel ([[Int8Queries]],
+    * [[Ivf.searchBatchedFastInt8]]) scores through it.
+    */
+  private[search] def int8Dist(dot: Int, norm: Float, qn: Double): Double =
+    if (norm == 0f || qn == 0.0) 1.0
+    else {
+      var sim = dot.toDouble / (norm.toDouble * qn)
+      if (sim > 1.0) sim = 1.0
+      if (sim < -1.0) sim = -1.0
+      1.0 - sim
+    }
 
   /** int8 codes ([[Ivf.quantizeArray]] against the frozen `absMax`) plus
     * each row's [[Ivf.int8Norm]]: 4× less resident vector memory. Cosine
     * only, like the reference's int8 mode. Queries are quantized once on
-    * the driver; a row scores `1 − clamp(dot/(‖x‖·‖q‖))` with an integer
-    * dot, as [[Ivf.searchBatchedFastInt8]] does (a zero-norm side scores
-    * 1.0). Pool entries carry codes, and MMR's similarity over raw code
+    * the driver; a row scores [[int8Dist]] over an integer dot, as
+    * [[Ivf.searchBatchedFastInt8]] does. Pool entries carry codes, and MMR's similarity over raw code
     * values is the int8-domain cosine: the `absMax/127` dequantization
     * factor cancels in `dot/(‖a‖·‖b‖)`.
     */
@@ -188,7 +210,7 @@ object VecCodec {
     private[search] def meta: Seq[(String, Double)] = Seq("abs_max" -> absMax)
 
     private[search] def prepare(qvecs: Array[Array[Float]],
-        l2: Boolean): VecQueries[CombinedShardInt8] = {
+        l2: Boolean): Int8Queries = {
       require(!l2, "metric \"l2\" needs the f32 codec: int8 combined serving " +
         "is cosine-only")
       val qcodes = qvecs.map(Ivf.quantizeArray(_, absMax))
@@ -204,8 +226,8 @@ object VecCodec {
     }
   }
 
-  private final class Int8Queries(qcodes: Array[Array[Byte]], qnorms: Array[Float])
-      extends VecQueries[CombinedShardInt8] {
+  private[search] final class Int8Queries(val qcodes: Array[Array[Byte]],
+      val qnorms: Array[Float]) extends VecQueries[CombinedShardInt8] {
     def dist(s: CombinedShardInt8, r: Int, qi: Int): Double = {
       val qc = qcodes(qi)
       val codes = s.codes
@@ -214,15 +236,7 @@ object VecCodec {
       var dot = 0
       var j = 0
       while (j < dim) { dot += codes(off + j).toInt * qc(j).toInt; j += 1 }
-      val norm = s.norms(r)
-      val qn = qnorms(qi).toDouble
-      if (norm == 0f || qn == 0.0) 1.0
-      else {
-        var sim = dot.toDouble / (norm.toDouble * qn)
-        if (sim > 1.0) sim = 1.0
-        if (sim < -1.0) sim = -1.0
-        1.0 - sim
-      }
+      int8Dist(dot, s.norms(r), qnorms(qi).toDouble)
     }
   }
 }

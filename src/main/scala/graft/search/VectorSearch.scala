@@ -220,15 +220,6 @@ object VectorSearch {
       }
   }
 
-  /** Serving-path binary search — [[Ivf.searchBatchedFast]]'s discipline
-    * applied to the 1-bit codes: queries are driver-bounded (packed on the
-    * driver, broadcast once), candidates come from ONE xor/popcount pass
-    * over the primitive blocks into per-query bounded insertion buffers,
-    * partials merge through [[Ivf.reducePartials]] (one reduce job at
-    * serving partition counts, treeReduce above it), and only the nq×R
-    * candidates hydrate f32 vectors for the exact rerank. No shuffle of
-    * the corpus at any stage; resident serving state is 1/32 of f32.
-    */
   /** Stage 1 of the serving path standalone: top-`rerank` candidates per
     * query from the primitive sign-word blocks — one xor/popcount pass
     * into per-query bounded insertion buffers, partials merged through
@@ -270,11 +261,22 @@ object VectorSearch {
       }
       Iterator.single(heaps)
     }
-    val merged = Ivf.reducePartials(partials,
-      new Ivf.TopK(qids.length, rerank), (a: Ivf.TopK, b: Ivf.TopK) => a merge b)
+    val merged =
+      try Ivf.reducePartials(partials, new Ivf.TopK(qids.length, rerank),
+        (a: Ivf.TopK, b: Ivf.TopK) => a merge b)
+      finally bc.destroy()
     Ivf.mergeTopK(spark, merged, qids, rerank)
   }
 
+  /** Serving-path binary search — [[Ivf.searchBatchedFast]]'s discipline
+    * applied to the 1-bit codes: queries are driver-bounded (packed on the
+    * driver, broadcast once), candidates come from ONE xor/popcount pass
+    * over the primitive blocks into per-query bounded insertion buffers,
+    * partials merge through [[Ivf.reducePartials]] (one reduce job at
+    * serving partition counts, treeReduce above it), and only the nq×R
+    * candidates hydrate f32 vectors for the exact rerank. No shuffle of
+    * the corpus at any stage; resident serving state is 1/32 of f32.
+    */
   def searchBatchedFastBinary(
       index: org.apache.spark.rdd.RDD[(Array[Long], Array[Long], Int)],
       vectors: DataFrame,

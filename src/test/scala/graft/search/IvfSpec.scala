@@ -291,4 +291,85 @@ class IvfSpec extends SparkSpec {
       .filter(col("bucket") =!= col("qbucket")).count()
     assert(bad === 0)
   }
+
+  /** A small local corpus (40 4-d vectors, 4 centroids) and its f32, int8
+    * and f16 serving indexes, cached. Local query frames collect without a
+    * job, so a search's only broadcasts are its own.
+    */
+  private lazy val small = {
+    val s = spark
+    import s.implicits._
+    val vecs = (0 until 40).map { i =>
+      (i.toLong, Array.tabulate(4)(j => math.sin(i * 1.3 + j * 0.7).toFloat))
+    }
+    val cents = Array.tabulate(4)(c => vecs(c * 10)._2)
+    val assigned = Ivf.assignFast(vecs.toDF("id", "vector"), cents).cache()
+    def cached[T](r: org.apache.spark.rdd.RDD[T]) = { r.cache(); r.count(); r }
+    (cents, assigned, cached(Ivf.servingIndex(assigned)),
+      cached(Ivf.servingIndexInt8(assigned, 1.0)),
+      cached(Ivf.servingIndexF16(assigned)))
+  }
+
+  private def localQueries(qs: (Long, Array[Float])*) = {
+    val s = spark
+    import s.implicits._
+    qs.toDF("qid", "qvec")
+  }
+
+  private val codecSearches
+      : Seq[(String, org.apache.spark.sql.DataFrame => Any)] = Seq(
+    "f32" -> (q => Ivf.searchBatchedFast(small._3, small._1, q, k = 3,
+      nProbe = 2)),
+    "int8" -> (q => Ivf.searchBatchedFastInt8(small._4, small._1, q, k = 3,
+      nProbe = 2, absMax = 1.0)),
+    "f16" -> (q => Ivf.searchBatchedFastF16(small._5, small._1, q, k = 3,
+      nProbe = 2)))
+
+  for ((codec, search) <- codecSearches)
+    test(s"$codec batched search rejects a null or wrong-length query vector") {
+      def rejected(q: org.apache.spark.sql.DataFrame): String =
+        intercept[IllegalArgumentException](search(q)).getMessage
+      for (dim <- Seq(3, 5))
+        assert(rejected(localQueries((7L, Array.fill(dim)(0.5f))))
+          .contains(s"query 7 has $dim dimensions, the centroids 4"))
+      assert(rejected(localQueries((7L, null: Array[Float])))
+        .contains("query 7 has no query vector"))
+    }
+
+  test("f32 batched search rejects a metric other than cosine or l2") {
+    val (cents, _, f32, _, _) = small
+    val q = localQueries((7L, Array.fill(4)(0.5f)))
+    for (m <- Seq("euclidean", "dot", "L2"))
+      assert(intercept[IllegalArgumentException](Ivf.searchBatchedFast(f32,
+        cents, q, k = 3, nProbe = 2, metric = m)).getMessage
+        .contains(s"unknown metric '$m'"))
+  }
+
+  test("batched searches destroy their query broadcast") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val (cents, assigned, _, _, _) = small
+    val sc = spark.sparkContext
+    val q = localQueries((1L, Array(0.1f, 0.9f, -0.3f, 0.2f)),
+      (2L, Array(-0.5f, 0.4f, 0.6f, -0.1f)))
+    // m = 2 sub-spaces of 2 dims, 4 codes each.
+    val cb = Array.tabulate(2, 4)((s, c) => Array(c * 0.1f - s, s * 0.2f))
+    val pq = Pq.servingIndexPqResidual(assigned, cents, cb).cache()
+    val bin = VectorSearch.servingIndexBinary(assigned).cache()
+    pq.count(); bin.count()
+    val searches = codecSearches ++ Seq[(String, org.apache.spark.sql.DataFrame => Any)](
+      "residual pq" -> (q => Pq.searchBatchedFastPqResidual(pq, cents, cb, q,
+        k = 3, nProbe = 2)),
+      "binary" -> (q => VectorSearch.binaryServingCandidates(bin, q,
+        rerank = 3)))
+    for ((name, search) <- searches) {
+      val before = org.apache.spark.TestBroadcasts.live(sc)
+      search(q)
+      eventually(timeout(10.seconds), interval(50.millis)) {
+        val left = org.apache.spark.TestBroadcasts.live(sc) -- before
+        assert(left.isEmpty, s"$name left broadcasts $left")
+      }
+    }
+    pq.unpersist(); bin.unpersist()
+  }
 }

@@ -120,51 +120,6 @@ class PqSpec extends SparkSpec {
     assert(rrRecall >= 0.95, s"reranked recall@10 = $rrRecall (ADC $adcRecall)")
   }
 
-  test("packed fast path matches the DataFrame IVF-PQ plan exactly") {
-    // Same centroids (every 50th vector), same sample codebook, same
-    // probes — the primitive-block kernel must reproduce the declarative
-    // plan's (qid, id, dist, rank) rows bit-for-bit (both accumulate
-    // sequential doubles over the same LUT entries).
-    val nCodes = 16
-    val cb = Pq.sampleCodebook(emb, "id", "vector", m, subDim, nCodes)
-      .cache()
-    val cbArrays = Array.tabulate(m) { s =>
-      cb.filter(col("sub") === s).orderBy(col("code"))
-        .select(col("cvec")).as[Array[Float]].collect()
-    }
-    val centRows = emb.filter(col("id") % 50 === 0).orderBy(col("id"))
-      .select(col("id"), col("vector")).as[(Long, Array[Float])].collect()
-    val centsDF = emb.filter(col("id") % 50 === 0)
-      .select(col("id").as("cid"), col("vector").as("cvec"))
-    val centsArr = centRows.map(_._2)
-    val cidByIdx = centRows.map(_._1)
-
-    val q = emb.filter(col("id").isin(7L, 311L, 602L))
-      .select(col("id").as("qid"), col("vector").as("qvec"))
-    val enc = Pq.encode(emb, cb, "id", "vector", m, subDim)
-    val assignedDF = Ivf.assign(emb, centsDF, "id", "vector", metric = "l2")
-    val slow = Pq.ivfAdcSearch(
-        enc.join(assignedDF.select(col("id"), col("bucket")), Seq("id")),
-        cb, centsDF, q, k = 10, nProbe = 3, m, subDim, nCodes)
-      .select(col("qid"), col("id"), col("dist"), col("rank"))
-      .as[(Long, Long, Double, Int)].collect().sortBy(t => (t._1, t._4))
-
-    val assignedFast = Ivf.assignFast(emb, centsArr, metric = "l2")
-    val index = Pq.servingIndexPq(assignedFast, cbArrays)
-    val fast = Pq.searchBatchedFastPq(index, centsArr, cbArrays, q,
-        k = 10, nProbe = 3)
-      .select(col("qid"), col("id"), col("distance"), col("rank"))
-      .as[(Long, Long, Double, Int)].collect().sortBy(t => (t._1, t._4))
-
-    assert(cidByIdx.sameElements(cidByIdx.sorted)) // idx order == cid order
-    assert(fast.length == slow.length && fast.length > 0)
-    fast.zip(slow).foreach { case (f, sl) =>
-      assert(f._1 == sl._1 && f._2 == sl._2 && f._4 == sl._4,
-        s"row mismatch: fast $f vs plan $sl")
-      assert(math.abs(f._3 - sl._3) < 1e-9, s"dist mismatch: $f vs $sl")
-    }
-  }
-
   test("residual PQ with a lossless codebook reproduces exact distances") {
     // v = cents[bucket] + residual. If every residual sub-vector IS a
     // codebook entry, ADC over residual codes is algebraically the exact
