@@ -19,9 +19,14 @@ import graft.core.Tables
   *
   * Scale notes: a replay is one eager gate job plus one keyed pass per
   * state view. The gate (one shuffle-free aggregate job, run once per log
-  * lineage) checks the op inventory and collects the last VDROP seq per
+  * lineage) checks the op inventory, collects the last VDROP seq per
   * index, a catalog-sized map that every fold applies as a literal
-  * predicate.
+  * predicate, and counts the log's rows. A log spread over more
+  * partitions than its rows need (a union of many small appends) is
+  * packed before its keyed passes: the folds `coalesce` it, without a
+  * shuffle, to `max(defaultParallelism, ceil(rows / RowsPerTask))`
+  * partitions, so each map stage runs that many tasks instead of one per
+  * fragment. A log already at or below that count is read as it is.
   * `foldVectors` is a single aggregate keyed by (index_name, id) with
   * map-side partials; `foldEdges` is one window shuffle on the edge key
   * plus its VDEL cascade (a keyed aggregate joined on src and dst). No
@@ -73,10 +78,17 @@ object Oplog {
     "GLINK", "GUNLINK", "SET", "DEL", "VCONFIG", "VAUTOLINKS")
 
   /** What the gate learns from its one pass over the log: the source
-    * fingerprint it was computed under and the last VDROP seq per index
-    * (catalog-sized, so it lives on the driver).
+    * fingerprint it was computed under, the last VDROP seq per index
+    * (catalog-sized, so it lives on the driver), the row count and the
+    * partition count of the scan.
     */
-  private final case class Gate(fingerprint: String, drops: Map[String, Long])
+  private final case class Gate(fingerprint: String, drops: Map[String, Long],
+      rows: Long, partitions: Int)
+
+  /** Log rows one fold task should take before the packed log gets
+    * another partition ([[packed]]); about 64 MB of 64-d VADD rows.
+    */
+  private val RowsPerTask = 250000L
 
   /** Gate results memoized on the canonicalized analyzed plan. File-source
     * relations compare by reference, so two separate `spark.read` calls
@@ -160,23 +172,25 @@ object Oplog {
       val known = KnownOps.toSet
       def addDrop(d: Map[String, Long], idx: String, seq: Long) =
         d.updated(idx, d.get(idx).fold(seq)(math.max(_, seq)))
-      val (bad, firstBad, drops) =
-        oplog.select(col("op"), col("index_name"), col("seq").cast("long"))
-          .rdd.aggregate((0L, Option.empty[String], Map.empty[String, Long]))(
-            { case ((n, first, d), r) =>
+      val scan = oplog.select(col("op"), col("index_name"),
+        col("seq").cast("long")).rdd
+      val (bad, firstBad, drops, rows) =
+        scan.aggregate((0L, Option.empty[String], Map.empty[String, Long], 0L))(
+            { case ((n, first, d, c), r) =>
               val op = r.getString(0)
               if (op == null || !known(op))
-                (n + 1, first.orElse(Some(String.valueOf(op))), d)
+                (n + 1, first.orElse(Some(String.valueOf(op))), d, c + 1)
               else if (op == "VDROP" && !r.isNullAt(1) && !r.isNullAt(2))
-                (n, first, addDrop(d, r.getString(1), r.getLong(2)))
-              else (n, first, d)
+                (n, first, addDrop(d, r.getString(1), r.getLong(2)), c + 1)
+              else (n, first, d, c + 1)
             },
-            { case ((n1, f1, d1), (n2, f2, d2)) =>
+            { case ((n1, f1, d1, c1), (n2, f2, d2, c2)) =>
               (n1 + n2, f1.orElse(f2),
-                d2.foldLeft(d1) { case (d, (idx, seq)) => addDrop(d, idx, seq) })
+                d2.foldLeft(d1) { case (d, (idx, seq)) => addDrop(d, idx, seq) },
+                c1 + c2)
             })
       require(bad == 0, s"unknown oplog op: ${firstBad.orNull}")
-      val g = Gate(fp, drops)
+      val g = Gate(fp, drops, rows, scan.getNumPartitions)
       gates.put(key, g)
       g
     }
@@ -343,9 +357,22 @@ object Oplog {
     * call re-checks the source fingerprint and re-runs the gate). Every
     * caller in this codebase collects or runs its fold at once.
     */
-  private def afterDrop(oplog: DataFrame): DataFrame = {
-    val dropSeq = try_element_at(typedLit(gate(oplog).drops), col("index_name"))
-    oplog.filter(dropSeq.isNull || col("seq") > dropSeq)
+  private def afterDrop(oplog: DataFrame, g: Gate): DataFrame = {
+    val dropSeq = try_element_at(typedLit(g.drops), col("index_name"))
+    packed(oplog, g).filter(dropSeq.isNull || col("seq") > dropSeq)
+  }
+
+  /** The log as the keyed folds read it: coalesced (no shuffle) to
+    * `max(defaultParallelism, ceil(rows / RowsPerTask))` partitions when
+    * that is fewer than the gate's scan had, as is. A fragmented log's
+    * map stages otherwise run one task per fragment, each writing shuffle
+    * files for a few rows. The folds are keyed aggregates and windows
+    * ordered by `seq`, so packing never changes their rows.
+    */
+  private def packed(oplog: DataFrame, g: Gate): DataFrame = {
+    val n = math.max(oplog.sparkSession.sparkContext.defaultParallelism.toLong,
+      (g.rows + RowsPerTask - 1) / RowsPerTask)
+    if (n < g.partitions) oplog.coalesce(n.toInt) else oplog
   }
 
   /** S1 replay — vector-record state view.
@@ -363,7 +390,7 @@ object Oplog {
   def foldVectors(oplog: DataFrame): DataFrame = {
     val op = col("op")
     val emptyMeta = typedLit(Map.empty[String, String])
-    val perId = afterDrop(oplog)
+    val perId = afterDrop(oplog, gate(oplog))
       .filter(op.isin("VADD", "VDEL", "VMETA"))
       .groupBy("index_name", "id")
       .agg(
@@ -403,7 +430,8 @@ object Oplog {
     * Valid for the log as of this call; see [[afterDrop]].
     */
   def foldEdges(oplog: DataFrame): DataFrame = {
-    val ev = afterDrop(oplog)
+    val g = gate(oplog)
+    val ev = afterDrop(oplog, g)
       .filter(col("op").isin("GLINK", "GUNLINK"))
     val key = Seq("index_name", "src", "dst", "rel")
     val byKey = Window.partitionBy(key.map(col): _*).orderBy("seq")
@@ -429,7 +457,7 @@ object Oplog {
 
     // VDEL cascade: the first delete of src or dst at/after creation closes
     // an otherwise-open version (ops.go:401 cascade semantics).
-    val vdels = oplog.filter(col("op") === "VDEL")
+    val vdels = packed(oplog, g).filter(col("op") === "VDEL")
       .groupBy(col("index_name"), col("id").as("node"))
       .agg(sort_array(collect_list(col("ts"))).as("del_ts_list"))
     // get() (0-based) instead of element_at: returns null on empty arrays
@@ -496,7 +524,7 @@ object Oplog {
     * Valid for the log as of this call; see [[afterDrop]].
     */
   def foldConfig(oplog: DataFrame): DataFrame = {
-    val life = afterDrop(oplog)
+    val life = afterDrop(oplog, gate(oplog))
       .filter(col("op").isin("VCREATE", "VCONFIG", "VAUTOLINKS"))
     val w = Window.partitionBy("index_name").orderBy("seq")
       .rowsBetween(Window.unboundedPreceding, -1)

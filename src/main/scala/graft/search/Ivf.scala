@@ -314,6 +314,14 @@ object Ivf {
     *
     * `encode` turns each row's vector into the codec's row as it arrives;
     * `pack` turns one bucket's ids and encoded rows into the codec's block.
+    *
+    * The index is resident ([[graft.core.Resident]]), and so is every serving
+    * index built here ([[servingIndex]], [[servingIndexInt8]],
+    * [[servingIndexF16]], [[Pq.servingIndexPqResidual]]): cache and
+    * `count()` it once, and that action cuts its lineage, so a search's
+    * task binary carries neither the assignment plan nor the packer's
+    * closure (residual PQ's centroids and codebooks). An unpersisted index
+    * cannot be searched again.
     */
   private[search] def bucketBlocks[R, B: scala.reflect.ClassTag](
       assigned: DataFrame,
@@ -328,8 +336,8 @@ object Ivf {
     val rows = assigned
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
         col("bucket").cast("long"))
-    (if (wholeBuckets) rows.repartition(col("bucket")) else rows)
-      .as[(Long, Array[Float], Long)]
+    val placed = if (wholeBuckets) rows.repartition(col("bucket")) else rows
+    graft.core.Resident(placed.as[(Long, Array[Float], Long)]
       .rdd
       .mapPartitions { it =>
         val byBucket = scala.collection.mutable.LongMap
@@ -345,7 +353,7 @@ object Ivf {
         byBucket.iterator.map { case (b, (idBuf, rowBuf)) =>
           pack(b, idBuf.toArray, rowBuf)
         }
-      }
+      })
   }
 
   /** Equal-length rows concatenated into one row-major block. */
@@ -402,6 +410,13 @@ object Ivf {
     }
   }
 
+  /** Reject a top-k bound below 1 on the driver, naming the op: a [[TopK]]
+    * (or any bounded partial built like it) of size 0 would fail in every
+    * task of the scan instead.
+    */
+  private[search] def requireAtLeastOne(op: String, name: String, v: Int): Unit =
+    require(v >= 1, s"$op: $name = $v, must be at least 1")
+
   /** The probe/scan/merge driver of every batched search over a
     * [[bucketBlocks]] index: collect and validate the batch, pick each
     * query's probes on the driver ([[probeAssignments]] under `metric`),
@@ -428,6 +443,7 @@ object Ivf {
       bucketOf: B => Long)(
       prepare: Array[Array[Float]] => Q)(
       kernel: Q => (B, Array[Int], TopK) => Unit): DataFrame = {
+    requireAtLeastOne(op, "k", k)
     val spark = queries.sparkSession
     val (qids, qvecs) = collectBatch(op, cents, queries, metric)
     val nq = qids.length

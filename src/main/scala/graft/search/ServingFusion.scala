@@ -96,6 +96,8 @@ object ServingFusion {
 
   /** Build the doc-major shard index — offline, one shuffle (the
     * repartition by doc id), cache the result like [[Ivf.servingIndex]].
+    * The result is resident ([[graft.core.Resident]]): its first action cuts
+    * its lineage, and once unpersisted it cannot be read again.
     *
     * @param allIds one-`idCol`-column frame of EVERY doc (docs without
     *   postings still carry a decay factor the fused plan would apply to
@@ -115,7 +117,7 @@ object ServingFusion {
     val joined = decN
       .join(wp.select(col(idCol).cast("long").as("_id"), col("token"),
         col("w").cast("double").as("w")), Seq("_id"), "left")
-    docMajor(joined, numShards).rdd.mapPartitions { it =>
+    graft.core.Resident(docMajor(joined, numShards).rdd.mapPartitions { it =>
       val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
       val decB = scala.collection.mutable.ArrayBuffer.empty[Double]
       val idIdx = scala.collection.mutable.LongMap.empty[Int]
@@ -140,7 +142,7 @@ object ServingFusion {
       }
       if (ids.isEmpty) Iterator.empty
       else Iterator.single(finishShard(ids.toArray, decB.toArray, byTok))
-    }
+    })
   }
 
   /** The shared build prep: BM25 term weights over the (prebuilt or
@@ -370,6 +372,7 @@ object ServingFusion {
       alpha0: Double,
       k: Int,
       idCol: String = "id"): DataFrame = {
+    Ivf.requireAtLeastOne("fusedTopK", "k", k)
     val spark = qTokens.sparkSession
     import spark.implicits._
     val alpha = if (alpha0 < 0 || alpha0 > 1) 0.5 else alpha0
@@ -714,6 +717,14 @@ object ServingFusion {
     * (the reference keeps the HNSW arena, postings and metadata of a
     * collection on one node for the same reason).
     *
+    * The result is resident ([[graft.core.Resident]]), as are the segments,
+    * compactions and snapshot loads below: cache it and `count()` it
+    * once, and that first action cuts its lineage, so each read's task
+    * binary carries a few KB of it instead of its build plan. Unpersist it
+    * only when no served ref, in-flight query or pending compaction input
+    * refers to it: a read of an unpersisted resident index fails with
+    * "Checkpoint block not found" instead of recomputing it.
+    *
     * @param assigned `(idCol, vector, bucket)` — [[Ivf.assignFast]] output
     *   over NORMALIZED vectors (the serving kernels' cosine contract).
     *   Docs missing from it (or with a null vector) still text-serve.
@@ -729,9 +740,9 @@ object ServingFusion {
       prebuiltTokenDf: Option[DataFrame] = None,
       frozenStats: Option[(Long, Double)] = None)(
       implicit codec: VecCodec[S]): RDD[S] =
-    combinedRows(allIds, post, idCol, assigned, dec, numShards,
-      prebuiltDocLengths, prebuiltTokenDf, frozenStats).rdd
-      .mapPartitions(assemble(codec))(codec.tag)
+    graft.core.Resident(combinedRows(allIds, post, idCol, assigned, dec,
+      numShards, prebuiltDocLengths, prebuiltTokenDf, frozenStats).rdd
+      .mapPartitions(assemble(codec))(codec.tag))(codec.tag)
 
   /** [[buildCombined]] under [[VecCodec.Int8]] — the int8 build entry
     * point the benchmark calls.
@@ -842,7 +853,9 @@ object ServingFusion {
     * frozen token-df still counts in `dl` but gets no posting, as in the
     * full build; a doc with empty or null text is vector-only, a doc with
     * a null vector text-only. Segment docs carry decay factor 1.0 (serve-
-    * time overrides apply on top). The docs are never collected.
+    * time overrides apply on top). The docs are never collected. The
+    * segment is resident ([[buildCombined]]'s contract); the caller's
+    * `count()` before the swap cuts its lineage.
     */
   private[graft] def buildSegment[S <: CombinedBlocks](
       docs: DataFrame,
@@ -874,7 +887,7 @@ object ServingFusion {
       if (numShards > 1) rows.rdd.keyBy(_.getLong(0))
         .partitionBy(new org.apache.spark.HashPartitioner(numShards)).values
       else rows.rdd.coalesce(1)
-    placed.mapPartitions { it =>
+    graft.core.Resident(placed.mapPartitions { it =>
       assemble(codec)(it.map { r =>
         val docToks = if (r.isNullAt(1)) Seq.empty[String] else r.getSeq[String](1)
         val tf = scala.collection.mutable.LinkedHashMap.empty[String, Long]
@@ -893,7 +906,7 @@ object ServingFusion {
           }
         Row(r.getLong(0), 1.0, vec, bucket, post)
       })
-    }(codec.tag)
+    }(codec.tag))(codec.tag)
   }
 
   /** The distinct analyzed tokens of a batch's `textCol` as ONE aggregate
@@ -948,7 +961,10 @@ object ServingFusion {
     * Caching discipline: cache the SEGMENT (or let this method's result
     * stay lazy over an already-cached base) — caching the returned union
     * itself re-stores every base partition, the duplication a segment
-    * architecture exists to avoid. [[graft.streaming.Streams]]'
+    * architecture exists to avoid. The segment is resident
+    * ([[buildCombined]]'s contract); the union over it is a plain lazy
+    * union, never resident, so [[graft.streaming.Streams]]' compaction can
+    * walk its parents. [[graft.streaming.Streams]]'
     * `combinedIngest` shows the shape: materialize the segment, then
     * swap in the lazy union.
     *
@@ -1032,7 +1048,10 @@ object ServingFusion {
     *
     * The caller caches + materializes the result before swapping it in
     * ([[graft.streaming.Streams.compactCombinedServing]] orchestrates the
-    * swap and the live-set clearing).
+    * swap and the live-set clearing). The result is resident
+    * ([[buildCombined]]'s contract), so once materialized it no longer
+    * needs `index`: the input may be unpersisted after the swap, once no
+    * in-flight query holds it.
     */
   def compactCombined[S <: CombinedBlocks](
       index: RDD[S],
@@ -1042,7 +1061,8 @@ object ServingFusion {
       implicit codec: VecCodec[S]): RDD[S] = {
     val tomb = sortedTombstones(tombstones)
     val (ovI, ovD) = sortedOverrides(decOverrides)
-    regroupShards(index, numPartitions).mapPartitions { it =>
+    val regrouped = regroupShards(index, numPartitions)
+    graft.core.Resident(regrouped.mapPartitions { it =>
       val shards = it.toVector
       if (shards.isEmpty) Iterator.empty
       else {
@@ -1072,7 +1092,7 @@ object ServingFusion {
         else Iterator.single(combinedShard(codec)(
           finishShard(ids.toArray, decB.toArray, byTok), blocks, dim))
       }
-    }(codec.tag)
+    }(codec.tag))(codec.tag)
   }
 
   /** Regroup whole shards into `numPartitions` partitions for compaction.
@@ -1295,7 +1315,9 @@ object ServingFusion {
     * load: queries quantized under the caller's `absMax` would score it
     * wrongly. The caller caches + materializes the index (and re-derives
     * the serve-time tombstone set from the oplog,
-    * [[graft.streaming.Streams.tombstoneIngest]]'s restart contract).
+    * [[graft.streaming.Streams.tombstoneIngest]]'s restart contract). The
+    * index is resident ([[buildCombined]]'s contract): the snapshot on disk
+    * stays its durable copy.
     */
   def loadCombined[S <: CombinedBlocks](
       spark: org.apache.spark.sql.SparkSession,
@@ -1315,8 +1337,8 @@ object ServingFusion {
     val docs = spark.read.parquet(s"$path/docs")
       .select(docSchema(codec).fieldNames.toSeq.map(col): _*)
     LoadedCombined(
-      docMajor(docs, numShards).rdd
-        .mapPartitions(assemble(codec, stored = true))(codec.tag),
+      graft.core.Resident(docMajor(docs, numShards).rdd
+        .mapPartitions(assemble(codec, stored = true))(codec.tag))(codec.tag),
       (meta.getLong(0), meta.getDouble(1)),
       spark.read.parquet(s"$path/tokendf"),
       meta.getLong(2))
@@ -1435,6 +1457,8 @@ object ServingFusion {
       tombstones: Array[Long] = Array.emptyLongArray,
       decOverrides: Array[(Long, Double)] = Array.empty)(
       implicit codec: VecCodec[S]): Array[(Long, Long, Double)] = {
+    Ivf.requireAtLeastOne("fusedTopKCombined", "k", k)
+    Ivf.requireAtLeastOne("fusedTopKCombined", "kVec", kVec)
     val tomb = sortedTombstones(tombstones)
     val (ovIds, ovDec) = sortedOverrides(decOverrides)
     val alpha = if (alpha0 < 0 || alpha0 > 1) 0.5 else alpha0

@@ -183,14 +183,18 @@ object VectorSearch {
   /** Serving-path binary index: per-partition primitive blocks of
     * (ids, row-major packed sign words, wordsPerVector) — the binary
     * analogue of [[Ivf.servingIndex]]'s contiguous float blocks. 8 bytes
-    * per 64d vector resident; build once, serve every batch.
+    * per 64d vector resident; build once, serve every batch. The index
+    * is resident in the sense of [[graft.core.Resident]] too: its first
+    * action cuts its lineage, and an unpersisted index cannot be searched
+    * again.
     */
   def servingIndexBinary(vectors: DataFrame, idCol: String = "id",
       vecCol: String = "vector")
       : org.apache.spark.rdd.RDD[(Array[Long], Array[Long], Int)] = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    vectors.select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
+    graft.core.Resident(vectors
+      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
       .as[(Long, Array[Float])]
       .rdd
       .mapPartitions { it =>
@@ -217,7 +221,7 @@ object VectorSearch {
           }
           Iterator.single((ids, flat, w))
         }
-      }
+      })
   }
 
   /** Stage 1 of the serving path standalone: top-`rerank` candidates per
@@ -227,14 +231,26 @@ object VectorSearch {
     * treeReduce above it). This is the per-batch cost the
     * serving state actually pays; the f32 rerank scan is the tail.
     * Output: (qid, id, distance = hamming, rank).
+    *
+    * The batch is checked before it is served: `rerank` must be at least
+    * 1 and every query vector present (both on the driver), and a query
+    * must pack to the index's words per vector. The index's width is only
+    * known inside its blocks, so the scan checks that one, failing the
+    * job with a message naming the query and both widths rather than
+    * reading past a short query's words or scoring a long one's prefix.
     */
   def binaryServingCandidates(
       index: org.apache.spark.rdd.RDD[(Array[Long], Array[Long], Int)],
       queries: DataFrame,
       rerank: Int): DataFrame = {
+    val op = "binaryServingCandidates"
+    Ivf.requireAtLeastOne(op, "rerank", rerank)
     val spark = queries.sparkSession
     val qrows = queries.select(col("qid"), col("qvec")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+      .map { r =>
+        require(!r.isNullAt(1), s"$op: query ${r.getLong(0)} has no query vector")
+        (r.getLong(0), r.getSeq[Float](1).toArray)
+      }
     val qids = qrows.map(_._1)
     val bc = spark.sparkContext.broadcast(qrows.map(q => packSignsLocal(q._2)))
     val partials = index.mapPartitions { it =>
@@ -244,6 +260,8 @@ object VectorSearch {
         var qi = 0
         while (qi < qws.length) {
           val qw = qws(qi)
+          require(qw.length == w, s"$op: query ${qids(qi)} packs " +
+            s"${qw.length} sign words, the index $w")
           var r = 0
           var off = 0
           while (r < ids.length) {

@@ -1128,7 +1128,12 @@ object Streams {
     * wholesale reset). Returns the compacted, cached index. The previous
     * index's cached partitions are left to their owner — the base/segment
     * RDDs the caller materialized; unpersist them once no in-flight query
-    * holds them.
+    * holds them. They and the compacted index are resident
+    * ([[graft.core.Resident]]): the compacted index reads none of them
+    * once materialized, but a query still holding the old ref reads their
+    * blocks, and after an unpersist it fails ("Checkpoint block not
+    * found") instead of recomputing them. The durable copy is the snapshot
+    * plus the segment log, which [[recoverCombinedSegments]] replays.
     */
   def compactCombinedServing[S <: CombinedBlocks](
       ref: java.util.concurrent.atomic.AtomicReference[

@@ -204,4 +204,47 @@ class OplogFoldPropertySpec extends SparkSpec {
     }
     assert(jobs === 1)
   }
+
+  /** Task counts of the shuffle-map stages `body` submits from this
+    * thread, adaptive execution off as the benchmark runs.
+    */
+  private def mapStageTasks[A](body: => A): (A, Seq[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    val sc = spark.sparkContext
+    val key = "graft.test.mapstages"
+    val tag = java.util.UUID.randomUUID().toString
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag &&
+            org.apache.spark.TestStages.isShuffleMap(e.stageInfo))
+          tasks.add(e.stageInfo.numTasks)
+    }
+    val aqe = "spark.sql.adaptive.enabled"
+    val prevAqe = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try {
+      val out = body
+      org.apache.spark.TestBusDrain.drain(sc)
+      import scala.jdk.CollectionConverters._
+      (out, tasks.asScala.toSeq)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+      spark.conf.set(aqe, prevAqe)
+    }
+  }
+
+  test("a many-partition log folds == sequential replay in packed map stages") {
+    val evs = Gen.listOfN(300, evGen).pureApply(Gen.Parameters.default, Seed(41L))
+    val df = log(evs, 60, 41L)
+    val (got, tasks) = mapStageTasks(folded(df))
+    assert(got === replay(evs))
+    val par = spark.sparkContext.defaultParallelism
+    // foldVectors' aggregate, foldEdges' window and its VDEL aggregate.
+    assert(tasks.length >= 3, s"map stages: $tasks")
+    assert(tasks.forall(_ <= par), s"map stage tasks $tasks, parallelism $par")
+  }
 }

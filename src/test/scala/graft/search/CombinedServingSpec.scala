@@ -897,4 +897,16 @@ class CombinedServingSpec extends SparkSpec {
       Seq((7L, null: Array[Float])), k = 3, pool = 6, nProbe = 2, lam = 0.7,
       oneMinusLam = 0.3)).contains("query 7 has no query vector"))
   }
+
+  test("served batches reject k or kVec below 1 before any scan") {
+    val (_, _, _, cents, _, ix, sq) = validationFixtures()
+    for ((k, kVec, bad) <- Seq((0, 3, "k = 0"), (-2, 3, "k = -2"),
+        (4, 0, "kVec = 0"))) {
+      val (msg, jobs) = graft.JobCount(spark)(rejected(
+        ServingFusion.fusedTopKCombined(ix, cents, sq, params.alpha, k,
+          nProbe = 2, kVec = kVec)))
+      assert(msg.contains(s"fusedTopKCombined: $bad, must be at least 1"), msg)
+      assert(jobs === 0)
+    }
+  }
 }

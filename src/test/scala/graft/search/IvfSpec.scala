@@ -372,4 +372,25 @@ class IvfSpec extends SparkSpec {
     }
     pq.unpersist(); bin.unpersist()
   }
+
+  test("batched searches reject k below 1 before any scan") {
+    val (cents, assigned, f32, int8, f16) = small
+    val cb = Array.tabulate(2, 4)((s, c) => Array(c * 0.1f - s, s * 0.2f))
+    val pq = Pq.servingIndexPqResidual(assigned, cents, cb)
+    val q = localQueries((7L, Array.fill(4)(0.5f)))
+    val searches: Seq[(String, Int => Any)] = Seq(
+      "searchBatchedFast" -> (k => Ivf.searchBatchedFast(f32, cents, q, k, 2)),
+      "searchBatchedFastInt8" -> (k => Ivf.searchBatchedFastInt8(int8, cents,
+        q, k, 2, absMax = 1.0)),
+      "searchBatchedFastF16" -> (k => Ivf.searchBatchedFastF16(f16, cents, q,
+        k, 2)),
+      "searchBatchedFastPqResidual" -> (k => Pq.searchBatchedFastPqResidual(pq,
+        cents, cb, q, k, 2)))
+    for ((op, search) <- searches; k <- Seq(0, -1)) {
+      val (msg, jobs) = graft.JobCount(spark)(
+        intercept[IllegalArgumentException](search(k)).getMessage)
+      assert(msg.contains(s"$op: k = $k, must be at least 1"), msg)
+      assert(jobs === 0, op)
+    }
+  }
 }

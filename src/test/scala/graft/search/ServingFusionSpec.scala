@@ -174,4 +174,16 @@ class ServingFusionSpec extends SparkSpec {
     assert(math.abs(served(10L) - 0.6 / 1.5) <= 1e-12)
     shards.unpersist()
   }
+
+  test("fused serving rejects k below 1 before any scan") {
+    val t = table
+    val shards = ServingFusion.buildShards(t.select(col("doc_id")),
+      Bm25.postings(t, "doc_id", "text"), "doc_id", dec = None, numShards = 2)
+    val vecTop = Seq((0L, 9L, 0.25)).toDF("qid", "doc_id", "distance")
+    val qt = Seq((0L, "spark", 1L)).toDF("qid", "token", "qn")
+    for (k <- Seq(0, -1))
+      assert(intercept[IllegalArgumentException](ServingFusion.fusedTopK(
+        shards, qt, vecTop, params.alpha, k, "doc_id")).getMessage
+        .contains(s"fusedTopK: k = $k, must be at least 1"))
+  }
 }

@@ -191,4 +191,49 @@ class VectorSearchSpec extends SparkSpec {
       assert(got === expected, s"q=$qid")
     }
   }
+
+  /** A 64-d binary serving index (two sign words per vector), cached. */
+  private lazy val binIndex64 = {
+    import spark.implicits._
+    val r = new scala.util.Random(7)
+    val idx = VectorSearch.servingIndexBinary(
+      (0L until 40L).map(i => (i, Array.fill(64)(r.nextFloat() - 0.5f)))
+        .toDF("id", "vector"))
+    idx.cache(); idx.count()
+    idx
+  }
+
+  private def binQueries(qs: (Long, Array[Float])*) = {
+    import spark.implicits._
+    qs.toDF("qid", "qvec")
+  }
+
+  test("binary serving rejects rerank below 1 before any scan") {
+    val q = binQueries((7L, Array.fill(64)(0.5f)))
+    for (r <- Seq(0, -1))
+      assert(intercept[IllegalArgumentException](
+        VectorSearch.binaryServingCandidates(binIndex64, q, r)).getMessage
+        .contains(s"binaryServingCandidates: rerank = $r, must be at least 1"))
+  }
+
+  test("binary serving rejects a null query vector on the driver") {
+    val q = binQueries((7L, null: Array[Float]))
+    assert(intercept[IllegalArgumentException](
+      VectorSearch.binaryServingCandidates(binIndex64, q, 3)).getMessage
+      .contains("binaryServingCandidates: query 7 has no query vector"))
+  }
+
+  // 4 dims pack one word (the scan used to read past it), 200 pack seven
+  // (the scan used to score their first two).
+  for ((dim, words) <- Seq((4, 1), (200, 7)))
+    test(s"binary serving rejects a $dim-d query on a 64-d index") {
+      val q = binQueries((7L, Array.fill(dim)(0.5f)))
+      val e = intercept[Exception](
+        VectorSearch.binaryServingCandidates(binIndex64, q, 3).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+      assert(msgs.contains(
+        s"binaryServingCandidates: query 7 packs $words sign words, the index 2"),
+        msgs)
+    }
 }
