@@ -64,7 +64,7 @@ for path in sys.argv[1:] or ["bench_out.json"]:
     fb = d.get("fusion_batch", {})
     for pk, name in (("fusion.sf", "sf"), ("fusion.synth", "synthetic")):
         p = fb.get(name, {})
-        for f in ("fused_qps", "fused_qps_served", "fused_qps_combined",
+        for f in ("fused_qps", "fused_qps_combined",
                   "fused_qps_combined_int8", "mmr_qps_combined"):
             keep_qps(f"{pk}.{f}", p.get(f))
         keep(f"{pk}.ingest_to_serve_sec", p.get("ingest_to_serve_sec"))

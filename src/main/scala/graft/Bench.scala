@@ -459,15 +459,6 @@ object Bench {
         dls.count()
         val tdf = Bm25.tokenDf(post).cache()
         tdf.count()
-        // Text-serving shards (ServingFusion): doc-major inverted index
-        // over precomputed term weights + baked decay — the postings
-        // twin of `serving` above. Built once, untimed, like every
-        // serving state table.
-        val shards = graft.search.ServingFusion.buildShards(
-          table.select(col("doc_id")), post, "doc_id",
-          Fusion.decayFrame(table, "doc_id", params),
-          prebuiltDocLengths = Some(dls), prebuiltTokenDf = Some(tdf)).cache()
-        shards.count()
         def score() = Bm25.searchPostingsBatch(
           table.select(col("doc_id")), post, "doc_id", qTokens,
           prebuiltDocLengths = Some(dls), prebuiltTokenDf = Some(tdf))
@@ -486,31 +477,10 @@ object Bench {
         val sec = replausibleQps(s"$priorKey.fused_qps",
           recordSpread(s"$priorKey.fused_qps",
             Seq.fill(3)(timeIt(run()))), nq, factor = 2.0)(timeIt(run()))
-        // SERVED batch: the same workload through the one-pass serving
-        // twin — ANN leg off the bucket blocks, text+fusion off the
-        // postings shards, driver α-blend. Same results (ServingFusionSpec
-        // pins them), no multi-stage plan.
-        def runServed(qv: org.apache.spark.sql.DataFrame,
-                      qt: org.apache.spark.sql.DataFrame): Unit = {
-          val vtop = Ivf.searchBatchedFast(serving, cents, qv, k = 10,
-              nProbe = 8)
-            .select(col("qid"), col("id").as("doc_id"), col("distance"))
-          noopWrite(graft.search.ServingFusion.fusedTopK(
-            shards, qt, vtop, params.alpha, params.k, "doc_id"))
-        }
-        runServed(qsN, qTokens) // warm
-        val secServed = replausibleQps(s"$priorKey.fused_qps_served",
-          recordSpread(s"$priorKey.fused_qps_served",
-            Seq.fill(3)(timeIt(runServed(qsN, qTokens)))), nq, factor = 2.0)(
-          timeIt(runServed(qsN, qTokens)))
-        // Fused single-query latency (VERDICT r11 #6): the flagship hybrid
-        // path one query at a time, completing the serving-latency story —
-        // the f32/int8/PQ/binary ANN legs publish single_query numbers;
-        // this is the fusion leg. Same prepared state, a batch of ONE.
-        // The headline single_query_fused_sec is the SERVING path (the
-        // reference serves this fused from RAM at ~1 ms, ops.go:896); the
-        // multi-stage plan's latency stays recorded as
-        // single_query_plan_sec for the batch-plan story.
+        // Fused single-query latency of the multi-stage plan, a batch of
+        // ONE over the same prepared state (single_query_plan_sec); the
+        // served single-query point is single_query_combined_sec below
+        // (the reference serves this fused from RAM at ~1 ms, ops.go:896).
         val q1 = qsN.filter(col("qid") === 0).cache(); q1.count()
         val qt1 = qTokens.filter(col("qid") === 0).cache(); qt1.count()
         val qs1 = qs.filter(col("qid") === 0)
@@ -529,9 +499,6 @@ object Bench {
         }
         run1()
         val sec1plan = Seq.fill(3)(timeIt(run1())).min
-        def run1s(): Unit = runServed(q1, qt1)
-        run1s()
-        val sec1 = Seq.fill(5)(timeIt(run1s())).min
         // COMBINED one-job serving (VERDICT r14 stretch): each partition
         // holds its docs' postings, decay factors AND bucket-major vector
         // blocks, so the whole fused query — both legs plus hydration —
@@ -845,20 +812,16 @@ object Bench {
         q1.unpersist(); qt1.unpersist()
         assigned.unpersist(); serving.unpersist(); qsN.unpersist()
         qTokens.unpersist(); dls.unpersist(); tdf.unpersist()
-        shards.unpersist()
         // Published family QPS = median of all collected reps (VERDICT
         // r17 #2); single-query latencies stay best-of-N (min is the
         // right estimator for a latency floor, stated in COVERAGE.md).
         val secP = med(s"$priorKey.fused_qps", sec)
-        val secServedP = med(s"$priorKey.fused_qps_served", secServed)
         val secCP = med(s"$priorKey.fused_qps_combined", secC)
         val secC8P = med(s"$priorKey.fused_qps_combined_int8", secC8)
         val secMP = med(s"$priorKey.mmr_qps_combined", secM)
         s"""{"n_queries":$nq,"corpus":$corpusN,""" +
           s""""hits_per_query":${c1(hits.toDouble / nq)},""" +
           s""""fused_qps":${c1(nq / secP)},"batch_sec":${r3(secP)},""" +
-          s""""fused_qps_served":${c1(nq / secServedP)},""" +
-          s""""batch_served_sec":${r3(secServedP)},""" +
           s""""fused_qps_combined":${c1(nq / secCP)},""" +
           s""""batch_combined_sec":${r3(secCP)},""" +
           s""""fused_qps_combined_int8":${c1(nq / secC8P)},""" +
@@ -868,7 +831,6 @@ object Bench {
           s""""ingest_to_serve_int8_sec":${r3(ing8Sec)},""" +
           s""""ingest_batch_docs":$ingestDocs,""" +
           s""""single_query_mmr_combined_sec":${r3(sec1m)},""" +
-          s""""single_query_fused_sec":${r3(sec1)},""" +
           s""""single_query_combined_sec":${r3(sec1c)},""" +
           s""""single_query_plan_sec":${r3(sec1plan)}$segJson}"""
       }
@@ -1935,18 +1897,13 @@ object Bench {
         }
         val plan = two("fused_qps")
           .map(p => s""","fused_qps":{"sf":${p._1},"synthetic":${p._2}}""")
-        val served = two("fused_qps_served")
-          .map(p => s""","fused_qps_served":{"sf":${p._1},"synthetic":${p._2}}""")
         val comb = two("fused_qps_combined")
           .map(p => s""","fused_qps_combined":{"sf":${p._1},"synthetic":${p._2}}""")
-        val single = two("single_query_fused_sec")
-          .map(p => s""","single_query_fused_sec":{"sf":${p._1},"synthetic":${p._2}}""")
         val single1 = two("single_query_combined_sec")
           .map(p => s""","single_query_combined_sec":{"sf":${p._1},"synthetic":${p._2}}""")
         val singleM = two("single_query_mmr_combined_sec")
           .map(p => s""","single_query_mmr_combined_sec":{"sf":${p._1},"synthetic":${p._2}}""")
-        (plan.toSeq ++ served.toSeq ++ comb.toSeq ++ single.toSeq ++
-          single1.toSeq ++ singleM.toSeq).mkString
+        (plan.toSeq ++ comb.toSeq ++ single1.toSeq ++ singleM.toSeq).mkString
       }
       val binS = section("binary")
       val binary = (num(binS, "qps_hamming_scan"), num(binS, "qps_bin_rerank"),

@@ -547,7 +547,4 @@ object VectorFunctions {
     */
   def cosineDistanceFull(a: Column, b: Column): Column =
     cosineDistance(normalize(a), normalize(b))
-
-  /** Score normalization `1/(1+distance)` — `search_utils.go:48-53`. */
-  def scoreFromDistance(d: Column): Column = lit(1.0) / (lit(1.0) + d)
 }

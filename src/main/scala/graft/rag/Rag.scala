@@ -133,18 +133,6 @@ object Rag {
     visited
   }
 
-  /** R2 — the "density" expansion strategy (`expandWithDensityFilter`,
-    * adaptive_retriever.go:197-211): greedy 1-hop expansion, then drop
-    * candidates whose information density is below `minRatio`.
-    * contents: (id, content).
-    */
-  def expandDensityFilter(seeds: DataFrame, edges: DataFrame,
-      contents: DataFrame, minRatio: Double = 0.5,
-      decay: Double = 0.7): DataFrame =
-    expandSeeds(seeds, edges, decay)
-      .join(contents, Seq("id"))
-      .filter(density(col("content")) >= minRatio)
-
   /** R2 — token-budget context packing (assembleContext,
     * adaptive_retriever.go:300-414). Documents ordered by the max depth-0
     * derived score (ties by parent id), chunks within a document by

@@ -216,9 +216,9 @@ object Fusion {
         // normalizer's max-aggregate and the fused join would otherwise
         // each re-run the whole text branch (the batch path's
         // prebuiltTextScores contract, applied to the single-query path).
-        val textScores = Bm25.maxNormalized(textScored().localCheckpoint())
+        val tNorm = Bm25.maxNormalized(textScored().localCheckpoint())
           .withColumnRenamed("score", "tscore")
-        vecScores.join(textScores, Seq(idCol), "full_outer")
+        vecScores.join(tNorm, Seq(idCol), "full_outer")
           .withColumn("fused",
             lit(alpha) * coalesce(col("vscore"), lit(0.0)) +
               lit(1.0 - alpha) * coalesce(col("tscore"), lit(0.0)))
@@ -264,7 +264,7 @@ object Fusion {
 
   /** The per-doc decay-factor frame `(idCol, _dec)` — None when decay is
     * disabled. [[decayFactor]] is the ONE definition both batch paths and
-    * the serving-index build ([[ServingFusion.buildShards]]) evaluate, so
+    * the serving-index build ([[ServingFusion.buildCombined]]) evaluate, so
     * their factors are bit-identical.
     */
   def decayFrame(table: DataFrame, idCol: String,

@@ -270,6 +270,7 @@ object Ivf {
       nProbe: Int,
       idCol: String = "id",
       vecCol: String = "vector"): DataFrame = {
+    requireAtLeastOne("searchBatchedLocal", "nProbe", nProbe)
     val spark = assigned.sparkSession
     import spark.implicits._
     val (qids, qvecs) = collectBatch("searchBatchedLocal", cents, queries,
@@ -410,9 +411,11 @@ object Ivf {
     }
   }
 
-  /** Reject a top-k bound below 1 on the driver, naming the op: a [[TopK]]
-    * (or any bounded partial built like it) of size 0 would fail in every
-    * task of the scan instead.
+  /** Reject a top-k bound or probe count below 1 on the driver, naming the
+    * op: a [[TopK]] (or any bounded partial built like it) of size 0 would
+    * fail in every task of the scan instead, and [[probeAssignments]] gives
+    * no probes for `nProbe = 0` (the vector leg silently empties) and fails
+    * for a negative one.
     */
   private[search] def requireAtLeastOne(op: String, name: String, v: Int): Unit =
     require(v >= 1, s"$op: $name = $v, must be at least 1")
@@ -444,6 +447,7 @@ object Ivf {
       prepare: Array[Array[Float]] => Q)(
       kernel: Q => (B, Array[Int], TopK) => Unit): DataFrame = {
     requireAtLeastOne(op, "k", k)
+    requireAtLeastOne(op, "nProbe", nProbe)
     val spark = queries.sparkSession
     val (qids, qvecs) = collectBatch(op, cents, queries, metric)
     val nq = qids.length

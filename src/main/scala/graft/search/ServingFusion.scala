@@ -7,62 +7,55 @@ import org.apache.spark.sql.types._
 
 import graft.text.Bm25
 
-/** Low-latency serving twin of the hybrid-fusion TEXT leg — the postings
-  * analogue of [[Ivf.servingIndex]], closing the gap the reference serves
-  * from RAM (`searchWithFusion` `pkg/engine/ops.go:896` over in-memory
-  * postings `pkg/core/core.go:1965`, ~1 ms fused): the ANN leg already
-  * served in one tight mapPartitions pass, but the BM25 leg still ran a
-  * multi-stage join/aggregate plan per batch, so a fused single query
-  * paid ~1 s of fixed plan cost.
+/** The hybrid serving index: one doc-major COMBINED shard per partition,
+  * the analogue of the reference's one in-RAM index per collection
+  * (postings `pkg/core/core.go:1965` plus the HNSW arena), served like its
+  * `searchWithFusion` (`pkg/engine/ops.go:896`, ~1 ms fused).
   *
-  * Layout ([[buildShards]]): the corpus is repartitioned DOC-major —
-  * every posting of a document lands in one shard — and each partition
-  * becomes one [[Shard]]: a partition-local inverted index (token → CSR
-  * block of (local doc, w)) over PRECOMPUTED per-(token, doc) BM25 term
-  * weights `w = idf·tfPart` ([[Bm25.termWeight]] — the same expression
-  * the batch plan evaluates, so per-term contributions are
-  * bit-identical), plus the per-doc decay factor baked at build time
-  * (same [[Fusion.decayFrame]] the fused plan joins). This is exactly a
-  * search-engine shard: doc-major means a document's score finishes
-  * WITHIN one partition — no cross-partition sum, so only k-bounded
-  * partials ever leave the executors.
+  * Layout ([[buildCombined]]): the corpus is repartitioned DOC-major, so a
+  * document's postings, decay factor and vector land in one partition, and
+  * each partition becomes one shard ([[CombinedBlocks]]). A shard holds a
+  * partition-local inverted index ([[Shard]]: token → CSR block of (local
+  * doc, w)) over PRECOMPUTED per-(token, doc) BM25 term weights
+  * `w = idf·tfPart` ([[Bm25.termWeight]], the expression the batch plan
+  * evaluates), the per-doc decay factor baked at build time
+  * ([[Fusion.decayFrame]]), and the partition's vectors laid out
+  * bucket-major in a codec's payload ([[VecCodec]]: plain f32, or int8
+  * codes + norms, the reference's `DB.Compress` mode with 4× less resident
+  * vector memory). A document's score finishes within one partition, so
+  * only k-bounded partials leave the executors.
   *
-  * Serving ([[fusedTopK]]): ONE job. Each partition scores its shard for
-  * every query (accumulator array over local docs, epoch-reset, query
-  * tokens processed in sorted order for deterministic summation), keeps
-  * a bounded per-query top-k of text candidates ranked by decayed
-  * contribution (the same exact-pruning argument as the fused plan: a
-  * text-only row beaten by k text rows on `tscore·dec` can never reach
-  * the final top-k), hydrates text scores + decay for the ANN leg's ids,
-  * and tracks the per-query raw max for normalization. Partials merge
-  * through [[Ivf.reducePartials]]; the α-blend, max-normalization and
-  * final (score desc, id asc) top-k are driver math over ≤ 2k candidates
-  * per query. Semantics mirror [[Fusion.searchWithFusionBatch]]
-  * term-for-term; only floating-point SUMMATION ORDER differs (the plan
-  * sums a doc's term scores in partition order, the shard in sorted
-  * query-token order), so scores agree to ~1 ulp per term, not bit-for-
-  * bit — `ServingFusionSpec` pins equality at 1e-9.
+  * Serving ([[fusedTopKCombined]]) is ONE Spark job over driver-resident
+  * queries. Each partition scores its shard for every query
+  * ([[scoreTokens]]: epoch-reset accumulators, query tokens in sorted
+  * order for deterministic summation) and keeps three things per query:
+  * a bounded text top-k ranked by decayed contribution (a text-only doc
+  * beaten by k text docs on `raw·dec` can never reach the final top-k),
+  * the raw-score max, and a kVec-bounded vector top-k over the probed
+  * bucket blocks whose entries carry their text hydration. Partials
+  * ([[CombinedPartial]]) merge through [[Ivf.reducePartials]]; the α-blend,
+  * max-normalization and final (score desc, id asc) top-k are driver math
+  * over ≤ k + kVec candidates per query ([[blendCombined]], shared with
+  * [[Fusion.searchWithFusionBatch]]'s one-pass path). [[mmrTopKCombined]]
+  * serves MMR over the same shards, also in one job.
   *
-  * Scale shape: shards are the postings, partitioned like any 100 TB
-  * table; per-batch network is nq×k candidate partials (reduce below
-  * [[Ivf.reducePartials]]'s threshold, treeReduce above); driver work is
-  * O(nq·k). Query batches are driver-bounded by contract, like every
-  * serving entry point.
+  * Semantics mirror [[Fusion.searchWithFusionBatch]] term for term. Only
+  * the floating-point summation order differs from its DataFrame plan (the
+  * plan sums a doc's term scores in shuffle order), so scores agree to
+  * ~1 ulp per term: `ServingFusionSpec` pins them at 1e-9 given the same
+  * vector leg, and `CombinedServingSpec` pins them bit for bit against a
+  * driver-side reference over the same weights.
   *
-  * The COMBINED family collapses even the two-leg pipeline's serial job
-  * rounds. It is one core written over a vector codec ([[VecCodec]]:
-  * plain f32, or int8 codes + norms — the reference's `DB.Compress` mode,
-  * 4× less resident vector memory): [[buildCombined]] co-locates each
-  * partition's postings CSR, decay factors and bucket-major IVF vector
-  * blocks; [[appendCombined]] / [[buildSegment]] land segments,
+  * Writes: [[appendCombined]] / [[buildSegment]] land segments,
   * [[compactCombined]] folds them, [[saveCombined]] / [[loadCombined]]
-  * snapshot them; and [[fusedTopKCombined]] / [[mmrTopKCombined]] serve a
-  * whole hybrid (or MMR-diversified) query batch as ONE Spark job over
-  * driver-resident queries — the architecture's latency floor (one job
-  * launch, ~30 ms at local[32]), spec-pinned bit-identical to the
-  * multi-job path for both codecs. Only the codec's payload, stored
-  * columns, distance kernel and pool payload differ between the two
-  * layouts.
+  * snapshot them. Only the codec's payload, stored columns, distance
+  * kernel and pool payload differ between the two layouts.
+  *
+  * Scale shape: shards are partitioned like any 100 TB table; per-batch
+  * network is nq×(k + kVec) candidate partials (reduce below
+  * [[Ivf.reducePartials]]'s threshold, treeReduce above); driver work is
+  * O(nq·(k + kVec)). Query batches are driver-bounded by contract, like
+  * every serving entry point.
   */
 object ServingFusion {
 
@@ -85,91 +78,10 @@ object ServingFusion {
       while (i < tokens.length) { m.put(tokens(i), i); i += 1 }
       m
     }
-
-    @transient lazy val idSlot: scala.collection.mutable.LongMap[Int] = {
-      val m = scala.collection.mutable.LongMap.empty[Int]
-      var i = 0
-      while (i < ids.length) { m.update(ids(i), i); i += 1 }
-      m
-    }
   }
 
-  /** Build the doc-major shard index — offline, one shuffle (the
-    * repartition by doc id), cache the result like [[Ivf.servingIndex]].
-    * The result is resident ([[graft.core.Resident]]): its first action cuts
-    * its lineage, and once unpersisted it cannot be read again.
-    *
-    * @param allIds one-`idCol`-column frame of EVERY doc (docs without
-    *   postings still carry a decay factor the fused plan would apply to
-    *   their vector-leg score).
-    * @param dec    [[Fusion.decayFrame]] output; None = decay disabled.
-    */
-  def buildShards(
-      allIds: DataFrame,
-      post: DataFrame,
-      idCol: String,
-      dec: Option[DataFrame] = None,
-      numShards: Int = 0,
-      prebuiltDocLengths: Option[DataFrame] = None,
-      prebuiltTokenDf: Option[DataFrame] = None): org.apache.spark.rdd.RDD[Shard] = {
-    val (wp, decN) = weightedAndDecay(allIds, post, idCol, dec,
-      prebuiltDocLengths, prebuiltTokenDf)
-    val joined = decN
-      .join(wp.select(col(idCol).cast("long").as("_id"), col("token"),
-        col("w").cast("double").as("w")), Seq("_id"), "left")
-    graft.core.Resident(docMajor(joined, numShards).rdd.mapPartitions { it =>
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val decB = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val idIdx = scala.collection.mutable.LongMap.empty[Int]
-      val byTok = new java.util.HashMap[String,
-        (scala.collection.mutable.ArrayBuilder.ofInt,
-         scala.collection.mutable.ArrayBuilder.ofDouble)]()
-      it.foreach { r =>
-        val id = r.getLong(0)
-        val li = idIdx.getOrElseUpdate(id, {
-          ids += id; decB += r.getDouble(1); ids.length - 1
-        })
-        if (!r.isNullAt(2)) {
-          var e = byTok.get(r.getString(2))
-          if (e == null) {
-            e = (new scala.collection.mutable.ArrayBuilder.ofInt,
-              new scala.collection.mutable.ArrayBuilder.ofDouble)
-            byTok.put(r.getString(2), e)
-          }
-          e._1 += li
-          e._2 += r.getDouble(3)
-        }
-      }
-      if (ids.isEmpty) Iterator.empty
-      else Iterator.single(finishShard(ids.toArray, decB.toArray, byTok))
-    })
-  }
-
-  /** The shared build prep: BM25 term weights over the (prebuilt or
-    * derived) corpus statistics, plus the per-doc decay frame normalized
-    * to `(_id: long, _dec: double coalesced to 1.0)` — one policy for
-    * both serving layouts ([[buildShards]] / [[buildCombined]]).
-    */
-  private def weightedAndDecay(
-      allIds: DataFrame,
-      post: DataFrame,
-      idCol: String,
-      dec: Option[DataFrame],
-      prebuiltDocLengths: Option[DataFrame],
-      prebuiltTokenDf: Option[DataFrame],
-      frozenStats: Option[(Long, Double)] = None): (DataFrame, DataFrame) = {
-    val dls = prebuiltDocLengths.getOrElse(
-      Bm25.docLengthsFromPostings(allIds, post, idCol))
-    val tdf = prebuiltTokenDf.getOrElse(Bm25.tokenDf(post))
-    val wp = Bm25.weightedPostings(post, dls, tdf, idCol, frozenStats)
-    val decDf = dec.getOrElse(allIds.select(col(idCol), lit(1.0).as("_dec")))
-    val decN = decDf.select(col(idCol).cast("long").as("_id"),
-      coalesce(col("_dec").cast("double"), lit(1.0)).as("_dec"))
-    (wp, decN)
-  }
-
-  /** Doc-major repartition shared by both layouts: hash on the doc id,
-    * explicit shard count when given.
+  /** Doc-major repartition of the build and load rows: hash on the doc
+    * id, explicit shard count when given.
     */
   private def docMajor(joined: DataFrame, numShards: Int): DataFrame =
     if (numShards > 0) joined.repartition(numShards, col("_id"))
@@ -226,8 +138,8 @@ object ServingFusion {
   }
 
   /** Assemble a [[Shard]]'s token-CSR arrays from the per-token builders a
-    * partition pass accumulated — shared by [[buildShards]] (per-posting
-    * rows) and the combined layouts (per-doc aggregated posting lists).
+    * partition pass accumulated — shared by the doc-row assembly
+    * ([[DocText]]) and compaction's merge ([[compactCombined]]).
     */
   private def finishShard(
       ids: Array[Long],
@@ -267,12 +179,12 @@ object ServingFusion {
   }
 
   /** Score one query's tokens into a shard's epoch-tagged accumulators —
-    * the BM25 hot loop shared by [[fusedTopK]], [[fusedTopKCombined]] and
-    * [[textScores]]. For each (token, qn) with a posting slot, folds
-    * `qn · w` into `acc` over the slot's CSR block, tagging first-touched
-    * docs into `touched`. Returns the touched count; `acc(touched(i))` is
-    * doc i's raw BM25 score for this query. Callers bump `epoch` per
-    * query; tokens must be in sorted order for deterministic summation.
+    * the BM25 hot loop of [[fusedTopKCombined]]. For each (token, qn) with
+    * a posting slot, folds `qn · w` into `acc` over the slot's CSR block,
+    * tagging first-touched docs into `touched`. Returns the touched
+    * count; `acc(touched(i))` is doc i's raw BM25 score for this query.
+    * Callers bump `epoch` per query; tokens must be in sorted order for
+    * deterministic summation.
     */
   private def scoreTokens(
       sh: Shard,
@@ -304,14 +216,13 @@ object ServingFusion {
     tn
   }
 
-  /** Per-partition fused-serving partial: per query, the raw-score max,
-    * a k-bounded text-candidate list ranked by `-(raw·dec)` with
+  /** The text half of a [[CombinedPartial]]: per query, the raw-score max
+    * and a k-bounded text-candidate list ranked by `-(raw·dec)` with
     * (key asc, id asc) ties — the same total order as the fused plan's
     * pruning TopK (normalization divides by a positive per-query max, so
-    * ranking on raw·dec ≡ ranking on tscore·dec) — and the (raw, dec)
-    * hydration for the vector leg's ids owned by this partition. Doc-
-    * major sharding makes merges disjoint per doc, so `merge` is a plain
-    * bounded union like [[Ivf.TopK.merge]].
+    * ranking on raw·dec ≡ ranking on tscore·dec). Doc-major sharding makes
+    * merges disjoint per doc, so `merge` is a plain bounded union like
+    * [[Ivf.TopK.merge]].
     */
   private[search] final class FusedPartial(nq: Int, k: Int) extends Serializable {
     val maxRaw: Array[Double] = Array.fill(nq)(0.0)
@@ -319,9 +230,6 @@ object ServingFusion {
     val pid: Array[Array[Long]] = Array.fill(nq)(Array.fill(k)(Long.MaxValue))
     val praw: Array[Array[Double]] = Array.fill(nq)(Array.fill(k)(0.0))
     val pdec: Array[Array[Double]] = Array.fill(nq)(Array.fill(k)(1.0))
-    // id -> (raw text score or 0, dec, hasTextHit) for vector-leg ids.
-    val hyd: Array[scala.collection.mutable.LongMap[(Double, Double, Boolean)]] =
-      Array.fill(nq)(scala.collection.mutable.LongMap.empty)
 
     def insert(qi: Int, sortKey: Double, id: Long, raw: Double, dec: Double): Unit = {
       val kd = key(qi); val ki = pid(qi); val kr = praw(qi); val kc = pdec(qi)
@@ -346,198 +254,10 @@ object ServingFusion {
           insert(qi, okd(j), o.pid(qi)(j), o.praw(qi)(j), o.pdec(qi)(j))
           j += 1
         }
-        o.hyd(qi).foreach { case (id, v) => hyd(qi).update(id, v) }
         qi += 1
       }
       this
     }
-  }
-
-  /** Serve a fused hybrid batch: [[Fusion.searchWithFusionBatch]]
-    * semantics (vector `1/(1+d)` ⨝ per-query max-normalized BM25,
-    * α-blend, decay multiplier, per-query top-k by (score desc, id asc))
-    * in ONE executor pass over the shards plus driver math.
-    *
-    * @param qTokens analyzed query tokens `(qid, token, qn)` — a
-    *   driver-bounded batch.
-    * @param vecTop  the ANN serving leg's `(qid, id, distance)` rows
-    *   (e.g. [[Ivf.searchBatchedFast]] output) — per qid a top-k with
-    *   distinct ids, per the fused plan's contract.
-    * @return (qid, idCol, score) — per-qid top-k.
-    */
-  def fusedTopK(
-      shards: org.apache.spark.rdd.RDD[Shard],
-      qTokens: DataFrame,
-      vecTop: DataFrame,
-      alpha0: Double,
-      k: Int,
-      idCol: String = "id"): DataFrame = {
-    Ivf.requireAtLeastOne("fusedTopK", "k", k)
-    val spark = qTokens.sparkSession
-    import spark.implicits._
-    val alpha = if (alpha0 < 0 || alpha0 > 1) 0.5 else alpha0
-
-    // The two input legs are independent jobs — the ANN leg (vecTop is
-    // usually an un-materialized probe-pruned scan) runs CONCURRENTLY
-    // with the query-token collect instead of after it, shaving one
-    // serial job round-trip off every call (most visible at batch size
-    // 1, where job latency is the whole cost).
-    // `blocking` marks the collect for ForkJoinPool's managed-blocking
-    // compensation: N concurrent fusedTopK callers must not pin all of
-    // global's workers and serialize each other's ANN legs — the exact
-    // load this overlap exists for.
-    val vFut = scala.concurrent.Future(scala.concurrent.blocking(vecTop
-      .select(col("qid").cast("long"), col(idCol).cast("long"),
-        col("distance").cast("double"))
-      .collect()))(scala.concurrent.ExecutionContext.global)
-    val qrows =
-      try qTokens
-        .select(col("qid").cast("long"), col("token"), col("qn").cast("int"))
-        .collect()
-      catch { case e: Throwable =>
-        // Don't orphan the in-flight ANN job if the token leg fails.
-        scala.concurrent.Await.ready(vFut,
-          scala.concurrent.duration.Duration.Inf)
-        throw e
-      }
-    val vrows = scala.concurrent.Await.result(vFut,
-      scala.concurrent.duration.Duration.Inf)
-    val qids = (qrows.map(_.getLong(0)) ++ vrows.map(_.getLong(0)))
-      .distinct.sorted
-    val qIndex = qids.zipWithIndex.toMap
-    val nq = qids.length
-    if (nq == 0) return Seq.empty[(Long, Long, Double)].toDF("qid", idCol, "score")
-
-    // Sorted-token order fixes each doc's term-summation order.
-    val qToks: Array[Array[(String, Int)]] = {
-      val b = Array.fill(nq)(scala.collection.mutable.ArrayBuffer.empty[(String, Int)])
-      qrows.foreach(r => b(qIndex(r.getLong(0))) += ((r.getString(1), r.getInt(2))))
-      b.map(_.sortBy(_._1).toArray)
-    }
-    val vecIds: Array[Array[Long]] = {
-      val b = Array.fill(nq)(scala.collection.mutable.ArrayBuffer.empty[Long])
-      vrows.foreach(r => b(qIndex(r.getLong(0))) += r.getLong(1))
-      b.map(_.toArray)
-    }
-    val vecDist: Array[Array[Double]] = {
-      val b = Array.fill(nq)(scala.collection.mutable.ArrayBuffer.empty[Double])
-      vrows.foreach(r => b(qIndex(r.getLong(0))) += r.getDouble(2))
-      b.map(_.toArray)
-    }
-
-    val bc = shards.sparkContext.broadcast((qToks, vecIds))
-    val partials = shards.mapPartitions { it =>
-      val (toksByQ, vidsByQ) = bc.value
-      val p = new FusedPartial(toksByQ.length, k)
-      it.foreach { sh =>
-        val n = sh.ids.length
-        val acc = new Array[Double](n)
-        val seen = new Array[Int](n)
-        val touched = new Array[Int](n)
-        var epoch = 0
-        var qi = 0
-        while (qi < toksByQ.length) {
-          epoch += 1
-          val tn = scoreTokens(sh, toksByQ(qi), acc, seen, touched, epoch)
-          var i = 0
-          while (i < tn) {
-            val d = touched(i)
-            val raw = acc(d)
-            if (raw > p.maxRaw(qi)) p.maxRaw(qi) = raw
-            p.insert(qi, -(raw * sh.dec(d)), sh.ids(d), raw, sh.dec(d))
-            i += 1
-          }
-          val vi = vidsByQ(qi)
-          var j = 0
-          while (j < vi.length) {
-            val d = sh.idSlot.getOrElse(vi(j), -1)
-            if (d >= 0) {
-              val hasText = seen(d) == epoch
-              p.hyd(qi).update(vi(j),
-                (if (hasText) acc(d) else 0.0, sh.dec(d), hasText))
-            }
-            j += 1
-          }
-          qi += 1
-        }
-      }
-      Iterator.single(p)
-    }
-    val merged = Ivf.reducePartials(partials, new FusedPartial(nq, k),
-      (a: FusedPartial, b: FusedPartial) => a.merge(b))
-    val out = blendTopK(qids, merged, vecIds, vecDist,
-      (qi, id) => merged.hyd(qi).get(id), alpha, k)
-    bc.destroy()
-    out.toSeq.toDF("qid", idCol, "score")
-  }
-
-  /** Driver fusion over ≤ (k + |vec leg|) candidates per query — the
-    * plan's full-outer join + α-blend + decay + rank, in plain math.
-    * Shared by [[fusedTopK]] (hydration from the merged partial's id map)
-    * and [[fusedTopKCombined]] (hydration attached to each vector
-    * candidate at scan time): `hyd(qi, id)` returns the text raw score,
-    * decay factor and has-text-hit flag the owning partition recorded for
-    * a vector-leg id, None when no partition owns the id.
-    */
-  private[search] def blendTopK(
-      qids: Array[Long],
-      merged: FusedPartial,
-      vecIds: Array[Array[Long]],
-      vecDist: Array[Array[Double]],
-      hyd: (Int, Long) => Option[(Double, Double, Boolean)],
-      alpha: Double,
-      k: Int): scala.collection.mutable.ArrayBuffer[(Long, Long, Double)] = {
-    final case class Cand(var tRaw: Double, var hasT: Boolean,
-      var vdist: Double, var hasV: Boolean, var dec: Double)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    var qi = 0
-    while (qi < qids.length) {
-      val mx = merged.maxRaw(qi)
-      val cand = scala.collection.mutable.LongMap.empty[Cand]
-      val kd = merged.key(qi)
-      var j = 0
-      while (j < kd.length && kd(j) < Double.MaxValue) {
-        cand.update(merged.pid(qi)(j),
-          Cand(merged.praw(qi)(j), hasT = true, 0.0, hasV = false,
-            merged.pdec(qi)(j)))
-        j += 1
-      }
-      val vi = vecIds(qi)
-      j = 0
-      while (j < vi.length) {
-        val c = cand.getOrElseUpdate(vi(j),
-          Cand(0.0, hasT = false, 0.0, hasV = false, 1.0))
-        c.vdist = vecDist(qi)(j); c.hasV = true
-        hyd(qi, vi(j)).foreach { case (raw, dec, hasText) =>
-          c.dec = dec
-          if (hasText && !c.hasT) { c.tRaw = raw; c.hasT = true }
-        }
-        j += 1
-      }
-      val scored = cand.iterator.map { case (id, c) =>
-        val tscore =
-          if (!c.hasT) 0.0
-          else if (mx > 0) c.tRaw / mx
-          else c.tRaw
-        val vscore = if (c.hasV) 1.0 / (1.0 + c.vdist) else 0.0
-        val fused = alpha * vscore + (1.0 - alpha) * tscore
-        (id, fused * c.dec)
-      }.toArray
-      java.util.Arrays.sort(scored, new java.util.Comparator[(Long, Double)] {
-        def compare(a: (Long, Double), b: (Long, Double)): Int = {
-          val c = java.lang.Double.compare(b._2, a._2)
-          if (c != 0) c else java.lang.Long.compare(a._1, b._1)
-        }
-      })
-      val qid = qids(qi)
-      var r = 0
-      while (r < scored.length && r < k) {
-        out += ((qid, scored(r)._1, scored(r)._2))
-        r += 1
-      }
-      qi += 1
-    }
-    out
   }
 
   /** The codec-independent half of a combined shard: a [[Shard]] plus the
@@ -625,8 +345,8 @@ object ServingFusion {
     * normalized query vector plus per-token analyzed counts (the `qTokens`
     * rows, already grouped — one entry per distinct token). Queries
     * originate at the driver in a serving path, so taking them as plain
-    * values (not a DataFrame) removes the collect jobs the two-leg path
-    * pays per call. `tokens` may be empty (vector-only query).
+    * values (not a DataFrame) spares each call the collect jobs a frame
+    * would cost. `tokens` may be empty (vector-only query).
     */
   final case class ServedQuery(
       qid: Long,
@@ -634,18 +354,26 @@ object ServingFusion {
       tokens: Array[(String, Int)])
 
   /** Collect a DataFrame-shaped query batch into driver-resident
-    * [[ServedQuery]] values — the one conversion the bench and specs
-    * share. `qVecs`: (qid, qvec); `qTokens`: (qid, token, qn), already
-    * per-token grouped. A qid missing from `qTokens` serves vector-only
-    * (empty tokens); a qid missing from `qVecs` is not emitted —
-    * combined serving is hybrid by contract (route tokens-only work
-    * through [[fusedTopK]]).
+    * [[ServedQuery]] values, sorted by qid — the one conversion the bench
+    * and specs share. `qVecs`: (qid, qvec), one row per query; `qTokens`:
+    * (qid, token, qn), already per-token grouped. A qid missing from
+    * `qTokens` serves vector-only (empty tokens); a qid missing from
+    * `qVecs` is not emitted, since combined serving is hybrid by contract
+    * and every query needs a vector to probe with. A null `qvec` or a qid
+    * that appears twice in `qVecs` fails the call, naming the qid.
     */
   def collectServedQueries(
       qVecs: DataFrame,
       qTokens: DataFrame): Seq[ServedQuery] = {
-    val vecByQ = qVecs.select(col("qid").cast("long"), col("qvec"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+    val vecByQ = scala.collection.mutable.LongMap.empty[Array[Float]]
+    qVecs.select(col("qid").cast("long"), col("qvec")).collect().foreach { r =>
+      val qid = r.getLong(0)
+      require(!r.isNullAt(1),
+        s"collectServedQueries: query $qid has no query vector")
+      require(!vecByQ.contains(qid),
+        s"collectServedQueries: duplicate qid $qid in qVecs")
+      vecByQ.update(qid, r.getSeq[Float](1).toArray)
+    }
     val toksByQ = qTokens
       .select(col("qid").cast("long"), col("token"), col("qn").cast("long"))
       .collect()
@@ -667,12 +395,11 @@ object ServingFusion {
     * frame when `dec` is given, `allIds` otherwise (the decay frame IS
     * the served doc universe: the vector and posting legs both LEFT-join
     * onto it). A doc present in `assigned` but absent from the spine
-    * silently disappears from the combined vector leg — where the
-    * two-leg path (a separately built [[Ivf.servingIndex]]) would still
-    * return it, breaking the bit-identity the combined path is
-    * spec-pinned to. The build asserts it cheaply: extra `assigned`
-    * rows surviving an anti-join against the spine fail the build loudly
-    * instead of serving with silent recall loss.
+    * would silently disappear from the vector leg, where an IVF index
+    * built from the same `assigned` ([[Ivf.servingIndex]]) still returns
+    * it. The build asserts it cheaply: extra `assigned` rows surviving an
+    * anti-join against the spine fail the build loudly instead of
+    * serving with silent recall loss.
     */
   private def combinedRows(
       allIds: DataFrame,
@@ -684,8 +411,13 @@ object ServingFusion {
       prebuiltDocLengths: Option[DataFrame],
       prebuiltTokenDf: Option[DataFrame],
       frozenStats: Option[(Long, Double)] = None): DataFrame = {
-    val (wp, decN) = weightedAndDecay(allIds, post, idCol, dec,
-      prebuiltDocLengths, prebuiltTokenDf, frozenStats)
+    val dls = prebuiltDocLengths.getOrElse(
+      Bm25.docLengthsFromPostings(allIds, post, idCol))
+    val wp = Bm25.weightedPostings(post, dls,
+      prebuiltTokenDf.getOrElse(Bm25.tokenDf(post)), idCol, frozenStats)
+    val decN = dec.getOrElse(allIds.select(col(idCol), lit(1.0).as("_dec")))
+      .select(col(idCol).cast("long").as("_id"),
+        coalesce(col("_dec").cast("double"), lit(1.0)).as("_dec"))
     val pAgg = wp.groupBy(col(idCol).cast("long").as("_id"))
       .agg(collect_list(struct(col("token"),
         col("w").cast("double").as("w"))).as("_post"))
@@ -712,8 +444,8 @@ object ServingFusion {
     * [[Shard]] plus bucket-major vector blocks in the codec's layout —
     * int8 codes are quantized here against the codec's trained `absMax`
     * ([[graft.search.Quantizer]]'s protocol). Offline, cached like
-    * [[buildShards]] / [[Ivf.servingIndex]] — at cluster scale the
-    * combined shard is the natural persisted layout for a hybrid index
+    * [[Ivf.servingIndex]] — at cluster scale the combined shard is the
+    * natural persisted layout for a hybrid index
     * (the reference keeps the HNSW arena, postings and metadata of a
     * collection on one node for the same reason).
     *
@@ -1344,7 +1076,7 @@ object ServingFusion {
       meta.getLong(2))
   }
 
-  /** Per-partition partial for the combined pass: the text-leg
+  /** Per-partition partial for the combined passes: the text-leg
     * [[FusedPartial]] plus a kVec-bounded vector top-k whose entries CARRY
     * their hydration — the owning partition's text raw score, decay factor
     * and has-text-hit flag, recorded at scan time (the text scan for a
@@ -1400,23 +1132,22 @@ object ServingFusion {
     * vector scan over the probed buckets — plus the vector-leg hydration
     * run in a single mapPartitions pass over the combined shards, with
     * only k-bounded partials leaving the executors; probe selection and
-    * the α-blend are driver math, exactly like [[fusedTopK]]'s. The
-    * two-leg path pays two serial job rounds (ANN + token collects, then
-    * the shard pass); this is the latency floor for the architecture —
-    * one job launch — completing VERDICT r14's serving-latency story.
+    * the α-blend ([[blendCombined]]) are driver math. One job launch is
+    * the latency floor of the architecture.
     *
-    * Semantics: identical to [[fusedTopK]] fed by the `Ivf` batch search
-    * of the same codec over the same corpus with the same `nProbe`/`kVec`
-    * — same probe selection ([[Ivf.probeAssignments]]), same per-row
-    * distance kernel ([[VecCodec]]), same (distance, id) / (raw·dec)
-    * bounded top-ks, same blend ([[blendTopK]] is shared code) — so
-    * results are BIT-identical, pinned by CombinedServingSpec. Per-query
-    * the vector scan is scalar (no 4-query tiling) — a trade the job
-    * fusion wins anyway: at both bench points the combined pass also
-    * beats the two-leg path on BATCH throughput ~2.5× (the probed scan is
-    * a small fraction of a fused batch's cost; the serial job rounds and
-    * per-call collect jobs were not). The batch is validated once
-    * ([[prepareBatch]]).
+    * Semantics: the vector leg is exactly the `Ivf` batch search of the
+    * same codec over the same corpus with the same `nProbe` and `kVec` as
+    * its `k` — same probe selection ([[Ivf.probeAssignments]]), same
+    * per-row distance kernel ([[VecCodec]]), same (distance, id) bounded
+    * top-k. The text leg sums `qn · w` over the query's tokens in sorted
+    * order per doc, the (raw·dec) top-k keeps k of them, and the blend
+    * fuses both. CombinedServingSpec pins the result bit for bit against
+    * a driver-side reference built that way, and ServingFusionSpec pins it
+    * against [[Fusion.searchWithFusionBatch]]'s DataFrame plan given the
+    * same vector leg. Per query the vector scan is scalar (no 4-query
+    * tiling): the probed scan is a small fraction of a fused batch's cost.
+    * The batch is validated once ([[prepareBatch]]): `k`, `kVec` and
+    * `nProbe` must be at least 1.
     *
     * Returns driver-resident rows (qid, id, fused score), per-qid top-k
     * by (score desc, id asc) — a serving response, not a plan.
@@ -1492,7 +1223,7 @@ object ServingFusion {
         var qi = 0
         while (qi < toks.length) {
           epoch += 1
-          // Text leg — [[scoreTokens]], the same loop [[fusedTopK]] runs.
+          // Text leg — [[scoreTokens]].
           val tn = scoreTokens(sh, toks(qi), acc, seen, touched, epoch)
           var i = 0
           while (i < tn) {
@@ -1559,10 +1290,11 @@ object ServingFusion {
     fusedTopKCombined(combined, cents, queries, alpha0, k, nProbe, kVec,
       "cosine", tombstones, decOverrides)(VecCodec.Int8(absMax))
 
-  /** Validate a served batch once ([[Ivf.checkBatch]]; the int8 codec
-    * also rejects `"l2"`), then prepare it for the codec's kernel and pick
-    * its probes on the driver (the descent analogue), inverted to
-    * per-query ascending bucket lists for the partition scan.
+  /** Validate a served batch once (`nProbe` at least 1, then
+    * [[Ivf.checkBatch]]; the int8 codec also rejects `"l2"`), then prepare
+    * it for the codec's kernel and pick its probes on the driver (the
+    * descent analogue), inverted to per-query ascending bucket lists for
+    * the partition scan.
     */
   private def prepareBatch[S <: CombinedBlocks](
       codec: VecCodec[S],
@@ -1572,6 +1304,7 @@ object ServingFusion {
       qvecs: Array[Array[Float]],
       metric: String,
       nProbe: Int): (VecQueries[S], Array[Array[Int]]) = {
+    Ivf.requireAtLeastOne(op, "nProbe", nProbe)
     Ivf.checkBatch(op, cents, qids, qvecs, metric)
     val l2 = metric == "l2"
     val prepared = codec.prepare(qvecs, l2)
@@ -1626,37 +1359,71 @@ object ServingFusion {
     bufs.map(_.result())
   }
 
-  /** The combined paths' shared driver tail: read the merged vector leg
-    * (the global top-kVec — doc-major partitions are disjoint) with its
-    * attached hydration, and run the shared α-blend.
+  /** The driver fusion both combined passes end in ([[fusedTopKCombined]]
+    * and [[Fusion.searchWithFusionBatch]]'s one-pass path): per query, the
+    * plan's full-outer join + α-blend + decay + rank in plain math over
+    * the merged partial's ≤ (k + kVec) candidates — the text top-k, and
+    * the vector top-k (global, since doc-major partitions are disjoint)
+    * with the text raw score, decay factor and has-text-hit flag its
+    * owning partition attached at scan time.
     */
   private[search] def blendCombined(
       qids: Array[Long],
       merged: CombinedPartial,
       alpha: Double,
       k: Int): Array[(Long, Long, Double)] = {
-    val nq = qids.length
-    val vecIds = Array.tabulate(nq) { qi =>
-      merged.vd(qi).zipWithIndex.takeWhile(_._1 < Double.MaxValue)
-        .map { case (_, j) => merged.vid(qi)(j) }
-    }
-    val vecDist = Array.tabulate(nq) { qi =>
-      merged.vd(qi).takeWhile(_ < Double.MaxValue)
-    }
-    val hydIx: Array[scala.collection.mutable.LongMap[(Double, Double, Boolean)]] =
-      Array.tabulate(nq) { qi =>
-        val m = scala.collection.mutable.LongMap.empty[(Double, Double, Boolean)]
-        var j = 0
-        val hd = merged.vd(qi)
-        while (j < hd.length && hd(j) < Double.MaxValue) {
-          m.update(merged.vid(qi)(j),
-            (merged.vraw(qi)(j), merged.vdec(qi)(j), merged.vhasT(qi)(j)))
-          j += 1
-        }
-        m
+    final case class Cand(var tRaw: Double, var hasT: Boolean,
+      var vdist: Double, var hasV: Boolean, var dec: Double)
+    val text = merged.text
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+    var qi = 0
+    while (qi < qids.length) {
+      val mx = text.maxRaw(qi)
+      val cand = scala.collection.mutable.LongMap.empty[Cand]
+      val kd = text.key(qi)
+      var j = 0
+      while (j < kd.length && kd(j) < Double.MaxValue) {
+        cand.update(text.pid(qi)(j),
+          Cand(text.praw(qi)(j), hasT = true, 0.0, hasV = false,
+            text.pdec(qi)(j)))
+        j += 1
       }
-    blendTopK(qids, merged.text, vecIds, vecDist,
-      (qi, id) => hydIx(qi).get(id), alpha, k).toArray
+      val vd = merged.vd(qi)
+      j = 0
+      while (j < vd.length && vd(j) < Double.MaxValue) {
+        val c = cand.getOrElseUpdate(merged.vid(qi)(j),
+          Cand(0.0, hasT = false, 0.0, hasV = false, 1.0))
+        c.vdist = vd(j); c.hasV = true
+        c.dec = merged.vdec(qi)(j)
+        if (merged.vhasT(qi)(j) && !c.hasT) {
+          c.tRaw = merged.vraw(qi)(j); c.hasT = true
+        }
+        j += 1
+      }
+      val scored = cand.iterator.map { case (id, c) =>
+        val tscore =
+          if (!c.hasT) 0.0
+          else if (mx > 0) c.tRaw / mx
+          else c.tRaw
+        val vscore = if (c.hasV) 1.0 / (1.0 + c.vdist) else 0.0
+        val fused = alpha * vscore + (1.0 - alpha) * tscore
+        (id, fused * c.dec)
+      }.toArray
+      java.util.Arrays.sort(scored, new java.util.Comparator[(Long, Double)] {
+        def compare(a: (Long, Double), b: (Long, Double)): Int = {
+          val c = java.lang.Double.compare(b._2, a._2)
+          if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+        }
+      })
+      val qid = qids(qi)
+      var r = 0
+      while (r < scored.length && r < k) {
+        out += ((qid, scored(r)._1, scored(r)._2))
+        r += 1
+      }
+      qi += 1
+    }
+    out.toArray
   }
 
   /** Per-partition pool partial for [[mmrTopKCombined]]: a pool-bounded
@@ -1717,7 +1484,7 @@ object ServingFusion {
     * total. Network per query is pool×(dim+3) values — driver-bounded
     * batches by the serving contract, `pool ≤ Mmr.MaxPoolPerQuery`
     * enforced on both sides. The batch is validated once
-    * ([[prepareBatch]]).
+    * ([[prepareBatch]]); `k` must be at least 1.
     *
     * @param queries driver-resident (qid, query vector) rows.
     * @return (qid, rank, id, score) — rank is 1-based selection order.
@@ -1734,6 +1501,7 @@ object ServingFusion {
       metric: String = "cosine",
       tombstones: Array[Long] = Array.emptyLongArray)(
       implicit codec: VecCodec[S]): Array[(Long, Long, Long, Double)] = {
+    Ivf.requireAtLeastOne("mmrTopKCombined", "k", k)
     require(pool > 0 && pool <= Mmr.MaxPoolPerQuery,
       s"pool=$pool outside (0, ${Mmr.MaxPoolPerQuery}]")
     val tomb = sortedTombstones(tombstones)
@@ -1797,52 +1565,5 @@ object ServingFusion {
       qi += 1
     }
     out.toArray
-  }
-
-  /** ALL raw BM25 hits `(qid, idCol, score)` from the shards — the
-    * parity/test surface pinning served scores against
-    * [[Bm25.searchPostingsBatch]] (the t6_bm25_stored plan). Unbounded
-    * output (every hit row), so this is for corpora the caller knows are
-    * small; serving uses [[fusedTopK]].
-    */
-  def textScores(
-      shards: org.apache.spark.rdd.RDD[Shard],
-      qTokens: DataFrame,
-      idCol: String = "id"): DataFrame = {
-    val spark = qTokens.sparkSession
-    import spark.implicits._
-    val qrows = qTokens
-      .select(col("qid").cast("long"), col("token"), col("qn").cast("int"))
-      .collect()
-    val qids = qrows.map(_.getLong(0)).distinct.sorted
-    val qIndex = qids.zipWithIndex.toMap
-    val qToks: Array[Array[(String, Int)]] = {
-      val b = Array.fill(qids.length)(
-        scala.collection.mutable.ArrayBuffer.empty[(String, Int)])
-      qrows.foreach(r => b(qIndex(r.getLong(0))) += ((r.getString(1), r.getInt(2))))
-      b.map(_.sortBy(_._1).toArray)
-    }
-    val bc = shards.sparkContext.broadcast((qids, qToks))
-    shards.flatMap { sh =>
-      val (qs, toksByQ) = bc.value
-      val n = sh.ids.length
-      val acc = new Array[Double](n)
-      val seen = new Array[Int](n)
-      val touched = new Array[Int](n)
-      var epoch = 0
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-      var qi = 0
-      while (qi < toksByQ.length) {
-        epoch += 1
-        val tn = scoreTokens(sh, toksByQ(qi), acc, seen, touched, epoch)
-        var i = 0
-        while (i < tn) {
-          rows += ((qs(qi), sh.ids(touched(i)), acc(touched(i))))
-          i += 1
-        }
-        qi += 1
-      }
-      rows
-    }.toDF("qid", idCol, "score")
   }
 }

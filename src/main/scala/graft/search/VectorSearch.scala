@@ -386,19 +386,4 @@ object VectorSearch {
       .select(col(qidCol), col("_e.id").as(idCol),
         col("_e.distance").as("distance"), col("_e.rank").as("rank"))
   }
-
-  /** H5 `VSearchWithScores` (`pkg/engine/ops.go:1276`): top-k plus the
-    * absolute score `1/(1+distance)` (`search_utils.go:48`). Decay is
-    * applied by the caller (fusion layer) so `now` stays a parameter.
-    */
-  def searchWithScores(
-      vectors: DataFrame,
-      query: Seq[Float],
-      k: Int,
-      metric: String = "euclidean",
-      idCol: String = "id",
-      vecCol: String = "vector",
-      filter: Option[Column] = None): DataFrame =
-    topK(vectors, query, k, metric, idCol, vecCol, filter)
-      .withColumn("score", scoreFromDistance(col("distance")))
 }

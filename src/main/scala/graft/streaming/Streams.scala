@@ -72,16 +72,6 @@ object Streams {
       graft.core.Tables.tsSecExpr(schema("ts").dataType))
   }
 
-  /** Watermarked streaming variant of [[eventWindowAgg]]: accept late events
-    * up to `lateness`, then finalize windows (E5 — strictly more than the
-    * reference's scan-time cutoff predicates).
-    */
-  def eventWindowAggStream(ev: DataFrame, lateness: String = "2 hours"): DataFrame =
-    eventWindowAgg(
-      ev.withColumn("tsc0", timestamp_seconds(col("ts_sec")))
-        .withWatermark("tsc0", lateness)
-        .drop("tsc0"))
-
   /** E3 — adaptive think scheduling (`gardener.go:506-528`,
     * `pkg/cognitive/config.go`): an early cycle fires when ≥ writeThreshold
     * writes accumulated AND the minimum interval has passed.

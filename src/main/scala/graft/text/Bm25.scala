@@ -224,9 +224,9 @@ object Bm25 {
   }
 
   /** Fully-weighted postings `(token, idCol, w)` over the WHOLE
-    * vocabulary — the corpus-side artifact a text-serving index is built
-    * from ([[graft.search.ServingFusion.buildShards]]). Offline build
-    * shape: plain shuffles, no broadcasts (`tokenDf` is
+    * vocabulary — the corpus-side artifact the hybrid serving index is
+    * built from ([[graft.search.ServingFusion.buildCombined]]). Offline
+    * build shape: plain shuffles, no broadcasts (`tokenDf` is
     * vocabulary-sized).
     *
     * @param frozenStats `(total_docs, avg_dl)` pinned at an offline

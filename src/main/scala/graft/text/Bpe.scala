@@ -51,21 +51,6 @@ object Bpe {
           concat_ws("><", regexp_extract_all(col("word"), lit("[a-z0-9]"), lit(0))),
           lit(">")))
 
-  /** Adjacent-pair frequencies over the current symbol table: one keyed
-    * aggregation, (lhs, rhs) → Σ word-count over every adjacent position
-    * (overlapping occurrences count, per Sennrich).
-    */
-  private def pairCounts(w: DataFrame): DataFrame =
-    w.select(col("cnt"),
-        regexp_extract_all(col("sym"), lit("[^<>]+"), lit(0)).as("ss"))
-      .filter(size(col("ss")) >= 2)
-      .select(col("cnt"), explode(zip_with(
-        slice(col("ss"), lit(1), size(col("ss")) - 1),
-        slice(col("ss"), lit(2), size(col("ss")) - 1),
-        (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-      .groupBy(col("p.l").as("lhs"), col("p.r").as("rhs"))
-      .agg(sum(col("cnt")).as("pair_count"))
-
   /** Word-table ceiling for [[learnMerges]]. BPE trains on the DISTINCT
     * word-frequency table, which Heaps' law bounds far below the corpus —
     * but a 100 TB crawl still surfaces noise vocabulary without limit, so

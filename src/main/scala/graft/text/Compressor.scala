@@ -88,12 +88,6 @@ object Compressor {
     smartTokenize(text).filterNot(isStopWord(_, normalizedLang)).mkString(" ")
   }
 
-  def compressionRatio(original: String, compressed: String): Double = {
-    val o = smartTokenize(original).size
-    val c = smartTokenize(compressed).size
-    if (o == 0) 0.0 else 1.0 - c.toDouble / o.toDouble
-  }
-
   /** Column form for response-projection compression — pure codegen column
     * math (split + filter + concat_ws), no serialization-boundary UDF.
     *

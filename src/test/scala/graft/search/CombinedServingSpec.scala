@@ -8,11 +8,13 @@ import graft.queries.FusionQueries
 import graft.text.{Analyzer, Bm25}
 
 /** The ONE-JOB combined serving path ([[ServingFusion.fusedTopKCombined]])
-  * pinned against the two-leg pipeline it collapses: same probe selection,
-  * same scalar kernels, same blend code — results must be BIT-identical to
-  * [[ServingFusion.fusedTopK]] fed by [[Ivf.searchBatchedFast]] over the
-  * same corpus/centroids/nProbe. Plus the latency claim itself: one call
-  * submits exactly ONE Spark job.
+  * pinned BIT-identical against a two-leg driver-side reference: the
+  * vector leg is the codec's `Ivf` batch search over the same
+  * corpus/centroids/nProbe ([[Ivf.searchBatchedFast]],
+  * [[Ivf.searchBatchedFastInt8]]), the text leg is scored on the driver
+  * from the collected BM25 weights and decay factors, and both blend
+  * through the serving core's own blend. Plus the latency claim itself:
+  * one call submits exactly ONE Spark job.
   */
 class CombinedServingSpec extends SparkSpec {
   import spark.implicits._
@@ -92,18 +94,70 @@ class CombinedServingSpec extends SparkSpec {
   private def servedQueries(qsN: DataFrame, qt: DataFrame) =
     ServingFusion.collectServedQueries(qsN, qt)
 
+  /** The reference combined serving is pinned against. Vector leg:
+    * `vecTop` (qid, doc_id, distance), the codec's `Ivf` batch search with
+    * `k = kVec`. Text leg, on the driver: the collected
+    * [[Bm25.weightedPostings]] and [[Fusion.decayFrame]], each doc's raw
+    * score `0.0 + Σ qn·w` over the query's tokens in sorted order. Both
+    * legs go into a [[ServingFusion.CombinedPartial]] and through
+    * `blendCombined`, the serving core's blend.
+    */
+  private def reference(
+      t: DataFrame,
+      post: DataFrame,
+      dec: Option[DataFrame],
+      queries: Seq[ServingFusion.ServedQuery],
+      vecTop: DataFrame,
+      kVec: Int): Array[(Long, Long, Double)] = {
+    val ids = t.select(col("doc_id"))
+    val weights: Map[String, Array[(Long, Double)]] = Bm25.weightedPostings(
+        post, Bm25.docLengthsFromPostings(ids, post, "doc_id"),
+        Bm25.tokenDf(post), "doc_id")
+      .select(col("token"), col("doc_id").cast("long"),
+        col("w").cast("double"))
+      .collect()
+      .groupBy(_.getString(0))
+      .map { case (tok, rows) =>
+        tok -> rows.map(r => (r.getLong(1), r.getDouble(2)))
+      }
+    val decOf: Map[Long, Double] = dec.fold(Map.empty[Long, Double])(
+      _.select(col("doc_id").cast("long"),
+          coalesce(col("_dec").cast("double"), lit(1.0)))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
+    val vecByQ = vecTop.select(col("qid").cast("long"),
+        col("doc_id").cast("long"), col("distance").cast("double"))
+      .collect().groupBy(_.getLong(0))
+    val qs = queries.sortBy(_.qid).toArray
+    val p = new ServingFusion.CombinedPartial(qs.length, params.k, kVec)
+    qs.indices.foreach { qi =>
+      val raw = scala.collection.mutable.LongMap.empty[Double]
+      qs(qi).tokens.sortBy(_._1).foreach { case (tok, qn) =>
+        weights.getOrElse(tok, Array.empty[(Long, Double)]).foreach {
+          case (id, w) => raw(id) = raw.getOrElse(id, 0.0) + qn.toDouble * w
+        }
+      }
+      raw.foreach { case (id, r) =>
+        val d = decOf.getOrElse(id, 1.0)
+        if (r > p.text.maxRaw(qi)) p.text.maxRaw(qi) = r
+        p.text.insert(qi, -(r * d), id, r, d)
+      }
+      vecByQ.getOrElse(qs(qi).qid, Array.empty).foreach { row =>
+        val id = row.getLong(1)
+        p.insertVec(qi, row.getDouble(2), id, raw.getOrElse(id, 0.0),
+          decOf.getOrElse(id, 1.0), raw.contains(id))
+      }
+    }
+    ServingFusion.blendCombined(qs.map(_.qid), p, params.alpha, params.k)
+  }
+
   test("combined one-job serving is bit-identical to the two-leg path") {
     val (t, post, dec, cents, assigned, qsN, qt) = fixtures()
-    val shards = ServingFusion.buildShards(
-      t.select(col("doc_id")), post, "doc_id", dec, numShards = 3).cache()
     val serving = Ivf.servingIndex(assigned).cache()
     serving.count()
     val vecTop = Ivf.searchBatchedFast(serving, cents, qsN, k = 3, nProbe = 2)
       .select(col("qid"), col("id").as("doc_id"), col("distance"))
-      .localCheckpoint(true)
-    val twoLeg = ServingFusion.fusedTopK(shards, qt, vecTop,
-        params.alpha, params.k, "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val twoLeg = reference(t, post, dec, servedQueries(qsN, qt), vecTop,
+        kVec = 3)
       .sortBy(r => (r._1, -r._3, r._2))
 
     val combined = ServingFusion.buildCombined(
@@ -124,7 +178,7 @@ class CombinedServingSpec extends SparkSpec {
     // The vector-only query (all stopwords) and the vector-less doc 10
     // both flowed through: qid 3 returns its ANN candidates.
     assert(served.count(_._1 == 3L) === 3)
-    shards.unpersist(); serving.unpersist(); combined.unpersist()
+    serving.unpersist(); combined.unpersist()
     qsN.unpersist(); qt.unpersist()
   }
 
@@ -149,12 +203,8 @@ class CombinedServingSpec extends SparkSpec {
     val vecTop = Ivf.searchBatchedFast(serving, cents, qsRaw, k = 3,
         nProbe = 2, metric = "l2")
       .select(col("qid"), col("id").as("doc_id"), col("distance"))
-      .localCheckpoint(true)
-    val shards = ServingFusion.buildShards(
-      t.select(col("doc_id")), post, "doc_id", dec, numShards = 3).cache()
-    val twoLeg = ServingFusion.fusedTopK(shards, qt, vecTop,
-        params.alpha, params.k, "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val twoLeg = reference(t, post, dec, servedQueries(qsRaw, qt), vecTop,
+        kVec = 3)
       .sortBy(r => (r._1, -r._3, r._2))
     val combined = ServingFusion.buildCombined(
       t.select(col("doc_id")), post, "doc_id",
@@ -170,7 +220,7 @@ class CombinedServingSpec extends SparkSpec {
       assert(s._1 === p._1 && s._2 === p._2 && s._3 === p._3,
         s"l2 parity: $s vs $p")
     }
-    shards.unpersist(); serving.unpersist(); combined.unpersist()
+    serving.unpersist(); combined.unpersist()
     qsRaw.unpersist(); qt.unpersist()
   }
 
@@ -202,17 +252,13 @@ class CombinedServingSpec extends SparkSpec {
   test("int8 combined serving is bit-identical to the two-leg int8 path") {
     val (t, post, dec, cents, assigned, qsN, qt) = fixtures()
     val absMax = 1.0 // normalized vectors: |x| <= 1
-    val shards = ServingFusion.buildShards(
-      t.select(col("doc_id")), post, "doc_id", dec, numShards = 3).cache()
     val serving8 = Ivf.servingIndexInt8(assigned, absMax).cache()
     serving8.count()
     val vecTop = Ivf.searchBatchedFastInt8(serving8, cents, qsN, k = 3,
         nProbe = 2, absMax = absMax)
       .select(col("qid"), col("id").as("doc_id"), col("distance"))
-      .localCheckpoint(true)
-    val twoLeg = ServingFusion.fusedTopK(shards, qt, vecTop,
-        params.alpha, params.k, "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val twoLeg = reference(t, post, dec, servedQueries(qsN, qt), vecTop,
+        kVec = 3)
       .sortBy(r => (r._1, -r._3, r._2))
     val combined8 = ServingFusion.buildCombined(
       t.select(col("doc_id")), post, "doc_id",
@@ -228,7 +274,7 @@ class CombinedServingSpec extends SparkSpec {
       assert(s._1 === p._1 && s._2 === p._2 && s._3 === p._3,
         s"int8 parity: $s vs $p")
     }
-    shards.unpersist(); serving8.unpersist(); combined8.unpersist()
+    serving8.unpersist(); combined8.unpersist()
     qsN.unpersist(); qt.unpersist()
   }
 
@@ -908,5 +954,52 @@ class CombinedServingSpec extends SparkSpec {
       assert(msg.contains(s"fusedTopKCombined: $bad, must be at least 1"), msg)
       assert(jobs === 0)
     }
+    for (k <- Seq(0, -1)) {
+      val (msg, jobs) = graft.JobCount(spark)(rejected(
+        ServingFusion.mmrTopKCombined(ix, cents, sq.map(q => (q.qid, q.qvec)),
+          k = k, pool = 6, nProbe = 2, lam = 0.7, oneMinusLam = 0.3)))
+      assert(msg.contains(s"mmrTopKCombined: k = $k, must be at least 1"), msg)
+      assert(jobs === 0)
+    }
+  }
+
+  test("served batches reject nProbe below 1 before any scan") {
+    val (t, post, dec, cents, assigned, ix, sq) = validationFixtures()
+    val ix8 = ServingFusion.buildCombined(t.select(col("doc_id")), post,
+      "doc_id",
+      assigned.select(col("id").as("doc_id"), col("vector"), col("bucket")),
+      dec, numShards = 2)(VecCodec.Int8(1.0))
+    val serves: Seq[(String, Int => Any)] = Seq(
+      "fusedTopKCombined" -> (np => ServingFusion.fusedTopKCombined(ix, cents,
+        sq, params.alpha, params.k, nProbe = np, kVec = 3)),
+      "fusedTopKCombined" -> (np => ServingFusion.fusedTopKCombined(ix8,
+        cents, sq, params.alpha, params.k, nProbe = np,
+        kVec = 3)(VecCodec.Int8(1.0))),
+      "mmrTopKCombined" -> (np => ServingFusion.mmrTopKCombined(ix, cents,
+        sq.map(q => (q.qid, q.qvec)), k = 3, pool = 6, nProbe = np,
+        lam = 0.7, oneMinusLam = 0.3)))
+    for ((op, serve) <- serves; np <- Seq(0, -1)) {
+      val (msg, jobs) = graft.JobCount(spark)(rejected(serve(np)))
+      assert(msg.contains(s"$op: nProbe = $np, must be at least 1"), msg)
+      assert(jobs === 0, op)
+    }
+  }
+
+  test("collecting served queries rejects a null vector or a duplicate qid") {
+    val qt = Seq((1L, "spark", 1L)).toDF("qid", "token", "qn")
+    val nullVec = Seq((1L, Seq(0.5f, 0.5f)), (2L, null: Seq[Float]))
+      .toDF("qid", "qvec")
+    assert(rejected(ServingFusion.collectServedQueries(nullVec, qt))
+      .contains("collectServedQueries: query 2 has no query vector"))
+    val dup = Seq((1L, Seq(0.5f, 0.5f)), (3L, Seq(0.1f, 0.2f)),
+      (3L, Seq(0.3f, 0.4f))).toDF("qid", "qvec")
+    assert(rejected(ServingFusion.collectServedQueries(dup, qt))
+      .contains("collectServedQueries: duplicate qid 3 in qVecs"))
+    // A well-formed batch still collects, sorted by qid, vector-only where
+    // a qid has no tokens.
+    val ok = ServingFusion.collectServedQueries(
+      Seq((3L, Seq(0.1f, 0.2f)), (1L, Seq(0.5f, 0.5f))).toDF("qid", "qvec"), qt)
+    assert(ok.map(_.qid) === Seq(1L, 3L))
+    assert(ok.map(_.tokens.toSeq) === Seq(Seq(("spark", 1)), Seq.empty))
   }
 }

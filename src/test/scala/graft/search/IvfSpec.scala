@@ -393,4 +393,27 @@ class IvfSpec extends SparkSpec {
       assert(jobs === 0, op)
     }
   }
+
+  test("batched searches reject nProbe below 1 before any scan") {
+    val (cents, assigned, f32, int8, f16) = small
+    val cb = Array.tabulate(2, 4)((s, c) => Array(c * 0.1f - s, s * 0.2f))
+    val pq = Pq.servingIndexPqResidual(assigned, cents, cb)
+    val q = localQueries((7L, Array.fill(4)(0.5f)))
+    val searches: Seq[(String, Int => Any)] = Seq(
+      "searchBatchedFast" -> (np => Ivf.searchBatchedFast(f32, cents, q, 3, np)),
+      "searchBatchedFastInt8" -> (np => Ivf.searchBatchedFastInt8(int8, cents,
+        q, 3, np, absMax = 1.0)),
+      "searchBatchedFastF16" -> (np => Ivf.searchBatchedFastF16(f16, cents, q,
+        3, np)),
+      "searchBatchedFastPqResidual" -> (np => Pq.searchBatchedFastPqResidual(
+        pq, cents, cb, q, 3, np)),
+      "searchBatchedLocal" -> (np => Ivf.searchBatchedLocal(assigned, cents,
+        q, 3, np)))
+    for ((op, search) <- searches; np <- Seq(0, -1)) {
+      val (msg, jobs) = graft.JobCount(spark)(
+        intercept[IllegalArgumentException](search(np)).getMessage)
+      assert(msg.contains(s"$op: nProbe = $np, must be at least 1"), msg)
+      assert(jobs === 0, op)
+    }
+  }
 }

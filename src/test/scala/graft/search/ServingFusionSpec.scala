@@ -7,14 +7,14 @@ import graft.SparkSpec
 import graft.queries.FusionQueries
 import graft.text.{Analyzer, Bm25}
 
-/** The BM25/fusion serving leg ([[ServingFusion]]) pinned against the
-  * plan paths it replaces at serving time: shard-served raw BM25 scores
-  * == [[Bm25.searchPostingsBatch]] (the t6_bm25_stored math), and the
-  * fused one-pass top-k == [[Fusion.searchWithFusionBatch]] with the
-  * same prebuilt legs — decay enabled, vector-only and text-only
-  * candidates, zero-token queries. Tolerance 1e-9: the serving pass sums
-  * a doc's term scores in sorted query-token order while the plan's
-  * aggregate sums in partition order (doc scaladoc).
+/** Combined hybrid serving ([[ServingFusion.fusedTopKCombined]]) pinned
+  * against the DataFrame plan it serves at query time:
+  * [[Fusion.searchWithFusionBatchPlan]] given the same IVF vector leg
+  * ([[Ivf.searchBatchedFast]] as `prebuiltVecTopK`) — decay enabled and
+  * disabled, vector-only and text-only candidates, a zero-token query, and
+  * `k` at corpus size so every text hit is compared. Tolerance 1e-9: the
+  * serving pass sums a doc's term scores in sorted query-token order while
+  * the plan's aggregate sums in shuffle order.
   */
 class ServingFusionSpec extends SparkSpec {
   import spark.implicits._
@@ -71,69 +71,70 @@ class ServingFusionSpec extends SparkSpec {
   private val params = Fusion.FusionParams(alpha = 0.6, k = 4,
     metric = "cosine", memory = FusionQueries.memCfg, now = FusionQueries.Now)
 
-  test("shard-served raw BM25 scores equal the stored-postings plan") {
+  /** Queries with the vectors both legs use: (qid, qtext, qvec). */
+  private def queriesWithVec: DataFrame =
+    queries.withColumn("qvec", array((0 until 4).map(j =>
+      (cos(col("qid") * (j + 2)) + lit(1.2)).cast("float")): _*))
+
+  /** Served and plan rows `(qid, doc_id, score)` for one fusion setting:
+    * a combined index over normalized vectors, and the plan fed that
+    * index's IVF leg (`kVec` per query) as its `prebuiltVecTopK`. Also
+    * returns the vector leg `(qid, doc_id, distance)`.
+    */
+  private def servedAndPlan(p: Fusion.FusionParams, kVec: Int = 3): (
+      Array[(Long, Long, Double)], Array[(Long, Long, Double)],
+      Array[(Long, Long, Double)]) = {
+    import graft.functions.VectorFunctions
     val t = table
     val post = Bm25.postings(t, "doc_id", "text")
-    val shards = ServingFusion.buildShards(
-      t.select(col("doc_id")), post, "doc_id", dec = None, numShards = 3).cache()
-    val qt = qTokens(queries).cache()
-    val served = ServingFusion.textScores(shards, qt, "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val plan = Bm25.searchPostingsBatch(
-      t.select(col("doc_id")), post, "doc_id", qt)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(served.keySet === plan.keySet)
-    assert(served.nonEmpty)
-    served.foreach { case (k, v) =>
-      assert(math.abs(v - plan(k)) <= 1e-9 * math.max(1.0, math.abs(v)),
-        s"score mismatch at $k: served=$v plan=${plan(k)}")
-    }
-    shards.unpersist(); qt.unpersist()
+    val tableN = t.select(col("doc_id").cast("long").as("id"),
+      VectorFunctions.normalize(col("embedding")).as("vector"))
+    val cents = Ivf.trainKMeansArrays(tableN, 3, iters = 2)
+    val assigned = Ivf.assignFast(tableN, cents).cache()
+    val serving = Ivf.servingIndex(assigned).cache()
+    serving.count()
+    val qs = queriesWithVec
+    val qsN = qs.select(col("qid"),
+      VectorFunctions.normalize(col("qvec")).as("qvec")).cache()
+    val qt = qTokens(qs).cache()
+    val vecTop = Ivf.searchBatchedFast(serving, cents, qsN, k = kVec,
+        nProbe = 2)
+      .select(col("qid"), col("id").as("doc_id"), col("distance"))
+      .localCheckpoint(true)
+    val plan = Fusion.searchWithFusionBatchPlan(
+        t, "doc_id", "embedding", "text", qs, p,
+        prebuiltVecTopK = Some(vecTop))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val combined = ServingFusion.buildCombined(
+      t.select(col("doc_id")), post, "doc_id",
+      assigned.select(col("id").as("doc_id"), col("vector"), col("bucket")),
+      Fusion.decayFrame(t, "doc_id", p), numShards = 3).cache()
+    combined.count()
+    val served = ServingFusion.fusedTopKCombined(combined, cents,
+      ServingFusion.collectServedQueries(qsN, qt), p.alpha, p.k, nProbe = 2,
+      kVec = kVec)
+    val vec = vecTop.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    combined.unpersist(); serving.unpersist(); assigned.unpersist()
+    qsN.unpersist(); qt.unpersist()
+    (served, plan, vec)
   }
 
-  test("fused serving top-k equals searchWithFusionBatch with the same legs") {
-    val t = table
-    val post = Bm25.postings(t, "doc_id", "text")
-    val dec = Fusion.decayFrame(t, "doc_id", params)
-    assert(dec.nonEmpty) // memCfg has decay enabled — the test must exercise it
-    val shards = ServingFusion.buildShards(
-      t.select(col("doc_id")), post, "doc_id", dec, numShards = 3).cache()
-    val qs = queries
-    val qt = qTokens(qs).cache(); qt.count()
-
-    // Shared vector leg: brute-force top-3 per query (distinct ids) —
-    // includes docs 9/10, which have no text hits for any query.
-    val vecTop = VectorSearch.topKBatch(
-        t.select(col("doc_id"), col("embedding")),
-        qs.select(col("qid"),
-          array((0 until 4).map(j =>
-            (cos(col("qid") * (j + 2)) + lit(1.2)).cast("float")): _*).as("qvec")),
-        3, "cosine", "doc_id", "embedding")
-      .select(col("qid"), col("doc_id"), col("distance"))
-      .localCheckpoint(true)
-
-    val raw = Bm25.searchPostingsBatch(
-      t.select(col("doc_id")), post, "doc_id", qt).localCheckpoint(true)
-    val plan = Fusion.searchWithFusionBatch(
-        t, "doc_id", "embedding", "text", qs, params,
-        prebuiltVecTopK = Some(vecTop), prebuiltTextScores = Some(raw))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val served = ServingFusion.fusedTopK(shards, qt, vecTop,
-        params.alpha, params.k, "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-
+  /** Per query, served scores equal the plan's within 1e-9. The plan's
+    * aggregate sums in SHUFFLE-FETCH order, which is not deterministic
+    * run-to-run — near-tied docs can swap ranks or flip at the k-boundary
+    * between the two paths (~1 ulp of jitter). So the comparison is
+    * score-principled, not rank-sequence-literal: per-id scores agree
+    * within tolerance, and any id present on one side only must sit within
+    * tolerance of the other side's k-th score (a boundary near-tie) —
+    * exactly the freedom ulp jitter grants, nothing more.
+    */
+  private def assertMatchesPlan(served: Array[(Long, Long, Double)],
+      plan: Array[(Long, Long, Double)]): Unit = {
     val planByQ = plan.groupBy(_._1)
     val servedByQ = served.groupBy(_._1)
     assert(servedByQ.keySet === planByQ.keySet)
     assert(planByQ.nonEmpty)
-    // The plan's aggregate sums in SHUFFLE-FETCH order, which is not
-    // deterministic run-to-run — near-tied docs can swap ranks or flip at
-    // the k-boundary between the two paths (~1 ulp of jitter). So the
-    // comparison is score-principled, not rank-sequence-literal: per-id
-    // scores agree within tolerance, and any id present on one side only
-    // must sit within tolerance of the other side's k-th score (a
-    // boundary near-tie) — exactly the freedom ulp jitter grants, nothing
-    // more.
     def tol(x: Double): Double = 1e-9 * math.max(1.0, math.abs(x))
     servedByQ.foreach { case (qid, sRows) =>
       val pMap = planByQ(qid).map(r => r._2 -> r._3).toMap
@@ -150,40 +151,49 @@ class ServingFusionSpec extends SparkSpec {
         assert(math.abs(pMap(id) - sMin) <= tol(sMin),
           s"qid=$qid plan-only id=$id score=${pMap(id)} not at served k-th $sMin")
     }
-    // The zero-token query (qid 3) must fuse to alpha * vscore * dec —
-    // vector-only candidates, no text contribution.
-    assert(servedByQ(3L).length === 3)
-    shards.unpersist(); qt.unpersist()
+  }
+
+  test("fused serving top-k equals searchWithFusionBatch with the same legs") {
+    assert(Fusion.decayFrame(table, "doc_id", params).nonEmpty) // decay on
+    val (served, plan, _) = servedAndPlan(params)
+    assertMatchesPlan(served, plan)
+    // The zero-token query (qid 3) fuses to alpha * vscore * dec — its
+    // three vector-only candidates, no text contribution.
+    assert(served.count(_._1 == 3L) === 3)
+  }
+
+  test("with k at corpus size every text hit scores like the plan") {
+    val kAll = Corpus.length
+    val (served, plan, _) = servedAndPlan(params.copy(k = kAll))
+    assertMatchesPlan(served, plan)
+    def idsByQ(rows: Array[(Long, Long, Double)]): Map[Long, Set[Long]] =
+      rows.groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
+    val servedIds = idsByQ(served)
+    assert(servedIds === idsByQ(plan))
+    // Every raw BM25 hit of the stored-postings plan is among them.
+    val t = table
+    val hits = Bm25.searchPostingsBatch(t.select(col("doc_id")),
+        Bm25.postings(t, "doc_id", "text"), "doc_id", qTokens(queries))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(hits.nonEmpty)
+    hits.foreach { case (q, id) =>
+      assert(servedIds(q).contains(id), s"qid=$q text hit $id not served")
+    }
   }
 
   test("decay-disabled build defaults every factor to 1.0") {
-    val t = table
-    val post = Bm25.postings(t, "doc_id", "text")
     val p0 = params.copy(memory = params.memory.copy(enabled = false))
-    val shards = ServingFusion.buildShards(
-      t.select(col("doc_id")), post, "doc_id",
-      Fusion.decayFrame(t, "doc_id", p0), numShards = 2).cache()
-    val qt = qTokens(queries)
-    val vecTop = Seq((0L, 9L, 0.25), (0L, 10L, 0.5)).toDF("qid", "doc_id", "distance")
-    val served = ServingFusion.fusedTopK(shards, qt.filter(col("qid") === 0),
-        vecTop, p0.alpha, 4, "doc_id")
-      .collect().map(r => (r.getLong(1), r.getDouble(2))).toMap
-    // Docs 9 (no matching tokens) and 10 (no postings at all) score
-    // alpha/(1+d) exactly — dec fell back to 1.0 through the build.
-    assert(math.abs(served(9L) - 0.6 / 1.25) <= 1e-12)
-    assert(math.abs(served(10L) - 0.6 / 1.5) <= 1e-12)
-    shards.unpersist()
-  }
-
-  test("fused serving rejects k below 1 before any scan") {
-    val t = table
-    val shards = ServingFusion.buildShards(t.select(col("doc_id")),
-      Bm25.postings(t, "doc_id", "text"), "doc_id", dec = None, numShards = 2)
-    val vecTop = Seq((0L, 9L, 0.25)).toDF("qid", "doc_id", "distance")
-    val qt = Seq((0L, "spark", 1L)).toDF("qid", "token", "qn")
-    for (k <- Seq(0, -1))
-      assert(intercept[IllegalArgumentException](ServingFusion.fusedTopK(
-        shards, qt, vecTop, params.alpha, k, "doc_id")).getMessage
-        .contains(s"fusedTopK: k = $k, must be at least 1"))
+    assert(Fusion.decayFrame(table, "doc_id", p0).isEmpty)
+    val (served, plan, vec) = servedAndPlan(p0)
+    assertMatchesPlan(served, plan)
+    // The zero-token query's candidates (qid 3) are vector-only, so each
+    // scores alpha/(1+d) exactly — the factor fell back to 1.0.
+    val dist = vec.filter(_._1 == 3L).map(r => r._2 -> r._3).toMap
+    val q3 = served.filter(_._1 == 3L)
+    assert(q3.length === 3)
+    q3.foreach { case (_, id, score) =>
+      assert(math.abs(score - p0.alpha / (1.0 + dist(id))) <= 1e-12,
+        s"id=$id score=$score distance=${dist(id)}")
+    }
   }
 }
